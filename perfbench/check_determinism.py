@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Determinism self-check: every count metric must repeat exactly.
 
-    python3 perfbench/check_determinism.py [--seed 1] [--seconds 8]
+    python3 perfbench/check_determinism.py [--seed 1] [--seconds 10]
 
 Runs each workload's traced run twice with the same seed (from the
 repository root, like run.py) and compares the count metrics: Spark jobs
@@ -60,7 +60,7 @@ def traced(workload, seed, seconds):
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=int, default=8)
+    ap.add_argument("--seconds", type=int, default=10)
     args = ap.parse_args()
     bad = 0
     for w in run.WORKLOADS:

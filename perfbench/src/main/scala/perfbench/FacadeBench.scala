@@ -36,6 +36,9 @@ object FacadeBench {
     "forecast_ingest" -> Spec(nSeries = 50, historyRuns = 118, opsPerSecond = 1.0),
     "dashboard_reads" -> Spec(nSeries = 60, historyRuns = 96, opsPerSecond = 2.4))
 
+  /** Untimed reads before `dashboard_reads`' timed phase (see `warmUpPlan`). */
+  val WarmUpReads = 24
+
   /** Single-run writes after each build's compaction: the uncompacted
     * tail the reads see. */
   val TailRuns = 2
@@ -304,11 +307,13 @@ final class Bench(spark: SparkSession, workload: String, spec: FacadeBench.Spec,
   }
 
   /** Every op class the workload times, untimed, that the set-up builds
-    * have not already run six times (single-run writes). Reads: once per
-    * form. */
+    * have not already run six times (single-run writes). Reads: four of
+    * each read form and of readRunSeries; with one or two each, the first
+    * timed reads still ran a quarter or more slower than the rest while
+    * the JIT caught up. */
   private def warmUpPlan(s: Store): Seq[Op] = workload match {
     case "forecast_ingest" => Seq(SkipWrite, Correction, Maintain)
-    case "dashboard_reads" => dashboardPlan(6, s)
+    case "dashboard_reads" => dashboardPlan(WarmUpReads, s)
   }
 
   private def planFor(s: Store, n: Int): Seq[Op] = workload match {
