@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 import java.time.{Duration, Instant, LocalTime, ZoneOffset}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{ReadShapes, UnchangedScope, WritePipeline, WriteResult}
@@ -75,7 +75,15 @@ final class TimeDb(val spark: SparkSession, basePath: String,
     * skip-unchanged → append to both tables. The reference's concurrent
     * insert lanes collapse to two Spark write jobs; both are always
     * attempted, the first error re-raised with the values-lane error
-    * winning (timedb/write.py:126-130). */
+    * winning (timedb/write.py:126-130).
+    *
+    * A plain write is ONE shuffle-free pass that fills the stamped
+    * batch's cache while observing its count, bounds and retention
+    * vocabulary, then the two lanes (a shuffle and a file write each):
+    * five Spark jobs under adaptive execution, Spark's default. The
+    * caller's upstream plan is evaluated once, and a
+    * batch that fails validation (a null guard in that pass, or the
+    * vocabulary check right after it) lands nothing in either table. */
   def write(
       df: DataFrame,
       retention: Option[String] = None,
@@ -85,85 +93,79 @@ final class TimeDb(val spark: SparkSession, basePath: String,
     Profiling.phase(Profiling.PhaseWriteTotal) {
 
     val now = Timestamp.from(Instant.now())
-    // Cache the stamped batch once: everything downstream (vocabulary
-    // check, bounds, counts, both insert lanes) reuses it instead of
-    // recomputing the caller's upstream plan per consumer.
     val preFilter = Profiling.phase(Profiling.PhaseWriteNormalize) {
       WritePipeline.stamp(df, retention, knowledgeTime, now)
-    }.cache()
-
+    }
     try {
-      // Batch bounds double as the retention-vocabulary check: one
-      // aggregate over the (now cached) batch instead of a separate
-      // distinct+collect scan (timedb/write.py:197-202, 292-301). The
-      // potentially-large distinct series_id set is NOT collected here —
-      // only the skip-unchanged path needs it (timedb/write.py:197).
-      val bounds = preFilter.agg(
-        count(lit(1)), min("valid_time"), max("valid_time"),
-        collect_set("retention"), approx_count_distinct("series_id")).head()
-      val before = bounds.getLong(0)
+      // Batch bounds double as the retention-vocabulary check
+      // (timedb/write.py:197-202, 292-301). The potentially-large distinct
+      // series_id set is NOT collected here — only the skip-unchanged
+      // path needs it (timedb/write.py:197).
+      val bounds = TimeDb.cacheObserving(preFilter,
+        count(lit(1)).as("rows"), min("valid_time").as("min_vt"), max("valid_time").as("max_vt"),
+        collect_set("retention").as("retentions"), approx_count_distinct("series_id").as("series"))
+      val before = bounds("rows").asInstanceOf[Long]
+      val rets = bounds("retentions").asInstanceOf[Seq[String]]
       if (df.columns.contains("retention"))
-        WritePipeline.requireValidRetentions(bounds.getSeq[String](3))
+        WritePipeline.requireValidRetentions(rets)
 
-      var stamped = preFilter
-      var skipped = 0L
-      if (skipUnchanged && before > 0) Profiling.phase(Profiling.PhaseWriteSkipUnchanged) {
-        // Bounded read-back slab (timedb/write.py:197-214): the incoming
-        // batch's series/retentions and valid_time bounds — catalog-sized
-        // driver values (same assumption as the reference). Retention AND
-        // valid_month filters hit partition directories, so the read-back
-        // prunes to the batch's tiers × months before any file is opened.
-        val (minVt, maxVt) = (bounds.getTimestamp(1), bounds.getTimestamp(2))
-        val rets = bounds.getSeq[String](3)
-        val slabBase = store.scanValues().filter(
-          col("retention").isin(rets: _*) &&
-            col("valid_month") >= lit(Schema.monthOf(minVt)) &&
-            col("valid_month") <= lit(Schema.monthOf(maxVt)) &&
-            col("valid_time") >= lit(minVt) && col("valid_time") <= lit(maxVt))
-        // Driver-safety valve: for catalog-sized batches the literal
-        // isin pushes all the way into the parquet scan; but a
-        // crawl-scale batch touching tens of millions of series would
-        // OOM the driver on the collect, so above `maxInlineSeriesIds`
-        // the read-back restriction becomes a semi-join on series_id —
-        // shuffle-on-key, zero driver state; the retention + month
-        // partition prunes above still bound the scanned slab.
-        val slab =
-          if (bounds.getLong(4) <= maxInlineSeriesIds) {
-            val sids = preFilter.agg(collect_set("series_id")).head().getSeq[Long](0)
-            slabBase.filter(col("series_id").isin(sids: _*))
-          } else
-            slabBase.join(preFilter.select("series_id").distinct(), Seq("series_id"), "left_semi")
-        val storedLatest = WritePipeline.storedLatestFor(slab, unchangedScope)
-        stamped = WritePipeline.filterUnchanged(preFilter, storedLatest, unchangedScope).cache()
-      }
-
-      val written = stamped.count()
-      if (skipUnchanged) skipped = before - written
-      val rs = WritePipeline.runSeriesOf(stamped, now)
-
-      // Concurrent insert lanes (timedb/write.py:115-158): the values and
-      // run_series writes overlap as two Spark jobs on the shared scheduler
-      // (Spark jobs from one session run concurrently; the lanes write
-      // disjoint paths). Both lanes are always awaited even when one fails —
-      // leaking an in-flight write would leave its outcome unknown — and
-      // the first error is re-raised, values lane first.
-      try {
-        if (written > 0) {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
-          val valuesLane = Future(
-            Profiling.phase(Profiling.PhaseWriteSeriesValuesInsert)(store.appendValues(stamped)))
-          val rsLane = Future(
-            Profiling.phase(Profiling.PhaseWriteRunSeriesInsert)(store.appendRunSeries(rs)))
-          val valuesErr = Await.ready(valuesLane, Duration.Inf).value.get.failed.toOption
-          val rsErr = Await.ready(rsLane, Duration.Inf).value.get.failed.toOption
-          valuesErr.orElse(rsErr).foreach(throw _)
+      val (stamped, written) =
+        if (!skipUnchanged || before == 0) (preFilter, before)
+        else Profiling.phase(Profiling.PhaseWriteSkipUnchanged) {
+          // Bounded read-back slab (timedb/write.py:197-214): the incoming
+          // batch's series/retentions and valid_time bounds — catalog-sized
+          // driver values (same assumption as the reference). Retention AND
+          // valid_month filters hit partition directories, so the read-back
+          // prunes to the batch's tiers × months before any file is opened.
+          val minVt = bounds("min_vt").asInstanceOf[Timestamp]
+          val maxVt = bounds("max_vt").asInstanceOf[Timestamp]
+          val slabBase = store.scanValues().filter(
+            col("retention").isin(rets: _*) &&
+              col("valid_month") >= lit(Schema.monthOf(minVt)) &&
+              col("valid_month") <= lit(Schema.monthOf(maxVt)) &&
+              col("valid_time") >= lit(minVt) && col("valid_time") <= lit(maxVt))
+          // Driver-safety valve: for catalog-sized batches the literal
+          // isin pushes all the way into the parquet scan; but a
+          // crawl-scale batch touching tens of millions of series would
+          // OOM the driver on the collect, so above `maxInlineSeriesIds`
+          // the read-back restriction becomes a semi-join on series_id —
+          // shuffle-on-key, zero driver state; the retention + month
+          // partition prunes above still bound the scanned slab.
+          val slab =
+            if (bounds("series").asInstanceOf[Long] <= maxInlineSeriesIds) {
+              val sids = preFilter.agg(collect_set("series_id")).head().getSeq[Long](0)
+              slabBase.filter(col("series_id").isin(sids: _*))
+            } else
+              slabBase.join(preFilter.select("series_id").distinct(), Seq("series_id"), "left_semi")
+          // The kept rows get the same one-pass cache fill as the batch.
+          val kept = WritePipeline.filterUnchanged(preFilter,
+            WritePipeline.storedLatestFor(slab, unchangedScope), unchangedScope)
+          (kept, TimeDb.cacheObserving(kept, count(lit(1)).as("rows"))("rows").asInstanceOf[Long])
         }
+      try {
+        if (written > 0) insertLanes(stamped, WritePipeline.runSeriesOf(stamped, now))
+        WriteResult(written, before - written)
       } finally if (stamped ne preFilter) stamped.unpersist()
-
-      WriteResult(written, skipped)
     } finally preFilter.unpersist()
+  }
+
+  /** Concurrent insert lanes (timedb/write.py:115-158): the values and
+    * run_series writes overlap as two Spark jobs on the shared scheduler
+    * (Spark jobs from one session run concurrently; the lanes write
+    * disjoint paths). Both lanes are always awaited even when one fails —
+    * leaking an in-flight write would leave its outcome unknown — and
+    * the first error is re-raised, values lane first. */
+  private def insertLanes(stamped: DataFrame, rs: DataFrame): Unit = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val valuesLane = Future(
+      Profiling.phase(Profiling.PhaseWriteSeriesValuesInsert)(store.appendValues(stamped)))
+    val rsLane = Future(
+      Profiling.phase(Profiling.PhaseWriteRunSeriesInsert)(store.appendRunSeries(rs)))
+    val valuesErr = Await.ready(valuesLane, Duration.Inf).value.get.failed.toOption
+    val rsErr = Await.ready(rsLane, Duration.Inf).value.get.failed.toOption
+    valuesErr.orElse(rsErr).foreach(throw _)
   }
 
   private def emptyShape(includeUpdates: Boolean, includeKnowledgeTime: Boolean): DataFrame = {
@@ -286,4 +288,23 @@ final class TimeDb(val spark: SparkSession, basePath: String,
     if (df.columns.contains("value"))
       df.withColumn("value", when(isnan(col("value")), lit(null)).otherwise(col("value")))
     else df
+}
+
+object TimeDb {
+
+  /** Cache `frame` and fill the cache with ONE shuffle-free action (a
+    * `noop`-format write) that also computes the aggregate `metrics`
+    * over it, via an [[Observation]] above the cached relation. Every
+    * later consumer of `frame` reads the cache; the caller unpersists
+    * (this call does, when the pass fails).
+    * An aggregate action instead would add a shuffle and a second job,
+    * and each separate action costs its own planning and scheduling. */
+  private def cacheObserving(frame: DataFrame, metrics: Column*): Map[String, Any] = {
+    val observation = Observation()
+    frame.cache()
+    try frame.observe(observation, metrics.head, metrics.tail: _*)
+      .write.format("noop").mode(SaveMode.Overwrite).save()
+    catch { case t: Throwable => frame.unpersist(); throw t }
+    observation.get
+  }
 }

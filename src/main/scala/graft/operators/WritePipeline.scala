@@ -39,9 +39,11 @@ object WritePipeline {
     * Timezone-awareness: the reference rejects tz-naive timestamps; on
     * Spark we require `TimestampType` (session-TZ = UTC instants) and
     * reject `TimestampNTZType`, which is the Spark spelling of "naive".
-    * Retention-vocabulary validation of a per-row column is deferred to
-    * [[stamp]]'s constraint check so it costs one low-cardinality
-    * aggregate, not a driver-side collect of the whole column.
+    * Only the schema and the kwargs are checked here, without a Spark
+    * job. The values of a per-row retention column are checked by
+    * [[requireValidRetentions]] on the distinct set the writer collects
+    * in its pass over the batch; null required fields fail inside that
+    * pass through [[stamp]]'s inline guards.
     */
   def validate(
       df: DataFrame,
@@ -75,9 +77,10 @@ object WritePipeline {
 
   /** W2 — stamp per-batch defaults (timedb/write.py:311-337): cast
     * series_id/value, NaN-fill null values, and fill any missing optional
-    * column with one per-batch constant. Also enforces the retention
-    * vocabulary on a caller-supplied retention column (one cheap
-    * low-cardinality distinct, not a full collect).
+    * column with one per-batch constant. Runs [[validate]] first. The
+    * values of a caller-supplied retention column are NOT checked here:
+    * the writer collects their distinct set while it reads the batch and
+    * passes it to [[requireValidRetentions]] before anything is appended.
     */
   def stamp(
       df: DataFrame,
@@ -97,37 +100,33 @@ object WritePipeline {
     def rejectNull(c: Column, name: String, tpe: String): Column =
       when(c.isNull, raise_error(lit(s"'$name' must not be null")).cast(tpe)).otherwise(c)
 
-    var out = df
-      .withColumn("series_id", rejectNull(col("series_id").cast(LongType), "series_id", "bigint"))
-      .withColumn("valid_time", rejectNull(col("valid_time"), "valid_time", "timestamp"))
-      .withColumn("value", coalesce(col("value").cast(DoubleType), lit(Double.NaN)))
-    // A caller-supplied retention column must not smuggle nulls past the
-    // vocabulary check (collect_set drops nulls) — a null would land in a
-    // __HIVE_DEFAULT_PARTITION__ tier that no read or TTL ever touches.
-    if (cols("retention"))
-      out = out.withColumn("retention", rejectNull(col("retention"), "retention", "string"))
-
-    if (!cols("knowledge_time"))
-      out = out.withColumn("knowledge_time", lit(knowledgeTimeKwarg.getOrElse(now)))
-    if (!cols("change_time"))
-      out = out.withColumn("change_time", lit(now))
-    out =
-      if (cols("run_id")) out.withColumn("run_id", col("run_id").cast(LongType))
-      else out.withColumn("run_id", lit(runId))
-    if (!cols("retention"))
-      out = out.withColumn("retention", lit(retentionKwarg.getOrElse(Schema.defaultRetention)))
-    if (!cols("valid_time_end"))
-      out = out.withColumn("valid_time_end", lit(Schema.validTimeEndSentinel))
-    for (c <- Seq("changed_by", "annotation") if !cols(c))
-      out = out.withColumn(c, lit(""))
-
-    out.select(Schema.seriesValuesColumns.map(col): _*)
+    // One projection in schema order: a caller-supplied optional column
+    // passes through (run_id cast to bigint), a missing one becomes its
+    // per-batch constant. A caller-supplied retention column must not
+    // smuggle nulls past the vocabulary check (collect_set drops nulls) —
+    // a null would land in a __HIVE_DEFAULT_PARTITION__ tier that no read
+    // or TTL ever touches.
+    def given(c: String, orElse: => Column): Column = if (cols(c)) col(c) else orElse
+    val stamped = Map(
+      "series_id" -> rejectNull(col("series_id").cast(LongType), "series_id", "bigint"),
+      "valid_time" -> rejectNull(col("valid_time"), "valid_time", "timestamp"),
+      "knowledge_time" -> given("knowledge_time", lit(knowledgeTimeKwarg.getOrElse(now))),
+      "change_time" -> given("change_time", lit(now)),
+      "value" -> coalesce(col("value").cast(DoubleType), lit(Double.NaN)),
+      "valid_time_end" -> given("valid_time_end", lit(Schema.validTimeEndSentinel)),
+      "run_id" -> (if (cols("run_id")) col("run_id").cast(LongType) else lit(runId)),
+      "changed_by" -> given("changed_by", lit("")),
+      "annotation" -> given("annotation", lit("")),
+      "retention" ->
+        (if (cols("retention")) rejectNull(col("retention"), "retention", "string")
+        else lit(retentionKwarg.getOrElse(Schema.defaultRetention))))
+    df.select(Schema.seriesValuesColumns.map(c => stamped(c).as(c)): _*)
   }
 
   /** Vocabulary check for a caller-supplied retention column
     * (timedb/write.py:292-301). The caller passes the already-aggregated
-    * distinct values (e.g. from the batch-bounds aggregate) so no extra
-    * scan runs; nulls are reported, not NPE'd. */
+    * distinct values (the writer observes them in its one pass over the
+    * batch) so no extra scan runs; nulls are reported, not NPE'd. */
   def requireValidRetentions(present: Seq[String]): Unit = {
     val unknown = present.filter(v => v == null || !Schema.retentionTiers(v))
     require(unknown.isEmpty,

@@ -16,11 +16,13 @@ import org.apache.spark.sql.types.{StringType, StructType}
   *    analog of `PARTITION BY (retention, toYYYYMM(valid_time))`:
   *    retention-filtered reads prune to one tier, TTL expiry drops whole
   *    directories, and valid_time range predicates prune months.
-  *  - rows sorted within each written file by
+  *  - rows sorted within each compacted file by
   *    (series_id, valid_time, knowledge_time, change_time) — the analog of
   *    the MergeTree sort key: Parquet row-group min/max stats on
   *    series_id/valid_time let the reader skip row groups, and ZSTD +
-  *    dictionary/RLE encodings replace the per-column codecs.
+  *    dictionary/RLE encodings replace the per-column codecs. An
+  *    appended file is sorted by knowledge_time first, then by that key
+  *    (see [[appendValues]]).
   *
   * ==Snapshot manifests==
   *
@@ -67,6 +69,11 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     * `valid_month` likewise). */
   private val dataFileSchema: StructType =
     StructType(Schema.seriesValues.filterNot(_.name == "retention"))
+
+  /** Row order of a compacted file: the MergeTree sort key analog. */
+  private val SortKey = Seq("series_id", "valid_time", "knowledge_time", "change_time")
+  /** Row order of an appended file (see [[appendValues]]). */
+  private val AppendOrder = Seq("knowledge_time", "series_id", "valid_time", "change_time")
 
   private val ManifestName = raw"v(\d{8})\.list".r
 
@@ -174,8 +181,21 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     *
     * `repartition(retention, valid_month)` routes each physical partition's
     * rows to one task (no small-file explosion when a batch spans many
-    * months), and `sortWithinPartitions` lays rows out in sort-key order
-    * for row-group skipping. Parallel-split/concurrent-lane machinery from
+    * months), and `sortWithinPartitions` orders each file by
+    * (knowledge_time, series_id, valid_time, change_time) for row-group
+    * skipping. The sort leads with the two partition columns: the planned
+    * write requires that ordering, and replaces a sort that does not
+    * satisfy it by a `Sort[retention, valid_month]` alone, which leaves
+    * each file in arrival order.
+    *
+    * knowledge_time leads because a batch is usually one run (one
+    * knowledge_time), where the order is the sort key's (series_id,
+    * valid_time), while a multi-run backfill keeps each run contiguous:
+    * its knowledge_time and run_id columns then stay in long runs. For a
+    * 118-run batch of 50 series × 48 h the full sort key instead stores
+    * 34 % more bytes. Compaction rewrites to the full sort key.
+    *
+    * Parallel-split/concurrent-lane machinery from
     * the reference (timedb/write.py:81-158) is N/A: Spark writes are
     * already task-parallel.
     */
@@ -184,7 +204,7 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     stamped
       .withColumn("valid_month", Schema.monthOf(col("valid_time")))
       .repartition(col("retention"), col("valid_month"))
-      .sortWithinPartitions("series_id", "valid_time", "knowledge_time", "change_time")
+      .sortWithinPartitions((Schema.partitionColumns ++ AppendOrder).map(col): _*)
       .write
       .mode(SaveMode.Overwrite)
       .partitionBy(Schema.partitionColumns: _*)
@@ -598,9 +618,8 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
       val nOut = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
       val staging = newStagingDir()
       spark.read.schema(dataFileSchema).parquet(abs.map(_.toString): _*)
-        .repartitionByRange(nOut, col("series_id"), col("valid_time"),
-          col("knowledge_time"), col("change_time"))
-        .sortWithinPartitions("series_id", "valid_time", "knowledge_time", "change_time")
+        .repartitionByRange(nOut, SortKey.map(col): _*)
+        .sortWithinPartitions(SortKey.map(col): _*)
         .write.option("compression", "zstd").parquet(staging.toString)
       try {
         // staged layout is flat; the files belong to this partition dir

@@ -5,16 +5,15 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import org.apache.spark.sql.Row
 
-import graft.operators.WritePipeline
-import graft.sources.{Schema, SeriesStore}
+import graft.TimeDb
 
 /** Structured-Streaming ingest into the series store (SURVEY.md §7.6,
   * optional — the reference is batch-only per §2.9, so this is the
   * Spark-native extension of the same write pipeline).
   *
-  * The batch write path is reused verbatim: each micro-batch flows
-  * through [[WritePipeline.stamp]] (validation + default stamping) via
-  * `foreachBatch`, then appends through the store's partitioned writer —
+  * The batch write path is reused verbatim: `foreachBatch` hands each
+  * micro-batch to [[graft.TimeDb.write]] (validation, default stamping,
+  * the one-pass cache fill and the two concurrent insert lanes) —
   * identical layout and semantics to batch writes, so readers can't tell
   * ingest modes apart. Late/corrected data needs no special machinery:
   * a late row is just a row with a larger change_time, resolved
@@ -28,7 +27,8 @@ object StreamingIngest {
     *
     * `compactEvery` > 0 folds small-file maintenance into the ingest
     * loop: every N micro-batches the touched store runs
-    * [[SeriesStore.compactPartitions]] + [[SeriesStore.vacuum]] from the
+    * [[graft.sources.SeriesStore.compactPartitions]] +
+    * [[graft.sources.SeriesStore.vacuum]] from the
     * SAME foreachBatch thread — micro-batches execute sequentially, so
     * the single-writer contract holds by construction, and the
     * manifest-snapshot commits mean concurrent READERS are unaffected.
@@ -43,7 +43,7 @@ object StreamingIngest {
     * end-to-end). Across a CRASH the guarantee is at-least-once per
     * micro-batch: offsets commit after `foreachBatch` returns, and the
     * store append is not idempotent, so a crash between
-    * [[SeriesStore.appendValues]] and the offset commit replays that
+    * [[graft.sources.SeriesStore.appendValues]] and the offset commit replays that
     * one batch on restart. Consumers needing exactly-once under crash
     * pair the ingest with the skip-unchanged digest discipline
     * ([[graft.operators.WritePipeline.filterUnchanged]]) or read
@@ -57,28 +57,20 @@ object StreamingIngest {
     stream.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val store = new SeriesStore(batch.sparkSession, basePath)
-        if (!batch.isEmpty) {
-          val now = new java.sql.Timestamp(System.currentTimeMillis())
-          val stamped = WritePipeline.stamp(batch, retentionKwarg = retention, now = now)
-          if (batch.columns.contains("retention"))
-            WritePipeline.requireValidRetentions(
-              stamped.agg(collect_set("retention")).head().getSeq[String](0))
-          store.appendValues(stamped)
-          store.appendRunSeries(WritePipeline.runSeriesOf(stamped, now))
-        }
-        // Outside the isEmpty guard: an empty micro-batch landing on the
-        // multiple must not silently skip maintenance (a periodic data
-        // cadence could align empties with every trigger).
+        val db = new TimeDb(batch.sparkSession, basePath)
+        // An empty micro-batch appends nothing but still reaches the
+        // maintenance check: a periodic data cadence could align empties
+        // with every multiple of compactEvery.
+        db.write(batch, retention = retention)
         if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-          store.compactPartitions(compactMaxFiles)
+          db.compact(compactMaxFiles)
           // Default age floor on purpose: with manifests committed every
           // batch, the retained-manifest tail spans well under one
           // compaction cycle, so the age floor is what actually carries
           // the reader grace window here (physical cleanup lags ~15 min
           // behind the logical swap — files are already superseded, the
           // delay costs nothing).
-          store.vacuum()
+          db.vacuum()
           ()
         }
       }

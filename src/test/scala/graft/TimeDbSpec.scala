@@ -331,7 +331,104 @@ class TimeDbSpec extends SparkSpec {
     withDb { db =>
       val bad = revision(1).withColumn("retention", lit("eternal"))
       intercept[IllegalArgumentException](db.write(bad))
-      assert(db.read(ReadFilter(Seq(1L))).count() == 0) // nothing landed
+      // nothing landed in either table
+      assert(db.read(ReadFilter(Seq(1L))).count() == 0)
+      assert(db.store.scanRunSeries().count() == 0)
+      // a null required field fails inside the write's one pass, also
+      // before either lane starts
+      val nullSid = revision(1).withColumn("series_id",
+        when(col("valid_time") === vts.last, lit(null)).otherwise(col("series_id")))
+      intercept[Exception](db.write(nullSid))
+      assert(db.store.scanValues().count() == 0)
+      assert(db.store.scanRunSeries().count() == 0)
+    }
+  }
+
+  /** Spark jobs started by `body`, counted between two listener-bus drains. */
+  private def jobsDuring(body: => Unit): Int = {
+    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        counter.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
+      counter.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("write job counts: one pass before the lanes; skip-unchanged within budget") {
+    withDb { db =>
+      // Warm the store so both writes plan against existing files.
+      db.write(revision(1), knowledgeTime = Some(ts("2024-03-01T00:00:00Z")))
+      // One observed cache-filling pass, then a shuffle and a file write
+      // per insert lane.
+      val plain = jobsDuring {
+        db.write(revision(2), knowledgeTime = Some(ts("2024-03-01T01:00:00Z"))); ()
+      }
+      assert(plain <= 5, s"plain write ran $plain jobs")
+      val skip = jobsDuring {
+        val r = db.write(revision(2).withColumn("value",
+          when(col("valid_time") === vts.head, -1.0).otherwise(col("value"))),
+          knowledgeTime = Some(ts("2024-03-01T02:00:00Z")), skipUnchanged = true)
+        assert(r == WriteResult(1, 5)); ()
+      }
+      assert(skip <= 14, s"skip-unchanged write ran $skip jobs")
+    }
+  }
+
+  test("write evaluates the caller's plan once, plain and skip-unchanged") {
+    withDb { db =>
+      val evals = spark.sparkContext.longAccumulator("upstream_evals")
+      val tick = udf { (v: Double) => evals.add(1L); v }
+      // spark.range, not a local relation: the optimizer would otherwise
+      // fold the projection (and the UDF) into the relation on the driver.
+      val n = 48L
+      def batch = spark.range(0L, n, 1L, 3).select(
+        (col("id") % 4).as("series_id"),
+        timestamp_seconds(lit(vts.head.getTime / 1000) + expr("id div 4") * 3600)
+          .as("valid_time"),
+        tick(col("id").cast("double")).as("value"))
+      assert(db.write(batch) == WriteResult(n, 0))
+      assert(evals.value == n)
+      assert(db.write(batch, skipUnchanged = true) == WriteResult(0, n))
+      assert(evals.value == 2 * n)
+    }
+  }
+
+  test("appended files are sorted by knowledge_time, then the sort key, whatever the input order") {
+    withDb { db =>
+      // Two months, several knowledge times, handed over in reverse key
+      // order across several input partitions.
+      val start = ts("2024-03-31T12:00:00Z").getTime / 1000
+      val input = spark.range(0L, 3 * 24 * 4, 1L, 4).select(
+        (col("id") % 3).as("series_id"),
+        timestamp_seconds(lit(start) + expr("(id div 3) % 24") * 3600).as("valid_time"),
+        timestamp_seconds(lit(start) - expr("id div 72") * 60).as("knowledge_time"),
+        col("id").cast("double").as("value"))
+        .orderBy(col("series_id").desc, col("valid_time").desc, col("knowledge_time").desc)
+      // every live file's rows, read back in file order, are sorted by `order`
+      def assertSorted(order: Seq[String]): Unit =
+        for (f <- db.store.currentFiles()) {
+          val keys = spark.read.parquet(s"${db.store.valuesPath}/$f")
+            .select(order.map(c => if (c == "series_id") col(c) else unix_micros(col(c))): _*)
+            .collect().map(r => order.indices.map(r.getLong)).toSeq
+          import Ordering.Implicits.seqOrdering
+          val inOrder = keys == keys.sorted
+          assert(keys.length > 1 && inOrder, s"$f is not sorted by $order")
+        }
+      db.write(input)
+      assert(db.store.currentFiles().map(f => f.substring(0, f.lastIndexOf('/'))).distinct.length == 2)
+      assertSorted(Seq("knowledge_time", "series_id", "valid_time", "change_time"))
+      // compaction rewrites each partition to the full sort key
+      db.write(input)
+      db.write(input)
+      assert(db.compact(maxFiles = 2).length == 2)
+      assertSorted(Seq("series_id", "valid_time", "knowledge_time", "change_time"))
     }
   }
 
