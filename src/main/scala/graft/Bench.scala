@@ -48,6 +48,102 @@ object Bench {
     .mkString("", "; ",
       s"; else rows/8192 cap $factCap (>=50k rows; small copy)")
 
+  // Headline queries: one representative per operator family (the full
+  // query matrix runs under Verify; timing all of them would mostly
+  // measure N× fixed per-query planning overhead).
+  val headlineQueries: Seq[String] = Seq(
+    "td_latest", "td_overlapping", "td_latest_changes", "td_overlapping_changes",
+    "td_relative", "td_skip_unchanged", "td_where", "td_meta_read",
+    "rel_agg", "rel_join_agg", "rel_window", "rel_topk",
+    "x_dedup_exact", "x_dedup_lsh", "x_ann_brute", "x_text_quality",
+    "ts_asof_join", "ts_resample_fill", "x_pipeline_curate")
+
+  // Round-2 additions, timed separately so `value` stays comparable
+  // across rounds: the headline set and its total are unchanged; the
+  // extended set reports in its own JSON key.
+  val extendedQueries: Seq[String] = Seq(
+    "rel_rollup", "rel_setops", "ts_moving_zscore", "ts_seasonal",
+    "x_sessionize", "x_dedup_clusters", "x_dedup_winners", "x_range_join",
+    "x_text_tfidf", "x_simhash_neardup", "x_ann_ivf_probe", "x_feature_lags",
+    "x_approx_distinct", "x_dedup_lsh_verified", "x_ann_ivf_assigned",
+    "x_ann_recall", "x_dedup_contamination", "x_text_repetition",
+    // round-6 additions (extended only: headline stays comparable)
+    "x_sql_neardup", "x_dedup_spans", "x_dedup_incremental_bloom",
+    "x_quality_gate_approx", "x_dedup_spans_removed", "x_text_encode",
+    "x_embed_quantize", "x_ann_quantized", "x_text_lm_score",
+    "x_split_decontam", "x_text_heavy_hitters", "x_sketch_kmv",
+    "x_embed_kmeans", "x_ann_label_purity", "x_text_bpe", "x_sample_pergroup",
+    "x_text_bpe_encode", "x_dedup_incremental_lsh",
+    // round-7 additions
+    "x_dedup_index_stored", "x_embed_pq", "x_ann_pq", "x_ann_pq_recall",
+    "x_ann_ivfpq", "x_ann_pq_rerank", "x_sketch_cms", "x_sample_weighted",
+    "ts_downsample", "x_shard_assign", "x_corpus_report", "x_json_variant",
+    "x_dedup_cdc", "x_text_lang_eval", "x_dedup_cdc_pairs",
+    "x_ann_index_stored", "x_funnel", "x_text_bm25", "x_cohort_retention",
+    // round-7 second-session additions
+    "x_dedup_ppjoin", "x_graph_pagerank", "x_graph_triangles",
+    "ts_trend", "ts_cusum", "rel_histogram", "x_hybrid_rrf", "x_ann_ndcg",
+    "x_graph_kcore",
+    // round-7 fourth-session additions
+    "x_text_nb", "x_graph_cc", "x_zorder_layout", "x_dsir_weights",
+    "x_mix_temperature", "x_strata_overlap", "x_embed_covariance",
+    "ts_gaps", "ts_mad", "x_text_ctfidf", "x_lsh_plan",
+    "x_quality_calibrated",
+    // round-8 additions
+    "td_time_travel", "td_change_feed", "x_dedup_cdc_bounded", "x_pack_stats",
+    // round-9 additions
+    "td_zmirror_read", "td_zmirror_tail",
+    // round-10 additions
+    "td_bucketed_join",
+    // round-11 additions
+    "td_compact_read", "x_quality_gopher",
+    // round-13 additions
+    "x_dedup_incremental_ppjoin", "x_skew_profile", "x_ts_holt",
+    "x_sketch_kmv_setops", "x_ts_lttb", "x_sketch_kmv_anotb",
+    // round-15 additions: x_dedup_ppjoin reverts to the one-shot
+    // r13 protocol (equal work across rounds); the stored-index
+    // serving face is timed under its own name; the image family is
+    // a REAL JDK codec loop (PNG encode+decode per asset), so its
+    // walls carry genuine per-row codec work by design
+    "x_dedup_ppjoin_stored", "td_meta_read_jdbc",
+    "x_image_decode", "x_image_dhash", "x_image_neardup",
+    "x_audio_decode", "x_image_incremental",
+    // round-16 additions: the video tier of the codec family — a
+    // REAL animated-GIF multi-frame round trip, plus the stride-2
+    // frame-sampling face (random-access read(i), skipped frames
+    // never decoded)
+    "x_video_decode", "x_video_sample",
+    // round-17 additions: the video near-dup tier — temporal-mean
+    // dHash fingerprint over sampled decoded frames, and the banded
+    // Hamming near-dup screen over it (the image tier's stack on
+    // the video modality)
+    "x_video_dhash", "x_video_neardup", "x_video_incremental",
+    // round-18 addition: IVF epoch MAINTENANCE — the held-out slice
+    // assigned against the frozen codebook and appended into the
+    // cell-partitioned store (new files under existing cell dirs),
+    // served through the same pruned path
+    "x_ann_incremental",
+    // round-18 addition: the ENCODED-AT-REST IVFPQ serve — the code
+    // table (bytes, not floats) partitioned by cell, probed under a
+    // static partition filter; same oracle as x_ann_ivfpq
+    "x_ann_ivfpq_stored",
+    // round-18 addition: the SEARCH INDEX AT REST — related-doc BM25
+    // served from the bucketBy(doc_id) tf store, scoring aggregate
+    // exchange-free from the parquet layout itself
+    "x_text_bm25_stored",
+    // round-18 addition: SEGMENTED BM25 — immutable per-batch
+    // segments with query-time df/stats merge (Lucene-segment
+    // design); same oracle as the stored form
+    "x_text_bm25_incremental",
+    // round-18 addition: TOMBSTONED BM25 — delete-by-id as an
+    // immutable tombstone segment (query-time anti-join bitset +
+    // negative fold rows); oracle rebuilds on the surviving docs
+    "x_text_bm25_deleted",
+    // round-18 addition: TOMBSTONED IVF — the vector-side delete
+    // face (sibling del tree, broadcast anti-join after the static
+    // cell prune); oracle screens the candidates
+    "x_ann_deleted")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Default to the machine's cores (capped at the target profile's
@@ -239,101 +335,8 @@ object Bench {
     def keep(names: Seq[String]): Seq[String] =
       only.map(o => names.filter(o)).getOrElse(names)
 
-    // Headline queries: one representative per operator family (the full
-    // query matrix runs under Verify; timing all of them would mostly
-    // measure N× fixed per-query planning overhead).
-    val headline = keep(Seq(
-      "td_latest", "td_overlapping", "td_latest_changes", "td_overlapping_changes",
-      "td_relative", "td_skip_unchanged", "td_where", "td_meta_read",
-      "rel_agg", "rel_join_agg", "rel_window", "rel_topk",
-      "x_dedup_exact", "x_dedup_lsh", "x_ann_brute", "x_text_quality",
-      "ts_asof_join", "ts_resample_fill", "x_pipeline_curate"))
-
-    // Round-2 additions, timed separately so `value` stays comparable
-    // across rounds: the headline set and its total are unchanged; the
-    // extended set reports in its own JSON key.
-    val extended = keep(Seq(
-      "rel_rollup", "rel_setops", "ts_moving_zscore", "ts_seasonal",
-      "x_sessionize", "x_dedup_clusters", "x_dedup_winners", "x_range_join",
-      "x_text_tfidf", "x_simhash_neardup", "x_ann_ivf_probe", "x_feature_lags",
-      "x_approx_distinct", "x_dedup_lsh_verified", "x_ann_ivf_assigned",
-      "x_ann_recall", "x_dedup_contamination", "x_text_repetition",
-      // round-6 additions (extended only: headline stays comparable)
-      "x_sql_neardup", "x_dedup_spans", "x_dedup_incremental_bloom",
-      "x_quality_gate_approx", "x_dedup_spans_removed", "x_text_encode",
-      "x_embed_quantize", "x_ann_quantized", "x_text_lm_score",
-      "x_split_decontam", "x_text_heavy_hitters", "x_sketch_kmv",
-      "x_embed_kmeans", "x_ann_label_purity", "x_text_bpe", "x_sample_pergroup",
-      "x_text_bpe_encode", "x_dedup_incremental_lsh",
-      // round-7 additions
-      "x_dedup_index_stored", "x_embed_pq", "x_ann_pq", "x_ann_pq_recall",
-      "x_ann_ivfpq", "x_ann_pq_rerank", "x_sketch_cms", "x_sample_weighted",
-      "ts_downsample", "x_shard_assign", "x_corpus_report", "x_json_variant",
-      "x_dedup_cdc", "x_text_lang_eval", "x_dedup_cdc_pairs",
-      "x_ann_index_stored", "x_funnel", "x_text_bm25", "x_cohort_retention",
-      // round-7 second-session additions
-      "x_dedup_ppjoin", "x_graph_pagerank", "x_graph_triangles",
-      "ts_trend", "ts_cusum", "rel_histogram", "x_hybrid_rrf", "x_ann_ndcg",
-      "x_graph_kcore",
-      // round-7 fourth-session additions
-      "x_text_nb", "x_graph_cc", "x_zorder_layout", "x_dsir_weights",
-      "x_mix_temperature", "x_strata_overlap", "x_embed_covariance",
-      "ts_gaps", "ts_mad", "x_text_ctfidf", "x_lsh_plan",
-      "x_quality_calibrated",
-      // round-8 additions
-      "td_time_travel", "td_change_feed", "x_dedup_cdc_bounded", "x_pack_stats",
-      // round-9 additions
-      "td_zmirror_read", "td_zmirror_tail",
-      // round-10 additions
-      "td_bucketed_join",
-      // round-11 additions
-      "td_compact_read", "x_quality_gopher",
-      // round-13 additions
-      "x_dedup_incremental_ppjoin", "x_skew_profile", "x_ts_holt",
-      "x_sketch_kmv_setops", "x_ts_lttb", "x_sketch_kmv_anotb",
-      // round-15 additions: x_dedup_ppjoin reverts to the one-shot
-      // r13 protocol (equal work across rounds); the stored-index
-      // serving face is timed under its own name; the image family is
-      // a REAL JDK codec loop (PNG encode+decode per asset), so its
-      // walls carry genuine per-row codec work by design
-      "x_dedup_ppjoin_stored", "td_meta_read_jdbc",
-      "x_image_decode", "x_image_dhash", "x_image_neardup",
-      "x_audio_decode", "x_image_incremental",
-      // round-16 additions: the video tier of the codec family — a
-      // REAL animated-GIF multi-frame round trip, plus the stride-2
-      // frame-sampling face (random-access read(i), skipped frames
-      // never decoded)
-      "x_video_decode", "x_video_sample",
-      // round-17 additions: the video near-dup tier — temporal-mean
-      // dHash fingerprint over sampled decoded frames, and the banded
-      // Hamming near-dup screen over it (the image tier's stack on
-      // the video modality)
-      "x_video_dhash", "x_video_neardup", "x_video_incremental",
-      // round-18 addition: IVF epoch MAINTENANCE — the held-out slice
-      // assigned against the frozen codebook and appended into the
-      // cell-partitioned store (new files under existing cell dirs),
-      // served through the same pruned path
-      "x_ann_incremental",
-      // round-18 addition: the ENCODED-AT-REST IVFPQ serve — the code
-      // table (bytes, not floats) partitioned by cell, probed under a
-      // static partition filter; same oracle as x_ann_ivfpq
-      "x_ann_ivfpq_stored",
-      // round-18 addition: the SEARCH INDEX AT REST — related-doc BM25
-      // served from the bucketBy(doc_id) tf store, scoring aggregate
-      // exchange-free from the parquet layout itself
-      "x_text_bm25_stored",
-      // round-18 addition: SEGMENTED BM25 — immutable per-batch
-      // segments with query-time df/stats merge (Lucene-segment
-      // design); same oracle as the stored form
-      "x_text_bm25_incremental",
-      // round-18 addition: TOMBSTONED BM25 — delete-by-id as an
-      // immutable tombstone segment (query-time anti-join bitset +
-      // negative fold rows); oracle rebuilds on the surviving docs
-      "x_text_bm25_deleted",
-      // round-18 addition: TOMBSTONED IVF — the vector-side delete
-      // face (sibling del tree, broadcast anti-join after the static
-      // cell prune); oracle screens the candidates
-      "x_ann_deleted"))
+    val headline = keep(headlineQueries)
+    val extended = keep(extendedQueries)
 
     // Warmup: run every headline query once at the smallest scale factor
     // (sibling sf0.001 dir when present) so whole-stage-codegen compiles,

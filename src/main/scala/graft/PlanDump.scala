@@ -268,26 +268,10 @@ object SortAggScan {
   * Usage: SPARK_GRAFT_AB=q1,q2 sbt "runMain graft.JobDecomp [sfdir]" */
 object JobDecomp {
   def main(args: Array[String]): Unit = {
-    val dir = if (args.nonEmpty) args(0)
-      else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val names = sys.env.getOrElse("SPARK_GRAFT_AB", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    require(names.nonEmpty, "set SPARK_GRAFT_AB=q1,q2,...")
-    val rounds = sys.env.getOrElse("SPARK_GRAFT_AB_ROUNDS", "5").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MPB", "4194304"))
-      .config("spark.sql.files.openCostInBytes", "1048576")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val dir = AbBench.sfDirArg(args)
+    val names = AbBench.abNames()
+    val rounds = AbBench.abRounds(5)
+    val spark = AbBench.session(sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"), logLevel = "ERROR")
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long, String)]()
     val stages = new java.util.concurrent.ConcurrentHashMap[Int, (Double, String)]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
@@ -311,13 +295,12 @@ object JobDecomp {
     def drain(): Unit =
       org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
     SparkEntry.prewarmBuilds(spark, dir)
-    val lookup = SparkEntry.queries ++ SparkEntry.devQueries
     names.foreach { n =>
-      lookup(n)(spark, dir).count() // warm
+      SparkEntry.queries(n)(spark, dir).count() // warm
       val best = (1 to rounds).map { _ =>
         drain(); jobs.clear(); stages.clear()
         val t0 = System.nanoTime()
-        lookup(n)(spark, dir).count()
+        SparkEntry.queries(n)(spark, dir).count()
         val wall = (System.nanoTime() - t0) / 1e9
         drain()
         (wall, jobs.values.toArray(Array.empty[(Long, Long, String)]).toSeq.sortBy(_._1),

@@ -19,14 +19,11 @@ object PlanDumpArgs {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // devQueries included so an AbBench reference formulation can be
-    // dumped as a "before" plan
-    val all = SparkEntry.queries ++ SparkEntry.devQueries
     for (name <- names) {
       println(s"\n===== $name =====")
       // same control-character escaping as PlanDump: keep the dump
       // diffable text even when a plan string carries NUL sentinels
-      println(all(name)(spark, dir).queryExecution.explainString(
+      println(SparkEntry.queries(name)(spark, dir).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
         .flatMap(c => if (c < ' ' && c != '\n' && c != '\t') f"\\u${c.toInt}%04x" else c.toString))
     }

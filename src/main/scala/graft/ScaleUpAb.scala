@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Isolated scale-up A/B: the r11-style adjudication harness for
@@ -28,26 +27,11 @@ import org.apache.spark.sql.functions._
   */
 object ScaleUpAb {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0)
-      else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val names = sys.env.getOrElse("SPARK_GRAFT_AB", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    require(names.nonEmpty, "set SPARK_GRAFT_AB=q1,q2,...")
-    val rounds = sys.env.getOrElse("SPARK_GRAFT_AB_ROUNDS", "9").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // volume-sized shuffles on BOTH sides, like the bench's section
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MPB", "4194304"))
-      .config("spark.sql.files.openCostInBytes", "1048576")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = AbBench.sfDirArg(args)
+    val names = AbBench.abNames()
+    val rounds = AbBench.abRounds(9)
+    // volume-sized shuffles on BOTH sides, like the bench's section
+    val spark = AbBench.session(AbBench.cpus)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     val pid = ProcessHandle.current().pid()
@@ -89,23 +73,12 @@ object ScaleUpAb {
     SparkEntry.prewarmBuilds(spark, m1)
     SparkEntry.prewarmBuilds(spark, m10)
 
-    // devQueries join the lookup (AbBench parity): stage probes need
-    // the same isolated 10× adjudication as registry queries
-    val lookup = SparkEntry.queries ++ SparkEntry.devQueries
-    def once(n: String, d: String): Double = {
-      val t0 = System.nanoTime()
-      lookup(n)(spark, d).count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // warm both sides (codegen, listings)
-    names.foreach { n => once(n, m1); once(n, m10) }
-    val samples = scala.collection.mutable.Map.empty[(String, String), List[Double]]
-      .withDefaultValue(Nil)
-    for (_ <- 1 to rounds; n <- names; d <- Seq(m1, m10))
-      samples((n, d)) ::= once(n, d)
+    // both sides interleaved per round: 1×, 10×, 1×, 10×, …
+    val samples = AbBench.interleave(for (n <- names; d <- Seq(m1, m10)) yield (n, d),
+      rounds) { case (n, d) => SparkEntry.queries(n)(spark, d).count() }
     for (n <- names) {
-      val t1 = samples((n, m1)).min
-      val t10 = samples((n, m10)).min
+      val t1 = samples((n, m1)).head
+      val t10 = samples((n, m10)).head
       println(f"$n%-32s t1x $t1%.3f  t10x $t10%.3f  ratio ${t10 / t1}%.2f  (min-of-$rounds interleaved)")
     }
     Seq(upDir, m1, m10).foreach(p => FsUtil.deleteRecursively(new java.io.File(p)))

@@ -5358,8 +5358,8 @@ object SparkEntry {
         // frame is cheap enough to evaluate twice, so the whole
         // packing is ONE action (+ the offsets broadcast build) —
         // interleaved A/B at the swap: 0.158/0.167 min/med vs the
-        // checkpoint+quantile form's 0.238/0.265 (dev_pack_sequences
-        // _quantile keeps the old shape for future A/Bs). Width is
+        // checkpoint+quantile form's 0.238/0.265 (OPTIMIZATION_r19.md
+        // §5). Width is
         // priority-domain knowledge (dense doc ids), not scale tuning:
         // buckets stay ≤64k docs at every corpus size while the
         // bucket COUNT grows with the data.
@@ -5403,7 +5403,7 @@ object SparkEntry {
         // pruning-diverges-the-branches finding still bites — the
         // 3-way interleaved A/B read width+ckpt 0.272/0.316 min/med
         // vs width-no-ckpt 0.303/0.368 vs the old quantile+ckpt form
-        // 0.307/0.388 (dev_pack_stats_quantile keeps the old shape).
+        // 0.307/0.388 (OPTIMIZATION_r19.md §5).
         // Jobs 4 → 3: the checkpoint, the offsets broadcast build,
         // and the serve.
         Curation.packStats(toks, "doc_id", "n_tokens", packTokens = 2048L,
@@ -6348,131 +6348,4 @@ object SparkEntry {
 
   def oracleSql: Map[String, String] =
     registry.collect { case (n, _, Some(sql)) => n -> sql }.toMap
-
-  /** Plan-variant candidates for [[AbBench]] interleaved A/Bs ONLY —
-    * never part of [[queries]], so Verify/Bench/the driver cannot see
-    * them. Keep losers out: a variant either wins its A/B and replaces
-    * the registry formulation, or is deleted; anything left here is an
-    * experiment in flight. (r15 adjudicated: literal-splice meta
-    * resolve and the hinted pre-joined dim broadcast both LOST to the
-    * registry formulations; unhex digest keys and the winner-frame
-    * coalesce WON and were promoted into x_pipeline_curate. r16
-    * adjudicated: importanceWeights single-collect fold beat the r15
-    * split-stats shape 0.282/0.324 vs 0.343/0.386 min/med interleaved,
-    * and fold+localCheckpoint(counts) beat the bare fold 0.234/0.260
-    * vs 0.281/0.314 — both promoted; the split shape deleted.) */
-  def devQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // r19 (verdict #5): the pre-swap quantile-scan pack forms, kept
-    // for interleaved A/Bs against the fixed-width forms now
-    // registered (measured at the swap — stats 3-way: width+ckpt
-    // 0.272/0.316 vs width-no-ckpt 0.303/0.368 vs this quantile+ckpt
-    // form 0.307/0.388; sequences: width-no-ckpt 0.158/0.167 vs this
-    // form 0.238/0.265. The losing width-no-ckpt stats variant and
-    // the winning forms' dev copies are deleted per the dev-queries
-    // policy.)
-    "dev_pack_stats_quantile" -> ((s, dir) => {
-      val toks = Tables.documents(s, dir).select(col("doc_id"),
-        size(filter(split(col("text"), " "), t => t =!= "")).as("n_tokens"))
-        .repartition(1)
-      Curation.packStats(toks, "doc_id", "n_tokens", packTokens = 2048L,
-          materialize = Some(true))
-        .orderBy("pack_id")
-    }),
-    "dev_pack_sequences_quantile" -> ((s, dir) => {
-      val toks = Tables.documents(s, dir).select(col("doc_id"),
-        size(filter(split(col("text"), " "), t => t =!= "")).as("n_tokens"))
-        .repartition(1)
-      Curation.packSequences(toks, "doc_id", "n_tokens", packTokens = 2048L)
-        .select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"),
-          col("token_start"), col("pack_id"), col("pack_offset"))
-        .orderBy("doc_id")
-    }),
-    // r17 ppjoin stage-decomposition PROBES (not plan variants): the
-    // AbBench/ScaleUpAb instruments behind the BASELINE.md weak-set
-    // and scale-up adjudications of the ppjoin family — kept so the
-    // next round can re-run the same decomposition
-    "dev_pp_setprep" -> ((s, dir) =>
-      graft.operators.Dedup.ppJoinSetPrepProbe(Tables.documents(s, dir),
-        n = 5, threshold = 0.5)),
-    "dev_pp_pairgen" -> ((s, dir) =>
-      graft.operators.Dedup.ppJoinPairGenProbe(Tables.documents(s, dir),
-        n = 5, threshold = 0.5)),
-    // r17 verdict #2: stage decomposition of the incremental screen
-    // for the 10x scale-up adjudication
-    "dev_ppa_keyed" -> ((s, dir) =>
-      graft.operators.Dedup.ppJoinAgainstKeyedProbe(
-        Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(5)) === 0),
-        storedPpJoinIndex(s, dir))),
-    "dev_ppa_cands" -> ((s, dir) =>
-      graft.operators.Dedup.ppJoinAgainstCandsProbe(
-        Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(5)) === 0),
-        storedPpJoinIndex(s, dir))),
-    // r18 verdict #6: stage decomposition of the PARQUET-STORED IVF
-    // serve path (x_ann_index_stored) for the 10x scale-up
-    // adjudication — probe-frame build (query-bounded, must be
-    // volume-flat) vs cell scoring (volume-bound, linear in probed
-    // cell depth; the broadcast is HINTED so corpus growth cannot
-    // flip the corpus side into a shuffle)
-    "dev_ivfs_probeq" -> ((s, dir) => {
-      val (cent, _) = storedIvfIndex(s, dir)
-      graft.operators.Similarity.ivfProbeQProbe(
-        Tables.embeddings(s, dir).filter(col("vec_id") < 8), cent, nprobe = 2)
-    }),
-    // r18 verdict #3: the pre-fold ctfidf reference formulation, kept
-    // for interleaved A/Bs against the folded plan now in classTfIdf
-    // (measured at the swap: folded min 0.330 / med 0.368 vs unfolded
-    // 0.405 / 0.514)
-    "dev_ctfidf_unfolded" -> ((s, dir) =>
-      graft.operators.TextAnalysis.classTfIdfUnfolded(
-        Tables.documents(s, dir), "source", topK = 10)
-        .orderBy("group", "rank")),
-    // r18 (optimization round): the pre-pushdown tombstone reference
-    // for x_ann_deleted — delPushdownMax = 0 forces the broadcast
-    // anti-join branch, the exact pre-change serve shape, for
-    // interleaved A/Bs against the NOT-IN pushdown now applied by
-    // default
-    "dev_ann_del_anti" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val (cent, corpus, del) = annDeletedStore(s, dir)
-      graft.operators.Similarity.ivfProbeTopKPruned(corpus,
-        emb.filter(col("vec_id") < 8), cent,
-        k = 5, nprobe = 2, cellCol = "cell", delOpt = Some(del),
-        delPushdownMax = 0)
-        .orderBy("query_id", "rank")
-    }),
-    // r19 (optimization round 2): the pre-fusion JOINED ivfpq
-    // probe/LUT reference (second queries scan joined back on
-    // query_id; one more job in the probe collect) — kept for
-    // interleaved A/Bs against the fused projection now applied by
-    // default (measured at the swap: fused min 0.441 / med 0.462 vs
-    // joined 0.462 / 0.524). The single-exchange BM25 rank fusion was
-    // A/B'd the same way and LOST (0.754/0.868 vs 0.562/0.726) — the
-    // losing variant is deleted per the dev-queries policy; the
-    // numbers live in OPTIMIZATION_r19.md.
-    "dev_ivfpq_stored_joined" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val (cent, codes, pq) = storedIvfPqIndex(s, dir)
-      Similarity.ivfPqTopKFromCodes(codes, emb.filter(col("vec_id") < 8),
-        cent, pq, k = 5, nprobe = 2, m = 2, dim = 64, fuseLut = false)
-        .orderBy("query_id", "rank")
-    }),
-    // r18 (optimization round): the pre-fuse three-leg reference for
-    // x_quality_gate_approx, kept for interleaved A/Bs against the
-    // fused quantileGateAudit now in the registry (measured at the
-    // swap: fused min 0.187 / med 0.207 vs split 0.340 / 0.362)
-    "dev_qga_split" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("lang"),
-        (col("n_chars").cast("long") * lit(1000000L)
-          + pmod(col("doc_id"), lit(1000000L))).as("score"))
-      graft.operators.Curation.quantileGateAuditSplit(docs, "lang", "score",
-        "doc_id", q = 0.3, accuracy = 1000)
-        .orderBy("lang")
-    }),
-    "dev_ivfs_scored" -> ((s, dir) => {
-      val (cent, corpus) = storedIvfIndex(s, dir)
-      graft.operators.Similarity.ivfScoredProbe(corpus,
-        graft.operators.Similarity.ivfProbeQProbe(
-          Tables.embeddings(s, dir).filter(col("vec_id") < 8), cent, nprobe = 2),
-        cellCol = "cell")
-    }))
 }

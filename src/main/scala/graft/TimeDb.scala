@@ -103,6 +103,7 @@ final class TimeDb(val spark: SparkSession, basePath: String,
       // path needs it (timedb/write.py:197).
       val bounds = TimeDb.cacheObserving(preFilter,
         count(lit(1)).as("rows"), min("valid_time").as("min_vt"), max("valid_time").as("max_vt"),
+        min("knowledge_time").as("min_kt"), max("knowledge_time").as("max_kt"),
         collect_set("retention").as("retentions"), approx_count_distinct("series_id").as("series"))
       val before = bounds("rows").asInstanceOf[Long]
       val rets = bounds("retentions").asInstanceOf[Seq[String]]
@@ -119,11 +120,24 @@ final class TimeDb(val spark: SparkSession, basePath: String,
           // prunes to the batch's tiers × months before any file is opened.
           val minVt = bounds("min_vt").asInstanceOf[Timestamp]
           val maxVt = bounds("max_vt").asInstanceOf[Timestamp]
-          val slabBase = store.scanValues().filter(
+          val vtSlab = store.scanValues().filter(
             col("retention").isin(rets: _*) &&
               col("valid_month") >= lit(Schema.monthOf(minVt)) &&
               col("valid_month") <= lit(Schema.monthOf(maxVt)) &&
               col("valid_time") >= lit(minVt) && col("valid_time") <= lit(maxVt))
+          // Under the knowledge_time scope only stored rows carrying one
+          // of the batch's knowledge_times can match a scope key, so the
+          // slab is also bounded by the batch's knowledge_time range
+          // (inclusive). Appended files lead with knowledge_time, so on
+          // them the bound prunes row groups too; compacted files are in
+          // sort-key order, so there it only drops rows after the scan.
+          val slabBase = unchangedScope match {
+            case UnchangedScope.KnowledgeTime =>
+              vtSlab.filter(
+                col("knowledge_time") >= lit(bounds("min_kt").asInstanceOf[Timestamp]) &&
+                  col("knowledge_time") <= lit(bounds("max_kt").asInstanceOf[Timestamp]))
+            case UnchangedScope.ValidTime => vtSlab
+          }
           // Driver-safety valve: for catalog-sized batches the literal
           // isin pushes all the way into the parquet scan; but a
           // crawl-scale batch touching tens of millions of series would

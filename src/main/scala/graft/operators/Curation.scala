@@ -63,7 +63,9 @@ object Curation {
     * is width-bounded at every scale while the bucket COUNT grows with
     * the data — the scale-adaptive shape, with no quantile scan and no
     * caller-supplied boundary list. Null priorities bucket to
-    * `Long.MaxValue`, preserving DESC NULLS LAST. Takes precedence
+    * `Long.MaxValue`, preserving DESC NULLS LAST; NaN priorities bucket
+    * to `Long.MinValue`, because Spark orders NaN above every double,
+    * so DESC puts them first. Takes precedence
     * over `fixedThresholds`/`buckets` when positive. */
   def runningTotalByPriority(df: DataFrame, priorityCol: String, tieCol: String,
       valueCol: String, out: String, buckets: Int = 0,
@@ -97,11 +99,14 @@ object Curation {
     // threshold apparatus with one monotone expression: floor(−p / w)
     // is non-decreasing as p descends, so range-bucket contiguity —
     // the only property the offsets fold needs — holds by
-    // construction, and nulls take the Long.MaxValue bucket (DESC
-    // NULLS LAST: after every real value).
+    // construction, nulls take the Long.MaxValue bucket (DESC
+    // NULLS LAST: after every real value), and NaN takes the
+    // Long.MinValue bucket (NaN sorts above every double; floor(NaN)
+    // would cast to bucket 0).
     val bucket =
       if (fixedWidth > 0.0)
         when(p.isNull, lit(Long.MaxValue))
+          .when(isnan(p), lit(Long.MinValue))
           .otherwise(floor(-p / lit(fixedWidth)).cast("long"))
       else {
         val thresholds =
@@ -360,8 +365,8 @@ object Curation {
   /** The pre-r18 three-leg formulation of [[quantileGateAudit]] —
     * totals, [[keepTopQuantile]], and [[keepTopQuantileApprox]] each
     * re-aggregating the input, joined per stratum. Kept as the
-    * spec-pinned value-equality reference and the AbBench
-    * counterpart (`dev_qga_split`) for the fused plan. */
+    * value-equality reference that PropertiesSpec pins the fused
+    * plan against. */
   private[graft] def quantileGateAuditSplit(df: DataFrame,
       stratumCol: String, scoreCol: String, tieCol: String, q: Double,
       accuracy: Int, boundFactor: Double = 5.0): DataFrame = {

@@ -227,50 +227,6 @@ object Dedup {
     intraPairsFromPostings(postings, sets, threshold)
   }
 
-  /** Dev probe (AbBench decomposition only): the set-preparation phase
-    * of [[ppJoinPairs]] alone — explode, rarity window, per-doc set
-    * assembly — with no checkpoint. */
-  private[graft] def ppJoinSetPrepProbe(docs: DataFrame, n: Int,
-      threshold: Double): DataFrame = {
-    val exploded = docs.select(col("doc_id"),
-      explode(graft.functions.ShingleHashes(col("text"), n, distinct = true)).as("sh"))
-    val keyed = exploded.withColumn("r",
-      rarityKey(count(lit(1)).over(Window.partitionBy(col("sh"))), col("sh")))
-    keyed.groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("r"))).as("rset"))
-      .withColumn("sz", size(col("rset")))
-  }
-
-  /** Dev probe: set-prep + posting explode + in-array pair generation
-    * + length/positional filters — everything in [[ppJoinPairs]] up to
-    * (but excluding) the verify joins. */
-  private[graft] def ppJoinPairGenProbe(docs: DataFrame, n: Int,
-      threshold: Double): DataFrame = {
-    val docRanks = ppJoinSetPrepProbe(docs, n, threshold)
-      .withColumn("plen",
-        (col("sz") - ceil(lit(threshold) * col("sz")) + 1).cast("int"))
-    val postings = docRanks
-      .select(col("doc_id"), col("sz"),
-        posexplode(slice(col("rset"), lit(1), col("plen"))))
-      .select(col("col").as("pt"), col("doc_id").as("id"), col("sz"),
-        (col("pos") + 1).as("i"))
-    val grouped = ppJoinPostingLists(postings)
-    val rawPairs = grouped.select(explode(expr(
-        "flatten(transform(sequence(0, size(es) - 2), " +
-          "i -> transform(slice(es, i + 2, size(es)), " +
-          "e -> struct(es[i].id AS id_a, e.id AS id_b, " +
-          "es[i].sz AS sz_a, e.sz AS sz_b, " +
-          "least(es[i].i, e.i) + least(es[i].sz - es[i].i, e.sz - e.i) AS ub))))"
-      )).as("p")).select(col("p.*"))
-    def jUb(x: Column): Column =
-      x.cast("double") / (col("sz_a") + col("sz_b") - x) >= threshold
-    rawPairs
-      .filter(jUb(least(col("sz_a"), col("sz_b"))))
-      .groupBy(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"))
-      .agg(min(col("ub")).as("__ub"))
-      .filter(jUb(col("__ub")))
-  }
-
   /** Intra-corpus PPJoin pair generation + verification from the
     * row-level prefix-posting table and the rarity-keyed set table —
     * the shared back half of [[ppJoinPairs]] (which derives both frames
@@ -693,50 +649,6 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col("new_id"), col("seen_id"), col("inter"),
         col("sz_new"), col("sz_seen"), round(col("jaccard"), 6).as("jaccard"))
-  }
-
-  /** Dev probe (ScaleUpAb decomposition): [[ppJoinAgainst]]'s rarity
-    * keying stage alone — batch grams left-joined to the stored df
-    * table. */
-  private[graft] def ppJoinAgainstKeyedProbe(incoming: DataFrame,
-      index: PpJoinIndex, textCol: String = "text"): DataFrame = {
-    val grams = incoming.select(col(index.idCol),
-      explode(graft.functions.ShingleHashes(col(textCol), index.n,
-        distinct = true)).as("sh"))
-    grams.join(index.dfTable, Seq("sh"), "left")
-      .withColumn("r", rarityKey(coalesce(col("df"), lit(0L)), col("sh")))
-  }
-
-  /** Dev probe: [[ppJoinAgainst]] up to (but excluding) the verify
-    * joins — keying, batch prefix build, the postings⋈prefix pair
-    * generator, and the length/positional candidate filters. */
-  private[graft] def ppJoinAgainstCandsProbe(incoming: DataFrame,
-      index: PpJoinIndex, textCol: String = "text"): DataFrame = {
-    val idCol = index.idCol
-    val threshold = index.threshold
-    val keyed = ppJoinAgainstKeyedProbe(incoming, index, textCol)
-    val bsets = keyed.groupBy(col(idCol))
-      .agg(sort_array(collect_list(col("r"))).as("__brset"))
-      .withColumn("__bsz", size(col("__brset")))
-      .withColumn("__bplen",
-        (col("__bsz") - ceil(lit(threshold) * col("__bsz")) + 1).cast("int"))
-    val bprefixes = bsets
-      .select(col(idCol).as("new_id"), col("__bsz"),
-        posexplode(slice(col("__brset"), lit(1), col("__bplen"))))
-      .select(col("new_id"), col("__bsz"), (col("pos") + 1).as("__bi"), col("col").as("pt"))
-    val rawPairs = index.postings.join(broadcast(bprefixes), "pt")
-      .select(col("new_id"), col("id").as("seen_id"),
-        col("__bsz").as("sz_new"), col("sz").as("sz_seen"),
-        (least(col("__bi"), col("i"))
-          + least(col("__bsz") - col("__bi"), col("sz") - col("i"))).as("ub"))
-      .filter(col("new_id") =!= col("seen_id"))
-    def jUb(x: Column): Column =
-      x.cast("double") / (col("sz_new") + col("sz_seen") - x) >= threshold
-    rawPairs
-      .filter(jUb(least(col("sz_new"), col("sz_seen"))))
-      .groupBy(col("new_id"), col("seen_id"), col("sz_new"), col("sz_seen"))
-      .agg(min(col("ub")).as("__ub"))
-      .filter(jUb(col("__ub")))
   }
 
   /** One-shot convenience: build the index from `seen` and screen

@@ -256,14 +256,13 @@ object Similarity {
     }
   }
 
-  // delPushdownMax default 4096 (r19, SIZED FROM DATA — DelPushdownAb
-  // on the bench's own 10× store, interleaved min/med): NOT-IN
-  // pushdown beats the distributed anti-join at 1k (0.522/0.570 vs
-  // 0.604/0.687) and 4k (0.515/0.624 vs 0.721/0.919) del ids and
-  // LOSES at 16k (0.822/0.984 vs 0.703/0.830) — the crossover sits in
-  // (4k, 16k), and 4096 is the largest measured winner. The r18
-  // default (65536) was never measured as a pushdown size; a 64k
-  // NOT-IN literal also bloats plan serialization for nothing.
+  // delPushdownMax default 4096 was measured ONCE, on this serve over
+  // the bench's 10× IVF vector store (interleaved min/med, r19; the
+  // numbers and the one-shot harness's description are in
+  // OPTIMIZATION_r19.md §4): NOT-IN pushdown beat the distributed
+  // anti-join at 1k and 4k del ids and lost at 16k, so the crossover
+  // sits in (4k, 16k) on that store, and 4096 is the largest measured
+  // winner. Other stores, corpus sizes and hosts were not measured.
   def ivfProbeTopKPruned(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
       k: Int, nprobe: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -299,7 +298,7 @@ object Similarity {
       .select(col("query_id"), col("cand_id"), col("cell"), col("score"), col("rank"))
   }
 
-  /** Dev probe (ScaleUpAb decomposition, [[ivfProbeTopK]] stage 1):
+  /** Serve stage 1 of [[ivfProbeTopK]] and [[ivfProbeTopKPruned]]:
     * the fused (query_id, cell, qv) probe frame — each query's `nprobe`
     * nearest trained centroids joined back to its vector. Probe list
     * and query vector fuse into ONE broadcast frame before the corpus
@@ -324,9 +323,10 @@ object Similarity {
       .select(col("query_id"), col("cell"), col("__v").as("qv"))
   }
 
-  /** Dev probe ([[ivfProbeTopK]] stage 2): probed cells' vectors scored
-    * against the broadcast probe frame — everything up to (but
-    * excluding) the per-query top-k window. The corpus side STREAMS
+  /** Serve stage 2 of [[ivfProbeTopK]] and [[ivfProbeTopKPruned]]:
+    * probed cells' vectors scored against the broadcast probe frame —
+    * everything up to (but excluding) the per-query top-k window. The
+    * corpus side STREAMS
     * against the pinned broadcast (the hint, not the planner's size
     * estimate, decides — so corpus growth can never flip this join to
     * a corpus shuffle); its wall is the volume-bound term: linear in
@@ -1204,8 +1204,7 @@ object Similarity {
       centroids: DataFrame, pq: DataFrame, k: Int, nprobe: Int, m: Int, dim: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       delOpt: Option[DataFrame] = None,
-      delPushdownMax: Int = 4096,
-      fuseLut: Boolean = true): DataFrame = {
+      delPushdownMax: Int = 4096): DataFrame = {
     require(k > 0 && nprobe > 0, "k and nprobe must be positive")
     require(m >= 1 && dim % m == 0, s"dim ($dim) must divide evenly into m ($m)")
     val subDim = dim / m
@@ -1224,18 +1223,8 @@ object Similarity {
       .withColumnRenamed(idCol, "query_id")
       .withColumn("crank", row_number().over(wc))
       .filter(col("crank") <= nprobe)
-    val probeLut0 =
-      if (fuseLut)
-        probeRanked.select(col("query_id"), col("cell"),
-          pqLutCol(books, subDim, col("__v")).as("__lut"))
-      else {
-        // pre-r19 reference shape (dev_ivfpq_stored_joined A/Bs): LUT
-        // from a second queries scan, joined back on query_id
-        val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-          .withColumn("__lut", pqLutCol(books, subDim, col("__qv")))
-          .select(col("query_id"), col("__lut"))
-        probeRanked.select(col("query_id"), col("cell")).join(q, "query_id")
-      }
+    val probeLut0 = probeRanked.select(col("query_id"), col("cell"),
+      pqLutCol(books, subDim, col("__v")).as("__lut"))
     val (probeRows, delIds) = collectProbeAndDelBounded(
       probeLut0, delOpt, idCol, codes.schema(idCol).dataType, delPushdownMax)
     val cells = probeRows.map(_.get(1)).distinct.toSeq

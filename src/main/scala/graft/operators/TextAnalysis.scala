@@ -787,7 +787,10 @@ object TextAnalysis {
     * shared bounded fold stops at `delPushdownMax + 1` ids) and fall
     * back to a distributed anti-join against the tombstone tree
     * itself, the shape that holds for arbitrarily large tombstone
-    * sets without driver memory. */
+    * sets without driver memory. The 4096 default is inherited by
+    * analogy from [[graft.operators.Similarity.ivfProbeTopKPruned]],
+    * where it was measured on the IVF vector store; the pushdown vs
+    * anti-join crossover was never measured on the BM25 store. */
   def bm25SegmentedTopK(segTf: DataFrame, segDf: DataFrame,
       segMeta: DataFrame, queryIds: Seq[Long], k: Int,
       k1: Double = 1.2, b: Double = 0.75,
@@ -1437,8 +1440,8 @@ object TextAnalysis {
 
   /** The pre-r18 [[classTfIdf]] formulation — the ng term as an
     * IN-PLAN 1-row broadcast (distinct → agg → crossJoin) running a
-    * second documents scan. Kept as the spec-pinned value-equality
-    * reference and the AbBench counterpart for the folded plan. */
+    * second documents scan. Kept as the value-equality reference
+    * that PropertiesSpec pins the folded plan against. */
   private[graft] def classTfIdfUnfolded(docs: DataFrame, groupCol: String,
       topK: Int = 10, textCol: String = "text"): DataFrame = {
     require(topK >= 1, "topK must be >= 1")

@@ -1120,8 +1120,13 @@ class OperatorsSpec extends SparkSpec {
   test("distributed prefix sum equals the single-partition window, incl. ties and nulls") {
     import org.apache.spark.sql.expressions.Window
     val rows = (1L to 500L).map { id =>
-      // bucket-boundary ties (few distinct priorities) + some null priorities
-      val p = if (id % 97 == 0) None else Some((id % 7).toDouble / 10.0)
+      // bucket-boundary ties (few distinct priorities) + some null
+      // priorities + some NaN priorities (Spark sorts NaN above every
+      // double, so DESC puts them first)
+      val p =
+        if (id % 97 == 0) None
+        else if (id % 89 == 0) Some(Double.NaN)
+        else Some((id % 7).toDouble / 10.0)
       (id, p, id % 13 + 1)
     }
     val df = rows.toDF("doc_id", "priority", "v")
@@ -1139,7 +1144,8 @@ class OperatorsSpec extends SparkSpec {
     // r19 fixed-width buckets: any positive width must reproduce the
     // naive window exactly — incl. the priorities here (sub-width
     // values collapsing into one bucket), the null priorities (their
-    // own Long.MaxValue bucket, DESC NULLS LAST), and boundary ties —
+    // own Long.MaxValue bucket, DESC NULLS LAST), the NaN priorities
+    // (their own Long.MinValue bucket, first), and boundary ties —
     // and with no quantile scan and materialize = false the operator
     // is a single action
     for (w <- Seq(0.05, 0.3, 1000.0)) {

@@ -942,4 +942,26 @@ class PlanSpec extends SparkSpec {
     assert(!ta.exists(_.getLong(0) == 0L),
       "tombstoned query doc must vanish from the over-bound serve")
   }
+
+  test("the frozen query set: 172 names, none dev_, all job-budgeted, bench set family-budgeted") {
+    def tableLines(path: String): Seq[String] = {
+      val src = scala.io.Source.fromFile(path)(scala.io.Codec.UTF8)
+      try src.getLines().map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).toList
+      finally src.close()
+    }
+    val names = SparkEntry.queries.keySet
+    assert(names.size == 172, s"${names.size} registered queries")
+    assert(!names.exists(_.startsWith("dev_")), names.filter(_.startsWith("dev_")))
+    // job_budget.txt: `query<TAB>jobs`, one line per registered query
+    val jobBudgeted = tableLines(JobBudgetScan.BudgetPath).map(_.split('\t')(0)).toSet
+    assert((names -- jobBudgeted).isEmpty, s"no job budget: ${names -- jobBudgeted}")
+    // family_budget.txt: `family budget query...` over the queries the
+    // bench times (the rest run under Verify only); the bench reports a
+    // timed query in no family as `unbudgeted`
+    val benched = (Bench.headlineQueries ++ Bench.extendedQueries).toSet
+    assert((benched -- names).isEmpty, s"bench times unregistered: ${benched -- names}")
+    val familyBudgeted = tableLines("tools/family_budget.txt")
+      .flatMap(_.split("\\s+").drop(2)).toSet
+    assert((benched -- familyBudgeted).isEmpty, s"in no family: ${benched -- familyBudgeted}")
+  }
 }

@@ -327,6 +327,28 @@ class TimeDbSpec extends SparkSpec {
     }
   }
 
+  test("skip_unchanged knowledge_time scope: the batch's kt bounds are inclusive, other kts never match") {
+    withDb { db =>
+      val Seq(k0, k1, k2, k3) = (0 until 4).map(h => ts(f"2024-02-01T$h%02d:00:00Z"))
+      def rows(hourKts: (Int, java.sql.Timestamp)*) =
+        hourKts.map { case (i, kt) => (1L, vts(i), kt, i * 10.0) }
+          .toDF("series_id", "valid_time", "knowledge_time", "value")
+      // stored: hours 0 and 1 at the batch's two knowledge_times (its
+      // lower and upper bound); hour 2 at k2, a kt inside the batch's
+      // range the batch does not carry; hour 3 at k0, below the range
+      db.write(rows(0 -> k1, 1 -> k3, 2 -> k2, 3 -> k0))
+      // the batch restates all four hours with the stored values, at k1 and k3
+      val res = db.write(rows(0 -> k1, 1 -> k3, 2 -> k1, 3 -> k3),
+        skipUnchanged = true, unchangedScope = UnchangedScope.KnowledgeTime)
+      assert(res == WriteResult(2, 2))
+      val landed = db.read(ReadFilter(Seq(1L)), includeKnowledgeTime = true)
+        .select("valid_time", "knowledge_time").as[(java.sql.Timestamp, java.sql.Timestamp)]
+        .collect().toSet
+      assert(landed == Set(vts(0) -> k1, vts(1) -> k3, vts(2) -> k2, vts(2) -> k1,
+        vts(3) -> k0, vts(3) -> k3))
+    }
+  }
+
   test("write rejects unknown values in a caller-supplied retention column") {
     withDb { db =>
       val bad = revision(1).withColumn("retention", lit("eternal"))
