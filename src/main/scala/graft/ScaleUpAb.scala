@@ -23,7 +23,10 @@ import org.apache.spark.sql.functions._
   * rests on.
   *
   * Usage: SPARK_GRAFT_AB=q1,q2 sbt "runMain graft.ScaleUpAb [sfdir]"
-  * Never writes artifact files — evidence goes to BASELINE.md by hand.
+  * The queries must read only the scaled tables
+  * ([[ScaleUpTables.tables]]); any other name fails before timing.
+  * Never writes artifact files — evidence goes to BASELINE.md by hand;
+  * its temp dirs are removed on every exit.
   */
 object ScaleUpAb {
   def main(args: Array[String]): Unit = {
@@ -36,19 +39,38 @@ object ScaleUpAb {
 
     val pid = ProcessHandle.current().pid()
     val tmp = sys.props("java.io.tmpdir")
-    // 10× build: same construction as Bench's scale_up section
     val upDir = new java.io.File(tmp, s"graft_scaleupab_${pid}").getPath
-    // the ONE shared construction (see ScaleUpTables): this harness
-    // adjudicates bench ratios, so it must build the bench's workload
+    val m1 = new java.io.File(tmp, s"graft_scaleupab_m1_$pid").getPath
+    val m10 = new java.io.File(tmp, s"graft_scaleupab_m10_$pid").getPath
+    try run(spark, sfDir, names, rounds, upDir, m1, m10)
+    finally {
+      Seq(upDir, m1, m10).foreach(p => FsUtil.deleteRecursively(new java.io.File(p)))
+      spark.stop()
+    }
+  }
+
+  private def run(spark: org.apache.spark.sql.SparkSession, sfDir: String,
+      names: Seq[String], rounds: Int, upDir: String, m1: String, m10: String): Unit = {
+    // 10× build: the ONE shared construction (see ScaleUpTables) — this
+    // harness adjudicates bench ratios, so it must build the bench's
+    // workload
     ScaleUpTables.build10x(spark, sfDir, upDir)
     Tables.invalidate()
     SparkEntry.invalidateBuildMemos()
 
     // same ingest layout on both sides
-    val m1 = new java.io.File(tmp, s"graft_scaleupab_m1_$pid").getPath
-    val m10 = new java.io.File(tmp, s"graft_scaleupab_m10_$pid").getPath
     graft.operators.Layout.rechunkMirror(spark, sfDir, m1, Bench.chunkPolicy)
     graft.operators.Layout.rechunkMirror(spark, upDir, m10, Bench.chunkPolicy)
+    // every named query must resolve against the 10× mirror before any
+    // timing: it holds only the tables build10x scales
+    for (n <- names) {
+      try SparkEntry.queries(n)(spark, m10).queryExecution.assertAnalyzed()
+      catch {
+        case e: Exception => throw new IllegalArgumentException(
+          s"query $n does not resolve against the 10x mirror, which holds only the " +
+            s"${ScaleUpTables.tables.mkString(", ")} tables: ${e.getMessage}", e)
+      }
+    }
 
     // shard skew check (documents family)
     def docStats(dir: String): (Long, Double, Long, Long) = {
@@ -81,7 +103,5 @@ object ScaleUpAb {
       val t10 = samples((n, m10)).head
       println(f"$n%-32s t1x $t1%.3f  t10x $t10%.3f  ratio ${t10 / t1}%.2f  (min-of-$rounds interleaved)")
     }
-    Seq(upDir, m1, m10).foreach(p => FsUtil.deleteRecursively(new java.io.File(p)))
-    spark.stop()
   }
 }

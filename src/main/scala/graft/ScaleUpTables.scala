@@ -27,6 +27,9 @@ import org.apache.spark.sql.functions.{col, lit, max, regexp_replace}
   *   densification artifact).
   */
 object ScaleUpTables {
+  /** The tables [[build10x]] writes; a 10× dir holds nothing else. */
+  val tables: Seq[String] = Seq("events", "documents", "embeddings")
+
   def build10x(spark: SparkSession, sfDir: String, upDir: String): Unit = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val base = spark.read.parquet(s"$sfDir/events.parquet")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Portable
+import graft.sources.IndexStore
 
 /** Deduplication operators for LLM-training-data pipelines
   * (SURVEY.md §2.12 X1/X2), designed around shuffle-on-key patterns that
@@ -442,100 +443,35 @@ object Dedup {
       sets = index.sets.repartition(col(index.idCol))
         .sortWithinPartitions(index.idCol).localCheckpoint())
 
-  /** Persist a [[PpJoinIndex]] as BUCKETED parquet tables — the
-    * store-durable form of [[colocatePpJoinIndex]]: the two tables
-    * [[ppJoinAgainst]] joins on are written `bucketBy` their join keys
-    * (df/rarity vocabulary by `sh`, rarity-keyed sets by id), so a
-    * LOADED index's scans expose `HashPartitioning` to the planner and
-    * every screen in every FUTURE session finds the corpus side
-    * already distributed and sorted — zero corpus-side exchanges, paid
-    * once at the epoch write instead of once per session (the
-    * localCheckpoint co-location dies with its JVM; a 100 TB index
-    * outlives any session). The row-level postings stay unbucketed:
-    * their only consumer streams them against a broadcast prefix
-    * build, so a clustering would buy nothing.
+  /** Persist a [[PpJoinIndex]] as a BUCKETED epoch store
+    * ([[graft.sources.IndexStore.write]]) — the store-durable form of
+    * [[colocatePpJoinIndex]]: the two tables [[ppJoinAgainst]] joins
+    * on are bucketed by their join keys (df/rarity vocabulary by `sh`,
+    * rarity-keyed sets by id), so every screen in every FUTURE session
+    * finds the corpus side already distributed and sorted — zero
+    * corpus-side exchanges, paid once at the epoch write instead of
+    * once per session (the localCheckpoint co-location dies with its
+    * JVM; a 100 TB index outlives any session). The row-level
+    * postings stay unbucketed: their only consumer streams them
+    * against a broadcast prefix build, so a clustering would buy
+    * nothing.
     *
-    * One file per bucket: each table is repartitioned on its bucket
-    * key with the bucket count before the write — `bucketBy`'s
-    * partition-id expression is the same murmur3-pmod, so every write
-    * task holds exactly one bucket and the reader keeps the file-level
-    * sort (multi-file buckets forfeit `sortBy`'s outputOrdering).
-    *
-    * `n`/`threshold`/`idCol`/`nBuckets` travel WITH the store as a
-    * one-row meta table, preserving the case class's
-    * mismatched-parameter guarantee across sessions (and letting
-    * [[registerPpJoinIndexBucketed]] re-declare the bucket spec
-    * exactly — a wrong bucket count on re-registration would silently
-    * mis-route the bucketed join). Tables land in the session catalog
+    * `n`/`threshold`/`idCol`/`nBuckets` travel WITH the store in its
+    * meta row, preserving the case class's mismatched-parameter
+    * guarantee across sessions. Tables land in the session catalog
     * under `<tablePrefix>_{df,sets,postings,meta}` with data under
     * `path`; [[loadPpJoinIndexBucketed]] reconstructs the index from
-    * the catalog names. The catalog entry is METADATA only — under
-    * Spark's default in-memory catalog it dies with the session while
-    * the files and their bucketed layout persist; a new session
-    * re-attaches with [[registerPpJoinIndexBucketed]] (a persistent
-    * metastore makes that call a no-op). */
+    * the catalog names, and a new session re-attaches with
+    * [[graft.sources.IndexStore.register]]. */
   def storePpJoinIndexBucketed(index: PpJoinIndex, tablePrefix: String,
-      path: String, nBuckets: Int = 32): Unit = {
-    require(tablePrefix.matches("[A-Za-z0-9_]+"),
-      s"unsafe table prefix: $tablePrefix")
-    require(nBuckets > 0, "nBuckets must be positive")
-    import org.apache.spark.sql.SaveMode
-    val spark = index.sets.sparkSession
-    index.dfTable.repartition(nBuckets, col("sh"))
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .option("path", s"$path/df")
-      .bucketBy(nBuckets, "sh").sortBy("sh")
-      .saveAsTable(s"${tablePrefix}_df")
-    index.sets.repartition(nBuckets, col(index.idCol))
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .option("path", s"$path/sets")
-      .bucketBy(nBuckets, index.idCol).sortBy(index.idCol)
-      .saveAsTable(s"${tablePrefix}_sets")
-    index.postings
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .option("path", s"$path/postings")
-      .saveAsTable(s"${tablePrefix}_postings")
-    spark.createDataFrame(Seq((index.n, index.threshold, index.idCol, nBuckets)))
-      .toDF("n", "threshold", "id_col", "n_buckets")
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .option("path", s"$path/meta")
-      .saveAsTable(s"${tablePrefix}_meta")
-  }
-
-  /** Re-attach a [[storePpJoinIndexBucketed]] store written by a PRIOR
-    * session: declares the four catalog tables over the existing files
-    * (schemas inferred from the parquet, bucket spec re-stated from
-    * the store's own meta row — never from a caller guess, since a
-    * wrong declared bucket count silently mis-routes the bucketed
-    * join). Idempotent: tables that already exist are left alone, so
-    * calling it in the writing session is a no-op. After this,
-    * [[loadPpJoinIndexBucketed]] serves screens exchange-free exactly
-    * as in the epoch that wrote the store. */
-  def registerPpJoinIndexBucketed(spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String, path: String): Unit = {
-    require(tablePrefix.matches("[A-Za-z0-9_]+"),
-      s"unsafe table prefix: $tablePrefix")
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val idCol = meta.getString(2)
-    val nBuckets = meta.getInt(3)
-    def ddlCols(sub: String): String =
-      spark.read.parquet(s"$path/$sub").schema.fields
-        .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
-    def ensure(suffix: String, sub: String, bucketCol: Option[String]): Unit = {
-      val name = s"${tablePrefix}_$suffix"
-      if (!spark.catalog.tableExists(name)) {
-        val cluster = bucketCol.map(c =>
-          s" CLUSTERED BY (`$c`) SORTED BY (`$c`) INTO $nBuckets BUCKETS")
-          .getOrElse("")
-        spark.sql(s"CREATE TABLE $name (${ddlCols(sub)}) USING parquet" +
-          cluster + s" LOCATION '$path/$sub'")
-      }
-    }
-    ensure("df", "df", Some("sh"))
-    ensure("sets", "sets", Some(idCol))
-    ensure("postings", "postings", None)
-    ensure("meta", "meta", None)
-  }
+      path: String, nBuckets: Int = 32): Unit =
+    IndexStore.write(tablePrefix, path, nBuckets, Seq(
+        IndexStore.Table("df", index.dfTable, Seq("sh")),
+        IndexStore.Table("sets", index.sets, Seq(index.idCol)),
+        IndexStore.Table("postings", index.postings)),
+      index.sets.sparkSession
+        .createDataFrame(Seq((index.n, index.threshold, index.idCol, nBuckets)))
+        .toDF("n", "threshold", "id_col", "n_buckets"))
 
   /** Reconstruct a [[PpJoinIndex]] from [[storePpJoinIndexBucketed]]'s
     * catalog tables. The df and sets frames come back as bucketed
@@ -980,70 +916,26 @@ object Dedup {
       .filter(size(col("ids")) <= maxBucket)
   }
 
-  /** BUCKETED epoch store for a [[nearDupIndex]] frame (r19, layout
-    * parity with the ppjoin/BM25 stores — the last stored index family
-    * on plain parquet): posting lists written `bucketBy`+`sortBy`
-    * their join key (`band`, `band_key`), so a LOADED index's scan
-    * exposes `HashPartitioning` to the planner. The current screen
+  /** BUCKETED epoch store ([[graft.sources.IndexStore.write]]) for a
+    * [[nearDupIndex]] frame (r19, layout parity with the ppjoin/BM25
+    * stores): posting lists bucketed by their join key (`band`,
+    * `band_key`), so a LOADED index's scan exposes `HashPartitioning`
+    * to the planner. The current screen
     * ([[incrementalNearDupAgainst]]) broadcasts the batch side, so no
     * corpus exchange exists to remove TODAY — the bucketing is paid
     * once at the epoch write to foreclose the per-session re-shuffle
     * for any future screen shape that does shuffle the index (equally
-    * keyed joins/aggregations skip the exchange, §2.4). One file per
-    * bucket, same argument as the ppjoin store: the pre-write
-    * repartition uses bucketBy's own murmur3-pmod routing, so every
-    * write task holds exactly one bucket and the reader keeps the
-    * file-level sort. Build params travel as a meta table so
-    * [[registerNearDupIndexBucketed]] re-declares the bucket spec from
-    * the store itself, never from a caller guess. */
+    * keyed joins/aggregations skip the exchange, §2.4). Build params
+    * travel in the meta row; a new session re-attaches with
+    * [[graft.sources.IndexStore.register]]. */
   def storeNearDupIndexBucketed(index: DataFrame, n: Int, numHashes: Int,
       bands: Int, maxBucket: Int, tablePrefix: String, path: String,
-      nBuckets: Int = 32, idCol: String = "doc_id"): Unit = {
-    require(tablePrefix.matches("[A-Za-z0-9_]+"),
-      s"unsafe table prefix: $tablePrefix")
-    require(nBuckets > 0, "nBuckets must be positive")
-    import org.apache.spark.sql.SaveMode
-    val spark = index.sparkSession
-    index.repartition(nBuckets, col("band"), col("band_key"))
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .option("path", s"$path/postings")
-      .bucketBy(nBuckets, "band", "band_key").sortBy("band", "band_key")
-      .saveAsTable(s"${tablePrefix}_postings")
-    spark.createDataFrame(Seq((n, numHashes, bands, maxBucket, nBuckets, idCol)))
-      .toDF("n", "num_hashes", "bands", "max_bucket", "n_buckets", "id_col")
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .option("path", s"$path/meta")
-      .saveAsTable(s"${tablePrefix}_meta")
-  }
-
-  /** Re-attach a [[storeNearDupIndexBucketed]] store written by a
-    * PRIOR session — the neardup twin of
-    * [[registerPpJoinIndexBucketed]]: declares the catalog tables over
-    * the existing files with the bucket spec re-stated from the
-    * store's own meta row. Idempotent. */
-  def registerNearDupIndexBucketed(spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String, path: String): Unit = {
-    require(tablePrefix.matches("[A-Za-z0-9_]+"),
-      s"unsafe table prefix: $tablePrefix")
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val nBuckets = meta.getInt(4)
-    def ddlCols(sub: String): String =
-      spark.read.parquet(s"$path/$sub").schema.fields
-        .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
-    def ensure(suffix: String, sub: String, bucketed: Boolean): Unit = {
-      val name = s"${tablePrefix}_$suffix"
-      if (!spark.catalog.tableExists(name)) {
-        val cluster = if (bucketed)
-          s" CLUSTERED BY (`band`, `band_key`) SORTED BY (`band`, `band_key`)" +
-            s" INTO $nBuckets BUCKETS"
-        else ""
-        spark.sql(s"CREATE TABLE $name (${ddlCols(sub)}) USING parquet" +
-          cluster + s" LOCATION '$path/$sub'")
-      }
-    }
-    ensure("postings", "postings", bucketed = true)
-    ensure("meta", "meta", bucketed = false)
-  }
+      nBuckets: Int = 32, idCol: String = "doc_id"): Unit =
+    IndexStore.write(tablePrefix, path, nBuckets,
+      Seq(IndexStore.Table("postings", index, Seq("band", "band_key"))),
+      index.sparkSession
+        .createDataFrame(Seq((n, numHashes, bands, maxBucket, nBuckets, idCol)))
+        .toDF("n", "num_hashes", "bands", "max_bucket", "n_buckets", "id_col"))
 
   /** The loaded posting-list frame of a [[storeNearDupIndexBucketed]]
     * store: a bucketed scan exposing HashPartitioning(band, band_key)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
 import graft.functions.Portable
+import graft.sources.IndexStore
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (SURVEY.md §2.12 X3).
@@ -370,12 +371,10 @@ object Similarity {
     * discipline. */
   def ivfAppend(batch: DataFrame, centroids: DataFrame, corpusPath: String,
       batchId: Long,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    require(batchId >= 0, "batchId must be >= 0 (0 is the epoch build)")
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
     writeLevel(batch.withColumn("cell",
       nearestCentroidCol(centroids, col(vecCol)).getField("cell")),
       corpusPath, batchId)
-  }
 
   /** Small-file COMPACTION for the maintained IVF store — the
     * file-count answer to [[ivfAppend]]'s one-dir-per-(cell, batch)
@@ -388,32 +387,19 @@ object Similarity {
     * so a compaction trigger costs one corpus rewrite and the store
     * collapses back to one level per cell.
     *
-    * Crash convergence (the replay contract, extended): the merged
-    * read deliberately INCLUDES `batch_id = batchId` — a replay after
-    * a crash between the rewrite and the deletes re-reads its own
-    * committed merge (complete the moment the job committed) plus
-    * whatever old levels survived, dedupes the overlap, and rewrites
-    * the same leaves; a crash mid-delete just leaves fewer levels for
-    * the replay to fold. Every path converges to the same compacted
-    * state because rows are bit-identical across levels
-    * (deterministic assignment) and the dedupe keeps one.
-    *
-    * Contract: SINGLE WRITER (run it from the ingest loop's own
-    * foreachBatch thread — [[graft.streaming.StreamingSimilarity
-    * .ingestIvf]]'s `compactEvery` does), and concurrent readers must
-    * tolerate the delete window (directory-listing readers can hit a
-    * vanished level mid-scan). Snapshot-isolated maintenance — the
-    * manifest-commit discipline [[graft.sources.SeriesStore
-    * .compactPartitions]] has — is the upgrade path when readers
-    * can't quiesce. */
+    * Crash convergence (the merged read deliberately INCLUDES
+    * `batch_id = batchId`; rows are bit-identical across levels
+    * because assignment is deterministic, and the dedupe keeps one)
+    * and the single-writer contract are the levelled store's
+    * ([[graft.sources.IndexStore]]); run it from the ingest loop's own
+    * foreachBatch thread ([[graft.streaming.StreamingSimilarity
+    * .ingestIvf]]'s `compactEvery` does). */
   def ivfCompact(batch: DataFrame, centroids: DataFrame, corpusPath: String,
       batchId: Long,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    require(batchId >= 0, "batchId must be >= 0 (0 is the epoch build)")
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
     foldForward(batch.withColumn("cell",
       nearestCentroidCol(centroids, col(vecCol)).getField("cell")),
       corpusPath, batchId, idCol)
-  }
 
   /** [[ivfAppend]] for the ENCODED-AT-REST code store
     * ([[ivfPqStoreRows]]' layout): the batch is assigned against the
@@ -428,11 +414,9 @@ object Similarity {
     * (its static cell filter prunes the first partition level). */
   def ivfPqAppend(batch: DataFrame, centroids: DataFrame, pq: DataFrame,
       corpusPath: String, batchId: Long, m: Int, dim: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    require(batchId >= 0, "batchId must be >= 0 (0 is the epoch build)")
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
     writeLevel(preparedCodeRows(batch, centroids, pq, m, dim, idCol, vecCol),
       corpusPath, batchId)
-  }
 
   /** [[ivfCompact]] for the ENCODED-AT-REST code store: identical
     * fold-forward semantics and crash-convergence argument, with the
@@ -441,11 +425,9 @@ object Similarity {
     * float vector. */
   def ivfPqCompact(batch: DataFrame, centroids: DataFrame, pq: DataFrame,
       corpusPath: String, batchId: Long, m: Int, dim: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    require(batchId >= 0, "batchId must be >= 0 (0 is the epoch build)")
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
     foldForward(preparedCodeRows(batch, centroids, pq, m, dim, idCol, vecCol),
       corpusPath, batchId, idCol)
-  }
 
   /** The trigger batch in the code store's row shape — coarse cell +
     * PQ codes in one broadcast-kernel projection (zero shuffles). */
@@ -482,77 +464,34 @@ object Similarity {
       corpusPath: String, ids: Seq[Long], batchId: Long,
       idCol: String = "vec_id"): Unit = {
     require(ids.nonEmpty, "ids must be non-empty")
-    require(batchId >= 0, "batchId must be >= 0")
-    spark.createDataset(ids)(org.apache.spark.sql.Encoders.scalaLong)
-      .toDF(idCol)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(deletePath(corpusPath))
+    IndexStore.writeLeaf(
+      spark.createDataset(ids)(org.apache.spark.sql.Encoders.scalaLong).toDF(idCol),
+      deletePath(corpusPath), "batch_id", batchId)
   }
 
-  /** One store level under the replay contract: dynamic partition
-    * overwrite keyed (cell, batch_id) — shared by the appends and the
+  /** One store level under the replay contract: a `batch_id` leaf under
+    * the `cell` partition level — shared by the appends and the
     * fold-forward rewrite. `prepared` carries a `cell` column beside
     * the data columns and no `batch_id`. */
-  private def writeLevel(prepared: DataFrame, corpusPath: String,
-      batchId: Long): Unit =
-    prepared
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell", "batch_id")
-      .parquet(corpusPath)
+  private def writeLevel(prepared: DataFrame, corpusPath: String, batchId: Long): Unit =
+    IndexStore.writeLeaf(prepared, corpusPath, "batch_id", batchId, "cell")
 
-  /** Shared fold-forward core of [[ivfCompact]] / [[ivfPqCompact]] —
-    * see ivfCompact's scaladoc for the crash-convergence argument.
-    * [[ivfDelete]] tombstones at `batch_id <= batchId` are applied
-    * PHYSICALLY here: the del set anti-joins the resident rows out of
-    * the fold, and the applied tombstone leaves are dropped after the
-    * rewrite commits (a crash in between just means the replay — or
-    * the serve's `delOpt` — applies an already-physically-absent del
-    * set again: a no-op). */
+  /** Shared fold-forward core of [[ivfCompact]] / [[ivfPqCompact]]:
+    * merge the trigger batch with the [[graft.sources.IndexStore
+    * .resident]] rows (tombstones at `batch_id <= batchId` applied
+    * PHYSICALLY — the del set anti-joins them out of the fold), dedupe
+    * by id, rewrite as this level, then reap the superseded levels and
+    * the applied tombstone leaves (a crash in between just means the
+    * replay — or the serve's `delOpt` — applies an
+    * already-physically-absent del set again: a no-op). */
   private def foldForward(prepared: DataFrame, corpusPath: String,
       batchId: Long, idCol: String): Unit = {
     val spark = prepared.sparkSession
-    val root = new org.apache.hadoop.fs.Path(corpusPath)
-    val delRoot = new org.apache.hadoop.fs.Path(deletePath(corpusPath))
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val resident: Option[DataFrame] =
-      if (fs.exists(root)) {
-        val raw = spark.read.parquet(corpusPath)
-          .filter(col("batch_id") <= batchId).drop("batch_id")
-        Some(if (fs.exists(delRoot))
-          raw.join(broadcast(
-            spark.read.parquet(deletePath(corpusPath))
-              .filter(col("batch_id") <= batchId)
-              .select(col(idCol)).distinct()),
-            Seq(idCol), "left_anti")
-        else raw)
-      } else None
-    val merged = resident.fold(prepared)(r =>
-      prepared.unionByName(r).dropDuplicates(idCol))
+    val merged = IndexStore.resident(spark, corpusPath, deletePath(corpusPath),
+        "batch_id", batchId, idCol)
+      .fold(prepared)(r => prepared.unionByName(r).dropDuplicates(idCol))
     writeLevel(merged, corpusPath, batchId)
-    // fold complete and committed — drop the superseded levels and
-    // the now-applied tombstones
-    if (fs.exists(root)) fs.listStatus(root).foreach { cellDir =>
-      if (cellDir.isDirectory && cellDir.getPath.getName.startsWith("cell="))
-        fs.listStatus(cellDir.getPath).foreach { level =>
-          val n = level.getPath.getName
-          if (n.startsWith("batch_id=") &&
-              scala.util.Try(n.stripPrefix("batch_id=").toLong)
-                .toOption.exists(_ < batchId))
-            fs.delete(level.getPath, true)
-        }
-    }
-    if (fs.exists(delRoot)) fs.listStatus(delRoot).foreach { level =>
-      val n = level.getPath.getName
-      if (n.startsWith("batch_id=") &&
-          scala.util.Try(n.stripPrefix("batch_id=").toLong)
-            .toOption.exists(_ <= batchId))
-        fs.delete(level.getPath, true)
-    }
+    IndexStore.reap(spark, Seq(corpusPath), deletePath(corpusPath), "batch_id", batchId)
   }
 
   /** Per-cell centroids — the training step an IVF index needs: mean of

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Portable, ShingleHashes}
+import graft.sources.IndexStore
 
 /** Text-analysis operators for training-data curation
   * (SURVEY.md §2.12 X4): language ID, quality scoring, token statistics,
@@ -508,12 +509,12 @@ object TextAnalysis {
     tf.groupBy(col(idCol)).agg(first(col("__dl")).as("__dl"))
       .agg(count(lit(1)).as("__n"), avg(col("__dl")).as("__avgdl"))
 
-  /** Persist a [[bm25Index]] frame as a BUCKETED parquet table (plus
-    * its one-row stats table and a meta row) — the store-durable form
-    * of the localCheckpoint pin, the
+  /** Persist a [[bm25Index]] frame as a BUCKETED epoch store
+    * ([[graft.sources.IndexStore.write]]: the tf table, its one-row
+    * stats table and a meta row) — the store-durable form of the
+    * localCheckpoint pin, the
     * [[graft.operators.Dedup.storePpJoinIndexBucketed]] treatment on
-    * the text side: the tf table writes `bucketBy` the doc id (one
-    * file per bucket so `sortBy` ordering survives the read), so a
+    * the text side: the tf table is bucketed by the doc id, so a
     * LOADED index's scan exposes `HashPartitioning(doc id)` to the
     * planner and the scoring aggregate in [[bm25RelatedTopKFrom]] —
     * whose grouping keys include the doc id — runs with NO
@@ -521,62 +522,15 @@ object TextAnalysis {
     * future session (PlanSpec-pinned). At 100 TB this is the search
     * index at rest: the token stream's doc-clustered layout is paid
     * once at the epoch write, never per retrieval. `idCol` and
-    * `nBuckets` travel in the meta table so
-    * [[registerBm25IndexBucketed]] re-declares the bucket spec exactly
-    * (a wrong declared bucket count silently mis-routes the bucketed
-    * scan). */
+    * `nBuckets` travel in the meta row; a new session re-attaches with
+    * [[graft.sources.IndexStore.register]]. */
   def storeBm25IndexBucketed(tf: DataFrame, tablePrefix: String, path: String,
-      nBuckets: Int = 32, idCol: String = "doc_id"): Unit = {
-    require(tablePrefix.matches("[A-Za-z0-9_]+"),
-      s"unsafe table prefix: $tablePrefix")
-    require(nBuckets > 0, "nBuckets must be positive")
-    import org.apache.spark.sql.SaveMode
-    tf.repartition(nBuckets, col(idCol))
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .option("path", s"$path/tf")
-      .bucketBy(nBuckets, idCol).sortBy(idCol)
-      .saveAsTable(s"${tablePrefix}_tf")
-    bm25IndexStats(tf, idCol)
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .option("path", s"$path/stats")
-      .saveAsTable(s"${tablePrefix}_stats")
-    tf.sparkSession.createDataFrame(Seq((idCol, nBuckets)))
-      .toDF("id_col", "n_buckets")
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .option("path", s"$path/meta")
-      .saveAsTable(s"${tablePrefix}_meta")
-  }
-
-  /** Re-attach a [[storeBm25IndexBucketed]] store written by a PRIOR
-    * session: declares the catalog tables over the existing files
-    * (schemas inferred from the parquet, bucket spec re-stated from
-    * the store's own meta row). Idempotent — existing tables are left
-    * alone, so calling it in the writing session is a no-op. */
-  def registerBm25IndexBucketed(spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String, path: String): Unit = {
-    require(tablePrefix.matches("[A-Za-z0-9_]+"),
-      s"unsafe table prefix: $tablePrefix")
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val idCol = meta.getString(0)
-    val nBuckets = meta.getInt(1)
-    def ddlCols(sub: String): String =
-      spark.read.parquet(s"$path/$sub").schema.fields
-        .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
-    def ensure(suffix: String, sub: String, bucketCol: Option[String]): Unit = {
-      val name = s"${tablePrefix}_$suffix"
-      if (!spark.catalog.tableExists(name)) {
-        val cluster = bucketCol.map(c =>
-          s" CLUSTERED BY (`$c`) SORTED BY (`$c`) INTO $nBuckets BUCKETS")
-          .getOrElse("")
-        spark.sql(s"CREATE TABLE $name (${ddlCols(sub)}) USING parquet" +
-          cluster + s" LOCATION '$path/$sub'")
-        ()
-      }
-    }
-    ensure("tf", "tf", Some(idCol))
-    ensure("stats", "stats", None)
-    ensure("meta", "meta", None)
-  }
+      nBuckets: Int = 32, idCol: String = "doc_id"): Unit =
+    IndexStore.write(tablePrefix, path, nBuckets, Seq(
+        IndexStore.Table("tf", tf, Seq(idCol)),
+        IndexStore.Table("stats", bm25IndexStats(tf, idCol))),
+      tf.sparkSession.createDataFrame(Seq((idCol, nBuckets)))
+        .toDF("id_col", "n_buckets"))
 
   /** Reconstruct the (tf, stats) pair from
     * [[storeBm25IndexBucketed]]'s catalog tables. The tf frame comes
@@ -629,16 +583,6 @@ object TextAnalysis {
       bm25SegmentRows(docs, idCol, textCol).localCheckpoint(),
       path, segmentId, idCol)
 
-  /** One `segment=<id>` leaf of one store tree under the replay
-    * contract (dynamic partition overwrite). */
-  private def landSegmentLeaf(df: DataFrame, path: String, sub: String,
-      segmentId: Long): Unit =
-    df.withColumn("segment", lit(segmentId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("segment")
-      .parquet(s"$path/$sub")
-
   /** One segment of the store under the replay contract: the three
     * trees (tf rows, term dictionary, stats row — each a pure
     * function of `rows`) land at their `segment=<id>` leaves under
@@ -647,12 +591,12 @@ object TextAnalysis {
     * pinned by the caller — it feeds all three writes. */
   private def writeBm25Segment(rows: DataFrame, path: String,
       segmentId: Long, idCol: String): Unit = {
-    landSegmentLeaf(rows, path, "tf", segmentId)
-    landSegmentLeaf(rows.groupBy(col("__tok"))
-      .agg(count(lit(1)).as("__df")), path, "df", segmentId)
-    landSegmentLeaf(rows.groupBy(col(idCol)).agg(first(col("__dl")).as("__dl"))
+    IndexStore.writeLeaf(rows, s"$path/tf", "segment", segmentId)
+    IndexStore.writeLeaf(rows.groupBy(col("__tok"))
+      .agg(count(lit(1)).as("__df")), s"$path/df", "segment", segmentId)
+    IndexStore.writeLeaf(rows.groupBy(col(idCol)).agg(first(col("__dl")).as("__dl"))
       .agg(count(lit(1)).as("n"), sum(col("__dl")).as("sum_dl")),
-      path, "meta", segmentId)
+      s"$path/meta", "segment", segmentId)
   }
 
   /** DELETE-BY-ID for the segmented BM25 store — Lucene's tombstone
@@ -677,16 +621,15 @@ object TextAnalysis {
       path: String, ids: Seq[Long], segmentId: Long,
       idCol: String = "doc_id"): Unit = {
     require(ids.nonEmpty, "ids must be non-empty")
-    require(segmentId >= 0, "segmentId must be >= 0")
     val doomed = spark.read.parquet(s"$path/tf")
       .filter(col(idCol).isin(ids: _*)).drop("segment").localCheckpoint()
-    landSegmentLeaf(doomed.select(col(idCol)).distinct(),
-      path, "del", segmentId)
-    landSegmentLeaf(doomed.groupBy(col("__tok"))
-      .agg((-count(lit(1))).as("__df")), path, "df", segmentId)
-    landSegmentLeaf(doomed.groupBy(col(idCol)).agg(first(col("__dl")).as("__dl"))
+    IndexStore.writeLeaf(doomed.select(col(idCol)).distinct(),
+      s"$path/del", "segment", segmentId)
+    IndexStore.writeLeaf(doomed.groupBy(col("__tok"))
+      .agg((-count(lit(1))).as("__df")), s"$path/df", "segment", segmentId)
+    IndexStore.writeLeaf(doomed.groupBy(col(idCol)).agg(first(col("__dl")).as("__dl"))
       .agg((-count(lit(1))).as("n"), (-sum(col("__dl"))).as("sum_dl")),
-      path, "meta", segmentId)
+      s"$path/meta", "segment", segmentId)
   }
 
   /** Segment-merge COMPACTION for the segmented BM25 store — Lucene's
@@ -703,55 +646,28 @@ object TextAnalysis {
     * are recomputed from the merged set, so the serve's query-time
     * folds see exactly the state a whole-corpus rebuild would write.
     *
-    * Crash convergence (ivfCompact's argument verbatim): the merged
-    * read deliberately INCLUDES `segment = segmentId`, so a replay
-    * after any partial failure re-reads its own committed leaves plus
-    * whatever older segments survived, dedupes the overlap, and
-    * rewrites the same state. [[bm25DeleteDocs]] tombstones at
-    * `segment <= segmentId` are applied PHYSICALLY here (Lucene's
-    * merge-time removal): the del set anti-joins the resident rows
-    * out of the fold, the rewritten dictionary/stats are computed
-    * from the surviving rows only, and the applied tombstone leaves
-    * are dropped with the other superseded segments. Contract:
-    * SINGLE WRITER (run it from the ingest loop's own foreachBatch
-    * thread — [[graft.streaming.StreamingIngest.bm25Ingest]]'s
-    * `compactEvery` does), and concurrent readers must tolerate the
-    * delete window. */
+    * Crash convergence and the single-writer contract are the
+    * levelled store's ([[graft.sources.IndexStore]]).
+    * [[bm25DeleteDocs]] tombstones at `segment <= segmentId` are
+    * applied PHYSICALLY here (Lucene's merge-time removal): the del
+    * set anti-joins the resident rows out of the fold, the rewritten
+    * dictionary/stats are computed from the surviving rows only, and
+    * the applied tombstone leaves are dropped — including one at
+    * `segmentId` itself, whose negative dictionary/stats rows the
+    * rewrite has just replaced. Run it from the ingest loop's own
+    * foreachBatch thread ([[graft.streaming.StreamingIngest
+    * .bm25Ingest]]'s `compactEvery` does). */
   def bm25CompactSegments(docs: DataFrame, path: String, segmentId: Long,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    require(segmentId >= 0, "segmentId must be >= 0")
     val spark = docs.sparkSession
     val prepared = bm25SegmentRows(docs, idCol, textCol)
-    val tfRoot = new org.apache.hadoop.fs.Path(s"$path/tf")
-    val delRoot = new org.apache.hadoop.fs.Path(s"$path/del")
-    val fs = tfRoot.getFileSystem(spark.sessionState.newHadoopConf())
-    val merged =
-      (if (fs.exists(tfRoot)) {
-        val residentRaw = spark.read.parquet(s"$path/tf")
-          .filter(col("segment") <= segmentId).drop("segment")
-        val resident =
-          if (fs.exists(delRoot))
-            residentRaw.join(broadcast(
-              spark.read.parquet(s"$path/del")
-                .filter(col("segment") <= segmentId)
-                .select(col(idCol)).distinct()),
-              Seq(idCol), "left_anti")
-          else residentRaw
-        prepared.unionByName(resident).dropDuplicates(idCol, "__tok")
-      } else prepared).localCheckpoint()
+    val merged = IndexStore.resident(spark, s"$path/tf", s"$path/del",
+        "segment", segmentId, idCol)
+      .fold(prepared)(r => prepared.unionByName(r).dropDuplicates(idCol, "__tok"))
+      .localCheckpoint()
     writeBm25Segment(merged, path, segmentId, idCol)
-    // fold complete and committed — drop the superseded segments and
-    // the now-applied tombstones
-    Seq("tf", "df", "meta", "del").foreach { sub =>
-      val root = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      if (fs.exists(root)) fs.listStatus(root).foreach { leaf =>
-        val n = leaf.getPath.getName
-        if (n.startsWith("segment=") &&
-            scala.util.Try(n.stripPrefix("segment=").toLong)
-              .toOption.exists(_ < segmentId))
-          fs.delete(leaf.getPath, true)
-      }
-    }
+    IndexStore.reap(spark, Seq("tf", "df", "meta").map(sub => s"$path/$sub"),
+      s"$path/del", "segment", segmentId)
   }
 
   /** Related-doc BM25 over a SEGMENTED store — identical output to

@@ -90,14 +90,8 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
 
   private def readManifest(p: Path): Seq[String] = {
     val in = fs.open(p)
-    try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-      new String(bytes.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-        .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-    } finally in.close()
+    try slurp(in).split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
+    finally in.close()
   }
 
   /** Relative paths of the data files in the CURRENT snapshot. */
@@ -333,12 +327,7 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     require(frame.columns.contains("series_id"),
       s"bucketed mirror $tableName: frame must carry series_id (the bucket key)")
     val tableRoot = new Path(s"$basePath/bucketed/$tableName")
-    val versions =
-      if (fs.exists(tableRoot))
-        fs.listStatus(tableRoot).toSeq.filter(_.isDirectory)
-          .map(_.getPath.getName).filter(_.startsWith("v"))
-          .flatMap(n => scala.util.Try(n.stripPrefix("v").toLong).toOption)
-      else Seq.empty
+    val versions = versionDirs(tableRoot)
     val next = (versions.sorted.lastOption.getOrElse(0L)) + 1L
     val path = new Path(tableRoot, s"v$next")
     // The version dir the OUTGOING public table reads from — that is the
@@ -409,12 +398,7 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     require(files > 0, "files must be positive")
     require(name.matches("[A-Za-z0-9_]+"), s"unsafe mirror name: $name")
     val root = new Path(s"$basePath/zordered/$name")
-    val existing: Seq[Long] =
-      if (fs.exists(root))
-        fs.listStatus(root).toSeq.filter(_.isDirectory)
-          .map(_.getPath.getName)
-          .flatMap(n => scala.util.Try(n.stripPrefix("v").toLong).toOption)
-      else Seq.empty
+    val existing = versionDirs(root)
     val prevLive = zCurrentVersion(root)
     val next = existing.sorted.lastOption.getOrElse(0L) + 1L
     // The mirror records which STORE version it reflects (default: the
@@ -468,11 +452,20 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     finally in.close()
   }
 
-  // shared byte-slurp for the small marker/pointer files (three call
-  // sites — pointer, store-version marker, and Try-wrapped variants)
+  /** The `v<N>` version numbers of a mirror root's directories (both
+    * mirrors version their rebuilds this way); empty when the root does
+    * not exist. */
+  private def versionDirs(root: Path): Seq[Long] =
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq.filter(_.isDirectory)
+      .map(_.getPath.getName).filter(_.startsWith("v"))
+      .flatMap(n => n.stripPrefix("v").toLongOption)
+
+  // the one byte-slurp for the small files: manifests, pointers and
+  // store-version markers
   private def slurp(in: java.io.InputStream): String = {
     val bytes = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](64)
+    val buf = new Array[Byte](8192)
     var n = in.read(buf)
     while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
     new String(bytes.toByteArray, java.nio.charset.StandardCharsets.UTF_8)

@@ -6,6 +6,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import org.apache.spark.sql.Row
 
 import graft.TimeDb
+import graft.operators.TextAnalysis
+import graft.sources.IndexStore
 
 /** Structured-Streaming ingest into the series store (SURVEY.md §7.6,
   * optional — the reference is batch-only per §2.9, so this is the
@@ -218,13 +220,8 @@ object StreamingIngest {
                     .join(idx, Seq("digest"), "left_anti"))
             }
           }
-          val accepted = fresh.withColumn("batch_id", lit(batchId))
-          accepted.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(outPath)
-          accepted.select("digest", "batch_id").write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(indexPath)
+          IndexStore.writeLeaf(fresh, outPath, "batch_id", batchId)
+          IndexStore.writeLeaf(fresh.select("digest"), indexPath, "batch_id", batchId)
           if (incrementalBloom) {
             // this batch's digests from the COMMITTED index partition
             // (not a recompute of the gate chain), same sizing so the
@@ -298,21 +295,14 @@ object StreamingIngest {
     * the ingest loop ([[graft.operators.TextAnalysis
     * .bm25CompactSegments]] — every Nth micro-batch lands as a
     * fold-forward merge of itself with all resident segments instead
-    * of a plain append), the [[graft.streaming.StreamingSimilarity
-    * .ingestIvf]] discipline on the text side. */
+    * of a plain append) through the same
+    * [[graft.sources.IndexStore.maintain]] loop as the IVF faces. */
   def bm25Ingest(stream: DataFrame, indexPath: String,
       idCol: String = "doc_id", textCol: String = "text",
       compactEvery: Long = 0L): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          graft.operators.TextAnalysis.bm25CompactSegments(
-            batch, indexPath, batchId + 1L, idCol, textCol)
-        else if (!batch.isEmpty)
-          graft.operators.TextAnalysis.bm25AppendSegment(
-            batch, indexPath, batchId + 1L, idCol, textCol)
-      }
+    IndexStore.maintain(stream, compactEvery)(
+      TextAnalysis.bm25CompactSegments(_, indexPath, _, idCol, textCol),
+      TextAnalysis.bm25AppendSegment(_, indexPath, _, idCol, textCol))
 
   /** Windowed streaming aggregation over the value stream: per-series
     * tumbling-window mean/count with a watermark for late data — the

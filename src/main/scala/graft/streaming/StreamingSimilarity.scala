@@ -3,6 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.operators.Similarity
+import graft.sources.IndexStore
+
 /** Online ANN serving: a stream of query vectors probed against the
   * epoch's IVF index — the retrieval half of a nearest-neighbor
   * feature service / RAG lookup, as a Structured Streaming stage.
@@ -58,29 +61,20 @@ object StreamingSimilarity {
     * (StreamingSpec-pinned with a checkpoint-restart proof).
     *
     * `compactEvery` > 0 folds small-file maintenance into the ingest
-    * loop (the [[StreamingIngest.writer]] discipline): every N
+    * loop ([[graft.sources.IndexStore.maintain]]): every N
     * micro-batches the trigger batch lands through
     * [[graft.operators.Similarity.ivfCompact]] instead of the plain
     * append, folding every older level into its own — the store
     * collapses back to one level per cell, capping the
     * one-dir-per-batch listing growth a day of 1-minute batches would
-    * otherwise accumulate. Micro-batches execute sequentially on this
-    * thread, so ivfCompact's single-writer contract holds by
-    * construction; the compaction runs on the multiple even when that
-    * batch is EMPTY (a periodic data cadence could align empties with
-    * every trigger). */
+    * otherwise accumulate. */
   def ingestIvf(vectorStream: DataFrame, centroids: DataFrame,
       corpusPath: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       compactEvery: Long = 0L): DataStreamWriter[Row] =
-    vectorStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-        graft.operators.Similarity.ivfCompact(
-          batch, centroids, corpusPath, batchId + 1L, idCol, vecCol)
-      else if (!batch.isEmpty)
-        graft.operators.Similarity.ivfAppend(
-          batch, centroids, corpusPath, batchId + 1L, idCol, vecCol)
-    }
+    IndexStore.maintain(vectorStream, compactEvery)(
+      Similarity.ivfCompact(_, centroids, corpusPath, _, idCol, vecCol),
+      Similarity.ivfAppend(_, centroids, corpusPath, _, idCol, vecCol))
 
   /** [[ingestIvf]] for the ENCODED-AT-REST code store
     * ([[graft.operators.Similarity.ivfPqStoreRows]]' layout): each
@@ -96,12 +90,7 @@ object StreamingSimilarity {
       pq: DataFrame, corpusPath: String, m: Int, dim: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       compactEvery: Long = 0L): DataStreamWriter[Row] =
-    vectorStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-        graft.operators.Similarity.ivfPqCompact(
-          batch, centroids, pq, corpusPath, batchId + 1L, m, dim, idCol, vecCol)
-      else if (!batch.isEmpty)
-        graft.operators.Similarity.ivfPqAppend(
-          batch, centroids, pq, corpusPath, batchId + 1L, m, dim, idCol, vecCol)
-    }
+    IndexStore.maintain(vectorStream, compactEvery)(
+      Similarity.ivfPqCompact(_, centroids, pq, corpusPath, _, m, dim, idCol, vecCol),
+      Similarity.ivfPqAppend(_, centroids, pq, corpusPath, _, m, dim, idCol, vecCol))
 }

@@ -1064,20 +1064,33 @@ class OperatorsSpec extends SparkSpec {
     TextAnalysis.bm25DeleteDocs(spark, path, Seq(1L, 3L), segmentId = 2L)
     assert(serve() == expect)
     // compaction applies the tombstones physically and drops them
-    TextAnalysis.bm25CompactSegments(
-      spark.emptyDataFrame.select(lit(0L).as("doc_id"), lit("").as("text"))
-        .limit(0), path, segmentId = 3L)
+    val noDocs = spark.emptyDataFrame.select(lit(0L).as("doc_id"), lit("").as("text"))
+      .limit(0)
+    TextAnalysis.bm25CompactSegments(noDocs, path, segmentId = 3L)
     val tfAfter = spark.read.parquet(s"$path/tf")
     assert(tfAfter.filter(col("doc_id").isin(1L, 3L)).count() == 0,
       "merge-time removal: doomed rows gone from the tf tree")
     assert(!new java.io.File(s"$path/del/segment=2").exists,
       "applied tombstones dropped")
     // the compacted store serves identically WITHOUT the del tree
-    val got = TextAnalysis.bm25SegmentedTopK(
-      tfAfter, spark.read.parquet(s"$path/df"),
+    def serveNoDel() = TextAnalysis.bm25SegmentedTopK(
+      spark.read.parquet(s"$path/tf"), spark.read.parquet(s"$path/df"),
       spark.read.parquet(s"$path/meta"), queryIds = Seq(0L, 1L), k = 3)
       .orderBy("query_id", "rank").collect().toSeq
-    assert(got == expect)
+    assert(serveNoDel() == expect)
+    // a delete AT the compaction's own segment id is applied by that
+    // compaction too, so its leaf must go with it (tombstones reap at
+    // <= the level) — a left-behind leaf would keep every later serve
+    // on the tombstone branch
+    TextAnalysis.bm25DeleteDocs(spark, path, Seq(5L), segmentId = 4L)
+    TextAnalysis.bm25CompactSegments(noDocs, path, segmentId = 4L)
+    assert(!new java.io.File(s"$path/del/segment=4").exists,
+      "a tombstone at the compaction's own segment must be dropped")
+    val expect2 = TextAnalysis.bm25RelatedTopKFrom(
+      TextAnalysis.bm25Index(docs.filter(!col("doc_id").isin(1L, 3L, 5L))),
+      queryIds = Seq(0L, 1L), k = 3)
+      .orderBy("query_id", "rank").collect().toSeq
+    assert(serveNoDel() == expect2 && expect2 != expect)
   }
 
   test("langId predicts the marker-heavy language deterministically") {

@@ -555,7 +555,7 @@ class PlanSpec extends SparkSpec {
     // the store's own meta row, serve identically
     Seq("tf", "stats", "meta").foreach(sfx =>
       spark.sql(s"DROP TABLE IF EXISTS bm25spec_$sfx"))
-    graft.operators.TextAnalysis.registerBm25IndexBucketed(
+    graft.sources.IndexStore.register(
       spark, "bm25spec", s"$dir/store")
     val (reTf, reStats) =
       graft.operators.TextAnalysis.loadBm25IndexBucketed(spark, "bm25spec")
@@ -639,12 +639,12 @@ class PlanSpec extends SparkSpec {
     assert(got.nonEmpty, "degenerate pin: the screen found no pairs")
     // cross-SESSION re-attach (r18): the in-memory catalog entry dies
     // with its session while the files persist — dropping the tables
-    // simulates a fresh session, and registerPpJoinIndexBucketed must
+    // simulates a fresh session, and IndexStore.register must
     // re-declare the bucket spec from the store's own meta row so the
     // re-attached screen plans AND answers exactly as the writer's
     Seq("df", "sets", "postings", "meta").foreach(s =>
       spark.sql(s"DROP TABLE ppjoin_bt_test_$s"))
-    graft.operators.Dedup.registerPpJoinIndexBucketed(spark, "ppjoin_bt_test", root)
+    graft.sources.IndexStore.register(spark, "ppjoin_bt_test", root)
     val reattached = graft.operators.Dedup.loadPpJoinIndexBucketed(spark, "ppjoin_bt_test")
     assert(reattached.n == 1 && reattached.threshold == 0.5)
     val reScreen = graft.operators.Dedup.ppJoinAgainst(batch, reattached)
@@ -655,7 +655,7 @@ class PlanSpec extends SparkSpec {
       s"re-attached screen must shuffle less: ${exchanges(rePlan)} vs $plain")
     assert(reScreen.orderBy("new_id", "seen_id").collect().toSeq == expect)
     // idempotent in the writing session: existing tables untouched
-    graft.operators.Dedup.registerPpJoinIndexBucketed(spark, "ppjoin_bt_test", root)
+    graft.sources.IndexStore.register(spark, "ppjoin_bt_test", root)
   }
 
   test("BUCKETED stored neardup (LSH) index: layout parity, identical screens") {
@@ -700,7 +700,7 @@ class PlanSpec extends SparkSpec {
       s"the aggregate must engage the bucketed scan:\n$aggPlan")
     // cross-session re-attach from the store's own meta
     Seq("postings", "meta").foreach(s => spark.sql(s"DROP TABLE neardup_bt_test_$s"))
-    graft.operators.Dedup.registerNearDupIndexBucketed(spark, "neardup_bt_test", root)
+    graft.sources.IndexStore.register(spark, "neardup_bt_test", root)
     val reattached = graft.operators.Dedup.loadNearDupIndexBucketed(spark, "neardup_bt_test")
     assert(graft.operators.Dedup.incrementalNearDupAgainst(
         batch, reattached, n = 2, numHashes = 16, bands = 8)
@@ -711,7 +711,7 @@ class PlanSpec extends SparkSpec {
       rePlan.contains("SelectedBucketsCount"),
       s"re-attached store must keep the bucketed layout:\n$rePlan")
     // idempotent in the writing session
-    graft.operators.Dedup.registerNearDupIndexBucketed(spark, "neardup_bt_test", root)
+    graft.sources.IndexStore.register(spark, "neardup_bt_test", root)
   }
 
   test("segmented BM25 serve pushes the query vocabulary into the store scans") {
