@@ -31,22 +31,23 @@ final case class ReadFilter(
     p
   }
 
+  /** Inclusive `valid_month` range (`yyyyMM`) the valid_time bounds can
+    * touch. The upper bound is half-open, so it derives from
+    * endValid − 1 µs — an endValid exactly on a month boundary must not
+    * scan that whole extra month. */
+  def monthRange: (Option[String], Option[String]) = (
+    startValid.map(t => Schema.monthOf(t)),
+    endValid.map(t => Schema.monthOf(Timestamp.from(t.toInstant.minusNanos(1000)))))
+
   /** Month-range partition prune derived from the valid_time bounds: the
     * reader also filters the `valid_month` partition column so Catalyst
     * prunes whole month directories, mirroring how the retention filter
-    * prunes tiers (ch_create_tables.sql:11-13). The upper bound is
-    * half-open, so it derives from endValid − 1 µs — an endValid exactly
-    * on a month boundary must not scan that whole extra month. */
-  def monthPrune: Option[Column] = {
-    val lo = startValid.map(t => lit(Schema.monthOf(t)))
-    val hi = endValid.map(t =>
-      lit(Schema.monthOf(java.sql.Timestamp.from(t.toInstant.minusNanos(1000)))))
-    (lo, hi) match {
-      case (Some(a), Some(b)) => Some(col("valid_month") >= a && col("valid_month") <= b)
-      case (Some(a), None) => Some(col("valid_month") >= a)
-      case (None, Some(b)) => Some(col("valid_month") <= b)
-      case _ => None
-    }
+    * prunes tiers (ch_create_tables.sql:11-13). */
+  def monthPrune: Option[Column] = monthRange match {
+    case (Some(a), Some(b)) => Some(col("valid_month") >= lit(a) && col("valid_month") <= lit(b))
+    case (Some(a), None) => Some(col("valid_month") >= lit(a))
+    case (None, Some(b)) => Some(col("valid_month") <= lit(b))
+    case _ => None
   }
 }
 
@@ -128,9 +129,11 @@ final class TimeDb(val spark: SparkSession, basePath: String,
           // Under the knowledge_time scope only stored rows carrying one
           // of the batch's knowledge_times can match a scope key, so the
           // slab is also bounded by the batch's knowledge_time range
-          // (inclusive). Appended files lead with knowledge_time, so on
-          // them the bound prunes row groups too; compacted files are in
-          // sort-key order, so there it only drops rows after the scan.
+          // (inclusive). The bound prunes no parquet row groups: the
+          // timestamps are stored as INT96, which Spark does not push into
+          // the reader, so the read-back decodes the same rows with or
+          // without it (71,108 in traced perfbench `forecast_ingest`,
+          // seed 1). It drops rows after the scan, before the shuffle.
           val slabBase = unchangedScope match {
             case UnchangedScope.KnowledgeTime =>
               vtSlab.filter(
@@ -193,15 +196,38 @@ final class TimeDb(val spark: SparkSession, basePath: String,
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
-  private def scanWith(filter: ReadFilter): DataFrame = {
-    var scan = store.scanValues()
-    filter.monthPrune.foreach(p => scan = scan.filter(p))
-    scan.filter(filter.predicate)
+  /** The one plan every read form runs (the four [[read]] shapes and
+    * [[readRelative]]): scan the manifest files the filter's retention
+    * and month bounds leave ([[SeriesStore.scanValuesPruned]]), apply
+    * the Catalyst filters (partition and pushed data filters stay in the
+    * plan), `shape` the rows, order them by `keys`, mask NaN.
+    *
+    * A slab of at most [[TimeDb.OneTaskReadMaxBytes]] runs as ONE task:
+    * `coalesce(1)` → shape → `sortWithinPartitions(keys)`. A single
+    * partition satisfies the aggregate's and the windows' clustering, so
+    * Spark plans no exchange and no range sample — one job. A larger
+    * slab keeps the distributed plan: the shape's shuffle, then a global
+    * `orderBy` (range sample + sort shuffle) — four jobs under adaptive
+    * execution. Both give the same rows in the same order. `oneTask`
+    * overrides the size gate so tests can pin both plans on one store. */
+  private[graft] def planRead(filter: ReadFilter, keys: Seq[String],
+      oneTask: Option[Boolean] = None)(shape: DataFrame => DataFrame): DataFrame = {
+    val (scan, bytes) = store.scanValuesPruned(filter.retention, filter.monthRange)
+    val base = filter.monthPrune.fold(scan)(p => scan.filter(p)).filter(filter.predicate)
+    val order = keys.map(col)
+    val shaped =
+      if (oneTask.getOrElse(bytes <= TimeDb.OneTaskReadMaxBytes))
+        shape(base.coalesce(1)).sortWithinPartitions(order: _*)
+      else shape(base).orderBy(order: _*)
+    maskNaN(shaped)
   }
 
   /** Read (timedb/read.py:404-458): 4-way shape dispatch on
     * (includeUpdates, includeKnowledgeTime), NaN→null mask on the way out,
-    * deterministic total order (timedb/read.py:244,280,309,337). */
+    * deterministic total order (timedb/read.py:244,280,309,337). A read
+    * whose pruned slab is small plans as one task (one Spark job), a
+    * larger one as the distributed shuffle + global sort; see
+    * [[planRead]] for the two plans and the size gate. */
   def read(
       filter: ReadFilter,
       includeUpdates: Boolean = false,
@@ -209,21 +235,19 @@ final class TimeDb(val spark: SparkSession, basePath: String,
     if (filter.seriesIds.isEmpty)
       return emptyShape(includeUpdates, includeKnowledgeTime) // timedb/read.py:421-422
 
-    val base = scanWith(filter)
-    val shaped = Profiling.phase(Profiling.PhaseReadPlan) {
+    Profiling.phase(Profiling.PhaseReadPlan) {
       (includeUpdates, includeKnowledgeTime) match {
         case (false, false) =>
-          ReadShapes.latest(base).orderBy("series_id", "valid_time")
+          planRead(filter, Seq("series_id", "valid_time"))(ReadShapes.latest)
         case (false, true) =>
-          ReadShapes.overlapping(base).orderBy("series_id", "valid_time", "knowledge_time")
+          planRead(filter, Seq("series_id", "valid_time", "knowledge_time"))(ReadShapes.overlapping)
         case (true, false) =>
-          ReadShapes.latestWithChanges(base).orderBy("series_id", "valid_time", "change_time")
+          planRead(filter, Seq("series_id", "valid_time", "change_time"))(ReadShapes.latestWithChanges)
         case (true, true) =>
-          ReadShapes.overlappingWithChanges(base)
-            .orderBy("series_id", "valid_time", "knowledge_time", "change_time")
+          planRead(filter, Seq("series_id", "valid_time", "knowledge_time", "change_time"))(
+            ReadShapes.overlappingWithChanges)
       }
     }
-    maskNaN(shaped)
   }
 
   /** Read addressed by an external catalog instead of explicit ids
@@ -252,10 +276,8 @@ final class TimeDb(val spark: SparkSession, basePath: String,
     if (filter.seriesIds.isEmpty) return emptyShape(false, false)
     val origin = startWindow.orElse(filter.startValid).getOrElse(
       throw new IllegalArgumentException("start_window is required when start_valid is not provided."))
-    val shaped = ReadShapes.relative(
-      scanWith(filter), windowLength.getSeconds, issueOffset.getSeconds, origin)
-      .orderBy("series_id", "valid_time")
-    maskNaN(shaped)
+    planRead(filter, Seq("series_id", "valid_time"))(
+      ReadShapes.relative(_, windowLength.getSeconds, issueOffset.getSeconds, origin))
   }
 
   /** Relative read, daily shorthand (timedb/read.py:480-492): window=1d,
@@ -273,12 +295,20 @@ final class TimeDb(val spark: SparkSession, basePath: String,
     readRelative(filter, Duration.ofDays(1), offset, Some(origin))
   }
 
-  /** Runs that touched a series, newest first (timedb/client.py:198-214). */
+  /** Runs that touched a series, newest first (timedb/client.py:198-214),
+    * runs that share a `first_seen` (one multi-run write) by ascending
+    * run_id — the `td_run_series` order. The list is collected anyway, so
+    * it is sorted on the driver: no range sample, no sort shuffle. */
   def readRunSeries(seriesId: Long): Seq[Long] =
     store.scanRunSeries()
       .filter(col("series_id") === seriesId)
-      .orderBy(col("first_seen").desc)
-      .select("run_id").collect().map(_.getLong(0)).toSeq
+      .select("run_id", "first_seen").collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1)))
+      .sortWith { case ((runA, seenA), (runB, seenB)) =>
+        val c = seenB.compareTo(seenA)
+        if (c != 0) c < 0 else runA < runB
+      }
+      .map(_._1).toSeq
 
   def expireRetention(asOf: Instant = Instant.now()): Seq[String] =
     store.expireRetention(asOf)
@@ -305,6 +335,16 @@ final class TimeDb(val spark: SparkSession, basePath: String,
 }
 
 object TimeDb {
+
+  /** Largest pruned slab, in parquet bytes, that [[TimeDb.planRead]]
+    * plans as one task. Measured with a latest read of the whole slab
+    * (the worst read a slab of that size can get) on perfbench's
+    * dashboard store scaled by series count, `local[4]`, adaptive
+    * execution on, 15 interleaved pairs, p50 one-task vs distributed:
+    * 0.39 MB 223 vs 280 ms, 0.70 MB 290 vs 366, 1.45 MB 383 vs 460,
+    * 2.34 MB 628 vs 627, 3.87 MB 940 vs 834, 40 MB 10.7 vs 6.5 s. One
+    * task wins up to 1.45 MB and ties at 2.34 MB; rounded down to 1 MiB. */
+  private val OneTaskReadMaxBytes: Long = 1L << 20
 
   /** Cache `frame` and fill the cache with ONE shuffle-free action (a
     * `noop`-format write) that also computes the aggregate `metrics`

@@ -52,19 +52,6 @@ object ReadShapes {
       .agg(graft.functions.ArgMaxLatest(kt, ct, col("value")).as("value"))
       .select(sid, vt, col("value"))
 
-  /** The built-in formulation of [[latest]]: `max(struct(kt, ct, value))`
-    * via lexicographic struct ordering. Identical semantics, but the
-    * struct aggregation buffer is not hash-aggregable, so Spark plans a
-    * partial+final SortAggregate (per-partition sort) where the custom
-    * [[graft.functions.ArgMaxLatest]] flat-buffer aggregate hash-
-    * aggregates. Kept as the equivalence witness for the property test.
-    */
-  def latestStructMax(values: DataFrame): DataFrame =
-    values
-      .groupBy(sid, vt)
-      .agg(max(struct(kt, ct, col("value"))).getField("value").as("value"))
-      .select(sid, vt, col("value"))
-
   /** One row per (series_id, valid_time, knowledge_time): the latest
     * correction (largest change_time) of each issued forecast
     * (timedb/read.py:295-317, the `LIMIT 1 BY` shape). Same argmax

@@ -190,6 +190,17 @@ object Similarity {
       Seq(idCol), "left_anti")
   }
 
+  /** Natural order of collected tombstone ids: non-null values of one
+    * id type (the fold casts them to `delIdType`), so the boxed class's
+    * own `compareTo` orders them; a non-comparable type keeps collect
+    * order (the sort is stable). */
+  private val TombstoneIdOrdering: Ordering[Any] = new Ordering[Any] {
+    def compare(a: Any, b: Any): Int = a match {
+      case c: Comparable[_] => c.asInstanceOf[Comparable[Any]].compareTo(b)
+      case _ => 0
+    }
+  }
+
   /** ONE action collects BOTH query-bounded driver frames the pruned
     * serves need — the probe/LUT rows and the tombstone id list. The
     * two subtrees are independent (the probe chain never reads the del
@@ -251,7 +262,10 @@ object Similarity {
         val (d, p) = rows.partition(r => !r.isNullAt(pf.length))
         val probeRows =
           p.map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(1)))
+        // sorted, so the pushed NOT-IN literal (and the plan text) is
+        // the same whatever order the collect returned the ids in
         val ids = d.map(_.get(pf.length)).distinct.toSeq
+          .sorted(TombstoneIdOrdering)
         if (ids.length > maxDel) (probeRows, None)
         else (probeRows, Some(ids))
     }

@@ -76,6 +76,8 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
   private val AppendOrder = Seq("knowledge_time", "series_id", "valid_time", "change_time")
 
   private val ManifestName = raw"v(\d{8})\.list".r
+  /** A manifest entry's partition directory: (tier, month). */
+  private val PartitionDir = raw"retention=([^/]*)/valid_month=([^/]*)/[^/]+".r
 
   private def manifestVersions(): Seq[(Long, Path)] = {
     if (!fs.exists(manifestsDir)) return Seq.empty
@@ -222,6 +224,27 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     * available for manual pruning; readers project it away. */
   def scanValues(): DataFrame =
     scanFileList(currentFiles())
+
+  /** [[scanValues]] over only the current snapshot's files whose
+    * `retention=…/valid_month=…` directory a read can touch: a tier in
+    * `retention` (all tiers when empty) and a month inside the inclusive
+    * `monthRange`. The match is on the manifest's relative paths, on the
+    * driver, with no Spark job. Returns the scan and the bytes of the
+    * files it lists — the file index's own size, so a read can size its
+    * plan from what it will actually open (over the unpruned scan,
+    * Catalyst's estimate is the whole snapshot whatever the filters). */
+  def scanValuesPruned(retention: Seq[String],
+      monthRange: (Option[String], Option[String])): (DataFrame, Long) = {
+    val (lo, hi) = monthRange
+    val files = currentFiles().filter {
+      case PartitionDir(tier, month) =>
+        (retention.isEmpty || retention.contains(tier)) &&
+          lo.forall(month >= _) && hi.forall(month <= _)
+      case _ => true
+    }
+    val scan = scanFileList(files)
+    (scan, if (files.isEmpty) 0L else scan.queryExecution.analyzed.stats.sizeInBytes.toLong)
+  }
 
   /** Committed manifest versions, oldest first — the time-travel axis.
     * Every committed write is one version; [[vacuum]] bounds how far

@@ -866,6 +866,17 @@ class OperatorsSpec extends SparkSpec {
       "the tombstone anti-join must equal serve-without-the-rows")
     assert(serve(stored, None) != expect,
       "sanity: the doomed ids actually appear in the undeleted serve")
+    // the pushed tombstone list is sorted, so the same serve plans the
+    // same text (up to expression and plan ids) whatever order the del
+    // ids are collected in
+    def servePlan(del: org.apache.spark.sql.DataFrame) =
+      Similarity.ivfProbeTopKPruned(stored, queries, cent, k = 4, nprobe = 2,
+        cellCol = "cell", delOpt = Some(del))
+        .queryExecution.executedPlan.toString.replaceAll("(#|plan_id=)\\d+", "$1")
+    val planAsc = servePlan(delTree.orderBy(col("vec_id")))
+    val planDesc = servePlan(delTree.orderBy(col("vec_id").desc))
+    assert(planAsc == planDesc, s"plan text depends on collect order:\n$planAsc\nvs\n$planDesc")
+    assert(planAsc.contains("IN (28,37,47)"), planAsc)
     // replayed delete rewrites exactly its own leaf
     Similarity.ivfDelete(spark, path, doomed, batchId = 1L)
     assert(serve(spark.read.parquet(path),

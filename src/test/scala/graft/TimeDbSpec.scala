@@ -2,9 +2,10 @@ package graft
 
 import java.time.{Duration, Instant, LocalTime}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{UnchangedScope, WriteResult}
+import graft.operators.{ReadShapes, UnchangedScope, WriteResult}
 
 /** Integration round-trips through the public facade against a temp
   * store — the ScalaTest port of timedb/tests/test_integration.py
@@ -403,6 +404,110 @@ class TimeDbSpec extends SparkSpec {
     }
   }
 
+  /** Three series across a month boundary in two tiers, written in
+    * several files: two issues that share one change_time, a correction
+    * chain on the later issue (some corrections repeat the state, which
+    * the audit collapse drops) and NaN values. */
+  private def writeReadPlanStore(db: TimeDb): Unit = {
+    val t0 = Instant.parse("2024-03-31T20:00:00Z")
+    val shared = ts("2024-04-05T00:00:00Z")
+    val early = ts("2024-03-31T00:00:00Z")
+    val late = ts("2024-03-31T12:00:00Z")
+    def batch(kt: java.sql.Timestamp, ct: java.sql.Timestamp, keep: Int => Boolean,
+        value: (Long, Int) => Double) =
+      (for (sid <- 1L to 3L; i <- 0 until 8 if keep(i))
+        yield (sid, java.sql.Timestamp.from(t0.plusSeconds(3600L * i)), kt, ct,
+          value(sid, i), if (sid == 3L) "short" else "medium"))
+        .toDF("series_id", "valid_time", "knowledge_time", "change_time", "value", "retention")
+    def v(sid: Long, i: Int) = if ((sid + i) % 5 == 0) Double.NaN else sid * 100.0 + i
+    db.write(batch(early, shared, _ => true, v))
+    db.write(batch(late, shared, _ % 2 == 0, (sid, i) => v(sid, i) + 0.5))
+    db.write(batch(late, ts("2024-04-05T01:00:00Z"), _ % 2 == 0,
+      (sid, i) => if (i % 4 == 0) -v(sid, i) else v(sid, i) + 0.5))
+    db.write(batch(late, ts("2024-04-05T02:00:00Z"), _ % 2 == 0, (sid, i) => v(sid, i) + 0.5))
+  }
+
+  private val readPlanFilter = ReadFilter(Seq(1L, 2L, 3L),
+    startValid = Some(ts("2024-03-31T21:00:00Z")), endValid = Some(ts("2024-04-01T04:00:00Z")))
+
+  /** The five read forms as [[TimeDb.planRead]] arguments, each with
+    * the public call it backs. */
+  private def readForms(db: TimeDb, f: ReadFilter)
+      : Seq[(String, Seq[String], DataFrame => DataFrame, () => DataFrame)] = {
+    val origin = ts("2024-03-30T00:00:00Z")
+    Seq(
+      ("latest", Seq("series_id", "valid_time"), ReadShapes.latest _, () => db.read(f)),
+      ("history", Seq("series_id", "valid_time", "knowledge_time"), ReadShapes.overlapping _,
+        () => db.read(f, includeKnowledgeTime = true)),
+      ("audit", Seq("series_id", "valid_time", "change_time"), ReadShapes.latestWithChanges _,
+        () => db.read(f, includeUpdates = true)),
+      ("audit_history", Seq("series_id", "valid_time", "knowledge_time", "change_time"),
+        ReadShapes.overlappingWithChanges _,
+        () => db.read(f, includeUpdates = true, includeKnowledgeTime = true)),
+      ("relative", Seq("series_id", "valid_time"),
+        (df: DataFrame) => ReadShapes.relative(df, 86400L, 6L * 3600, origin),
+        () => db.readRelative(f, Duration.ofDays(1), Duration.ofHours(6), Some(origin))))
+  }
+
+  test("small reads plan as one task: at most two Spark jobs per read form") {
+    withDb { db =>
+      writeReadPlanStore(db)
+      for ((name, _, _, call) <- readForms(db, readPlanFilter)) {
+        call().collect() // warm the classes a first read loads
+        var n = 0
+        val jobs = jobsDuring { n = call().collect().length }
+        assert(n > 0, s"$name returned no rows")
+        assert(jobs <= 2, s"$name ran $jobs jobs")
+      }
+    }
+  }
+
+  test("one-task and distributed read plans: same rows in the same order, every form; only the distributed plan shuffles") {
+    withDb { db =>
+      writeReadPlanStore(db)
+      for (f <- Seq(readPlanFilter, ReadFilter(Seq(1L, 2L, 3L)));
+           (name, keys, shape, call) <- readForms(db, f)) {
+        val oneTask = db.planRead(f, keys, oneTask = Some(true))(shape)
+        val distributed = db.planRead(f, keys, oneTask = Some(false))(shape)
+        // only the distributed plan shuffles, and it range-partitions
+        val onePlan = oneTask.queryExecution.executedPlan.toString
+        val distPlan = distributed.queryExecution.executedPlan.toString
+        assert(!onePlan.contains("Exchange"), s"$name:\n$onePlan")
+        assert(distPlan.contains("rangepartitioning"), s"$name:\n$distPlan")
+        val one = oneTask.collect().toSeq
+        val dist = distributed.collect().toSeq
+        // Row equality treats null == null; the mask leaves no NaN
+        assert(one.nonEmpty && one == dist, s"$name: one-task $one vs distributed $dist")
+        assert(one.exists(_.isNullAt(one.head.fieldIndex("value"))), s"$name: no masked NaN")
+        assert(call().collect().toSeq == one, s"$name: public read differs")
+      }
+    }
+  }
+
+  test("pruned scan: a one-tier, one-month read lists only that partition's files") {
+    withDb { db =>
+      writeReadPlanStore(db)
+      val live = db.store.currentFiles()
+      assert(live.map(f => f.substring(0, f.lastIndexOf('/'))).distinct.length == 4)
+      val f = ReadFilter(Seq(3L), retention = Seq("short"),
+        startValid = Some(ts("2024-04-01T00:00:00Z")), endValid = Some(ts("2024-04-02T00:00:00Z")))
+      val (scan, bytes) = db.store.scanValuesPruned(f.retention, f.monthRange)
+      val want = live.filter(_.startsWith("retention=short/valid_month=202404/"))
+      val root = new org.apache.hadoop.fs.Path(db.store.valuesPath)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(want.nonEmpty)
+      assert(scan.inputFiles.map(_.split("/series_values/").last).sorted.toSeq == want.sorted)
+      assert(bytes == want.map(r => fs.getFileStatus(new org.apache.hadoop.fs.Path(root, r)).getLen).sum)
+      // an end exactly on the month boundary stays in the earlier month
+      assert(ReadFilter(Seq(3L), endValid = Some(ts("2024-04-01T00:00:00Z"))).monthRange ==
+        (None, Some("202403")))
+      assert(db.store.scanValuesPruned(Seq("long"), (None, None)) match {
+        case (empty, 0L) => empty.isEmpty
+        case _ => false
+      })
+    }
+  }
+
   test("write evaluates the caller's plan once, plain and skip-unchanged") {
     withDb { db =>
       val evals = spark.sparkContext.longAccumulator("upstream_evals")
@@ -489,6 +594,15 @@ class TimeDbSpec extends SparkSpec {
       val runs = db.readRunSeries(1L)
       assert(runs.length == 2 && runs.head > runs(1)) // uuid7-style ids are time-ordered
       assert(db.readRunSeries(999L).isEmpty)
+      // the runs of one multi-run write share one first_seen: they list
+      // by ascending run_id, the same on every call, in at most two jobs
+      Thread.sleep(5)
+      val batch = Seq(7L, 3L, 11L, 5L, 9L)
+      db.write(batch.zipWithIndex.map { case (r, i) => (1L, vts(i), 1.0 * i, r) }
+        .toDF("series_id", "valid_time", "value", "run_id"))
+      for (_ <- 1 to 3) assert(db.readRunSeries(1L) == batch.sorted ++ runs)
+      val jobs = jobsDuring { db.readRunSeries(1L); () }
+      assert(jobs <= 2, s"readRunSeries ran $jobs jobs")
     }
   }
 
