@@ -30,7 +30,6 @@ object AbBench {
       s"graft_ab_mirror_${ProcessHandle.current().pid()}")
     graft.operators.Layout.rechunkMirror(spark, sfDir, dst.getPath, Bench.chunkPolicy)
     val dir = dst.getPath
-    SparkEntry.prewarmBuilds(spark, dir)
 
     val samples = interleave(names, rounds)(n => SparkEntry.queries(n)(spark, dir).count())
     for (n <- names) {

@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
   * bench's scale_up section (id-shifted events; documents with
   * DISJOINT per-shard token spaces, so signature/posting structures
   * grow linearly by construction), ingests both dirs through the same
-  * mirror layout, prewarms the per-dir index builds, then times each
-  * query interleaved 1×,10×,1×,10× over `SPARK_GRAFT_AB_ROUNDS`
-  * (default 9) rounds with per-(query, dir) minima — both sides in ONE
+  * mirror layout, then times each query (its untimed warm pass runs
+  * the index builds it reads) interleaved 1×,10×,1×,10× over
+  * `SPARK_GRAFT_AB_ROUNDS` (default 9) rounds with per-(query, dir) minima — both sides in ONE
   * session under the volume-sized shuffle conf, so the ratio compares
   * volumes, not epochs or layouts.
   *
@@ -90,10 +90,6 @@ object ScaleUpAb {
     println(s"skew-check verdict: " +
       (if (n10 == 10 * n1 && a10 == a1 && x10 == x1 && df10 == df1) "LINEAR BY CONSTRUCTION"
        else "DISTRIBUTIONS DIFFER — investigate before reading the ratio"))
-
-    // per-dir index builds OUTSIDE the timed region (bench attribution)
-    SparkEntry.prewarmBuilds(spark, m1)
-    SparkEntry.prewarmBuilds(spark, m10)
 
     // both sides interleaved per round: 1×, 10×, 1×, 10×, …
     val samples = AbBench.interleave(for (n <- names; d <- Seq(m1, m10)) yield (n, d),

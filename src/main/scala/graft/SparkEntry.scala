@@ -24,6 +24,19 @@ object SparkEntry {
   // Helpers
   // ---------------------------------------------------------------------
 
+  /** Every build-artifact memo: each registers here where it is
+    * declared ([[buildMemo]]), so [[invalidateBuildMemos]] clears them
+    * all by construction. */
+  private val buildMemos =
+    scala.collection.mutable.ArrayBuffer.empty[scala.collection.concurrent.TrieMap[_, _]]
+
+  /** A new build-artifact memo keyed by (session, data dir). */
+  private def buildMemo[V](): scala.collection.concurrent.TrieMap[(SparkSession, String), V] = {
+    val memo = scala.collection.concurrent.TrieMap.empty[(SparkSession, String), V]
+    buildMemos += memo
+    memo
+  }
+
   /** Oracle CTE prefix exposing the events→series_values surrogate frame
     * as `sv` (FIXTURES.md §3). */
   private val svCte = s"WITH sv AS (${Tables.seriesOracleSql})"
@@ -174,8 +187,7 @@ object SparkEntry {
     * checkpointed per (session, dir): both consumers read the same
     * built frame, the build-once/serve-many lifecycle every index in
     * this file follows. */
-  private val copurchaseMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val copurchaseMemo = buildMemo[DataFrame]()
 
   private def copurchaseEdges(s: SparkSession, dir: String): DataFrame =
     copurchaseMemo.getOrElseUpdate((s, dir), {
@@ -193,8 +205,7 @@ object SparkEntry {
   /** Memoized BM25 inverted index per (session, dir) — the lexical
     * twin of [[builtIvfIndex]]: tokenize+aggregate once, checkpoint,
     * amortize over every retrieval query. */
-  private val bm25Memo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (DataFrame, DataFrame)]
+  private val bm25Memo = buildMemo[(DataFrame, DataFrame)]()
 
   private def builtBm25Index(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     bm25Memo.getOrElseUpdate((s, dir), {
@@ -254,8 +265,7 @@ object SparkEntry {
     * [[graft.operators.TextAnalysis.bm25AppendSegment]], so the serve
     * must merge df and corpus stats across segments at query time to
     * match the whole-corpus oracle. */
-  private val segmentedBm25Memo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame)]
+  private val segmentedBm25Memo = buildMemo[(DataFrame, DataFrame, DataFrame)]()
 
   private def segmentedBm25Store(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
     scratchLock.synchronized {
@@ -279,9 +289,7 @@ object SparkEntry {
     * [[bm25DeletedIds]] as tombstone segment 2 (del-id list + negative
     * dictionary/stats rows). The serve must answer exactly like a
     * rebuild on the surviving docs. */
-  private val segmentedBm25DelMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      (DataFrame, DataFrame, DataFrame, DataFrame)]
+  private val segmentedBm25DelMemo = buildMemo[(DataFrame, DataFrame, DataFrame, DataFrame)]()
 
   private def segmentedBm25DeletedStore(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) =
@@ -307,8 +315,7 @@ object SparkEntry {
     * the scoring aggregate runs exchange-free from the files
     * themselves. The memo keys the round trip (build once, serve every
     * retrieval from the stored form). */
-  private val storedBm25Memo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (DataFrame, DataFrame)]
+  private val storedBm25Memo = buildMemo[(DataFrame, DataFrame)]()
 
   private def storedBm25Index(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     scratchLock.synchronized {
@@ -349,8 +356,7 @@ object SparkEntry {
   /** Memoized IVF index per (session, data dir): (trained centroids,
     * corpus with cell assignment), both pinned by localCheckpoint so
     * consumers re-read materialized blocks instead of re-training. */
-  private val ivfIndexMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (DataFrame, DataFrame)]
+  private val ivfIndexMemo = buildMemo[(DataFrame, DataFrame)]()
 
   private def builtIvfIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     ivfIndexMemo.getOrElseUpdate((s, dir), {
@@ -368,8 +374,7 @@ object SparkEntry {
     * re-running Lloyd iterations per query — the same build-once
     * contract as [[builtIvfIndex]]. `x_embed_pq` deliberately does NOT
     * read this memo: it measures a fresh training end-to-end. */
-  private val pqMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val pqMemo = buildMemo[DataFrame]()
 
   private def pqTrained(s: SparkSession, dir: String): DataFrame =
     pqMemo.getOrElseUpdate((s, dir),
@@ -823,8 +828,7 @@ object SparkEntry {
     * the round-trip, not just the frame, so repeated query runs re-read
     * the stored table instead of rebuilding and rewriting it — exactly
     * how an ingest loop consumes a per-epoch index. */
-  private val storedNearDupIndexMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val storedNearDupIndexMemo = buildMemo[DataFrame]()
 
   /** pid-scoped scratch root for the build-once/serve-many artifacts
     * keyed by data dir: without the pid component two concurrent JVMs
@@ -906,8 +910,7 @@ object SparkEntry {
     * `materialize = true`: the three frames all derive from the set
     * table, so the checkpoint keeps the three parquet writes from
     * re-running the rarity window once each. */
-  private val storedPpJoinIndexMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Dedup.PpJoinIndex]
+  private val storedPpJoinIndexMemo = buildMemo[Dedup.PpJoinIndex]()
 
   private def storedPpJoinIndex(s: SparkSession, dir: String): Dedup.PpJoinIndex =
     scratchLock.synchronized {
@@ -949,9 +952,7 @@ object SparkEntry {
     * once per epoch in `index_build`, not per query — the same
     * build-once/serve-many contract as the LSH leg's
     * `x_dedup_index_stored`. */
-  private val storedFullPpJoinIndexMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      (Dedup.PpJoinIndex, DataFrame)]
+  private val storedFullPpJoinIndexMemo = buildMemo[(Dedup.PpJoinIndex, DataFrame)]()
 
   private def storedFullPpJoinIndex(
       s: SparkSession, dir: String): (Dedup.PpJoinIndex, DataFrame) =
@@ -978,8 +979,7 @@ object SparkEntry {
     * [[graft.sources.MetaSource.resolve]] (timedb/read.py:128-130):
     * engine catalogs are thousands of rows, not data-proportional.
     * Returns the JDBC url of the seeded database. */
-  private val jdbcCatalogMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val jdbcCatalogMemo = buildMemo[String]()
 
   private def jdbcCatalogUrl(s: SparkSession, dir: String): String =
     scratchLock.synchronized {
@@ -1048,8 +1048,7 @@ object SparkEntry {
     * per-session in-memory artifact. Floats round-trip parquet
     * losslessly, so the stored probe must answer identically to the
     * in-memory path (same oracle as `x_ann_ivf_probe`). */
-  private val storedIvfIndexMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (DataFrame, DataFrame)]
+  private val storedIvfIndexMemo = buildMemo[(DataFrame, DataFrame)]()
 
   private def storedIvfIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     scratchLock.synchronized {
@@ -1078,8 +1077,7 @@ object SparkEntry {
     * never retrained on — and appended as new files under the
     * existing cell directories. Build-once/serve-many like every
     * stored artifact here. */
-  private val appendedIvfMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (DataFrame, DataFrame)]
+  private val appendedIvfMemo = buildMemo[(DataFrame, DataFrame)]()
 
   private def appendedIvfIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     scratchLock.synchronized {
@@ -1109,8 +1107,7 @@ object SparkEntry {
     * reads, so `x_ann_incremental` shares the store untouched while
     * `x_ann_deleted` serves the same corpus through the tombstone
     * anti-join. */
-  private val annDeletedMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val annDeletedMemo = buildMemo[DataFrame]()
 
   private def annDeletedStore(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
@@ -1133,8 +1130,7 @@ object SparkEntry {
     * path reads code bytes under a static probed-cell filter; the
     * float corpus is never scanned. Build-once/serve-many like every
     * stored artifact here. Returns (centroids, codes, pq). */
-  private val storedIvfPqMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame)]
+  private val storedIvfPqMemo = buildMemo[(DataFrame, DataFrame, DataFrame)]()
 
   private def storedIvfPqIndex(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
     scratchLock.synchronized {
@@ -1160,8 +1156,7 @@ object SparkEntry {
     * runs reuse the committed store, which is exactly how a reader
     * consumes a table's history. versions() after the build:
     * v1 = empty create, v2 = even-series snapshot, v3 = full table. */
-  private val timeTravelStoreMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), graft.sources.SeriesStore]
+  private val timeTravelStoreMemo = buildMemo[graft.sources.SeriesStore]()
 
   private def timeTravelStore(s: SparkSession, dir: String): graft.sources.SeriesStore =
     scratchLock.synchronized { timeTravelStoreMemo.getOrElseUpdate((s, dir), {
@@ -1193,10 +1188,9 @@ object SparkEntry {
     * [[timeTravelStore]] with a z-ordered mirror of its current table
     * committed (SeriesStore.createZOrderedMirror) — the build-once
     * lifecycle of every stored artifact here, so `td_zmirror_read`
-    * measures the mirror READ path (pointer resolve → versioned dir →
-    * 2-D-clustered files), not a rebuild per run. */
-  private val zMirrorMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), graft.sources.SeriesStore]
+    * measures the mirror READ path (manifest resolve → the 2-D-clustered
+    * files it lists), not a rebuild per run. */
+  private val zMirrorMemo = buildMemo[graft.sources.SeriesStore]()
 
   private def zMirroredStore(s: SparkSession, dir: String): graft.sources.SeriesStore =
     scratchLock.synchronized {
@@ -1222,8 +1216,7 @@ object SparkEntry {
     * bucketed scans, zero exchanges), not a rebuild per run. The
     * aggregate side is exact arithmetic only (count + min/max
     * timestamps), so the oracle replays it bit-for-bit. */
-  private val bucketedMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), graft.sources.SeriesStore]
+  private val bucketedMemo = buildMemo[graft.sources.SeriesStore]()
 
   /** Catalog names for `dir`'s bucketed mirrors: the session catalog is
     * GLOBAL, and one bench session touches several data dirs (sf0.001
@@ -1264,8 +1257,7 @@ object SparkEntry {
     * checks — the READ-AFTER-MAINTENANCE path: manifest resolve over
     * only the rewritten files. Read-after-compact ≡ read-before is
     * exactly the invariant compaction must preserve. */
-  private val compactedMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), graft.sources.SeriesStore]
+  private val compactedMemo = buildMemo[graft.sources.SeriesStore]()
 
   private def compactedStore(s: SparkSession, dir: String): graft.sources.SeriesStore =
     scratchLock.synchronized {
@@ -1293,6 +1285,7 @@ object SparkEntry {
         // minAge 0: the test store's replaced files are deletable NOW;
         // production keeps the 15-minute in-flight-reader grace window.
         val deleted = store.vacuum(keepManifests = 1, minAgeMillis = 0L)
+          .map(_.stripPrefix("series_values/"))
         require(deleted.nonEmpty && deleted.forall(!after.contains(_)),
           "compactedStore: vacuum must delete only the replaced pre-compact files")
         store
@@ -1303,8 +1296,7 @@ object SparkEntry {
     * bigram-Jaccard candidate pairs collapsed to connected components —
     * the assignment every keep/drop decision downstream consumes.
     * (duplicateClusters' final labels are already localCheckpoint'ed.) */
-  private val clusterMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val clusterMemo = buildMemo[DataFrame]()
 
   private def builtClusters(s: SparkSession, dir: String): DataFrame =
     clusterMemo.getOrElseUpdate((s, dir),
@@ -1430,20 +1422,7 @@ object SparkEntry {
     * directory's PREVIOUS contents, and a memo hit after a rewrite would
     * silently serve stale results. */
   def invalidateBuildMemos(): Unit = {
-    ivfIndexMemo.clear()
-    clusterMemo.clear()
-    storedNearDupIndexMemo.clear()
-    storedPpJoinIndexMemo.clear()
-    storedFullPpJoinIndexMemo.clear()
-    storedIvfIndexMemo.clear()
-    bm25Memo.clear()
-    pqMemo.clear()
-    timeTravelStoreMemo.clear()
-    zMirrorMemo.clear()
-    bucketedMemo.clear()
-    compactedMemo.clear()
-    copurchaseMemo.clear()
-    jdbcCatalogMemo.clear()
+    buildMemos.foreach(_.clear())
     // model broadcasts are memoized by content inside the kernel object;
     // a rewritten dir retrains, so the stale handles must be destroyed
     graft.functions.NbScores.invalidateModelMemo()
@@ -1704,19 +1683,21 @@ object SparkEntry {
 
     ("td_zmirror_read",
       // Read SERVED FROM the z-ordered mirror: the engine resolves the
-      // `_current` pointer to the committed versioned dir and scans the
-      // 2-D-clustered files with a band predicate on BOTH clustering
-      // axes — the oracle replays the defining predicate over the
-      // source frame, so what's tested is that the mirror's files
-      // (written via Layout.writeZOrdered, committed by pointer
-      // rename) hold exactly the table. Footer stats prune ~√sel of
-      // the files on either axis (LayoutSpec pins the geometry).
+      // mirror's current manifest and scans the 2-D-clustered files it
+      // lists with a band predicate on BOTH clustering axes — the
+      // oracle replays the defining predicate over the source frame,
+      // so what's tested is that the mirror's files (written via
+      // Layout.writeZOrdered, committed by one manifest rename) hold
+      // exactly the table. Footer stats prune ~√sel of the files on
+      // either axis (LayoutSpec pins the geometry). The band sits
+      // inside every scale factor's series ids (0-14 at sf0.001) and
+      // days (2024-01-01..30), so it selects rows at each.
       (s, dir) => {
         val store = zMirroredStore(s, dir)
         store.scanZOrdered("sv_zm")
-          .filter(col("series_id").between(20, 70) &&
+          .filter(col("series_id").between(4, 11) &&
             col("valid_time") >= lit(ts("2024-01-03T00:00:00Z")) &&
-            col("valid_time") < lit(ts("2024-02-01T00:00:00Z")))
+            col("valid_time") < lit(ts("2024-01-20T00:00:00Z")))
           .select("series_id", "valid_time", "knowledge_time", "change_time",
             "value", "changed_by", "annotation", "retention")
           .orderBy("series_id", "valid_time", "knowledge_time", "change_time")
@@ -1725,9 +1706,9 @@ object SparkEntry {
         |SELECT series_id, valid_time, knowledge_time, change_time,
         |       value, changed_by, annotation, retention
         |FROM sv
-        |WHERE series_id BETWEEN 20 AND 70
+        |WHERE series_id BETWEEN 4 AND 11
         |  AND valid_time >= TIMESTAMP '2024-01-03'
-        |  AND valid_time <  TIMESTAMP '2024-02-01'
+        |  AND valid_time <  TIMESTAMP '2024-01-20'
         |ORDER BY series_id, valid_time, knowledge_time, change_time""".stripMargin)),
 
     ("td_zmirror_tail",

@@ -48,8 +48,9 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *    [[maintain]] loop runs every mutation on the stream's own
   *    foreachBatch thread), and concurrent readers must tolerate the
   *    reap window — directory-listing readers can hit a vanished
-  *    level mid-scan; [[SeriesStore]]'s manifest commit is the
-  *    upgrade path when readers can't quiesce.
+  *    level mid-scan; putting the levels on a [[ManifestTable]] (as
+  *    [[SeriesStore]]'s tables are) is the upgrade path when readers
+  *    can't quiesce.
   */
 object IndexStore {
 

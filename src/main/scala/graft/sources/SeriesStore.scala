@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
@@ -24,45 +24,28 @@ import org.apache.spark.sql.types.{StringType, StructType}
   *    appended file is sorted by knowledge_time first, then by that key
   *    (see [[appendValues]]).
   *
-  * ==Snapshot manifests==
+  * ==Commits==
   *
-  * `series_values` visibility is gated by a tiny versioned manifest
-  * (`_manifests/v<NNNNNNNN>.list`, one relative data-file path per line)
-  * — the same commit discipline as a table-format log (Delta/Iceberg),
-  * scaled down to what this store needs. Every mutation follows
-  * write-ahead ordering:
-  *
-  *   1. new data files are written under `_staging/<uuid>/` and MOVED
-  *      (per-file rename) into their partition directory — invisible to
-  *      readers, who only read manifest-listed files;
-  *   2. the next manifest version is written to a dot-temp file and
-  *      RENAMED into place — the single atomic commit point;
-  *   3. superseded files are NOT deleted at commit: in-flight readers
-  *      planned against an older manifest keep reading them. [[vacuum]]
-  *      reclaims files unreferenced by the retained manifest tail.
-  *
-  * A crash at any step leaves either the old manifest (uncommitted data
-  * files are invisible garbage for [[vacuum]]) or the new one (complete).
-  * Readers therefore never observe a partially-compacted or half-expired
-  * month — the non-transactional rename-swap window of the previous
-  * design is gone. Writers are single-writer-per-table (the reference's
-  * deployment shape); the rename-commit fails on a version collision on
-  * filesystems with atomic no-overwrite rename (HDFS), which is the
-  * cheap guard — multi-writer deployments need a real lock/CAS service.
-  *
-  * `run_series` stays a plain append-only parquet directory: it is never
-  * rewritten, so directory listing is already safe for it.
+  * Every file set this store writes and reads by path is a
+  * [[ManifestTable]]: `series_values`, `run_series` and each z-ordered
+  * mirror (`zordered/<name>`). Each publishes its files by ONE manifest
+  * rename, so a reader never observes a partially-appended,
+  * partially-compacted or half-expired table, and a crash at any step
+  * leaves the state before or the state after (the table-log commit of
+  * Delta Lake, VLDB 2020). This class keeps the layout policy:
+  * partitioning, sort orders, compaction grouping, TTL rules and the
+  * bucketed mirror.
   */
 final class SeriesStore(spark: SparkSession, basePath: String) {
 
   val valuesPath = s"$basePath/series_values"
   val runSeriesPath = s"$basePath/run_series"
 
-  private def fs = new Path(basePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val values = new ManifestTable(spark, valuesPath)
+  private val runSeries = new ManifestTable(spark, runSeriesPath)
+  private def zMirror(name: String) = new ManifestTable(spark, s"$basePath/zordered/$name")
 
-  private def valuesRoot = fs.makeQualified(new Path(valuesPath))
-  private def manifestsDir = new Path(valuesRoot, "_manifests")
-  private def stagingRoot = new Path(valuesRoot, "_staging")
+  private def fs = new Path(basePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Columns physically present in the data files: everything except the
     * two partition columns (`retention` lives in the dir name;
@@ -75,101 +58,31 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
   /** Row order of an appended file (see [[appendValues]]). */
   private val AppendOrder = Seq("knowledge_time", "series_id", "valid_time", "change_time")
 
-  private val ManifestName = raw"v(\d{8})\.list".r
   /** A manifest entry's partition directory: (tier, month). */
   private val PartitionDir = raw"retention=([^/]*)/valid_month=([^/]*)/[^/]+".r
 
-  private def manifestVersions(): Seq[(Long, Path)] = {
-    if (!fs.exists(manifestsDir)) return Seq.empty
-    fs.listStatus(manifestsDir).toSeq.collect {
-      case st if st.isFile =>
-        st.getPath.getName match {
-          case ManifestName(v) => Some(v.toLong -> st.getPath)
-          case _ => None
-        }
-    }.flatten.sortBy(_._1)
-  }
-
-  private def readManifest(p: Path): Seq[String] = {
-    val in = fs.open(p)
-    try slurp(in).split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-    finally in.close()
-  }
-
   /** Relative paths of the data files in the CURRENT snapshot. */
-  def currentFiles(): Seq[String] =
-    manifestVersions().lastOption.map { case (_, p) => readManifest(p) }.getOrElse(Seq.empty)
+  def currentFiles(): Seq[String] = values.currentFiles()
 
-  /** The atomic commit point: write the full file list as the next
-    * manifest version (dot-temp + rename). */
-  private def commitManifest(files: Seq[String]): Long = {
-    fs.mkdirs(manifestsDir)
-    val next = manifestVersions().lastOption.map(_._1 + 1L).getOrElse(1L)
-    val tmp = new Path(manifestsDir, s".tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(files.sorted.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val target = new Path(manifestsDir, f"v$next%08d.list")
-    if (!fs.rename(tmp, target)) {
-      fs.delete(tmp, false)
-      throw new IllegalStateException(
-        s"manifest commit collision at $target — concurrent writer on single-writer table")
-    }
-    next
-  }
-
-  private def newStagingDir(): Path =
-    new Path(stagingRoot, java.util.UUID.randomUUID().toString)
-
-  /** Recursively list real data files (skips `_SUCCESS`, dot-temps). */
-  private def dataFiles(dir: Path): Seq[FileStatus] = {
-    val out = Seq.newBuilder[FileStatus]
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val n = f.getPath.getName
-      if (f.isFile && !n.startsWith(".") && !n.startsWith("_")) out += f
-    }
-    out.result()
-  }
-
-  /** Move every staged data file into its partition directory and return
-    * the relative paths. The moves land BEFORE the manifest commit, so
-    * readers cannot see them early. Each moved file's mtime is bumped to
-    * promote time — rename preserves the WRITE-time mtime, and
-    * [[vacuum]]'s age guard must measure from the commit window, not
-    * from when a long write job happened to finish the file. */
-  private def promoteStaged(staging: Path): Seq[String] = {
-    val qStaging = fs.makeQualified(staging)
-    dataFiles(qStaging).map { f =>
-      val rel = f.getPath.toString.stripPrefix(qStaging.toString + "/")
-      val dst = new Path(valuesRoot, rel)
-      fs.mkdirs(dst.getParent)
-      if (!fs.rename(f.getPath, dst))
-        throw new IllegalStateException(s"failed to move staged file to $dst")
-      fs.setTimes(dst, System.currentTimeMillis(), -1)
-      rel
-    }
-  }
-
-  /** Idempotent create (timedb/client.py:106-118): an empty snapshot for
-    * series_values, an empty (schema-bearing) parquet dir for
-    * run_series, so reads before any data arrives see the right
-    * schemas. */
+  /** Idempotent create (timedb/client.py:106-118): the first, empty
+    * manifest of each table, so reads before any data arrives see the
+    * right schemas. No Spark job runs. A `run_series` directory written
+    * before it had manifests keeps its files: they become its first
+    * manifest. */
   def create(): Unit = {
-    if (manifestVersions().isEmpty) commitManifest(Seq.empty)
-    if (!fs.exists(new Path(runSeriesPath))) {
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schema.runSeries)
-      empty.write.mode(SaveMode.Append).parquet(runSeriesPath)
-    }
+    values.create()
+    runSeries.create()
   }
 
-  /** Drop both tables (timedb/client.py:119-120). */
+  /** Drop every table the store owns (timedb/client.py:119-120): both
+    * tables, the z-ordered mirrors, and the bucketed mirrors with their
+    * `<name>` / `<name>__v<N>` catalog entries. */
   def delete(): Unit = {
-    fs.delete(new Path(valuesPath), true)
-    fs.delete(new Path(runSeriesPath), true)
-    ()
+    subdirs(new Path(basePath, "bucketed")).foreach { name =>
+      (name +: versionedTables(name).map(_._2)).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+    Seq("series_values", "run_series", "zordered", "bucketed")
+      .foreach(d => fs.delete(new Path(basePath, d), true))
   }
 
   /** Append a stamped batch to series_values: stage → move → one
@@ -195,28 +108,23 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     * the reference (timedb/write.py:81-158) is N/A: Spark writes are
     * already task-parallel.
     */
-  def appendValues(stamped: DataFrame): Unit = {
-    val staging = newStagingDir()
-    stamped
-      .withColumn("valid_month", Schema.monthOf(col("valid_time")))
-      .repartition(col("retention"), col("valid_month"))
-      .sortWithinPartitions((Schema.partitionColumns ++ AppendOrder).map(col): _*)
-      .write
-      .mode(SaveMode.Overwrite)
-      .partitionBy(Schema.partitionColumns: _*)
-      .option("compression", "zstd")
-      .parquet(staging.toString)
-    try {
-      val added = promoteStaged(staging)
-      if (added.nonEmpty) commitManifest(currentFiles() ++ added)
-    } finally {
-      fs.delete(staging, true)
-      ()
+  def appendValues(stamped: DataFrame): Unit =
+    values.append { dir =>
+      stamped
+        .withColumn("valid_month", Schema.monthOf(col("valid_time")))
+        .repartition(col("retention"), col("valid_month"))
+        .sortWithinPartitions((Schema.partitionColumns ++ AppendOrder).map(col): _*)
+        .write
+        .mode(SaveMode.Overwrite)
+        .partitionBy(Schema.partitionColumns: _*)
+        .option("compression", "zstd")
+        .parquet(dir)
     }
-  }
 
+  /** Append run_series rows: stage → move → one manifest commit, like
+    * [[appendValues]]. */
   def appendRunSeries(rs: DataFrame): Unit =
-    rs.write.mode(SaveMode.Append).option("compression", "zstd").parquet(runSeriesPath)
+    runSeries.append(dir => rs.write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(dir))
 
   /** Scan series_values — the CURRENT snapshot's files, with `retention`
     * and `valid_month` recovered from the partition paths (`basePath`
@@ -249,7 +157,7 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
   /** Committed manifest versions, oldest first — the time-travel axis.
     * Every committed write is one version; [[vacuum]] bounds how far
     * back the files themselves survive. */
-  def versions(): Seq[Long] = manifestVersions().map(_._1)
+  def versions(): Seq[Long] = values.versions()
 
   /** Snapshot read AS OF a committed manifest version — time travel
     * over the store's own commit log: the scan plans against exactly
@@ -260,15 +168,8 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     * [[vacuum]]'s retained-manifest grace window still covers the
     * version. Unknown versions fail loudly with the available range —
     * a silent empty read would look like data loss. */
-  def scanValuesAsOf(version: Long): DataFrame = {
-    val all = manifestVersions()
-    all.find(_._1 == version) match {
-      case Some((_, p)) => scanFileList(readManifest(p))
-      case None => throw new IllegalArgumentException(
-        s"no manifest version $version at $valuesPath — available: " +
-          (if (all.isEmpty) "none" else s"${all.head._1}..${all.last._1}"))
-    }
-  }
+  def scanValuesAsOf(version: Long): DataFrame =
+    scanFileList(values.filesAt(version))
 
   /** Incremental consumption over the commit log: the rows of every
     * file ADDED between two committed versions — the reader side of a
@@ -289,26 +190,25 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
   def scanChangesBetween(fromVersion: Long, toVersion: Long): DataFrame = {
     require(fromVersion <= toVersion,
       s"fromVersion $fromVersion must be <= toVersion $toVersion")
-    val all = manifestVersions()
-    def filesAt(v: Long): Seq[String] = all.find(_._1 == v) match {
-      case Some((_, p)) => readManifest(p)
-      case None => throw new IllegalArgumentException(
-        s"no manifest version $v at $valuesPath — available: " +
-          (if (all.isEmpty) "none" else s"${all.head._1}..${all.last._1}"))
-    }
-    val from = filesAt(fromVersion).toSet
-    scanFileList(filesAt(toVersion).filterNot(from))
+    val from = values.filesAt(fromVersion).toSet
+    scanFileList(values.filesAt(toVersion).filterNot(from))
   }
 
-  private def scanFileList(files: Seq[String]): DataFrame = {
-    val schema = Schema.seriesValues.add("valid_month", StringType)
+  private def scanFileList(files: Seq[String]): DataFrame =
+    scanFiles(values, files, Schema.seriesValues.add("valid_month", StringType))
+
+  /** One scan over `files` of `table`, partition columns recovered from
+    * their paths under its root. `schema` types an empty list, and the
+    * reader too unless `inferSchema` (one footer-read job). */
+  private def scanFiles(table: ManifestTable, files: Seq[String], schema: StructType,
+      inferSchema: Boolean = false): DataFrame =
     if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else
-      spark.read.schema(schema)
-        .option("basePath", valuesRoot.toString)
-        .parquet(files.map(f => s"$valuesRoot/$f"): _*)
-  }
+    else {
+      val root = table.root
+      val reader = spark.read.option("basePath", root.toString)
+      (if (inferSchema) reader else reader.schema(schema)).parquet(files.map(f => s"$root/$f"): _*)
+    }
 
   /** Bucketed mirror of series_values for SHUFFLE-FREE series-keyed
     * reads. Spark's bucketed tables expose `HashPartitioning(series_id,
@@ -350,7 +250,7 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     require(frame.columns.contains("series_id"),
       s"bucketed mirror $tableName: frame must carry series_id (the bucket key)")
     val tableRoot = new Path(s"$basePath/bucketed/$tableName")
-    val versions = versionDirs(tableRoot)
+    val versions = subdirs(tableRoot).filter(_.startsWith("v")).flatMap(_.stripPrefix("v").toLongOption)
     val next = (versions.sorted.lastOption.getOrElse(0L)) + 1L
     val path = new Path(tableRoot, s"v$next")
     // The version dir the OUTGOING public table reads from — that is the
@@ -409,138 +309,67 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     * The complement to [[createBucketedMirror]]: buckets buy
     * shuffle-free keyed plans, z-order buys 2-D scan pruning.
     *
-    * Same maintenance discipline as the bucketed mirror: each rebuild
-    * writes a fresh versioned dir (`zordered/<name>/v<N>`) and commits
-    * by dot-temp + rename of a `_current` pointer file — readers
-    * holding the previous version's plan keep their files; dirs older
-    * than the previously-live version are dropped (keep-one grace).
-    * A crash before the pointer commit leaves an orphan dir that
-    * [[scanZOrdered]] never resolves and the next rebuild removes. */
+    * The mirror is a [[ManifestTable]] at `zordered/<name>`. A rebuild
+    * stages the clustered files into `store_v<N>/`, N being the store
+    * version they reflect, and commits ONE manifest that replaces the
+    * whole file list, so that commit also fixes the base version
+    * [[scanZOrderedWithTail]] resumes from. It then vacuums the mirror
+    * keeping two manifests: readers holding the previous version's plan
+    * keep its files for one more rebuild; older files go. */
   def createZOrderedMirror(name: String, files: Int, bits: Int = 12,
       asOfVersion: Option[Long] = None): Unit = {
     require(files > 0, "files must be positive")
     require(name.matches("[A-Za-z0-9_]+"), s"unsafe mirror name: $name")
-    val root = new Path(s"$basePath/zordered/$name")
-    val existing = versionDirs(root)
-    val prevLive = zCurrentVersion(root)
-    val next = existing.sorted.lastOption.getOrElse(0L) + 1L
-    // The mirror records which STORE version it reflects (default: the
-    // current head) — the cursor [[scanZOrderedWithTail]] resumes the
-    // change feed from, the same contract as any downstream index.
-    // The scan goes through scanValuesAsOf(baseVersion) even in the
-    // default case: resolving "head" once and reading THAT manifest is
-    // atomic, where a separate scanValues() could list a newer commit
-    // that landed in between — the marker would then understate the
-    // mirror's content and the tail read would duplicate those rows.
+    // The base version defaults to the current head. The scan goes
+    // through scanValuesAsOf(baseVersion) even then: resolving "head"
+    // once and reading THAT manifest is atomic, where a separate
+    // scanValues() could list a newer commit that landed in between —
+    // the base version would then understate the mirror's content and
+    // the tail read would duplicate those rows.
     val baseVersion = asOfVersion.getOrElse(versions().last)
-    val baseScan = scanValuesAsOf(baseVersion)
-    graft.operators.Layout.writeZOrdered(
-      baseScan.drop("valid_month"),
-      new Path(root, s"v$next").toString,
-      xCol = "series_id", yCol = "valid_time", files = files, bits = bits)
-    // store-version marker INSIDE the versioned dir: it travels with
-    // the dir through the pointer commit and the keep-one grace drop
-    val verOut = fs.create(new Path(new Path(root, s"v$next"), "_STORE_VERSION"), true)
-    try verOut.write(baseVersion.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally verOut.close()
-    // pointer commit: dot-temp + rename INTO the versioned name space
-    // is not enough here (the target exists across rebuilds), so write
-    // temp, delete, rename — scanZOrdered's highest-version fallback
-    // covers the window between delete and rename.
-    val cur = new Path(root, "_current")
-    val tmp = new Path(root, s".tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(next.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(cur)) fs.delete(cur, false)
-    if (!fs.rename(tmp, cur))
-      throw new IllegalStateException(s"failed to commit z-mirror pointer $cur")
-    // keep-one grace: the previously-live dir survives one cycle for
-    // in-flight readers; crashed-rebuild orphans and older dirs go.
-    existing.filter(v => v != next && !prevLive.contains(v)).foreach { v =>
-      fs.delete(new Path(root, s"v$v"), true)
-    }
+    val baseScan = scanValuesAsOf(baseVersion).drop("valid_month")
+    val mirror = zMirror(name)
+    mirror.commit(mirror.stage(into = Some(s"store_v$baseVersion")) { dir =>
+      graft.operators.Layout.writeZOrdered(baseScan, dir,
+        xCol = "series_id", yCol = "valid_time", files = files, bits = bits)
+    })
+    mirror.vacuum(keepManifests = 2, minAgeMillis = 0L)
+    ()
   }
 
-  private def zCurrentVersion(root: Path): Option[Long] = {
-    val cur = new Path(root, "_current")
-    // open, don't exists-then-open: a rebuild's delete→rename pointer
-    // commit can race between the two calls, and a reader landing in
-    // that window must take the highest-_SUCCESS fallback, not throw.
-    val in = try fs.open(cur) catch {
-      case _: java.io.FileNotFoundException => return None
-    }
-    try scala.util.Try(slurp(in).trim.toLong).toOption
-    finally in.close()
+  /** The z-mirror's current files; a mirror never built fails loudly. */
+  private def zMirrorFiles(name: String): Seq[String] = {
+    val mirror = zMirror(name)
+    val files = mirror.currentFiles()
+    if (files.isEmpty && mirror.versions().isEmpty)
+      throw new IllegalArgumentException(
+        s"no z-ordered mirror '$name' at ${mirror.root} — run createZOrderedMirror first")
+    files
   }
 
-  /** The `v<N>` version numbers of a mirror root's directories (both
-    * mirrors version their rebuilds this way); empty when the root does
-    * not exist. */
-  private def versionDirs(root: Path): Seq[Long] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.startsWith("v"))
-      .flatMap(n => n.stripPrefix("v").toLongOption)
+  private val MirrorFile = raw"store_v(\d+)/[^/]+".r
 
-  // the one byte-slurp for the small files: manifests, pointers and
-  // store-version markers
-  private def slurp(in: java.io.InputStream): String = {
-    val bytes = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    var n = in.read(buf)
-    while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-    new String(bytes.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-  }
+  private def baseVersionOf(name: String, files: Seq[String]): Long =
+    files.collectFirst { case MirrorFile(v) => v.toLong }.getOrElse(
+      throw new IllegalStateException(
+        s"z-mirror '$name' lists no store_v<N> file, so no base version — rebuild it"))
 
-  /** The z-ordered mirror as a DataFrame. Resolves the `_current`
-    * pointer; when the pointer is missing or mid-commit, falls back to
-    * the highest version dir whose write COMPLETED (`_SUCCESS` marker)
-    * — an unpointed dir without the marker may be half-written and is
-    * never resolved. */
+  /** The z-ordered mirror as a DataFrame: the files its current
+    * manifest lists. */
   def scanZOrdered(name: String): DataFrame =
-    spark.read.parquet(zResolvedDir(name).toString)
+    scanFiles(zMirror(name), zMirrorFiles(name), Schema.seriesValues, inferSchema = true)
 
-  private def zResolvedDir(name: String): Path = {
-    val root = new Path(s"$basePath/zordered/$name")
-    zCurrentVersion(root).map(v => new Path(root, s"v$v")).filter(fs.exists(_))
-      .orElse {
-        if (!fs.exists(root)) None
-        else fs.listStatus(root).toSeq.filter(_.isDirectory)
-          .map(_.getPath)
-          .filter(p => fs.exists(new Path(p, "_SUCCESS")))
-          .flatMap(p => scala.util.Try(
-            p.getName.stripPrefix("v").toLong).toOption.map(_ -> p))
-          .sortBy(_._1).lastOption.map(_._2)
-      }
-      .getOrElse(throw new IllegalArgumentException(
-        s"no z-ordered mirror '$name' at $root — run createZOrderedMirror first"))
-  }
-
-  /** The store version the live mirror reflects (`_STORE_VERSION`
-    * marker written at build). Mirrors built before the marker existed
-    * fail loudly — a silent guess would corrupt the tail read. */
-  def zMirrorBaseVersion(name: String): Long = {
-    val marker = new Path(zResolvedDir(name), "_STORE_VERSION")
-    val in = try fs.open(marker) catch {
-      case _: java.io.FileNotFoundException =>
-        throw new IllegalStateException(
-          s"z-mirror '$name' carries no _STORE_VERSION marker — rebuild it " +
-            "(createZOrderedMirror) before tail reads")
-    }
-    try slurp(in).trim.toLong
-    finally in.close()
-  }
+  /** The store version the mirror reflects, fixed by its commit. */
+  def zMirrorBaseVersion(name: String): Long =
+    baseVersionOf(name, zMirrorFiles(name))
 
   /** MERGE-ON-READ over the z-mirror: the clustered mirror files plus
-    * the commit-log change feed since the mirror's recorded base
-    * version — the current table without a rebuild, the lakehouse
-    * base-plus-delta serving pattern (and the reference's ClickHouse
-    * parts-plus-unmerged-inserts read model). Periodic
-    * [[createZOrderedMirror]] rebuilds play the compaction role:
-    * between rebuilds every read costs (clustered scan) + (delta
-    * proportional to NEW data since the base).
+    * the commit-log change feed since the mirror's base version — the
+    * current table without a rebuild, the lakehouse base-plus-delta
+    * serving pattern (and the reference's ClickHouse parts-plus-unmerged-
+    * inserts read model). Periodic [[createZOrderedMirror]] rebuilds
+    * play the compaction role: between rebuilds every read costs
+    * (clustered scan) + (delta proportional to NEW data since the base).
     *
     * Exactness guard: the file-diff change feed re-surfaces rows when
     * a commit REWRITES files (compaction), which would double them
@@ -548,25 +377,13 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     * the current manifest, the read fails loudly asking for a rebuild
     * instead of serving duplicates. TTL/vacuum that DROPPED base files
     * trips the same guard; both are exactly the moments a mirror is
-    * stale. */
+    * stale. The mirror's file list is read once, so its scan and its
+    * base version come from the same commit. */
   def scanZOrderedWithTail(name: String): DataFrame = {
-    val base = zMirrorBaseVersion(name)
-    // ONE manifest listing serves the head resolve, both file lists,
-    // and the delta (a second listing could race a vacuum into a bare
-    // NoSuchElementException; this path's whole contract is loud,
-    // diagnosable errors)
-    val all = manifestVersions()
-    if (all.isEmpty)
-      throw new IllegalStateException(
-        s"z-mirror '$name': the store at $valuesPath has no committed " +
-          "manifests (deleted?) — nothing to serve a tail from")
-    val baseFiles = all.find(_._1 == base) match {
-      case Some((_, p)) => readManifest(p)
-      case None => throw new IllegalStateException(
-        s"z-mirror '$name' was built at store version $base, which no " +
-          "longer has a manifest (vacuumed?) — rebuild the mirror")
-    }
-    val headFiles = readManifest(all.last._2)
+    val files = zMirrorFiles(name)
+    val base = baseVersionOf(name, files)
+    val baseFiles = values.filesAt(base)
+    val headFiles = values.currentFiles()
     val headSet = headFiles.toSet
     val rewritten = baseFiles.filterNot(headSet)
     if (rewritten.nonEmpty)
@@ -575,7 +392,7 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
           "rewritten or dropped since (compaction/TTL) — the file-diff tail " +
           "would duplicate or lose their rows; rebuild the mirror")
     val baseSet = baseFiles.toSet
-    val mirror = scanZOrdered(name)
+    val mirror = scanFiles(zMirror(name), files, Schema.seriesValues, inferSchema = true)
     mirror.unionByName(
       scanFileList(headFiles.filterNot(baseSet))
         .select(mirror.columns.map(col): _*))
@@ -606,7 +423,7 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     * ch_create_tables.sql:58-65): latest first_seen per (series_id,
     * run_id). */
   def scanRunSeries(): DataFrame =
-    spark.read.schema(Schema.runSeries).parquet(runSeriesPath)
+    scanFiles(runSeries, runSeries.currentFiles(), Schema.runSeries)
       .groupBy("series_id", "run_id")
       .agg(max("first_seen").as("first_seen"))
 
@@ -629,107 +446,41 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     var live = currentFiles()
     val groups = live.groupBy(dirOf).toSeq.sortBy(_._1)
     for ((dir, rels) <- groups if rels.length > maxFiles) {
-      val abs = rels.map(r => new Path(valuesRoot, r))
+      val root = values.root
+      val abs = rels.map(r => new Path(root, r))
       val totalBytes = abs.map(p => fs.getFileStatus(p).getLen).sum
       val nOut = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-      val staging = newStagingDir()
-      spark.read.schema(dataFileSchema).parquet(abs.map(_.toString): _*)
-        .repartitionByRange(nOut, SortKey.map(col): _*)
-        .sortWithinPartitions(SortKey.map(col): _*)
-        .write.option("compression", "zstd").parquet(staging.toString)
-      try {
-        // staged layout is flat; the files belong to this partition dir
-        val added = promoteStagedInto(staging, dir)
-        live = live.filterNot(rels.toSet) ++ added
-        commitManifest(live)
-      } finally {
-        fs.delete(staging, true)
-        ()
+      // the staged layout is flat; its files belong to this partition dir
+      val added = values.stage(into = Some(dir)) { staging =>
+        spark.read.schema(dataFileSchema).parquet(abs.map(_.toString): _*)
+          .repartitionByRange(nOut, SortKey.map(col): _*)
+          .sortWithinPartitions(SortKey.map(col): _*)
+          .write.option("compression", "zstd").parquet(staging)
       }
+      live = live.filterNot(rels.toSet) ++ added
+      values.commit(live)
       done += dir
     }
     done.result()
   }
 
-  /** Like [[promoteStaged]] for a flat (non-partitioned) staging dir
-    * whose files all belong to partition directory `dir`. */
-  private def promoteStagedInto(staging: Path, dir: String): Seq[String] = {
-    dataFiles(fs.makeQualified(staging)).map { f =>
-      val rel = s"$dir/${f.getPath.getName}"
-      val dst = new Path(valuesRoot, rel)
-      fs.mkdirs(dst.getParent)
-      if (!fs.rename(f.getPath, dst))
-        throw new IllegalStateException(s"failed to move staged file to $dst")
-      fs.setTimes(dst, System.currentTimeMillis(), -1) // see promoteStaged
-      rel
-    }
-  }
-
-  /** Garbage collection: delete manifests older than the retained tail
-    * and any on-disk data file no retained manifest references —
-    * superseded compaction inputs, expired months, files from crashed
-    * (uncommitted) writes, staging leftovers. Two guards make this safe
-    * to schedule:
-    *
-    *  - `keepManifests >= 2` gives readers planned against the previous
-    *    snapshot a grace window (run vacuum on a schedule longer than
-    *    your longest query, the table-format VACUUM contract);
-    *  - `minAgeMillis` protects an IN-FLIGHT write: files a writer has
-    *    staged or promoted but not yet committed are unreferenced, and
-    *    deleting them would corrupt the commit that follows — so only
-    *    files older than the age floor are eligible (the same file-age
-    *    gate table formats use). Pass 0 only from the writer thread
-    *    itself (e.g. the ingest loop), where no mutation can be in
-    *    flight.
-    *
-    * Returns deleted relative paths. */
+  /** Garbage collection over every table the store owns — both tables
+    * and each z-ordered mirror — see [[ManifestTable.vacuum]] for the
+    * reader-grace (`keepManifests`) and in-flight-write (`minAgeMillis`)
+    * guards. Returns the deleted data files' paths relative to the
+    * store's base path. */
   def vacuum(keepManifests: Int = 2,
       minAgeMillis: Long = 15L * 60 * 1000): Seq[String] = {
-    require(keepManifests >= 1, "must keep at least the current manifest")
-    val versions = manifestVersions()
-    if (versions.isEmpty) return Seq.empty
-    val cutoff = System.currentTimeMillis() - minAgeMillis
-    val keep = versions.takeRight(keepManifests)
-    val liveSet = keep.flatMap { case (_, p) => readManifest(p) }.toSet
-    versions.dropRight(keep.length).foreach { case (_, p) => fs.delete(p, false) }
-    // A staging dir's own mtime is set at job START; a long write keeps
-    // producing files, so age the dir by its NEWEST content — an active
-    // writer's staging dir always looks fresh. A child vanishing
-    // mid-walk (the writer just promoted or cleaned it) means ACTIVE:
-    // treat the dir as fresh rather than failing the maintenance job.
-    def newestMtime(st: FileStatus): Long =
-      if (!st.isDirectory) st.getModificationTime
-      else {
-        val children =
-          try fs.listStatus(st.getPath).toSeq
-          catch { case _: java.io.FileNotFoundException => return Long.MaxValue }
-        (st.getModificationTime +: children.map(newestMtime)).max
-      }
-    if (fs.exists(stagingRoot))
-      fs.listStatus(stagingRoot)
-        .filter(d => newestMtime(d) <= cutoff)
-        .foreach(d => fs.delete(d.getPath, true))
-    val deleted = Seq.newBuilder[String]
-    for {
-      tierDir <- fs.listStatus(valuesRoot).toSeq
-      if tierDir.isDirectory && !tierDir.getPath.getName.startsWith("_")
-      monthDir <- fs.listStatus(tierDir.getPath).toSeq if monthDir.isDirectory
-    } {
-      val dir = s"${tierDir.getPath.getName}/${monthDir.getPath.getName}"
-      fs.listStatus(monthDir.getPath)
-        .filter(f => f.isFile && f.getModificationTime <= cutoff)
-        .foreach { f =>
-          val rel = s"$dir/${f.getPath.getName}"
-          if (!liveSet.contains(rel)) {
-            fs.delete(f.getPath, false)
-            deleted += rel
-          }
-        }
-      if (fs.listStatus(monthDir.getPath).isEmpty) fs.delete(monthDir.getPath, false)
-      if (fs.listStatus(tierDir.getPath).isEmpty) fs.delete(tierDir.getPath, false)
-    }
-    deleted.result()
+    val tables = Seq("series_values" -> values, "run_series" -> runSeries) ++
+      subdirs(new Path(basePath, "zordered")).map(n => s"zordered/$n" -> zMirror(n))
+    tables.flatMap { case (dir, t) => t.vacuum(keepManifests, minAgeMillis).map(f => s"$dir/$f") }
   }
+
+  /** Names of the directories directly under `dir`; none when it does
+    * not exist. */
+  private def subdirs(dir: Path): Seq[String] =
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq.filter(_.isDirectory).map(_.getPath.getName)
 
   /** TTL expiry (ch_create_tables.sql:43-48): month-granular partition
     * drop, like ClickHouse's TTL-aligned partition delete. A
@@ -756,7 +507,7 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     }.sorted
     if (expired.nonEmpty) {
       val gone = expired.toSet
-      commitManifest(live.filterNot(f => gone.contains(dirOf(f))))
+      values.commit(live.filterNot(f => gone.contains(dirOf(f))))
     }
     expired
   }

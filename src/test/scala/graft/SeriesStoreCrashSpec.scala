@@ -1,0 +1,204 @@
+package graft
+
+import java.nio.file.{Files, Path => JPath}
+import java.sql.Timestamp
+import java.time.Instant
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+
+import graft.operators.WritePipeline
+import graft.sources.SeriesStore
+
+/** Crash-point matrix for every mutation of the series store. Each
+  * mutation first runs clean on [[CrashFs]] to count its creates,
+  * renames and deletes (n); then, for every k in 1..n, a copy of the
+  * same starting store runs it with the k-th of those calls (and every
+  * later one) failing. A fresh [[SeriesStore]] on the crashed copy must
+  * answer with exactly the state before or the state after; where it
+  * answers "before", re-running the mutation reaches "after"; and then
+  * `vacuum(minAgeMillis = 0)` leaves no file that no retained manifest
+  * lists. */
+class SeriesStoreCrashSpec extends SparkSpec {
+  import spark.implicits._
+
+  CrashFs.register(spark)
+
+  private val kt0 = ts("2024-03-01T00:00:00Z")
+
+  /** `n` hours of series 1 and 2 from `start`. */
+  private def rows(start: String, n: Int): DataFrame = {
+    val t0 = Instant.parse(start)
+    (for (sid <- Seq(1L, 2L); h <- 0 until n)
+      yield (sid, Timestamp.from(t0.plusSeconds(3600L * h)), sid * 100.0 + h))
+      .toDF("series_id", "valid_time", "value")
+  }
+
+  /** [[rows]] stamped for `series_values` at knowledge_time `kt`. */
+  private def batch(start: String, n: Int, kt: Timestamp): DataFrame =
+    WritePipeline.stamp(rows(start, n), Some("short"), Some(kt), now = kt, runId = 1L)
+
+  private def runs(runId: Long): DataFrame =
+    Seq((1L, runId, kt0), (2L, runId, kt0)).toDF("series_id", "run_id", "first_seen")
+
+  /** Everything a reader of the store can see, as sorted strings. */
+  private def state(base: String): Seq[String] = {
+    val store = new SeriesStore(spark, base)
+    def rows(tag: String, df: DataFrame) =
+      df.collect().map(r => s"$tag ${r.mkString(",")}").sorted.toSeq
+    rows("values", store.scanValues().drop("valid_month")) ++
+      rows("runs", store.scanRunSeries()) ++
+      (try rows("zmirror", store.scanZOrdered("z"))
+       catch { case e: IllegalArgumentException
+         if e.getMessage.contains("run createZOrderedMirror first") => Seq("zmirror none") })
+  }
+
+  /** Local files under `dir` that no retained manifest of their table
+    * lists (the manifests themselves excepted). */
+  private def unlisted(dir: JPath): Seq[String] = {
+    def files(d: JPath): Seq[JPath] =
+      if (!Files.isDirectory(d)) Seq.empty
+      else {
+        val walk = Files.walk(d)
+        try walk.iterator().asScala.filter(Files.isRegularFile(_)).toSeq finally walk.close()
+      }
+    val tables = Seq(dir.resolve("series_values"), dir.resolve("run_series")) ++
+      (if (Files.isDirectory(dir.resolve("zordered")))
+         Files.list(dir.resolve("zordered")).iterator().asScala.toSeq else Nil)
+    val listed = tables.flatMap { t =>
+      val manifests = files(t.resolve("_manifests"))
+        .filter(_.getFileName.toString.matches("v\\d{8}\\.list"))
+      manifests ++ manifests.flatMap(m => Files.readAllLines(m).asScala.filter(_.nonEmpty).map(t.resolve))
+    }.toSet
+    files(dir).filterNot(listed).map(p => dir.relativize(p).toString)
+  }
+
+  private def copyTree(from: JPath, to: JPath): Unit = {
+    val walk = Files.walk(from)
+    try walk.iterator().asScala.foreach { p =>
+      val q = to.resolve(from.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(q) else Files.copy(p, q)
+    } finally walk.close()
+  }
+
+  /** Wait until no task is running: the tasks of a job that failed on an
+    * injected crash may still be writing when the action returns. */
+  private def quiesce(): Unit = {
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    def running = {
+      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
+      spark.sparkContext.statusTracker.getExecutorInfos.exists(_.numRunningTasks() > 0)
+    }
+    while (running && System.nanoTime() < deadline) Thread.sleep(20)
+  }
+
+  /** Run the matrix for one mutation; returns n. */
+  private def matrix(name: String)(setup: SeriesStore => Unit)(mutate: SeriesStore => Unit): Long = {
+    val template = Files.createTempDirectory(s"crash_${name}_")
+    val uriOf = (d: JPath) => CrashFs.uri(d.toString)
+    CrashFs.reset()
+    val seed = new SeriesStore(spark, uriOf(template))
+    seed.create()
+    setup(seed)
+    val before = state(uriOf(template))
+
+    val clean = Files.createTempDirectory(s"crash_${name}_clean_")
+    copyTree(template, clean)
+    CrashFs.reset()
+    mutate(new SeriesStore(spark, uriOf(clean)))
+    val n = CrashFs.mutationCount
+    val after = state(uriOf(clean))
+    assert(n > 0, s"$name: a clean run made no create/rename/delete")
+
+    for (k <- 1L to n) {
+      val dir = Files.createTempDirectory(s"crash_${name}_k${k}_")
+      copyTree(template, dir)
+      CrashFs.arm(k)
+      try mutate(new SeriesStore(spark, uriOf(dir))) catch { case _: Exception => () }
+      quiesce()
+      CrashFs.disarm()
+      val got = state(uriOf(dir))
+      assert(got == before || got == after,
+        s"$name crashed at call $k of $n answers neither the state before nor after:\n" +
+          got.mkString("\n"))
+      if (got == before) {
+        mutate(new SeriesStore(spark, uriOf(dir)))
+        assert(state(uriOf(dir)) == after, s"$name crashed at call $k: re-run did not reach after")
+      }
+      new SeriesStore(spark, uriOf(dir)).vacuum(minAgeMillis = 0L)
+      assert(unlisted(dir).isEmpty, s"$name crashed at call $k: vacuum left ${unlisted(dir)}")
+      assert(state(uriOf(dir)) == after)
+      FsUtil.deleteRecursively(dir.toFile)
+    }
+    Seq(template, clean).foreach(d => FsUtil.deleteRecursively(d.toFile))
+    n
+  }
+
+  test("crash matrix: series_values append") {
+    val n = matrix("append")(_.appendValues(batch("2024-03-01T00:00:00Z", 3, kt0)))(
+      _.appendValues(batch("2024-03-01T03:00:00Z", 3, ts("2024-03-01T01:00:00Z"))))
+    info(s"$n crash points")
+  }
+
+  test("crash matrix: compaction") {
+    val n = matrix("compact") { s =>
+      (0 until 3).foreach(i =>
+        s.appendValues(batch(f"2024-03-01T0$i:00:00Z", 2, ts(f"2024-03-01T0$i:30:00Z"))))
+    }(s => assert(s.compactPartitions(maxFiles = 2).nonEmpty))
+    info(s"$n crash points")
+  }
+
+  test("crash matrix: TTL expiry") {
+    val n = matrix("expire") { s =>
+      s.appendValues(batch("2020-01-15T00:00:00Z", 2, kt0))
+      s.appendValues(batch("2024-02-20T00:00:00Z", 2, kt0))
+    }(s => assert(s.expireRetention(Instant.parse("2024-03-01T00:00:00Z")).nonEmpty))
+    info(s"$n crash points")
+  }
+
+  test("crash matrix: vacuum") {
+    val n = matrix("vacuum") { s =>
+      (0 until 3).foreach(i =>
+        s.appendValues(batch(f"2024-03-01T0$i:00:00Z", 2, ts(f"2024-03-01T0$i:30:00Z"))))
+      s.appendRunSeries(runs(1L))
+      s.appendRunSeries(runs(2L))
+      s.compactPartitions(maxFiles = 2)
+    }(_.vacuum(keepManifests = 1, minAgeMillis = 0L))
+    info(s"$n crash points")
+  }
+
+  test("crash matrix: run_series append") {
+    val n = matrix("runs")(_.appendRunSeries(runs(1L)))(_.appendRunSeries(runs(2L)))
+    info(s"$n crash points")
+  }
+
+  test("crash matrix: z-mirror rebuild") {
+    val n = matrix("zmirror") { s =>
+      s.appendValues(batch("2024-03-01T00:00:00Z", 3, kt0))
+      s.createZOrderedMirror("z", files = 2)
+      s.appendValues(batch("2024-03-01T03:00:00Z", 3, ts("2024-03-01T01:00:00Z")))
+    }(_.createZOrderedMirror("z", files = 2))
+    info(s"$n crash points")
+  }
+
+  test("a TimeDb.read makes a pinned set of filesystem calls") {
+    val local = Files.createTempDirectory("crash_read_")
+    val db = new TimeDb(spark, CrashFs.uri(local.toString))
+    db.create()
+    db.write(rows("2024-03-01T00:00:00Z", 3), retention = Some("short"), knowledgeTime = Some(kt0))
+    db.write(rows("2024-04-01T00:00:00Z", 3), retention = Some("short"),
+      knowledgeTime = Some(ts("2024-03-02T00:00:00Z")))
+    val filter = ReadFilter(Seq(1L), startValid = Some(ts("2024-03-01T00:00:00Z")),
+      endValid = Some(ts("2024-03-02T00:00:00Z")))
+    db.read(filter).collect() // warm
+    CrashFs.reset()
+    assert(db.read(filter).collect().length == 3)
+    // the manifest listing and read, the file index over the one pruned
+    // file, and the parquet footer and row read — the same calls as
+    // before the tables shared one commit protocol
+    assert(CrashFs.counts ==
+      Map("exists" -> 2L, "getFileStatus" -> 8L, "listStatus" -> 2L, "open" -> 2L))
+    FsUtil.deleteRecursively(local.toFile)
+  }
+}

@@ -56,6 +56,8 @@ class TimeDbSpec extends SparkSpec {
       }
       val expectedRows = db.store.scanValues().count()
       val expectedSum = db.store.scanValues().agg(sum("value")).head().getDouble(0)
+      db.store.createZOrderedMirror("tdspec_race", files = 2)
+      val runsBefore = db.store.scanRunSeries().count()
       val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       @volatile var stop = false
       val reader = new Thread(() => {
@@ -64,6 +66,12 @@ class TimeDbSpec extends SparkSpec {
             val agg = db.store.scanValues().agg(count(lit(1)), sum("value")).head()
             if (agg.getLong(0) != expectedRows || agg.getDouble(1) != expectedSum)
               errors.add(s"partial snapshot: rows=${agg.getLong(0)} sum=${agg.getDouble(1)}")
+            val z = db.store.scanZOrdered("tdspec_race").agg(count(lit(1)), sum("value")).head()
+            if (z.getLong(0) != expectedRows || z.getDouble(1) != expectedSum)
+              errors.add(s"partial z-mirror: rows=${z.getLong(0)} sum=${z.getDouble(1)}")
+            val runs = db.store.scanRunSeries().count()
+            if (runs != runsBefore && runs != runsBefore + 2)
+              errors.add(s"partial run_series: $runs runs")
           } catch { case t: Throwable => errors.add(t.toString) }
         }
       })
@@ -71,8 +79,12 @@ class TimeDbSpec extends SparkSpec {
       try {
         val compacted = db.store.compactPartitions(maxFiles = 2)
         assert(compacted.nonEmpty)
-        Thread.sleep(300) // let the reader also observe the post-commit snapshot
+        db.store.createZOrderedMirror("tdspec_race", files = 2)
+        db.store.appendRunSeries(Seq((7L, 99L, ts("2024-03-02T00:00:00Z")),
+          (8L, 99L, ts("2024-03-02T00:00:00Z"))).toDF("series_id", "run_id", "first_seen"))
+        Thread.sleep(300) // let the reader also observe the post-commit snapshots
       } finally { stop = true; reader.join() }
+      assert(db.store.scanRunSeries().count() == runsBefore + 2)
       assert(errors.isEmpty, s"racing reader observed: ${errors.toArray.mkString("; ")}")
 
       // a stray (crashed-write) file in the month dir is invisible to readers
@@ -171,24 +183,23 @@ class TimeDbSpec extends SparkSpec {
         ts("2024-03-04T00:00:00Z"), ts("2024-03-04T18:00:00Z"))
       assert(nativeTime == nativeFiles,
         s"premise: native layout can't prune the time axis ($nativeTime/$nativeFiles)")
-      // rebuild commits a new version and keeps exactly one prior dir
-      store.createZOrderedMirror("tdspec_z", files = 32)
-      val root = new java.io.File(
-        s"${db.store.valuesPath.stripSuffix("/series_values")}/zordered/tdspec_z")
-      val dirs = root.listFiles().filter(_.isDirectory).map(_.getName).sorted
-      assert(dirs.length == 2, s"keep-one grace: ${dirs.toSeq}")
-      assert(store.scanZOrdered("tdspec_z").count() == plain.count())
-      // crash-path resolution: with the pointer gone (crashed mid
-      // pointer-commit), the reader falls back to the highest COMPLETE
-      // version; a half-written orphan above it (no _SUCCESS) is never
-      // resolved
+      // a rebuild keeps the previous version readable: a scan planned
+      // before it still reads its files afterwards
       val n = plain.count()
-      val current = new java.io.File(root, "_current")
-      assert(current.delete(), "test setup: pointer must exist")
-      val orphan = new java.io.File(root, "v99")
-      assert(orphan.mkdir())
-      assert(store.scanZOrdered("tdspec_z").count() == n,
-        "pointer-less read must resolve the highest _SUCCESS-marked dir")
+      val planned = store.scanZOrdered("tdspec_z")
+      db.write(revision(1), retention = Some("forever"))
+      store.createZOrderedMirror("tdspec_z", files = 32)
+      assert(planned.count() == n)
+      assert(store.scanZOrdered("tdspec_z").count() == n + vts.length)
+      // a rebuild that crashed after moving files in but before its
+      // commit exposes none of them
+      val root = java.nio.file.Paths.get(
+        s"${db.store.valuesPath.stripSuffix("/series_values")}/zordered/tdspec_z")
+      val some = planned.inputFiles.head.stripPrefix("file:")
+      val crashed = root.resolve("store_v99")
+      java.nio.file.Files.createDirectories(crashed)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(some), crashed.resolve("part-crashed.parquet"))
+      assert(store.scanZOrdered("tdspec_z").count() == n + vts.length)
       // no mirror at all → loud error naming the remedy
       val e = intercept[IllegalArgumentException] {
         store.scanZOrdered("tdspec_z_nope")
@@ -229,6 +240,40 @@ class TimeDbSpec extends SparkSpec {
       assert(after.exceptAll(plainAfter).isEmpty &&
         plainAfter.exceptAll(after).isEmpty)
     }
+  }
+
+  test("delete drops the mirrors: a store re-created at the same path has none") {
+    withDb { db =>
+      db.write(revision(10))
+      val store = db.store
+      store.createZOrderedMirror("tdspec_gone", files = 2)
+      store.createBucketedMirror("tdspec_gone_bk", nBuckets = 2)
+      assert(spark.catalog.tableExists("tdspec_gone_bk"))
+      db.delete()
+      db.create()
+      val e = intercept[IllegalArgumentException](store.scanZOrdered("tdspec_gone"))
+      assert(e.getMessage.contains("run createZOrderedMirror first"))
+      assert(!spark.catalog.listTables().collect().exists(_.name.startsWith("tdspec_gone_bk")))
+      val base = store.valuesPath.stripSuffix("/series_values")
+      assert(new java.io.File(base).list().toSet == Set("series_values", "run_series"))
+    }
+  }
+
+  test("create() commits empty tables without a Spark job and adopts a pre-manifest run_series") {
+    val base = java.nio.file.Files.createTempDirectory("timedb_adopt").toString
+    Seq((1L, 3L, ts("2024-03-01T00:00:00Z")), (1L, 4L, ts("2024-03-02T00:00:00Z")))
+      .toDF("series_id", "run_id", "first_seen").write.parquet(s"$base/run_series")
+    val db = new TimeDb(spark, base)
+    try {
+      assert(jobsDuring(db.create()) == 0)
+      db.create()
+      assert(db.readRunSeries(1L) == Seq(4L, 3L))
+      db.write(revision(1), knowledgeTime = Some(ts("2024-03-03T00:00:00Z")))
+      assert(db.readRunSeries(1L).length == 3)
+      // series_values holds the create's empty manifest and the write's:
+      // the second create() committed nothing
+      assert(db.store.versions().length == 2)
+    } finally db.delete()
   }
 
   test("two revisions: latest returns the later knowledge_time values") {
@@ -626,8 +671,8 @@ class TimeDbSpec extends SparkSpec {
       db.write(Seq((1L, ts("2024-03-01T00:00:00Z"), 1.0)).toDF("series_id", "valid_time", "value"))
     }
     assert(err != null)
-    // run_series lane was still attempted and landed its row
-    assert(spark.read.parquet(s"$base/run_series").count() == 1)
+    // run_series lane was still attempted and committed its row
+    assert(db.store.scanRunSeries().count() == 1)
     db.delete()
   }
 
