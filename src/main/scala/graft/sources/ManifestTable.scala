@@ -136,8 +136,12 @@ final class ManifestTable(spark: SparkSession, rootPath: String) {
   }
 
   /** [[stage]] `write`, then commit the current files plus the staged
-    * ones (no commit when nothing was staged). */
+    * ones (no commit when nothing was staged). A table with no manifest
+    * is [[create]]d first, so a directory written before it had
+    * manifests keeps its files, and no staged file lands under a root
+    * that a later create would adopt. */
   def append(write: String => Unit): Unit = {
+    create()
     val added = stage()(write)
     if (added.nonEmpty) commit(currentFiles() ++ added)
   }

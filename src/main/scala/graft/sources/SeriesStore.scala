@@ -1,7 +1,9 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 
@@ -68,7 +70,7 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     * manifest of each table, so reads before any data arrives see the
     * right schemas. No Spark job runs. A `run_series` directory written
     * before it had manifests keeps its files: they become its first
-    * manifest. */
+    * manifest, here or at the first append. */
   def create(): Unit = {
     values.create()
     runSeries.create()
@@ -194,21 +196,51 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     scanFileList(values.filesAt(toVersion).filterNot(from))
   }
 
-  private def scanFileList(files: Seq[String]): DataFrame =
-    scanFiles(values, files, Schema.seriesValues.add("valid_month", StringType))
+  private def scanFileList(files: Seq[String]): DataFrame = {
+    val schema = Schema.seriesValues.add("valid_month", StringType)
+    if (files.isEmpty) emptyScan(schema)
+    else {
+      val root = values.root
+      spark.read.option("basePath", root.toString).schema(schema)
+        .parquet(files.map(f => s"$root/$f"): _*)
+    }
+  }
 
-  /** One scan over `files` of `table`, partition columns recovered from
-    * their paths under its root. `schema` types an empty list, and the
-    * reader too unless `inferSchema` (one footer-read job). */
-  private def scanFiles(table: ManifestTable, files: Seq[String], schema: StructType,
-      inferSchema: Boolean = false): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  /** One scan over `files` of a table that is read whole (`run_series`,
+    * a z-mirror), typed by `schema`. Spark's file index gets the files'
+    * statuses from ONE listing of each directory that holds them, so it
+    * lists nothing itself: handed the files as root paths, it would list
+    * them in a Spark job once there are more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32).
+    * `series_values` reads keep [[scanFileList]]: they prune to a few
+    * files, and their filesystem calls stay those of a path-list read. */
+  private def scanTable(table: ManifestTable, files: Seq[String], schema: StructType): DataFrame =
+    if (files.isEmpty) emptyScan(schema)
     else {
       val root = table.root
-      val reader = spark.read.option("basePath", root.toString)
-      (if (inferSchema) reader else reader.schema(schema)).parquet(files.map(f => s"$root/$f"): _*)
+      val statuses = files.groupBy(f => new Path(root, f).getParent).toSeq.flatMap { case (dir, rels) =>
+        val names = rels.map(f => new Path(f).getName).toSet
+        val found = fs.listStatus(dir).filter(st => names.contains(st.getPath.getName))
+        if (found.length < names.size)
+          throw new java.io.FileNotFoundException(
+            s"$dir lacks manifest-listed files: ${(names -- found.map(_.getPath.getName)).mkString(", ")}")
+        found.toSeq
+      }
+      val byPath = statuses.map(st => st.getPath -> Array(st)).toMap
+      val listed = new FileStatusCache {
+        override def getLeafFiles(path: Path): Option[Array[FileStatus]] = byPath.get(path)
+        override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+        override def invalidateAll(): Unit = ()
+      }
+      // nullable, as a path read types every file-source column
+      val fileSchema = StructType(schema.map(_.copy(nullable = true)))
+      val index = new InMemoryFileIndex(spark, statuses.map(_.getPath), Map.empty, Some(fileSchema), listed)
+      spark.baseRelationToDataFrame(
+        HadoopFsRelation(index, new StructType(), fileSchema, None, new ParquetFileFormat, Map.empty)(spark))
     }
+
+  private def emptyScan(schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** Bucketed mirror of series_values for SHUFFLE-FREE series-keyed
     * reads. Spark's bucketed tables expose `HashPartitioning(series_id,
@@ -357,7 +389,7 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
   /** The z-ordered mirror as a DataFrame: the files its current
     * manifest lists. */
   def scanZOrdered(name: String): DataFrame =
-    scanFiles(zMirror(name), zMirrorFiles(name), Schema.seriesValues, inferSchema = true)
+    scanTable(zMirror(name), zMirrorFiles(name), Schema.seriesValues)
 
   /** The store version the mirror reflects, fixed by its commit. */
   def zMirrorBaseVersion(name: String): Long =
@@ -392,7 +424,7 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
           "rewritten or dropped since (compaction/TTL) — the file-diff tail " +
           "would duplicate or lose their rows; rebuild the mirror")
     val baseSet = baseFiles.toSet
-    val mirror = scanFiles(zMirror(name), files, Schema.seriesValues, inferSchema = true)
+    val mirror = scanTable(zMirror(name), files, Schema.seriesValues)
     mirror.unionByName(
       scanFileList(headFiles.filterNot(baseSet))
         .select(mirror.columns.map(col): _*))
@@ -423,7 +455,7 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     * ch_create_tables.sql:58-65): latest first_seen per (series_id,
     * run_id). */
   def scanRunSeries(): DataFrame =
-    scanFiles(runSeries, runSeries.currentFiles(), Schema.runSeries)
+    scanTable(runSeries, runSeries.currentFiles(), Schema.runSeries)
       .groupBy("series_id", "run_id")
       .agg(max("first_seen").as("first_seen"))
 

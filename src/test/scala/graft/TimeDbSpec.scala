@@ -276,6 +276,37 @@ class TimeDbSpec extends SparkSpec {
     } finally db.delete()
   }
 
+  test("a write with no create() first keeps a pre-manifest run_series through vacuum") {
+    // the streaming writer opens a TimeDb and writes without create()
+    val base = java.nio.file.Files.createTempDirectory("timedb_adopt_write").toString
+    Seq((1L, 3L, ts("2024-03-01T00:00:00Z")), (1L, 4L, ts("2024-03-02T00:00:00Z")))
+      .toDF("series_id", "run_id", "first_seen").write.parquet(s"$base/run_series")
+    val db = new TimeDb(spark, base)
+    try {
+      db.store.appendRunSeries(Seq((1L, 5L, ts("2024-03-03T00:00:00Z")))
+        .toDF("series_id", "run_id", "first_seen"))
+      db.store.vacuum(minAgeMillis = 0L)
+      assert(db.readRunSeries(1L) == Seq(5L, 4L, 3L))
+    } finally db.delete()
+  }
+
+  test("table scans list no files in a Spark job: 40 run_series files, a typed z-mirror") {
+    withDb { db =>
+      (1 to 40).foreach { r =>
+        db.store.appendRunSeries(Seq((1L, r.toLong, ts("2024-03-01T00:00:00Z")))
+          .toDF("series_id", "run_id", "first_seen").coalesce(1))
+      }
+      assert(db.store.scanRunSeries().inputFiles.length == 40)
+      assert(jobsDuring { db.store.scanRunSeries(); () } == 0)
+      val jobs = jobsDuring { assert(db.readRunSeries(1L).length == 40) }
+      assert(jobs <= 2, s"readRunSeries ran $jobs jobs")
+      db.write(revision(1))
+      db.store.createZOrderedMirror("tdspec_zscan", files = 2)
+      assert(jobsDuring { db.store.scanZOrdered("tdspec_zscan"); () } == 0)
+      assert(jobsDuring { db.store.scanZOrderedWithTail("tdspec_zscan"); () } == 0)
+    }
+  }
+
   test("two revisions: latest returns the later knowledge_time values") {
     withDb { db =>
       db.write(revision(10), knowledgeTime = Some(ts("2024-02-29T18:00:00Z")))
