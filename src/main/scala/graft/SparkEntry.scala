@@ -1687,7 +1687,7 @@ object SparkEntry {
       // lists with a band predicate on BOTH clustering axes — the
       // oracle replays the defining predicate over the source frame,
       // so what's tested is that the mirror's files (written via
-      // Layout.writeZOrdered, committed by one manifest rename) hold
+      // Layout.zOrdered, committed by one manifest rename) hold
       // exactly the table. Footer stats prune ~√sel of the files on
       // either axis (LayoutSpec pins the geometry). The band sits
       // inside every scale factor's series ids (0-14 at sf0.001) and

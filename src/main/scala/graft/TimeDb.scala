@@ -6,6 +6,7 @@ import java.time.{Duration, Instant, LocalTime, ZoneOffset}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.BoundedIdSet
 import graft.operators.{ReadShapes, UnchangedScope, WritePipeline, WriteResult}
 import graft.sources.{MetaSource, Schema, SeriesStore}
 
@@ -80,32 +81,50 @@ final class TimeDb(val spark: SparkSession, basePath: String,
     *
     * A plain write is ONE shuffle-free pass that fills the stamped
     * batch's cache while observing its count, bounds and retention
-    * vocabulary, then the two lanes (a shuffle and a file write each):
-    * five Spark jobs under adaptive execution, Spark's default. The
-    * caller's upstream plan is evaluated once, and a
-    * batch that fails validation (a null guard in that pass, or the
-    * vocabulary check right after it) lands nothing in either table. */
+    * vocabulary, then the two lanes: three Spark jobs. A batch of at
+    * most [[TimeDb.OneTaskWriteMaxRows]] rows writes each lane as one
+    * task with no shuffle; a larger one keeps the distributed lanes
+    * (see [[planWrite]]). The caller's upstream plan is evaluated once,
+    * and a batch that fails validation (a null guard in that pass, or
+    * the vocabulary check right after it) lands nothing in either table. */
   def write(
       df: DataFrame,
       retention: Option[String] = None,
       knowledgeTime: Option[Timestamp] = None,
       skipUnchanged: Boolean = false,
       unchangedScope: UnchangedScope = UnchangedScope.ValidTime): WriteResult =
+    planWrite(df, retention, knowledgeTime, skipUnchanged, unchangedScope)
+
+  /** [[write]], with `oneTask` overriding the batch-size gate of the
+    * insert lanes so tests can pin both plans on one store: the one-task
+    * lanes (`coalesce(1)`, no exchange — one job each) or the
+    * distributed ones (a shuffle each). Both land the same rows. */
+  private[graft] def planWrite(
+      df: DataFrame,
+      retention: Option[String] = None,
+      knowledgeTime: Option[Timestamp] = None,
+      skipUnchanged: Boolean = false,
+      unchangedScope: UnchangedScope = UnchangedScope.ValidTime,
+      oneTask: Option[Boolean] = None): WriteResult =
     Profiling.phase(Profiling.PhaseWriteTotal) {
 
     val now = Timestamp.from(Instant.now())
     val preFilter = Profiling.phase(Profiling.PhaseWriteNormalize) {
-      WritePipeline.stamp(df, retention, knowledgeTime, now)
+      WritePipeline.withFirstSeen(WritePipeline.stamp(df, retention, knowledgeTime, now), now)
     }
     try {
       // Batch bounds double as the retention-vocabulary check
-      // (timedb/write.py:197-202, 292-301). The potentially-large distinct
-      // series_id set is NOT collected here — only the skip-unchanged
-      // path needs it (timedb/write.py:197).
-      val bounds = TimeDb.cacheObserving(preFilter,
+      // (timedb/write.py:197-202, 292-301). The skip-unchanged path also
+      // needs the batch's distinct series ids (timedb/write.py:197): the
+      // same pass observes them, capped at `maxInlineSeriesIds` so the
+      // driver never holds more (null above it).
+      val inlineIds =
+        if (skipUnchanged) Seq(BoundedIdSet(col("series_id"), maxInlineSeriesIds).as("series_ids"))
+        else Nil
+      val bounds = TimeDb.cacheObserving(preFilter, Seq(
         count(lit(1)).as("rows"), min("valid_time").as("min_vt"), max("valid_time").as("max_vt"),
         min("knowledge_time").as("min_kt"), max("knowledge_time").as("max_kt"),
-        collect_set("retention").as("retentions"), approx_count_distinct("series_id").as("series"))
+        collect_set("retention").as("retentions")) ++ inlineIds: _*)
       val before = bounds("rows").asInstanceOf[Long]
       val rets = bounds("retentions").asInstanceOf[Seq[String]]
       if (df.columns.contains("retention"))
@@ -145,22 +164,21 @@ final class TimeDb(val spark: SparkSession, basePath: String,
           // isin pushes all the way into the parquet scan; but a
           // crawl-scale batch touching tens of millions of series would
           // OOM the driver on the collect, so above `maxInlineSeriesIds`
-          // the read-back restriction becomes a semi-join on series_id —
-          // shuffle-on-key, zero driver state; the retention + month
-          // partition prunes above still bound the scanned slab.
-          val slab =
-            if (bounds("series").asInstanceOf[Long] <= maxInlineSeriesIds) {
-              val sids = preFilter.agg(collect_set("series_id")).head().getSeq[Long](0)
-              slabBase.filter(col("series_id").isin(sids: _*))
-            } else
-              slabBase.join(preFilter.select("series_id").distinct(), Seq("series_id"), "left_semi")
+          // (the observed id set is then null) the read-back restriction
+          // becomes a semi-join on series_id — shuffle-on-key, zero
+          // driver state; the retention + month partition prunes above
+          // still bound the scanned slab.
+          val slab = Option(bounds("series_ids")) match {
+            case Some(sids: scala.collection.Seq[_]) => slabBase.filter(col("series_id").isin(sids.toSeq: _*))
+            case _ => slabBase.join(preFilter.select("series_id").distinct(), Seq("series_id"), "left_semi")
+          }
           // The kept rows get the same one-pass cache fill as the batch.
           val kept = WritePipeline.filterUnchanged(preFilter,
             WritePipeline.storedLatestFor(slab, unchangedScope), unchangedScope)
           (kept, TimeDb.cacheObserving(kept, count(lit(1)).as("rows"))("rows").asInstanceOf[Long])
         }
       try {
-        if (written > 0) insertLanes(stamped, WritePipeline.runSeriesOf(stamped, now))
+        if (written > 0) insertLanes(stamped, oneTask.getOrElse(written <= TimeDb.OneTaskWriteMaxRows))
         WriteResult(written, before - written)
       } finally if (stamped ne preFilter) stamped.unpersist()
     } finally preFilter.unpersist()
@@ -169,17 +187,23 @@ final class TimeDb(val spark: SparkSession, basePath: String,
   /** Concurrent insert lanes (timedb/write.py:115-158): the values and
     * run_series writes overlap as two Spark jobs on the shared scheduler
     * (Spark jobs from one session run concurrently; the lanes write
-    * disjoint paths). Both lanes are always awaited even when one fails —
-    * leaking an in-flight write would leave its outcome unknown — and
-    * the first error is re-raised, values lane first. */
-  private def insertLanes(stamped: DataFrame, rs: DataFrame): Unit = {
+    * disjoint paths). Both read the cached batch: the values lane
+    * projects `first_seen` away, the run_series lane keeps the distinct
+    * (series_id, run_id, first_seen) rows. With `oneTask` each lane is
+    * one task: the values lane through [[SeriesStore.appendValues]]'s
+    * one-task plan, the run_series `distinct` over `coalesce(1)`, which
+    * one partition already satisfies, so no exchange is planned. Both
+    * lanes are always awaited even when one fails — leaking an in-flight
+    * write would leave its outcome unknown — and the first error is
+    * re-raised, values lane first. */
+  private def insertLanes(stamped: DataFrame, oneTask: Boolean): Unit = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val valuesLane = Future(
-      Profiling.phase(Profiling.PhaseWriteSeriesValuesInsert)(store.appendValues(stamped)))
-    val rsLane = Future(
-      Profiling.phase(Profiling.PhaseWriteRunSeriesInsert)(store.appendRunSeries(rs)))
+    val valuesLane = Future(Profiling.phase(Profiling.PhaseWriteSeriesValuesInsert)(
+      store.appendValues(stamped.drop("first_seen"), oneTask)))
+    val rsLane = Future(Profiling.phase(Profiling.PhaseWriteRunSeriesInsert)(
+      store.appendRunSeries(WritePipeline.runSeriesOf(if (oneTask) stamped.coalesce(1) else stamped))))
     val valuesErr = Await.ready(valuesLane, Duration.Inf).value.get.failed.toOption
     val rsErr = Await.ready(rsLane, Duration.Inf).value.get.failed.toOption
     valuesErr.orElse(rsErr).foreach(throw _)
@@ -345,6 +369,16 @@ object TimeDb {
     * 2.34 MB 628 vs 627, 3.87 MB 940 vs 834, 40 MB 10.7 vs 6.5 s. One
     * task wins up to 1.45 MB and ties at 2.34 MB; rounded down to 1 MiB. */
   private val OneTaskReadMaxBytes: Long = 1L << 20
+
+  /** Largest batch, in rows, whose insert lanes [[TimeDb.planWrite]]
+    * writes as one task each. Measured with the values lane alone on a
+    * cached stamped batch (50 series, two tiers, dictionary-sized
+    * values), `local[4]`, 7 interleaved rounds, p50 one-task vs
+    * distributed: 2.4k rows 227 vs 335 ms, 24k 302 vs 333, 48k 429 vs
+    * 458, 72k 466 vs 476, 120k 727 vs 629, 283k 1393 vs 961; with the
+    * batch spread over 2 or 12 months the 24k–48k ties hold. One task
+    * wins up to 48k rows and ties at 72k; rounded down to 50k. */
+  private val OneTaskWriteMaxRows: Long = 50000L
 
   /** Cache `frame` and fill the cache with ONE shuffle-free action (a
     * `noop`-format write) that also computes the aggregate `metrics`

@@ -68,11 +68,18 @@ object Layout {
     * reader gets for free. */
   def writeZOrdered(df: DataFrame, path: String, xCol: String, yCol: String,
       files: Int, bits: Int = 12): Unit =
+    zOrdered(df, xCol, yCol, files, bits).write.mode("overwrite").parquet(path)
+
+  /** The frame [[writeZOrdered]] writes: `df`'s rows in `files`
+    * z-address-range partitions, each sorted by the address, with the
+    * address columns dropped again — for writers that bring their own
+    * sink (a manifest table stages it). */
+  def zOrdered(df: DataFrame, xCol: String, yCol: String,
+      files: Int, bits: Int = 12): DataFrame =
     zAddress(df, xCol, yCol, bits)
       .repartitionByRange(files, col("zaddr"))
       .sortWithinPartitions("zaddr")
       .drop("zx", "zy", "zaddr")
-      .write.mode("overwrite").parquet(path)
 
   /** Default re-chunk policy for [[rechunkMirror]]: fact-sized tables
     * (≥ 50k rows) split into ~8k-row chunks capped at 32; smaller

@@ -134,11 +134,20 @@ object WritePipeline {
         s"Valid values: ${Schema.retentionTiers.toSeq.sorted}")
   }
 
-  /** W3 — run_series derivation (timedb/write.py:357): distinct
-    * (series_id, run_id) pairs of the batch, stamped with first_seen. */
-  def runSeriesOf(stamped: DataFrame, firstSeen: java.sql.Timestamp): DataFrame =
-    stamped.select("series_id", "run_id").distinct()
-      .withColumn("first_seen", lit(firstSeen))
+  /** `stamped` with the write's `first_seen` as one more column, for
+    * [[runSeriesOf]]. The writer adds it before it caches the batch, in
+    * the projection that already carries the write's other per-write
+    * literals: stamped after the `distinct` instead, a new timestamp
+    * literal would make the run_series lane compile new code on every
+    * write. */
+  def withFirstSeen(stamped: DataFrame, firstSeen: java.sql.Timestamp): DataFrame =
+    stamped.withColumn("first_seen", lit(firstSeen))
+
+  /** W3 — run_series derivation (timedb/write.py:357): the distinct
+    * (series_id, run_id, first_seen) rows of a batch that carries its
+    * `first_seen` ([[withFirstSeen]]). */
+  def runSeriesOf(stamped: DataFrame): DataFrame =
+    stamped.select("series_id", "run_id", "first_seen").distinct()
 
   /** The NaN-aware "state already stored" predicate
     * (timedb/write.py:227-233). Spark SQL, like ClickHouse and DuckDB

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, GraftSessionBridge, Row, SaveMode, SparkSession}
 
 /** A set of immutable data files under `root`, on any Hadoop-compatible
   * filesystem, whose visible contents are the file list of its newest
@@ -12,9 +12,12 @@ import org.apache.spark.sql.SparkSession
   * `series_values` and `run_series` tables and each z-ordered mirror
   * are ManifestTables. Every mutation follows write-ahead ordering:
   *
-  *   1. new data files are written under `_staging/<uuid>/` and MOVED
-  *      (per-file rename) to their place under the root ([[stage]]) —
-  *      invisible to readers, who only read manifest-listed files;
+  *   1. new data files are written ONCE, each straight into the flat
+  *      `_staging/<uuid>/` directory, by [[ManifestCommitProtocol]]
+  *      (no `_temporary` attempt tree, no merge renames, no `_SUCCESS`
+  *      marker), and MOVED (per-file rename) to the final paths the
+  *      protocol reported ([[stage]]) — invisible to readers, who only
+  *      read manifest-listed files;
   *   2. the next manifest version is written to a dot-temp file and
   *      RENAMED into place ([[commit]]) — the single atomic commit point;
   *   3. superseded files are NOT deleted at commit: in-flight readers
@@ -28,6 +31,14 @@ import org.apache.spark.sql.SparkSession
   * rename-commit fails on a version collision on filesystems with atomic
   * no-overwrite rename (HDFS), which is the cheap guard — multi-writer
   * deployments need a real lock/CAS service.
+  *
+  * Spark picks a write's commit protocol from its session's conf, so
+  * [[stage]] runs the write in a writer session of the caller's, made
+  * once by cloning it, which names [[ManifestCommitProtocol]]: the
+  * frame's analyzed plan is rebound there (its cached fragments still
+  * come from the shared cache manager), and the rest of the caller's
+  * SQL conf is copied over before each write. The caller's own session
+  * conf is never written: other jobs on it keep their protocol.
   */
 final class ManifestTable(spark: SparkSession, rootPath: String) {
 
@@ -109,40 +120,47 @@ final class ManifestTable(spark: SparkSession, rootPath: String) {
     if (manifestVersions().isEmpty)
       commit(if (fs.exists(root)) dataFiles(root).map(relativeTo(root)) else Seq.empty)
 
-  /** Run `write` on a fresh staging directory, move every data file it
-    * wrote under the root — into directory `into` when given, else at
-    * its path relative to the staging directory — and return the moved
-    * files' relative paths. They stay invisible until a [[commit]] lists
-    * them. Each moved file's mtime is bumped to move time: rename keeps
-    * the WRITE-time mtime, and [[vacuum]]'s age guard must measure from
-    * the commit window, not from when a long write job finished the file. */
-  def stage(into: Option[String] = None)(write: String => Unit): Seq[String] = {
+  /** Write `frame` into a fresh staging directory — `write` configures
+    * the writer (partitioning, options) and names the format with the
+    * staging path — and move each file the commit reported under the
+    * root: into directory `into` when given, else at its reported path.
+    * Returns the moved files' relative paths; they stay invisible until
+    * a [[commit]] lists them. Each moved file's mtime is bumped to move
+    * time: rename keeps the WRITE-time mtime, and [[vacuum]]'s age guard
+    * must measure from the commit window, not from when a long write job
+    * finished the file. */
+  def stage(frame: DataFrame, into: Option[String] = None)(
+      write: (DataFrameWriter[Row], String) => Unit): Seq[String] = {
     val staging = fs.makeQualified(new Path(stagingRoot, java.util.UUID.randomUUID().toString))
     try {
-      write(staging.toString)
-      dataFiles(staging).map { f =>
-        val rel = into.fold(relativeTo(staging)(f))(d => s"$d/${f.getPath.getName}")
+      write(ManifestTable.inWriterSession(frame).write.mode(SaveMode.Append), staging.toString)
+      val moves = ManifestCommitProtocol.committedFiles(staging).map { case (name, path) =>
+        val rel = into.fold(path)(d => s"$d/${new Path(path).getName}")
+        new Path(staging, name) -> rel
+      }
+      moves.map(m => new Path(root, m._2).getParent).distinct.foreach(fs.mkdirs)
+      moves.map { case (src, rel) =>
         val dst = new Path(root, rel)
-        fs.mkdirs(dst.getParent)
-        if (!fs.rename(f.getPath, dst))
+        if (!fs.rename(src, dst))
           throw new IllegalStateException(s"failed to move staged file to $dst")
         fs.setTimes(dst, System.currentTimeMillis(), -1)
         rel
       }
     } finally {
+      ManifestCommitProtocol.forget(staging)
       fs.delete(staging, true)
       ()
     }
   }
 
-  /** [[stage]] `write`, then commit the current files plus the staged
+  /** [[stage]] `frame`, then commit the current files plus the staged
     * ones (no commit when nothing was staged). A table with no manifest
     * is [[create]]d first, so a directory written before it had
     * manifests keeps its files, and no staged file lands under a root
     * that a later create would adopt. */
-  def append(write: String => Unit): Unit = {
+  def append(frame: DataFrame)(write: (DataFrameWriter[Row], String) => Unit): Unit = {
     create()
-    val added = stage()(write)
+    val added = stage(frame)(write)
     if (added.nonEmpty) commit(currentFiles() ++ added)
   }
 
@@ -226,5 +244,28 @@ final class ManifestTable(spark: SparkSession, rootPath: String) {
       }
     sweep(root, "")
     deleted.result()
+  }
+}
+
+object ManifestTable {
+
+  private val CommitProtocolKey = "spark.sql.sources.commitProtocolClass"
+
+  // caller session → its writer session, made once
+  private val writers = new java.util.WeakHashMap[SparkSession, SparkSession]()
+
+  /** `frame` rebound into its session's writer session, whose conf is
+    * first brought in line with the caller's (see the class doc). */
+  private def inWriterSession(frame: DataFrame): DataFrame = {
+    val spark = frame.sparkSession
+    val writer = writers.synchronized {
+      writers.computeIfAbsent(spark, { s =>
+        val w = GraftSessionBridge.cloneSession(s)
+        w.conf.set(CommitProtocolKey, classOf[ManifestCommitProtocol].getName)
+        w
+      })
+    }
+    GraftSessionBridge.syncConf(spark, writer, keep = CommitProtocolKey)
+    GraftSessionBridge.rebind(frame, writer)
   }
 }

@@ -78,26 +78,41 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
 
   /** Drop every table the store owns (timedb/client.py:119-120): both
     * tables, the z-ordered mirrors, and the bucketed mirrors with their
-    * `<name>` / `<name>__v<N>` catalog entries. */
+    * `<name>` / `<name>__v<N>` catalog entries. The base directory goes
+    * too when that leaves it empty; anything else in it stays, and so
+    * does the directory. */
   def delete(): Unit = {
     subdirs(new Path(basePath, "bucketed")).foreach { name =>
       (name +: versionedTables(name).map(_._2)).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
     Seq("series_values", "run_series", "zordered", "bucketed")
       .foreach(d => fs.delete(new Path(basePath, d), true))
+    val base = new Path(basePath)
+    // not recursive: a file that lands in between fails the delete, and
+    // the directory stays with it
+    if (fs.exists(base) && fs.listStatus(base).isEmpty)
+      try { fs.delete(base, false); () } catch { case _: java.io.IOException => () }
+    ()
   }
 
   /** Append a stamped batch to series_values: stage → move → one
     * manifest commit (see class doc).
     *
-    * `repartition(retention, valid_month)` routes each physical partition's
-    * rows to one task (no small-file explosion when a batch spans many
-    * months), and `sortWithinPartitions` orders each file by
-    * (knowledge_time, series_id, valid_time, change_time) for row-group
-    * skipping. The sort leads with the two partition columns: the planned
-    * write requires that ordering, and replaces a sort that does not
-    * satisfy it by a `Sort[retention, valid_month]` alone, which leaves
-    * each file in arrival order.
+    * Each file is sorted by (knowledge_time, series_id, valid_time,
+    * change_time) for row-group skipping. The sort leads with the two
+    * partition columns: the planned write requires that ordering, and
+    * replaces a sort that does not satisfy it by a
+    * `Sort[retention, valid_month]` alone, which leaves each file in
+    * arrival order. Both plans below keep that lead, so the planned
+    * write adds no sort of its own in either.
+    *
+    * A small batch (`oneTask`) is written by ONE task: `coalesce(1)` →
+    * the sort → one file per (retention, valid_month) partition, with no
+    * shuffle. A larger batch is `repartition(retention, valid_month)`-ed
+    * first, which routes each physical partition's rows to one task (no
+    * small-file explosion when a batch spans many months) and writes the
+    * months in parallel. Each partition's file holds the same rows in the
+    * same order either way; the caller picks the plan by batch size.
     *
     * knowledge_time leads because a batch is usually one run (one
     * knowledge_time), where the order is the sort key's (series_id,
@@ -105,28 +120,21 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     * its knowledge_time and run_id columns then stay in long runs. For a
     * 118-run batch of 50 series × 48 h the full sort key instead stores
     * 34 % more bytes. Compaction rewrites to the full sort key.
-    *
-    * Parallel-split/concurrent-lane machinery from
-    * the reference (timedb/write.py:81-158) is N/A: Spark writes are
-    * already task-parallel.
     */
-  def appendValues(stamped: DataFrame): Unit =
-    values.append { dir =>
-      stamped
-        .withColumn("valid_month", Schema.monthOf(col("valid_time")))
-        .repartition(col("retention"), col("valid_month"))
-        .sortWithinPartitions((Schema.partitionColumns ++ AppendOrder).map(col): _*)
-        .write
-        .mode(SaveMode.Overwrite)
-        .partitionBy(Schema.partitionColumns: _*)
-        .option("compression", "zstd")
-        .parquet(dir)
+  def appendValues(stamped: DataFrame, oneTask: Boolean = false): Unit = {
+    val withMonth = stamped.withColumn("valid_month", Schema.monthOf(col("valid_time")))
+    val placed =
+      if (oneTask) withMonth.coalesce(1)
+      else withMonth.repartition(col("retention"), col("valid_month"))
+    values.append(placed.sortWithinPartitions((Schema.partitionColumns ++ AppendOrder).map(col): _*)) {
+      (w, dir) => w.partitionBy(Schema.partitionColumns: _*).option("compression", "zstd").parquet(dir)
     }
+  }
 
   /** Append run_series rows: stage → move → one manifest commit, like
     * [[appendValues]]. */
   def appendRunSeries(rs: DataFrame): Unit =
-    runSeries.append(dir => rs.write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(dir))
+    runSeries.append(rs)((w, dir) => w.option("compression", "zstd").parquet(dir))
 
   /** Scan series_values — the CURRENT snapshot's files, with `retention`
     * and `valid_month` recovered from the partition paths (`basePath`
@@ -332,7 +340,7 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
   }
 
   /** Z-ordered mirror of series_values, clustered on `(series_id,
-    * valid_time)` via [[graft.operators.Layout.writeZOrdered]] — the
+    * valid_time)` via [[graft.operators.Layout.zOrdered]] — the
     * lakehouse layout (Delta OPTIMIZE ZORDER / Iceberg sort order)
     * that makes parquet footer min/max stats selective on BOTH the
     * series and the time axis at once: a band predicate on either
@@ -361,10 +369,9 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     val baseVersion = asOfVersion.getOrElse(versions().last)
     val baseScan = scanValuesAsOf(baseVersion).drop("valid_month")
     val mirror = zMirror(name)
-    mirror.commit(mirror.stage(into = Some(s"store_v$baseVersion")) { dir =>
-      graft.operators.Layout.writeZOrdered(baseScan, dir,
-        xCol = "series_id", yCol = "valid_time", files = files, bits = bits)
-    })
+    val clustered = graft.operators.Layout.zOrdered(baseScan,
+      xCol = "series_id", yCol = "valid_time", files = files, bits = bits)
+    mirror.commit(mirror.stage(clustered, into = Some(s"store_v$baseVersion"))((w, dir) => w.parquet(dir)))
     mirror.vacuum(keepManifests = 2, minAgeMillis = 0L)
     ()
   }
@@ -483,11 +490,11 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
       val totalBytes = abs.map(p => fs.getFileStatus(p).getLen).sum
       val nOut = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
       // the staged layout is flat; its files belong to this partition dir
-      val added = values.stage(into = Some(dir)) { staging =>
-        spark.read.schema(dataFileSchema).parquet(abs.map(_.toString): _*)
-          .repartitionByRange(nOut, SortKey.map(col): _*)
-          .sortWithinPartitions(SortKey.map(col): _*)
-          .write.option("compression", "zstd").parquet(staging)
+      val rewritten = spark.read.schema(dataFileSchema).parquet(abs.map(_.toString): _*)
+        .repartitionByRange(nOut, SortKey.map(col): _*)
+        .sortWithinPartitions(SortKey.map(col): _*)
+      val added = values.stage(rewritten, into = Some(dir)) { (w, staging) =>
+        w.option("compression", "zstd").parquet(staging)
       }
       live = live.filterNot(rels.toSet) ++ added
       values.commit(live)

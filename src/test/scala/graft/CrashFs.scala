@@ -11,7 +11,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Test-only local filesystem under the `crashfs` scheme (a
   * `RawLocalFileSystem`, so no checksum side files): `crashfs:///tmp/x`
-  * is the local `/tmp/x`. It counts its calls by name and, once
+  * is the local `/tmp/x`. It counts its calls by name (`mkdirs` too,
+  * including the ones a create makes for its parents) and, once
   * [[CrashFs.arm]]ed at k, fails the k-th create, rename or delete
   * with an `IOException`, and every one after it, until
   * [[CrashFs.disarm]] — a writer that crashed at that step. */
@@ -32,6 +33,15 @@ class CrashFs extends RawLocalFileSystem {
   override def delete(f: Path, recursive: Boolean): Boolean = {
     CrashFs.mutation("delete", f)
     super.delete(f, recursive)
+  }
+  // counted, never failed: a directory is not a crash point
+  override def mkdirs(f: Path): Boolean = {
+    CrashFs.count("mkdirs")
+    super.mkdirs(f)
+  }
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = {
+    CrashFs.count("mkdirs")
+    super.mkdirs(f, permission)
   }
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     CrashFs.count("open")

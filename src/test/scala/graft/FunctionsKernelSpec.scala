@@ -418,6 +418,28 @@ class FunctionsKernelSpec extends SparkSpec {
     assert(back.mins == buf.mins && back.estimate == buf.estimate)
   }
 
+  test("BoundedIdSet: the sorted distinct ids up to the cap, null above it, in any partitioning") {
+    import graft.functions.BoundedIdSet
+    val ids = (1 to 300).map(i => Tuple1(Option((i % 40).toLong))) :+ Tuple1(Option.empty[Long])
+    def set(parts: Int, cap: Long): Seq[Long] = {
+      val v = ids.toDF("id").repartition(parts).agg(BoundedIdSet(col("id"), cap)).head().get(0)
+      if (v == null) null else v.asInstanceOf[scala.collection.Seq[Long]].toSeq
+    }
+    for (parts <- Seq(1, 7)) {
+      assert(set(parts, 40L) == (0L until 40L))
+      assert(set(parts, 1000L) == (0L until 40L))
+      assert(set(parts, 39L) == null)
+      assert(set(parts, 0L) == null)
+    }
+    // serde roundtrip, below and above the cap
+    val buf = new BoundedIdSet.Ids(3)
+    Seq(5L, 1L, 5L).foreach(buf.add)
+    val back = BoundedIdSet.Ids.fromBytes(buf.toBytes, 3)
+    assert(back.ids == buf.ids && !back.overflowed)
+    Seq(2L, 3L).foreach(buf.add)
+    assert(buf.overflowed && BoundedIdSet.Ids.fromBytes(buf.toBytes, 3).overflowed)
+  }
+
   test("KMinSet algebra: union/intersection/Jaccard estimates near truth; exact below k") {
     import graft.functions.{KMinSet, KMinValues, Portable}
     // planted overlap: A = u1..u3000, B = u2001..u5000 → |A∩B| = 1000,

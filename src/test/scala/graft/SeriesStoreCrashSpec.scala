@@ -182,6 +182,22 @@ class SeriesStoreCrashSpec extends SparkSpec {
     info(s"$n crash points")
   }
 
+  test("a TimeDb.write makes a pinned set of filesystem calls") {
+    val local = Files.createTempDirectory("crash_write_")
+    val db = new TimeDb(spark, CrashFs.uri(local.toString))
+    db.create()
+    db.write(rows("2024-03-01T00:00:00Z", 3), retention = Some("short"), knowledgeTime = Some(kt0))
+    CrashFs.reset()
+    db.write(rows("2024-03-01T03:00:00Z", 3), retention = Some("short"),
+      knowledgeTime = Some(ts("2024-03-01T01:00:00Z")))
+    // per lane: one data file created in the flat staging dir and
+    // renamed into place, and one manifest created and renamed; no
+    // attempt tree, merge rename or _SUCCESS marker
+    assert(CrashFs.counts == Map("create" -> 4L, "delete" -> 2L, "exists" -> 10L,
+      "getFileStatus" -> 16L, "listStatus" -> 6L, "mkdirs" -> 8L, "open" -> 2L, "rename" -> 4L))
+    FsUtil.deleteRecursively(local.toFile)
+  }
+
   test("a TimeDb.read makes a pinned set of filesystem calls") {
     val local = Files.createTempDirectory("crash_read_")
     val db = new TimeDb(spark, CrashFs.uri(local.toString))

@@ -464,20 +464,89 @@ class TimeDbSpec extends SparkSpec {
     withDb { db =>
       // Warm the store so both writes plan against existing files.
       db.write(revision(1), knowledgeTime = Some(ts("2024-03-01T00:00:00Z")))
-      // One observed cache-filling pass, then a shuffle and a file write
-      // per insert lane.
+      // One observed cache-filling pass, then one task per insert lane.
       val plain = jobsDuring {
         db.write(revision(2), knowledgeTime = Some(ts("2024-03-01T01:00:00Z"))); ()
       }
-      assert(plain <= 5, s"plain write ran $plain jobs")
+      assert(plain <= 3, s"plain write ran $plain jobs")
+      // The same pass observes the batch's series ids; the read-back and
+      // the kept rows' cache fill come on top.
       val skip = jobsDuring {
         val r = db.write(revision(2).withColumn("value",
           when(col("valid_time") === vts.head, -1.0).otherwise(col("value"))),
           knowledgeTime = Some(ts("2024-03-01T02:00:00Z")), skipUnchanged = true)
         assert(r == WriteResult(1, 5)); ()
       }
-      assert(skip <= 14, s"skip-unchanged write ran $skip jobs")
+      assert(skip <= 7, s"skip-unchanged write ran $skip jobs")
     }
+  }
+
+  test("one-task and distributed insert lanes: same rows in both tables; only the distributed lanes shuffle") {
+    val batch = (for (sid <- 1L to 3L; h <- 0 until 40 * 24 by 7)
+      yield (sid, java.sql.Timestamp.from(Instant.parse("2024-03-20T00:00:00Z").plusSeconds(3600L * h)),
+        if (sid == 2L) "short" else "medium", sid * 1000.0 + h))
+      .toDF("series_id", "valid_time", "retention", "value")
+    val n = batch.count()
+    def landed(oneTask: Boolean): (Int, Seq[String], Seq[(Long, Long)], Int) = {
+      var out: (Int, Seq[String], Seq[(Long, Long)], Int) = null
+      withDb { db =>
+        db.write(revision(1), knowledgeTime = Some(ts("2024-03-01T00:00:00Z")))
+        val jobs = jobsDuring {
+          assert(db.planWrite(batch, knowledgeTime = Some(ts("2024-03-02T00:00:00Z")),
+            oneTask = Some(oneTask)) == WriteResult(n, 0)); ()
+        }
+        val values = db.store.scanValues().drop("change_time", "run_id")
+          .collect().map(_.mkString(",")).sorted.toSeq
+        val runs = db.store.scanRunSeries().select("series_id", "run_id").as[(Long, Long)]
+          .collect().toSeq
+        // runs are fresh ids per write: compare their count per series
+        out = (jobs, values, runs.groupBy(_._1).toSeq.map { case (s, r) => s -> r.length.toLong }.sorted,
+          db.store.currentFiles().length)
+      }
+      out
+    }
+    val (oneJobs, oneValues, oneRuns, oneFiles) = landed(oneTask = true)
+    val (distJobs, distValues, distRuns, distFiles) = landed(oneTask = false)
+    assert(oneValues == distValues && oneValues.length == 3 * 138 + 6)
+    assert(oneRuns == distRuns && oneRuns == Seq(1L -> 2L, 2L -> 1L, 3L -> 1L))
+    // one file per (tier, month) either way: 2 tiers × 2 months + the warm-up file
+    assert(oneFiles == 5 && distFiles == 5)
+    assert(oneJobs <= 3, s"one-task lanes ran $oneJobs jobs")
+    assert(distJobs > oneJobs, s"distributed lanes ran $distJobs jobs, one-task $oneJobs")
+  }
+
+  test("a write leaves the caller's commit protocol setting as it was") {
+    val key = "spark.sql.sources.commitProtocolClass"
+    withDb { db =>
+      val before = spark.conf.getOption(key)
+      db.write(revision(1), knowledgeTime = Some(ts("2024-03-01T00:00:00Z")))
+      db.write(revision(2), knowledgeTime = Some(ts("2024-03-01T01:00:00Z")), skipUnchanged = true)
+      db.compact(maxFiles = 1)
+      assert(spark.conf.getOption(key) == before)
+      assert(!before.exists(_.contains("Manifest")))
+    }
+  }
+
+  test("delete removes the store's base directory, unless something else is in it") {
+    val empty = java.nio.file.Files.createTempDirectory("timedb_spec")
+    val owned = new TimeDb(spark, empty.toString)
+    owned.create()
+    owned.write(revision(1), knowledgeTime = Some(ts("2024-03-01T00:00:00Z")))
+    owned.delete()
+    assert(!java.nio.file.Files.exists(empty))
+
+    val shared = java.nio.file.Files.createTempDirectory("timedb_spec")
+    val foreign = shared.resolve("not_the_store.txt")
+    java.nio.file.Files.write(foreign, "keep".getBytes)
+    val db = new TimeDb(spark, shared.toString)
+    db.create()
+    db.write(revision(1), knowledgeTime = Some(ts("2024-03-01T00:00:00Z")))
+    db.delete()
+    try {
+      assert(java.nio.file.Files.exists(foreign))
+      assert(java.nio.file.Files.list(shared).iterator().hasNext)
+      assert(!java.nio.file.Files.exists(shared.resolve("series_values")))
+    } finally FsUtil.deleteRecursively(shared.toFile)
   }
 
   /** Three series across a month boundary in two tiers, written in

@@ -97,7 +97,7 @@ class WritePipelineSpec extends SparkSpec {
 
   test("runSeriesOf derives distinct (series_id, run_id) pairs") {
     val stamped = WritePipeline.stamp(minimal union minimal, runId = 9L)
-    val rs = WritePipeline.runSeriesOf(stamped, ts("2024-01-01T00:00:00Z"))
+    val rs = WritePipeline.runSeriesOf(WritePipeline.withFirstSeen(stamped, ts("2024-01-01T00:00:00Z")))
     assert(rs.count() == 2)
     assert(rs.columns.toSeq == Seq("series_id", "run_id", "first_seen"))
   }
