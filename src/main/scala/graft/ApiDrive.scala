@@ -292,7 +292,6 @@ object ApiDrive {
           operators.ReadShapes.latest(db.store.scanValues().drop("valid_month")).count())
       check("bucketed mirror latest plans with no exchange")(
         !viaMirror.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning"))
-      spark.sql("DROP TABLE IF EXISTS apidrive_bucketed")
     }
 
     // SQL surface: temp views over the store.

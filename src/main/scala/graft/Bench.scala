@@ -128,7 +128,7 @@ object Bench {
     // static partition filter; same oracle as x_ann_ivfpq
     "x_ann_ivfpq_stored",
     // round-18 addition: the SEARCH INDEX AT REST — related-doc BM25
-    // served from the bucketBy(doc_id) tf store, scoring aggregate
+    // served from the doc_id-bucketed tf store, scoring aggregate
     // exchange-free from the parquet layout itself
     "x_text_bm25_stored",
     // round-18 addition: SEGMENTED BM25 — immutable per-batch

@@ -310,8 +310,8 @@ object SparkEntry {
   /** Memoized BUCKETED BM25 store per (session, data dir) — the
     * store-durable text index `x_text_bm25_stored` serves from: the
     * [[graft.operators.TextAnalysis.bm25Index]] frame written
-    * `bucketBy(doc_id)` beside its stats and meta tables, read back
-    * through the catalog so the tf scan exposes HashPartitioning and
+    * bucketed by doc_id beside its stats and meta tables, read back
+    * through the store's own bucket spec so the tf scan exposes HashPartitioning and
     * the scoring aggregate runs exchange-free from the files
     * themselves. The memo keys the round trip (build once, serve every
     * retrieval from the stored form). */
@@ -321,10 +321,9 @@ object SparkEntry {
     scratchLock.synchronized {
       storedBm25Memo.getOrElseUpdate((s, dir), {
         val (tf, _) = builtBm25Index(s, dir)
-        val prefix = scratchTableName("graft_bm25", dir)
-        TextAnalysis.storeBm25IndexBucketed(
-          tf, prefix, scratchPath("graft_bm25_index", dir))
-        TextAnalysis.loadBm25IndexBucketed(s, prefix)
+        val path = scratchPath("graft_bm25_index", dir)
+        TextAnalysis.storeBm25IndexBucketed(tf, path)
+        TextAnalysis.loadBm25IndexBucketed(s, path)
       })
     }
 
@@ -845,19 +844,6 @@ object SparkEntry {
         "-" + java.lang.Integer.toHexString(dir.hashCode)).getPath
   }
 
-  /** Catalog-safe table-name twin of [[scratchPath]] for the bucketed
-    * epoch stores: the session catalog is flat, so the data-dir key
-    * that the path encodes must ride the NAME (full sanitized dir +
-    * hashCode hex — same collision argument as the path), and the pid
-    * rides it too for the same reason it rides the path (ADVICE r8:
-    * two JVMs benching one dataset must never clobber each other —
-    * moot under the default in-memory catalog, which is per-JVM, but
-    * load-bearing the moment a persistent metastore is configured). */
-  private def scratchTableName(kind: String, dir: String): String =
-    s"${kind}_${ProcessHandle.current().pid()}_" +
-      s"${dir.replaceAll("[^A-Za-z0-9_]", "_")}_" +
-      java.lang.Integer.toHexString(dir.hashCode)
-
   // pid-scoped scratch roots would otherwise accumulate one artifact
   // set per JVM run (the pre-pid fixed paths were overwritten in
   // place, bounding disk; the pid suffix unbounded it) — a shutdown
@@ -887,18 +873,17 @@ object SparkEntry {
         val seen = Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(5)) =!= 0)
         // BUCKETED epoch store (r19, layout parity with the ppjoin and
         // BM25 stores — the r18 verdict's #8): the posting lists
-        // persist bucketBy(band, band_key), so the loaded scan exposes
+        // persist bucketed by (band, band_key), so the loaded scan exposes
         // HashPartitioning to any screen shape that shuffles the index
         // (today's screen broadcasts the batch side, so the serve plan
         // is unchanged — the bucketing is layout future-proofing paid
         // once at the epoch write, PlanSpec-pinned).
+        val path = scratchPath("graft_neardup_index", dir)
         Dedup.storeNearDupIndexBucketed(
           Dedup.nearDupIndex(seen, n = 2, numHashes = 16, bands = 8),
           n = 2, numHashes = 16, bands = 8, maxBucket = Dedup.DefaultMaxBucket,
-          tablePrefix = scratchTableName("graft_neardup_idx", dir),
-          path = scratchPath("graft_neardup_index", dir))
-        Dedup.loadNearDupIndexBucketed(s,
-          scratchTableName("graft_neardup_idx", dir))
+          path = path)
+        Dedup.loadNearDupIndexBucketed(s, path)
       })
     }
 
@@ -918,17 +903,16 @@ object SparkEntry {
         val seen = Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(5)) =!= 0)
         // BUCKETED epoch store (r18, upgrading r17's session-lifetime
         // colocatePpJoinIndex): the two joined index tables are written
-        // bucketBy their join keys, so every screen — in THIS session
+        // bucketed by their join keys, so every screen — in THIS session
         // and any future one reading the same store — finds the corpus
         // side pre-distributed and pre-sorted from the parquet scan
         // itself. Scoped to the INCREMENTAL index: the intra self-join
         // epoch (storedFullPpJoinIndex) never joins dfTable and its
         // set joins are deliberately broadcast-shaped.
         val built = Dedup.ppJoinIndex(seen, n = 5, threshold = 0.5)
-        Dedup.storePpJoinIndexBucketed(built,
-          tablePrefix = scratchTableName("graft_ppjoin_idx", dir),
-          path = scratchPath("graft_ppjoin_index", dir))
-        Dedup.loadPpJoinIndexBucketed(s, scratchTableName("graft_ppjoin_idx", dir))
+        val path = scratchPath("graft_ppjoin_index", dir)
+        Dedup.storePpJoinIndexBucketed(built, path)
+        Dedup.loadPpJoinIndexBucketed(s, path)
       })
     }
 
@@ -1218,31 +1202,18 @@ object SparkEntry {
     * timestamps), so the oracle replays it bit-for-bit. */
   private val bucketedMemo = buildMemo[graft.sources.SeriesStore]()
 
-  /** Catalog names for `dir`'s bucketed mirrors: the session catalog is
-    * GLOBAL, and one bench session touches several data dirs (sf0.001
-    * warmup, the measured mirror, the scale dirs) — an unscoped name
-    * would let a later dir's rebuild silently repoint an earlier dir's
-    * memoized store at the wrong data. */
-  private def bucketedNames(dir: String): (String, String) = {
-    val h = java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(
-        new java.io.File(dir).getCanonicalPath))
-    (s"sv_bk_$h", s"sv_agg_bk_$h")
-  }
-
   private def bucketedStore(s: SparkSession, dir: String): graft.sources.SeriesStore =
     scratchLock.synchronized {
       bucketedMemo.getOrElseUpdate((s, dir), {
         val store = timeTravelStore(s, dir)
-        val (valsName, aggName) = bucketedNames(dir)
-        store.createBucketedMirror(valsName, nBuckets = 8)
+        store.createBucketedMirror("sv_bk", nBuckets = 8)
         store.createBucketedMirrorOf(
           store.scanValues().drop("valid_month")
             .groupBy(col("series_id"))
             .agg(count(lit(1)).as("n_rows"),
               min(col("valid_time")).as("first_valid"),
               max(col("valid_time")).as("last_valid")),
-          aggName, nBuckets = 8, sortCols = Seq("series_id"))
+          "sv_agg_bk", nBuckets = 8, sortCols = Seq("series_id"))
         store
       })
     }
@@ -1770,9 +1741,8 @@ object SparkEntry {
       // files and bucket layout, not filters, are what's being tested.
       (s, dir) => {
         val store = bucketedStore(s, dir)
-        val (valsName, aggName) = bucketedNames(dir)
-        store.scanBucketed(valsName)
-          .join(store.scanBucketed(aggName).hint("merge"), "series_id")
+        store.scanBucketed("sv_bk")
+          .join(store.scanBucketed("sv_agg_bk").hint("merge"), "series_id")
           .filter(col("series_id").between(10, 60))
           .select(col("series_id"), col("valid_time"), col("knowledge_time"),
             col("change_time"), col("value"), col("n_rows"),
@@ -3834,7 +3804,7 @@ object SparkEntry {
     ("x_text_bm25_stored",
       // Related-doc BM25 top-10 per query doc served from the BUCKETED
       // parquet store — the search index AT REST: the tf table's
-      // bucketBy(doc_id) layout survives the session, so the scoring
+      // doc_id-bucketed layout survives the session, so the scoring
       // aggregate (whose grouping keys include the doc id) plans with
       // no corpus-side exchange from the files themselves; query-time
       // work is one broadcast terms join + the per-query top-k window.

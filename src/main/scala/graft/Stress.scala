@@ -101,7 +101,6 @@ object Stress {
     timed("full argmax read over bucketed mirror (no exchange)") {
       operators.ReadShapes.latest(db.store.scanBucketed("stress_bucketed")).count()
     }
-    spark.sql("DROP TABLE IF EXISTS stress_bucketed")
 
     timed("build z-ordered mirror (64 files on (series_id, valid_time))") {
       db.store.createZOrderedMirror("stress_z", files = 64)

@@ -458,14 +458,13 @@ object Dedup {
     *
     * `n`/`threshold`/`idCol`/`nBuckets` travel WITH the store in its
     * meta row, preserving the case class's mismatched-parameter
-    * guarantee across sessions. Tables land in the session catalog
-    * under `<tablePrefix>_{df,sets,postings,meta}` with data under
-    * `path`; [[loadPpJoinIndexBucketed]] reconstructs the index from
-    * the catalog names, and a new session re-attaches with
-    * [[graft.sources.IndexStore.register]]. */
-  def storePpJoinIndexBucketed(index: PpJoinIndex, tablePrefix: String,
-      path: String, nBuckets: Int = 32): Unit =
-    IndexStore.write(tablePrefix, path, nBuckets, Seq(
+    * guarantee across sessions. The tables land under
+    * `path/{df,sets,postings,meta}`, published by one manifest commit;
+    * [[loadPpJoinIndexBucketed]] reconstructs the index from `path` in
+    * any session. */
+  def storePpJoinIndexBucketed(index: PpJoinIndex, path: String,
+      nBuckets: Int = 32): Unit =
+    IndexStore.write(path, nBuckets, Seq(
         IndexStore.Table("df", index.dfTable, Seq("sh")),
         IndexStore.Table("sets", index.sets, Seq(index.idCol)),
         IndexStore.Table("postings", index.postings)),
@@ -473,20 +472,20 @@ object Dedup {
         .createDataFrame(Seq((index.n, index.threshold, index.idCol, nBuckets)))
         .toDF("n", "threshold", "id_col", "n_buckets"))
 
-  /** Reconstruct a [[PpJoinIndex]] from [[storePpJoinIndexBucketed]]'s
-    * catalog tables. The df and sets frames come back as bucketed
-    * scans — [[ppJoinAgainst]] over the result plans with NO
-    * corpus-side Exchange (PlanSpec-pinned), the stored-index analog
-    * of the co-located screen. */
+  /** Reconstruct a [[PpJoinIndex]] from the [[storePpJoinIndexBucketed]]
+    * store at `path` ([[graft.sources.IndexStore.load]]). The df and sets
+    * frames come back as bucketed scans — [[ppJoinAgainst]] over the
+    * result plans with NO corpus-side Exchange (PlanSpec-pinned), the
+    * stored-index analog of the co-located screen. */
   def loadPpJoinIndexBucketed(spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String): PpJoinIndex = {
-    val meta = spark.table(s"${tablePrefix}_meta").head()
+      path: String): PpJoinIndex = {
+    val store = IndexStore.load(spark, path)
     PpJoinIndex(
-      dfTable = spark.table(s"${tablePrefix}_df"),
-      postings = spark.table(s"${tablePrefix}_postings"),
-      sets = spark.table(s"${tablePrefix}_sets"),
-      n = meta.getInt(0), threshold = meta.getDouble(1),
-      idCol = meta.getString(2))
+      dfTable = store.tables("df"),
+      postings = store.tables("postings"),
+      sets = store.tables("sets"),
+      n = store.meta.getInt(0), threshold = store.meta.getDouble(1),
+      idCol = store.meta.getString(2))
   }
 
   /** Screen a batch against a prebuilt [[PpJoinIndex]]: every
@@ -926,24 +925,24 @@ object Dedup {
     * once at the epoch write to foreclose the per-session re-shuffle
     * for any future screen shape that does shuffle the index (equally
     * keyed joins/aggregations skip the exchange, §2.4). Build params
-    * travel in the meta row; a new session re-attaches with
-    * [[graft.sources.IndexStore.register]]. */
+    * travel in the meta row; [[loadNearDupIndexBucketed]] reads the
+    * store at `path` in any session. */
   def storeNearDupIndexBucketed(index: DataFrame, n: Int, numHashes: Int,
-      bands: Int, maxBucket: Int, tablePrefix: String, path: String,
+      bands: Int, maxBucket: Int, path: String,
       nBuckets: Int = 32, idCol: String = "doc_id"): Unit =
-    IndexStore.write(tablePrefix, path, nBuckets,
+    IndexStore.write(path, nBuckets,
       Seq(IndexStore.Table("postings", index, Seq("band", "band_key"))),
       index.sparkSession
         .createDataFrame(Seq((n, numHashes, bands, maxBucket, nBuckets, idCol)))
         .toDF("n", "num_hashes", "bands", "max_bucket", "n_buckets", "id_col"))
 
-  /** The loaded posting-list frame of a [[storeNearDupIndexBucketed]]
-    * store: a bucketed scan exposing HashPartitioning(band, band_key)
-    * — feed it to [[incrementalNearDupAgainst]] exactly like an
-    * in-session [[nearDupIndex]] frame. */
+  /** The loaded posting-list frame of the [[storeNearDupIndexBucketed]]
+    * store at `path`: a bucketed scan exposing HashPartitioning(band,
+    * band_key) — feed it to [[incrementalNearDupAgainst]] exactly like
+    * an in-session [[nearDupIndex]] frame. */
   def loadNearDupIndexBucketed(spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String): DataFrame =
-    spark.table(s"${tablePrefix}_postings")
+      path: String): DataFrame =
+    IndexStore.load(spark, path).tables("postings")
 
   /** Screen a batch against a prebuilt [[nearDupIndex]]. `n`,
     * `numHashes`, and `bands` must match the index's build parameters

@@ -522,24 +522,26 @@ object TextAnalysis {
     * future session (PlanSpec-pinned). At 100 TB this is the search
     * index at rest: the token stream's doc-clustered layout is paid
     * once at the epoch write, never per retrieval. `idCol` and
-    * `nBuckets` travel in the meta row; a new session re-attaches with
-    * [[graft.sources.IndexStore.register]]. */
-  def storeBm25IndexBucketed(tf: DataFrame, tablePrefix: String, path: String,
+    * `nBuckets` travel in the meta row; [[loadBm25IndexBucketed]] reads
+    * the store at `path` in any session. */
+  def storeBm25IndexBucketed(tf: DataFrame, path: String,
       nBuckets: Int = 32, idCol: String = "doc_id"): Unit =
-    IndexStore.write(tablePrefix, path, nBuckets, Seq(
+    IndexStore.write(path, nBuckets, Seq(
         IndexStore.Table("tf", tf, Seq(idCol)),
         IndexStore.Table("stats", bm25IndexStats(tf, idCol))),
       tf.sparkSession.createDataFrame(Seq((idCol, nBuckets)))
         .toDF("id_col", "n_buckets"))
 
-  /** Reconstruct the (tf, stats) pair from
-    * [[storeBm25IndexBucketed]]'s catalog tables. The tf frame comes
-    * back as a bucketed scan — [[bm25RelatedTopKFrom]] over it plans
-    * with no corpus-side exchange, the stored-index analog of the
+  /** Reconstruct the (tf, stats) pair from the [[storeBm25IndexBucketed]]
+    * store at `path` ([[graft.sources.IndexStore.load]]). The tf frame
+    * comes back as a bucketed scan — [[bm25RelatedTopKFrom]] over it
+    * plans with no corpus-side exchange, the stored-index analog of the
     * checkpointed build. */
   def loadBm25IndexBucketed(spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String): (DataFrame, DataFrame) =
-    (spark.table(s"${tablePrefix}_tf"), spark.table(s"${tablePrefix}_stats"))
+      path: String): (DataFrame, DataFrame) = {
+    val store = IndexStore.load(spark, path)
+    (store.tables("tf"), store.tables("stats"))
+  }
 
   /** One SEGMENT of an incremental BM25 index: per-(doc, token) tf
     * with the doc's full length — [[bm25Index]] WITHOUT the

@@ -1,7 +1,8 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -9,28 +10,27 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * how an index lands on disk. The operator families
   * ([[graft.operators.Dedup]], [[graft.operators.TextAnalysis]],
   * [[graft.operators.Similarity]]) build and serve; they reach the
-  * filesystem and the catalog only through here. Two store forms:
+  * filesystem only through here. Two store forms:
   *
-  *  - **Bucketed epoch store** ([[write]] / [[register]]): catalog
-  *    tables `<prefix>_<sub>` over `<path>/<sub>`, each either written
-  *    `bucketBy`+`sortBy` its join key — so a loaded scan exposes
-  *    `HashPartitioning` to the planner and keyed joins/aggregates
-  *    over it plan with no corpus-side exchange — or plain parquet,
-  *    plus a one-row `<prefix>_meta` table. One file per bucket: each
-  *    bucketed table is repartitioned on its bucket key with the
-  *    bucket count before the write (`bucketBy`'s routing is the same
-  *    murmur3-pmod), so every write task holds exactly one bucket and
-  *    the reader keeps the file-level sort (multi-file buckets forfeit
-  *    `sortBy`'s outputOrdering). The meta row holds the family's
-  *    build parameters (its typed `load` reads them by position) and
-  *    the layout: `n_buckets` and an appended [[LayoutCol]] column
-  *    (table → bucket columns), so [[register]] re-declares every
-  *    table from the store alone — never from a caller guess, since a
-  *    wrong declared bucket count silently mis-routes a bucketed join.
-  *    The catalog entry is METADATA only: under Spark's default
-  *    in-memory catalog it dies with the session while the files and
-  *    their layout persist, and a new session re-attaches with
-  *    [[register]] (a persistent metastore makes that call a no-op).
+  *  - **Bucketed epoch store** ([[write]] / [[load]]): ONE
+  *    [[ManifestTable]] at `<path>` whose tables live in sub-directories
+  *    (`<path>/<sub>/`), each either bucketed by its join key — so a
+  *    loaded scan exposes `HashPartitioning` to the planner and keyed
+  *    joins/aggregates over it plan with no corpus-side exchange — or
+  *    plain parquet, plus a one-row `meta` table. One file per bucket:
+  *    each bucketed table is routed to write split `pmod(hash(keys), n)`
+  *    — the bucket id of Spark's own bucketed writes — so write split i
+  *    holds exactly bucket i, and [[ManifestCommitProtocol]] names each
+  *    file with its split as its bucket id. The meta row holds the family's build parameters
+  *    (its typed `load` reads them by position) and the layout:
+  *    `n_buckets` and an appended [[LayoutCol]] column (table → bucket
+  *    columns), so [[load]] declares every table's bucket spec from the
+  *    store alone — never from a caller guess, since a wrong declared
+  *    bucket count silently mis-routes a bucketed join. The layout lives
+  *    with the data: no catalog holds it and no session re-declares it.
+  *    A rebuild stages every table and commits ONE manifest that
+  *    replaces the whole file list, so it is atomic across the store's
+  *    tables: a reader sees the old store or the new one.
   *
   *  - **Levelled store** ([[writeLeaf]] / [[resident]] / [[reap]] /
   *    [[maintain]]): immutable `<levelCol>=<id>` leaves (under any
@@ -49,69 +49,75 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *    foreachBatch thread), and concurrent readers must tolerate the
   *    reap window — directory-listing readers can hit a vanished
   *    level mid-scan; putting the levels on a [[ManifestTable]] (as
-  *    [[SeriesStore]]'s tables are) is the upgrade path when readers
-  *    can't quiesce.
+  *    the bucketed form is) is the upgrade path when readers can't
+  *    quiesce.
   */
 object IndexStore {
 
   /** The meta-row column holding each table's bucket columns (empty
     * for a plain table). */
   private val LayoutCol = "bucket_cols"
+  private val MetaSub = "meta"
 
-  /** One table of a bucketed epoch store: data at `<path>/<sub>`,
-    * catalog name `<prefix>_<sub>`; no `bucketCols` = plain parquet. */
-  final case class Table(sub: String, frame: DataFrame, bucketCols: Seq[String] = Nil)
+  /** One table of a bucketed epoch store, with data at `<path>/<sub>`;
+    * no `bucketCols` = plain parquet. Each bucket file is sorted by
+    * `bucketCols`, then by the rest of `sortCols`. */
+  final case class Table(sub: String, frame: DataFrame, bucketCols: Seq[String] = Nil,
+      sortCols: Seq[String] = Nil)
 
-  private def requireSafe(tablePrefix: String): Unit =
-    require(tablePrefix.matches("[A-Za-z0-9_]+"), s"unsafe table prefix: $tablePrefix")
+  /** A loaded bucketed epoch store: its meta row and each table's scan. */
+  final case class Loaded(meta: Row, tables: Map[String, DataFrame])
 
-  /** Write a bucketed epoch store: every table in `tables`, then the
-    * one-row `meta` frame (which must carry the family's `n_buckets`
-    * column) with [[LayoutCol]] appended. Overwrites a previous store
-    * at the same prefix and path. */
-  def write(tablePrefix: String, path: String, nBuckets: Int,
-      tables: Seq[Table], meta: DataFrame): Unit = {
-    requireSafe(tablePrefix)
+  /** Write a bucketed epoch store at `path`: stage every table in
+    * `tables` and the one-row `meta` frame (which must carry the
+    * family's `n_buckets` column) with [[LayoutCol]] appended, each into
+    * its own sub-directory, then commit ONE manifest listing exactly
+    * those files and vacuum the store (keeping the previous manifest, so
+    * a reader planned against the replaced store keeps its files for
+    * one more rebuild). Replaces a previous store at `path`. */
+  def write(path: String, nBuckets: Int, tables: Seq[Table], meta: DataFrame): Unit = {
     require(nBuckets > 0, "nBuckets must be positive")
     require(meta.columns.contains("n_buckets"), "meta must carry n_buckets")
-    def save(t: Table): Unit = {
-      val keyed = if (t.bucketCols.isEmpty) t.frame
-        else t.frame.repartition(nBuckets, t.bucketCols.map(col): _*)
-      val w = keyed.write.mode(SaveMode.Overwrite).format("parquet")
-        .option("path", s"$path/${t.sub}")
-      (t.bucketCols match {
-        case Seq() => w
-        case c +: cs => w.bucketBy(nBuckets, c, cs: _*).sortBy(c, cs: _*)
-      }).saveAsTable(s"${tablePrefix}_${t.sub}")
+    val store = new ManifestTable(meta.sparkSession, path)
+    val metaTable = Table(MetaSub,
+      meta.withColumn(LayoutCol, typedLit(tables.map(t => t.sub -> t.bucketCols).toMap)))
+    val files = (tables :+ metaTable).flatMap { t =>
+      val keys = t.bucketCols
+      // routed by the bucket id itself: `repartition(n, keys)` computes
+      // the same id, but planning drops it when the frame is already
+      // hash-partitioned on `keys` into n, and adaptive execution may
+      // then coalesce that upstream shuffle into fewer splits
+      val laid = if (keys.isEmpty) t.frame
+        else t.frame.repartitionById(nBuckets, pmod(hash(keys.map(col): _*), lit(nBuckets)))
+          .sortWithinPartitions((keys ++ t.sortCols.filterNot(keys.contains)).map(col): _*)
+      store.stage(laid, into = Some(t.sub))((w, dir) => w.parquet(dir))
     }
-    tables.foreach(save)
-    save(Table("meta",
-      meta.withColumn(LayoutCol, typedLit(tables.map(t => t.sub -> t.bucketCols).toMap))))
+    store.commit(files)
+    store.vacuum(keepManifests = 2, minAgeMillis = 0L)
+    ()
   }
 
-  /** Re-attach a [[write]] store made by a PRIOR session: declares each
-    * catalog table over the existing files (schemas inferred from the
-    * parquet, bucket spec from the store's own meta row). Idempotent —
-    * tables that already exist are left alone, so calling it in the
-    * writing session is a no-op. */
-  def register(spark: SparkSession, tablePrefix: String, path: String): Unit = {
-    requireSafe(tablePrefix)
-    val meta = spark.read.parquet(s"$path/meta").head()
-    require(meta.schema.fieldNames.contains(LayoutCol),
-      s"$path/meta has no $LayoutCol column (written before it existed): rebuild the store")
+  /** Load a [[write]] store from its current manifest, in any session:
+    * the meta row (read on the driver) and every table's scan, each
+    * bucketed table with the bucket spec its meta row declares. Runs no
+    * Spark job. A directory with no manifest fails loudly: stores are
+    * derived data, rebuilt rather than adopted, and a load never writes. */
+  def load(spark: SparkSession, path: String): Loaded = {
+    val store = new ManifestTable(spark, path)
+    val files = store.current().getOrElse(throw new IllegalStateException(
+      s"no index store at $path: no manifest lists its files (never built, or built " +
+        "before index stores committed through one) — rebuild it with the call that " +
+        "writes it (IndexStore.write, a store*IndexBucketed, createBucketedMirror)"))
+    val bySub = files.groupBy(_.takeWhile(_ != '/')).map { case (sub, fs) => sub -> store.listed(fs) }
+    val metaFiles = bySub(MetaSub)
+    val meta = store.collectSmall(metaFiles, store.footerSchema(metaFiles.head)).head
     val nBuckets = meta.getAs[Int]("n_buckets")
     val layout = meta.getMap[String, scala.collection.Seq[String]](meta.fieldIndex(LayoutCol))
-    (layout.toSeq :+ ("meta" -> Nil)).foreach { case (sub, bucketCols) =>
-      val name = s"${tablePrefix}_$sub"
-      if (!spark.catalog.tableExists(name)) {
-        val ddlCols = spark.read.parquet(s"$path/$sub").schema.fields
-          .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
-        val keys = bucketCols.map(c => s"`$c`").mkString(", ")
-        val cluster = if (bucketCols.isEmpty) ""
-          else s" CLUSTERED BY ($keys) SORTED BY ($keys) INTO $nBuckets BUCKETS"
-        spark.sql(s"CREATE TABLE $name ($ddlCols) USING parquet$cluster LOCATION '$path/$sub'")
-      }
-    }
+    Loaded(meta, layout.toMap.map { case (sub, keys) =>
+      val statuses = bySub(sub)
+      val spec = if (keys.isEmpty) None else Some(BucketSpec(nBuckets, keys.toSeq, keys.toSeq))
+      sub -> store.scanListed(statuses, store.footerSchema(statuses.head), spec)
+    })
   }
 
   /** One `<levelCol>=<level>` leaf of the tree at `root`, under

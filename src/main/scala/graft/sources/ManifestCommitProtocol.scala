@@ -8,6 +8,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
 import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
 import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
+import org.apache.spark.sql.execution.datasources.BucketingUtils
 
 /** The Spark commit protocol under [[ManifestTable.stage]]: every data
   * file is written ONCE, straight into the job's flat staging directory
@@ -19,10 +20,12 @@ import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
   * A staged file is named after its task attempt and its ordinal in
   * that attempt, so a retried or speculative attempt never collides
   * with another. Its final path relative to the table root — the
-  * partition directory plus a `part-<split>-<jobId>` name, as Spark's
-  * own protocol names it — is reported by [[commitTask]], and
-  * [[commitJob]] records the reported (staged name, final path) pairs
-  * of the committed attempts for [[ManifestCommitProtocol.committedFiles]].
+  * partition directory plus a `part-<split>-<jobId>_<split>` name,
+  * Spark's own name with the split as its bucket-id suffix
+  * (`BucketingUtils.getBucketId` reads it back) — is reported by
+  * [[commitTask]], and [[commitJob]] records the reported (staged name,
+  * final path) pairs of the committed attempts for
+  * [[ManifestCommitProtocol.committedFiles]].
   * An attempt that aborts deletes its own files; a losing attempt's
   * files are never reported and go with the staging directory.
   *
@@ -54,7 +57,11 @@ class ManifestCommitProtocol(jobId: String, path: String, dynamicPartitionOverwr
   override def newTaskTempFile(taskContext: TaskAttemptContext, dir: Option[String],
       spec: FileNameSpec): String = {
     val attempt = taskContext.getTaskAttemptID
-    val name = f"${spec.prefix}part-${attempt.getTaskID.getId}%05d-$jobId${spec.suffix}"
+    val split = attempt.getTaskID.getId
+    // the split doubles as the file's bucket id: a table written from
+    // repartition(n, keys) holds bucket i in split i
+    val tail = spec.suffix.dropWhile(c => c == '-' || c == '.')
+    val name = f"${spec.prefix}part-$split%05d-$jobId${BucketingUtils.bucketIdToString(split)}.$tail"
     val stagedName = s"$attempt-${staged.length}"
     staged += stagedName -> dir.fold(name)(d => s"$d/$name")
     new Path(path, stagedName).toString

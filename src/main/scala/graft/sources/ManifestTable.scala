@@ -1,16 +1,27 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, GraftSessionBridge, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** A set of immutable data files under `root`, on any Hadoop-compatible
   * filesystem, whose visible contents are the file list of its newest
   * MANIFEST: `_manifests/v<NNNNNNNN>.list`, one root-relative data-file
   * path per line. It is the commit discipline of a table-format log
   * (Delta Lake, VLDB 2020; Iceberg), scaled down to what this store
-  * needs, and the one way [[SeriesStore]] publishes files: its
-  * `series_values` and `run_series` tables and each z-ordered mirror
-  * are ManifestTables. Every mutation follows write-ahead ordering:
+  * needs, and the one way the stores publish files: [[SeriesStore]]'s
+  * `series_values` and `run_series` tables and each z-ordered mirror,
+  * and each bucketed [[IndexStore]] (the bucketed mirrors among them)
+  * are ManifestTables, and every read of one goes through [[scan]].
+  * Every mutation follows write-ahead ordering:
   *
   *   1. new data files are written ONCE, each straight into the flat
   *      `_staging/<uuid>/` directory, by [[ManifestCommitProtocol]]
@@ -51,9 +62,13 @@ final class ManifestTable(spark: SparkSession, rootPath: String) {
 
   private val ManifestName = raw"v(\d{8})\.list".r
 
+  /** The committed manifests, oldest first: ONE listing of `_manifests`
+    * (none before the first commit). */
   private def manifestVersions(): Seq[(Long, Path)] = {
-    if (!fs.exists(manifestsDir)) return Seq.empty
-    fs.listStatus(manifestsDir).toSeq.collect {
+    val listed =
+      try fs.listStatus(manifestsDir)
+      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    listed.toSeq.collect {
       case st if st.isFile =>
         st.getPath.getName match {
           case ManifestName(v) => Some(v.toLong -> st.getPath)
@@ -77,10 +92,13 @@ final class ManifestTable(spark: SparkSession, rootPath: String) {
   /** Committed manifest versions, oldest first. */
   def versions(): Seq[Long] = manifestVersions().map(_._1)
 
-  /** Relative paths of the data files in the current snapshot (none
-    * before the first commit). */
-  def currentFiles(): Seq[String] =
-    manifestVersions().lastOption.map { case (_, p) => readManifest(p) }.getOrElse(Seq.empty)
+  /** Relative paths of the data files in the current snapshot; None
+    * before the first commit. */
+  def current(): Option[Seq[String]] =
+    manifestVersions().lastOption.map { case (_, p) => readManifest(p) }
+
+  /** [[current]], with no files before the first commit. */
+  def currentFiles(): Seq[String] = current().getOrElse(Seq.empty)
 
   /** The file list of committed version `version`. Unknown versions fail
     * loudly with the available range — a silent empty list would look
@@ -97,9 +115,11 @@ final class ManifestTable(spark: SparkSession, rootPath: String) {
 
   /** The atomic commit point: write `files` as the next manifest version
     * (dot-temp + rename) and return that version. */
-  def commit(files: Seq[String]): Long = {
+  def commit(files: Seq[String]): Long =
+    commitAs(manifestVersions().lastOption.fold(1L)(_._1 + 1L), files)
+
+  private def commitAs(next: Long, files: Seq[String]): Long = {
     fs.mkdirs(manifestsDir)
-    val next = manifestVersions().lastOption.map(_._1 + 1L).getOrElse(1L)
     val tmp = new Path(manifestsDir, s".tmp-${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, true)
     try out.write(files.sorted.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -117,8 +137,14 @@ final class ManifestTable(spark: SparkSession, rootPath: String) {
     * already under the root (none for a new table) as version 1 — which
     * also adopts a directory written before it had manifests. */
   def create(): Unit =
-    if (manifestVersions().isEmpty)
-      commit(if (fs.exists(root)) dataFiles(root).map(relativeTo(root)) else Seq.empty)
+    if (manifestVersions().isEmpty) adopt()
+
+  /** Commit the data files under the root as version 1; returns them. */
+  private def adopt(): Seq[String] = {
+    val files = if (fs.exists(root)) dataFiles(root).map(relativeTo(root)) else Seq.empty
+    commitAs(1L, files)
+    files
+  }
 
   /** Write `frame` into a fresh staging directory — `write` configures
     * the writer (partitioning, options) and names the format with the
@@ -159,9 +185,85 @@ final class ManifestTable(spark: SparkSession, rootPath: String) {
     * manifests keeps its files, and no staged file lands under a root
     * that a later create would adopt. */
   def append(frame: DataFrame)(write: (DataFrameWriter[Row], String) => Unit): Unit = {
-    create()
+    // one listing gives the adoption check, the file list and the next version
+    val (version, files) = manifestVersions().lastOption match {
+      case Some((v, p)) => (v, readManifest(p))
+      case None => (1L, adopt())
+    }
     val added = stage(frame)(write)
-    if (added.nonEmpty) commit(currentFiles() ++ added)
+    if (added.nonEmpty) commitAs(version + 1L, files ++ added)
+  }
+
+  /** Statuses of the manifest-listed `files`, from ONE listing of each
+    * directory that holds them. A listed file missing from its
+    * directory fails loudly. */
+  def listed(files: Seq[String]): Seq[FileStatus] =
+    files.groupBy(f => new Path(root, f).getParent).toSeq.flatMap { case (dir, rels) =>
+      val names = rels.map(f => new Path(f).getName).toSet
+      val found = fs.listStatus(dir).filter(st => names.contains(st.getPath.getName))
+      if (found.length < names.size)
+        throw new java.io.FileNotFoundException(
+          s"$dir lacks manifest-listed files: ${(names -- found.map(_.getPath.getName)).mkString(", ")}")
+      found.toSeq
+    }
+
+  /** One scan over the manifest-listed `files`, typed by `schema`; see
+    * [[scanListed]]. */
+  def scan(files: Seq[String], schema: StructType, bucketSpec: Option[BucketSpec] = None): DataFrame =
+    scanListed(listed(files), schema, bucketSpec)
+
+  /** One scan over the files of `statuses` (from [[listed]]), typed by
+    * `schema`. Spark's file index gets each directory holding them as a
+    * root path, with exactly these statuses as its files, so it lists
+    * nothing itself (handed the files as root paths, it would list them,
+    * in a Spark job once there are more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` = 32).
+    * `key=value` directories under the root become partition columns, as
+    * in a `basePath` read. With `bucketSpec`, the relation is bucketed as
+    * a catalog table would be: each file's bucket is the id in its name,
+    * which [[ManifestCommitProtocol]] sets to its write split. */
+  def scanListed(statuses: Seq[FileStatus], schema: StructType,
+      bucketSpec: Option[BucketSpec] = None): DataFrame =
+    if (statuses.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else {
+      val byDir = statuses.groupBy(_.getPath.getParent).map { case (d, sts) => d -> sts.toArray }
+      val cache = new FileStatusCache {
+        override def getLeafFiles(path: Path): Option[Array[FileStatus]] = byDir.get(path)
+        override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+        override def invalidateAll(): Unit = ()
+      }
+      val index = new InMemoryFileIndex(spark, byDir.keys.toSeq.sortBy(_.toString),
+        Map("basePath" -> root.toString), Some(schema), cache)
+      val partitionCols = index.partitionSchema.fieldNames.toSet
+      // nullable, as a path read types every file-source column
+      val dataSchema = StructType(schema.filterNot(f => partitionCols(f.name)).map(_.copy(nullable = true)))
+      spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, dataSchema,
+        bucketSpec, new ParquetFileFormat, Map.empty)(spark))
+    }
+
+  /** The Spark schema a parquet file was written with, from its footer
+    * alone — no schema-inference job. */
+  def footerSchema(status: FileStatus): StructType = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(status, spark.sessionState.newHadoopConf()))
+    try DataType.fromJson(reader.getFooter.getFileMetaData.getKeyValueMetaData
+      .get(ParquetReadSupport.SPARK_METADATA_KEY)).asInstanceOf[StructType]
+    finally reader.close()
+  }
+
+  /** Every row of the small parquet files `statuses` (a store's meta
+    * row), decoded on the driver by Spark's own parquet reader — no Spark
+    * job. */
+  def collectSmall(statuses: Seq[FileStatus], schema: StructType): Seq[Row] = {
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
+      new StructType(), schema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConf())
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    statuses.flatMap { st =>
+      read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(st.getPath), 0L, st.getLen))
+        .map(r => toRow(r).asInstanceOf[Row]).toList
+    }
   }
 
   private def relativeTo(dir: Path)(f: FileStatus): String =

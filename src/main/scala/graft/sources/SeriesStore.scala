@@ -1,9 +1,7 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 
@@ -28,9 +26,10 @@ import org.apache.spark.sql.types.{StringType, StructType}
   *
   * ==Commits==
   *
-  * Every file set this store writes and reads by path is a
-  * [[ManifestTable]]: `series_values`, `run_series` and each z-ordered
-  * mirror (`zordered/<name>`). Each publishes its files by ONE manifest
+  * Every file set this store writes and reads is a [[ManifestTable]]:
+  * `series_values`, `run_series`, each z-ordered mirror
+  * (`zordered/<name>`) and each bucketed mirror (`bucketed/<name>`, an
+  * [[IndexStore]] bucketed store). Each publishes its files by ONE manifest
   * rename, so a reader never observes a partially-appended,
   * partially-compacted or half-expired table, and a crash at any step
   * leaves the state before or the state after (the table-log commit of
@@ -55,6 +54,10 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
   private val dataFileSchema: StructType =
     StructType(Schema.seriesValues.filterNot(_.name == "retention"))
 
+  /** A `series_values` scan's schema: `retention` and `valid_month`
+    * come from the partition directories. */
+  private val ValuesScan = Schema.seriesValues.add("valid_month", StringType)
+
   /** Row order of a compacted file: the MergeTree sort key analog. */
   private val SortKey = Seq("series_id", "valid_time", "knowledge_time", "change_time")
   /** Row order of an appended file (see [[appendValues]]). */
@@ -77,14 +80,10 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
   }
 
   /** Drop every table the store owns (timedb/client.py:119-120): both
-    * tables, the z-ordered mirrors, and the bucketed mirrors with their
-    * `<name>` / `<name>__v<N>` catalog entries. The base directory goes
-    * too when that leaves it empty; anything else in it stays, and so
-    * does the directory. */
+    * tables, the z-ordered mirrors and the bucketed mirrors. The base
+    * directory goes too when that leaves it empty; anything else in it
+    * stays, and so does the directory. */
   def delete(): Unit = {
-    subdirs(new Path(basePath, "bucketed")).foreach { name =>
-      (name +: versionedTables(name).map(_._2)).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    }
     Seq("series_values", "run_series", "zordered", "bucketed")
       .foreach(d => fs.delete(new Path(basePath, d), true))
     val base = new Path(basePath)
@@ -141,16 +140,16 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     * keeps Catalyst's partition pruning on both). `valid_month` stays
     * available for manual pruning; readers project it away. */
   def scanValues(): DataFrame =
-    scanFileList(currentFiles())
+    values.scan(currentFiles(), ValuesScan)
 
   /** [[scanValues]] over only the current snapshot's files whose
     * `retention=…/valid_month=…` directory a read can touch: a tier in
     * `retention` (all tiers when empty) and a month inside the inclusive
     * `monthRange`. The match is on the manifest's relative paths, on the
-    * driver, with no Spark job. Returns the scan and the bytes of the
-    * files it lists — the file index's own size, so a read can size its
-    * plan from what it will actually open (over the unpruned scan,
-    * Catalyst's estimate is the whole snapshot whatever the filters). */
+    * driver, with no Spark job. Returns the scan and the summed lengths
+    * of the files it lists, so a read can size its plan from what it
+    * will actually open (over the unpruned scan, Catalyst's estimate is
+    * the whole snapshot whatever the filters). */
   def scanValuesPruned(retention: Seq[String],
       monthRange: (Option[String], Option[String])): (DataFrame, Long) = {
     val (lo, hi) = monthRange
@@ -160,8 +159,8 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
           lo.forall(month >= _) && hi.forall(month <= _)
       case _ => true
     }
-    val scan = scanFileList(files)
-    (scan, if (files.isEmpty) 0L else scan.queryExecution.analyzed.stats.sizeInBytes.toLong)
+    val statuses = values.listed(files)
+    (values.scanListed(statuses, ValuesScan), statuses.map(_.getLen).sum)
   }
 
   /** Committed manifest versions, oldest first — the time-travel axis.
@@ -179,7 +178,7 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     * version. Unknown versions fail loudly with the available range —
     * a silent empty read would look like data loss. */
   def scanValuesAsOf(version: Long): DataFrame =
-    scanFileList(values.filesAt(version))
+    values.scan(values.filesAt(version), ValuesScan)
 
   /** Incremental consumption over the commit log: the rows of every
     * file ADDED between two committed versions — the reader side of a
@@ -201,54 +200,8 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     require(fromVersion <= toVersion,
       s"fromVersion $fromVersion must be <= toVersion $toVersion")
     val from = values.filesAt(fromVersion).toSet
-    scanFileList(values.filesAt(toVersion).filterNot(from))
+    values.scan(values.filesAt(toVersion).filterNot(from), ValuesScan)
   }
-
-  private def scanFileList(files: Seq[String]): DataFrame = {
-    val schema = Schema.seriesValues.add("valid_month", StringType)
-    if (files.isEmpty) emptyScan(schema)
-    else {
-      val root = values.root
-      spark.read.option("basePath", root.toString).schema(schema)
-        .parquet(files.map(f => s"$root/$f"): _*)
-    }
-  }
-
-  /** One scan over `files` of a table that is read whole (`run_series`,
-    * a z-mirror), typed by `schema`. Spark's file index gets the files'
-    * statuses from ONE listing of each directory that holds them, so it
-    * lists nothing itself: handed the files as root paths, it would list
-    * them in a Spark job once there are more than
-    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32).
-    * `series_values` reads keep [[scanFileList]]: they prune to a few
-    * files, and their filesystem calls stay those of a path-list read. */
-  private def scanTable(table: ManifestTable, files: Seq[String], schema: StructType): DataFrame =
-    if (files.isEmpty) emptyScan(schema)
-    else {
-      val root = table.root
-      val statuses = files.groupBy(f => new Path(root, f).getParent).toSeq.flatMap { case (dir, rels) =>
-        val names = rels.map(f => new Path(f).getName).toSet
-        val found = fs.listStatus(dir).filter(st => names.contains(st.getPath.getName))
-        if (found.length < names.size)
-          throw new java.io.FileNotFoundException(
-            s"$dir lacks manifest-listed files: ${(names -- found.map(_.getPath.getName)).mkString(", ")}")
-        found.toSeq
-      }
-      val byPath = statuses.map(st => st.getPath -> Array(st)).toMap
-      val listed = new FileStatusCache {
-        override def getLeafFiles(path: Path): Option[Array[FileStatus]] = byPath.get(path)
-        override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
-        override def invalidateAll(): Unit = ()
-      }
-      // nullable, as a path read types every file-source column
-      val fileSchema = StructType(schema.map(_.copy(nullable = true)))
-      val index = new InMemoryFileIndex(spark, statuses.map(_.getPath), Map.empty, Some(fileSchema), listed)
-      spark.baseRelationToDataFrame(
-        HadoopFsRelation(index, new StructType(), fileSchema, None, new ParquetFileFormat, Map.empty)(spark))
-    }
-
-  private def emptyScan(schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** Bucketed mirror of series_values for SHUFFLE-FREE series-keyed
     * reads. Spark's bucketed tables expose `HashPartitioning(series_id,
@@ -262,14 +215,13 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     * single shuffle. Files are also sorted by (series_id, valid_time),
     * so per-key windows need only a cheap partial sort.
     *
-    * The mirror is an EXTERNAL table (data under basePath, metadata in
-    * whatever catalog the session has — in-memory works). Each rebuild
-    * writes a fresh versioned directory (`bucketed/<name>/v<millis>`)
-    * and re-points the catalog entry only after the write completes, so
-    * a reader holding the previous mirror's plan keeps its files; prior
-    * version dirs are dropped on the NEXT rebuild (keep-one grace),
-    * mirroring the manifest vacuum discipline. Rebuild after appends,
-    * like any materialized layout. */
+    * The mirror is an [[IndexStore]] bucketed store at
+    * `bucketed/<name>` with one table: [[scanBucketed]] reads its bucket
+    * spec from the store itself, in any session. A rebuild commits ONE
+    * manifest that replaces the whole file list, then vacuums keeping
+    * two manifests, as the z-ordered mirror does: a reader holding the
+    * previous mirror's plan keeps its files for one more rebuild.
+    * Rebuild after appends, like any materialized layout. */
   def createBucketedMirror(tableName: String, nBuckets: Int): Unit =
     createBucketedMirrorOf(scanValues().drop("valid_month"), tableName, nBuckets,
       sortCols = Seq("series_id", "valid_time"))
@@ -280,8 +232,9 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     * Two mirrors written with EQUAL bucket counts equi-join on
     * `series_id` with zero exchanges (the reference's sort-key
     * co-location, ch_create_tables.sql:42, generalized to any table
-    * that shares the key). Same versioned-dir + catalog-swap
-    * maintenance as the values mirror. */
+    * that shares the key). Each bucket file is sorted by `series_id`,
+    * then by the rest of `sortCols`. Same commit and vacuum as the
+    * values mirror. */
   def createBucketedMirrorOf(frame: org.apache.spark.sql.DataFrame,
       tableName: String, nBuckets: Int,
       sortCols: Seq[String]): Unit = {
@@ -289,55 +242,14 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     require(tableName.matches("[A-Za-z0-9_]+"), s"unsafe table name: $tableName")
     require(frame.columns.contains("series_id"),
       s"bucketed mirror $tableName: frame must carry series_id (the bucket key)")
-    val tableRoot = new Path(s"$basePath/bucketed/$tableName")
-    val versions = subdirs(tableRoot).filter(_.startsWith("v")).flatMap(_.stripPrefix("v").toLongOption)
-    val next = (versions.sorted.lastOption.getOrElse(0L)) + 1L
-    val path = new Path(tableRoot, s"v$next")
-    // The version dir the OUTGOING public table reads from — that is the
-    // one in-flight readers may still be scanning, and NOT necessarily
-    // the highest version on disk (a crashed rebuild leaves an orphan
-    // dir above it). The version parses from the path segment DIRECTLY
-    // under tableRoot — an unanchored /v<digits>/ search could match a
-    // version-like segment of basePath or the table name itself.
-    val qRoot = fs.makeQualified(tableRoot).toString + "/"
-    val prevLive: Option[Long] =
-      if (spark.catalog.tableExists(tableName))
-        spark.table(tableName).inputFiles.headOption
-          .filter(_.startsWith(qRoot))
-          .flatMap { f =>
-            "^v(\\d+)/".r.findFirstMatchIn(f.stripPrefix(qRoot)).map(_.group(1).toLong)
-          }
-      else None
-    frame
-      .write
-      .format("parquet")
-      .mode(SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .option("path", path.toString)
-      .bucketBy(nBuckets, "series_id")
-      .sortBy(sortCols.head, sortCols.tail: _*)
-      .saveAsTable(s"${tableName}__v$next")
-    // Swap the public name to the new version. DROP + RENAME is two
-    // catalog calls, so a crash between them leaves no base-name table —
-    // scanBucketed recovers by resolving the highest __vN entry, which
-    // this write just created, so the mirror stays readable through any
-    // crash point. Stale versioned entries and dirs older than the one
-    // just superseded are then dropped (keep-one grace window).
-    spark.sql(s"DROP TABLE IF EXISTS $tableName")
-    spark.sql(s"ALTER TABLE ${tableName}__v$next RENAME TO $tableName")
-    versionedTables(tableName).filter(_._1 < next).foreach { case (_, t) =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-    }
-    // keep-one grace: retain the previously-live dir; crashed-rebuild
-    // orphans and older superseded dirs go. With no resolvable live
-    // version (crashed rebuild: readers were on the scanBucketed
-    // highest-version fallback), retain the highest old dir instead of
-    // deleting the one those readers are mid-scan on.
-    val keepV = prevLive.orElse(versions.sorted.lastOption)
-    versions.filter(v => !keepV.contains(v)).foreach { v =>
-      fs.delete(new Path(tableRoot, s"v$v"), true)
-    }
+    IndexStore.write(bucketedPath(tableName), nBuckets,
+      Seq(IndexStore.Table(MirrorTable, frame, Seq("series_id"), sortCols)),
+      spark.range(0, 1, 1, 1).select(lit(nBuckets).as("n_buckets")))
   }
+
+  private def bucketedPath(name: String) = s"$basePath/bucketed/$name"
+  /** The one table of a bucketed mirror's store. */
+  private val MirrorTable = "rows"
 
   /** Z-ordered mirror of series_values, clustered on `(series_id,
     * valid_time)` via [[graft.operators.Layout.zOrdered]] — the
@@ -396,7 +308,7 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
   /** The z-ordered mirror as a DataFrame: the files its current
     * manifest lists. */
   def scanZOrdered(name: String): DataFrame =
-    scanTable(zMirror(name), zMirrorFiles(name), Schema.seriesValues)
+    zMirror(name).scan(zMirrorFiles(name), Schema.seriesValues)
 
   /** The store version the mirror reflects, fixed by its commit. */
   def zMirrorBaseVersion(name: String): Long =
@@ -431,38 +343,24 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
           "rewritten or dropped since (compaction/TTL) — the file-diff tail " +
           "would duplicate or lose their rows; rebuild the mirror")
     val baseSet = baseFiles.toSet
-    val mirror = scanTable(zMirror(name), files, Schema.seriesValues)
+    val mirror = zMirror(name).scan(files, Schema.seriesValues)
     mirror.unionByName(
-      scanFileList(headFiles.filterNot(baseSet))
+      values.scan(headFiles.filterNot(baseSet), ValuesScan)
         .select(mirror.columns.map(col): _*))
   }
 
-  private def versionedTables(tableName: String): Seq[(Long, String)] =
-    spark.catalog.listTables().collect().toSeq
-      .map(_.name)
-      .filter(_.startsWith(s"${tableName}__v"))
-      .flatMap { t =>
-        scala.util.Try(t.stripPrefix(s"${tableName}__v").toLong).toOption.map(_ -> t)
-      }
-      .sortBy(_._1)
-
   /** The bucketed mirror as a DataFrame (bucket partitioning visible to
-    * the planner). Falls back to the newest versioned entry when the
-    * public name is missing (a rebuild crashed between its DROP and
-    * RENAME — the versioned table it wrote is complete). */
+    * the planner), from its store's current manifest. A mirror never
+    * built fails loudly ([[IndexStore.load]]). */
   def scanBucketed(tableName: String): DataFrame =
-    if (spark.catalog.tableExists(tableName)) spark.table(tableName)
-    else versionedTables(tableName).lastOption match {
-      case Some((_, t)) => spark.table(t)
-      case None => spark.table(tableName) // surface the standard error
-    }
+    IndexStore.load(spark, bucketedPath(tableName)).tables(MirrorTable)
 
   /** run_series with the ReplacingMergeTree(first_seen) + FINAL collapse
     * applied at read time (timedb/client.py:207-212,
     * ch_create_tables.sql:58-65): latest first_seen per (series_id,
     * run_id). */
   def scanRunSeries(): DataFrame =
-    scanTable(runSeries, runSeries.currentFiles(), Schema.runSeries)
+    runSeries.scan(runSeries.currentFiles(), Schema.runSeries)
       .groupBy("series_id", "run_id")
       .agg(max("first_seen").as("first_seen"))
 
@@ -504,14 +402,15 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
   }
 
   /** Garbage collection over every table the store owns — both tables
-    * and each z-ordered mirror — see [[ManifestTable.vacuum]] for the
+    * and each z-ordered and bucketed mirror — see [[ManifestTable.vacuum]] for the
     * reader-grace (`keepManifests`) and in-flight-write (`minAgeMillis`)
     * guards. Returns the deleted data files' paths relative to the
     * store's base path. */
   def vacuum(keepManifests: Int = 2,
       minAgeMillis: Long = 15L * 60 * 1000): Seq[String] = {
     val tables = Seq("series_values" -> values, "run_series" -> runSeries) ++
-      subdirs(new Path(basePath, "zordered")).map(n => s"zordered/$n" -> zMirror(n))
+      Seq("zordered", "bucketed").flatMap(d =>
+        subdirs(new Path(basePath, d)).map(n => s"$d/$n" -> new ManifestTable(spark, s"$basePath/$d/$n")))
     tables.flatMap { case (dir, t) => t.vacuum(keepManifests, minAgeMillis).map(f => s"$dir/$f") }
   }
 

@@ -2,23 +2,29 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.catalyst.TableIdentifier
-import org.apache.spark.sql.execution.datasources.BucketingUtils
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{BucketingUtils, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Similarity, TextAnalysis}
+import graft.sources.IndexStore
 
 /** On-disk layout pins for the six stored indexes (the bucketed ppjoin,
   * LSH near-dup and BM25 epoch stores; the levelled BM25 segment, IVF
-  * and IVFPQ stores): directory trees, partition-directory names,
-  * each catalog table's bucket spec, one file per bucket, and the meta
-  * row's columns. A store written by one version of the code must
-  * stay readable by the next, so any change here is a format change. */
+  * and IVFPQ stores): directory trees, partition-directory names, each
+  * loaded table's bucket spec, one file per bucket with every row in
+  * its file's bucket, and the meta row's columns. A store written by
+  * one version of the code must stay readable by the next, so any
+  * change here is a format change. */
 class IndexStoreSpec extends SparkSpec {
   import spark.implicits._
 
   /** The meta row's layout column, appended after the family's own. */
   private val layoutCols = Seq("bucket_cols")
+
+  /** The directories of a bucketed store beside its tables'. */
+  private val storeDirs = Seq("_manifests", "_staging")
 
   /** Every directory under `root`, relative and sorted. */
   private def dirs(root: String): Seq[String] = {
@@ -30,17 +36,25 @@ class IndexStoreSpec extends SparkSpec {
     finally walk.close()
   }
 
-  private def bucketSpec(table: String): Option[(Int, Seq[String], Seq[String])] =
-    spark.sessionState.catalog.getTableMetadata(TableIdentifier(table)).bucketSpec
-      .map(b => (b.numBuckets, b.bucketColumnNames, b.sortColumnNames))
+  /** The bucket spec of a loaded scan, from its relation: no catalog
+    * holds one. */
+  private def bucketSpec(scan: DataFrame): Option[(Int, Seq[String], Seq[String])] =
+    scan.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.bucketSpec
+    }.get.map(b => (b.numBuckets, b.bucketColumnNames, b.sortColumnNames))
 
-  /** Bucket ids of the data files in `dir`; one file per bucket means
-    * no id repeats. */
-  private def assertOneFilePerBucket(dir: String): Unit = {
-    val ids = new java.io.File(dir).listFiles().map(_.getName)
-      .filter(_.endsWith(".parquet")).toSeq.map(BucketingUtils.getBucketId)
+  /** The loaded bucketed `scan` holds one file per bucket, and every row
+    * sits in the file of its bucket: `pmod(hash(keys), n)`, the routing
+    * of Spark's bucketed writes, equals the id in its file's name. */
+  private def assertOneFilePerBucket(scan: DataFrame): Unit = {
+    val Some((n, keys, _)) = bucketSpec(scan)
+    val ids = scan.inputFiles.toSeq.map(f => BucketingUtils.getBucketId(new Path(f).getName))
     assert(ids.nonEmpty && ids.forall(_.nonEmpty) && ids.distinct.size == ids.size,
-      s"$dir: expected one file per bucket, got bucket ids $ids")
+      s"expected one file per bucket, got bucket ids $ids")
+    val misrouted = scan.select(pmod(hash(keys.map(col): _*), lit(n)).as("b"),
+        input_file_name().as("f")).collect()
+      .filterNot(r => BucketingUtils.getBucketId(new Path(r.getString(1)).getName).contains(r.getInt(0)))
+    assert(misrouted.length == 0, s"rows outside their file's bucket: ${misrouted.take(3).toSeq}")
   }
 
   private def docs = {
@@ -61,14 +75,15 @@ class IndexStoreSpec extends SparkSpec {
   test("bucketed ppjoin store: df/sets bucketed by their join keys, postings and meta plain") {
     val root = tmp("layout_ppjoin")
     Dedup.storePpJoinIndexBucketed(
-      Dedup.ppJoinIndex(docs, n = 1, threshold = 0.5), "layout_ppjoin", root, nBuckets = 4)
-    assert(dirs(root) == Seq("df", "meta", "postings", "sets"))
-    assert(bucketSpec("layout_ppjoin_df") == Some((4, Seq("sh"), Seq("sh"))))
-    assert(bucketSpec("layout_ppjoin_sets") == Some((4, Seq("doc_id"), Seq("doc_id"))))
-    assert(bucketSpec("layout_ppjoin_postings").isEmpty)
-    assert(bucketSpec("layout_ppjoin_meta").isEmpty)
-    Seq("df", "sets").foreach(t => assertOneFilePerBucket(s"$root/$t"))
-    assert(spark.read.parquet(s"$root/meta").columns.toSeq ==
+      Dedup.ppJoinIndex(docs, n = 1, threshold = 0.5), root, nBuckets = 4)
+    assert(dirs(root) == storeDirs ++ Seq("df", "meta", "postings", "sets"))
+    val store = IndexStore.load(spark, root)
+    assert(store.tables.keySet == Set("df", "sets", "postings"))
+    assert(bucketSpec(store.tables("df")) == Some((4, Seq("sh"), Seq("sh"))))
+    assert(bucketSpec(store.tables("sets")) == Some((4, Seq("doc_id"), Seq("doc_id"))))
+    assert(bucketSpec(store.tables("postings")).isEmpty)
+    Seq("df", "sets").foreach(t => assertOneFilePerBucket(store.tables(t)))
+    assert(store.meta.schema.fieldNames.toSeq ==
       Seq("n", "threshold", "id_col", "n_buckets") ++ layoutCols)
   }
 
@@ -77,27 +92,39 @@ class IndexStoreSpec extends SparkSpec {
     Dedup.storeNearDupIndexBucketed(
       Dedup.nearDupIndex(docs, n = 2, numHashes = 8, bands = 4),
       n = 2, numHashes = 8, bands = 4, maxBucket = Dedup.DefaultMaxBucket,
-      tablePrefix = "layout_neardup", path = root, nBuckets = 4)
-    assert(dirs(root) == Seq("meta", "postings"))
-    assert(bucketSpec("layout_neardup_postings") ==
+      path = root, nBuckets = 4)
+    assert(dirs(root) == storeDirs ++ Seq("meta", "postings"))
+    val store = IndexStore.load(spark, root)
+    assert(store.tables.keySet == Set("postings"))
+    assert(bucketSpec(store.tables("postings")) ==
       Some((4, Seq("band", "band_key"), Seq("band", "band_key"))))
-    assert(bucketSpec("layout_neardup_meta").isEmpty)
-    assertOneFilePerBucket(s"$root/postings")
-    assert(spark.read.parquet(s"$root/meta").columns.toSeq ==
+    assertOneFilePerBucket(store.tables("postings"))
+    assert(store.meta.schema.fieldNames.toSeq ==
       Seq("n", "num_hashes", "bands", "max_bucket", "n_buckets", "id_col") ++ layoutCols)
   }
 
   test("bucketed BM25 store: tf bucketed by doc id, stats and meta plain") {
     val root = tmp("layout_bm25")
-    TextAnalysis.storeBm25IndexBucketed(
-      TextAnalysis.bm25Index(docs), "layout_bm25", root, nBuckets = 4)
-    assert(dirs(root) == Seq("meta", "stats", "tf"))
-    assert(bucketSpec("layout_bm25_tf") == Some((4, Seq("doc_id"), Seq("doc_id"))))
-    assert(bucketSpec("layout_bm25_stats").isEmpty)
-    assert(bucketSpec("layout_bm25_meta").isEmpty)
-    assertOneFilePerBucket(s"$root/tf")
-    assert(spark.read.parquet(s"$root/meta").columns.toSeq ==
-      Seq("id_col", "n_buckets") ++ layoutCols)
+    TextAnalysis.storeBm25IndexBucketed(TextAnalysis.bm25Index(docs), root, nBuckets = 4)
+    assert(dirs(root) == storeDirs ++ Seq("meta", "stats", "tf"))
+    val store = IndexStore.load(spark, root)
+    assert(store.tables.keySet == Set("tf", "stats"))
+    assert(bucketSpec(store.tables("tf")) == Some((4, Seq("doc_id"), Seq("doc_id"))))
+    assert(bucketSpec(store.tables("stats")).isEmpty)
+    assertOneFilePerBucket(store.tables("tf"))
+    assert(store.meta.schema.fieldNames.toSeq == Seq("id_col", "n_buckets") ++ layoutCols)
+  }
+
+  test("loading a directory with no manifest fails with the rebuild message") {
+    // a store written before bucketed stores committed through a manifest:
+    // plain table directories and a meta table, no _manifests
+    val root = tmp("layout_premanifest")
+    docs.write.parquet(s"$root/tf")
+    Seq(("doc_id", 4)).toDF("id_col", "n_buckets").write.parquet(s"$root/meta")
+    val e = intercept[IllegalStateException](IndexStore.load(spark, root))
+    assert(e.getMessage.contains("rebuild it"), e.getMessage)
+    // a load never writes: the directory is as it was
+    assert(dirs(root) == Seq("meta", "tf"))
   }
 
   test("segmented BM25 store: segment=<id> leaves per tree, tombstones under del") {

@@ -70,8 +70,8 @@ class ManifestCommitProtocolSpec extends AnyFunSuite {
     val reported = ManifestCommitProtocol.committedFiles(staging)
     assert(reported.map(_._1) == wonFiles.map(f => new Path(f).getName))
     assert(reported.map(_._2) == Seq(
-      "retention=short/valid_month=202403/part-00003-job1.c000.zstd.parquet",
-      "retention=short/valid_month=202404/part-00003-job1.c000.zstd.parquet"))
+      "retention=short/valid_month=202403/part-00003-job1_00003.c000.zstd.parquet",
+      "retention=short/valid_month=202404/part-00003-job1_00003.c000.zstd.parquet"))
     wonFiles.foreach(f => assert(fs.exists(new Path(f))))
     // the record is taken once
     intercept[IllegalStateException](ManifestCommitProtocol.committedFiles(staging))

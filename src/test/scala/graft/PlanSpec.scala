@@ -64,11 +64,7 @@ class PlanSpec extends SparkSpec {
       val plainJoined = plain.join(
         plain.groupBy(col("series_id")).agg(count(lit(1)).as("n_rows")), "series_id")
       assert(joined.count() == plainJoined.count())
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS planspec_bk")
-      spark.sql("DROP TABLE IF EXISTS planspec_agg_bk")
-      db.delete()
-    }
+    } finally db.delete()
   }
 
   test("latest read is a partial+final aggregate (map-side combine before shuffle)") {
@@ -519,13 +515,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("bucketed BM25 store serves the related-doc scoring with fewer exchanges") {
-    // r18: the tf table persists bucketBy(doc_id), so the loaded scan
+    // r18: the tf table persists bucketed by doc_id, so the loaded scan
     // exposes HashPartitioning(doc_id) and the scoring aggregate —
     // grouping keys include the doc id — plans exchange-free from the
     // parquet files themselves; a plain parquet round trip of the
     // SAME frame loses the clustering and re-exchanges. Values must
     // be identical (the storage form cannot change the answer), and a
-    // catalog re-attach (the new-session path) must serve the same.
+    // load by path in a new session must serve the same.
     val dir = java.nio.file.Files.createTempDirectory("bm25_bucketed").toString
     val docs = Seq(
       (0L, "hash join scan filter"), (1L, "hash join merge"),
@@ -533,10 +529,9 @@ class PlanSpec extends SparkSpec {
       (4L, "hash partition shuffle"), (5L, "join scan hash probe"))
       .toDF("doc_id", "text")
     val tf = graft.operators.TextAnalysis.bm25Index(docs)
-    graft.operators.TextAnalysis.storeBm25IndexBucketed(
-      tf, "bm25spec", s"$dir/store", nBuckets = 4)
+    graft.operators.TextAnalysis.storeBm25IndexBucketed(tf, s"$dir/store", nBuckets = 4)
     val (loadedTf, loadedStats) =
-      graft.operators.TextAnalysis.loadBm25IndexBucketed(spark, "bm25spec")
+      graft.operators.TextAnalysis.loadBm25IndexBucketed(spark, s"$dir/store")
     val plainTf = spark.read.parquet(s"$dir/store/tf")
     def serve(t: org.apache.spark.sql.DataFrame) =
       graft.operators.TextAnalysis.bm25RelatedTopKFrom(
@@ -550,19 +545,14 @@ class PlanSpec extends SparkSpec {
     val got = serve(loadedTf).orderBy("query_id", "rank").collect().toSeq
     val expect = serve(plainTf).orderBy("query_id", "rank").collect().toSeq
     assert(got == expect && got.nonEmpty)
-    // new-session re-attach: drop the catalog entries (metadata only —
-    // the files and their bucketed layout persist), re-register from
-    // the store's own meta row, serve identically
-    Seq("tf", "stats", "meta").foreach(sfx =>
-      spark.sql(s"DROP TABLE IF EXISTS bm25spec_$sfx"))
-    graft.sources.IndexStore.register(
-      spark, "bm25spec", s"$dir/store")
+    // new session: load by path — the bucket spec comes from the
+    // store's own meta row — and serve identically
     val (reTf, reStats) =
-      graft.operators.TextAnalysis.loadBm25IndexBucketed(spark, "bm25spec")
+      graft.operators.TextAnalysis.loadBm25IndexBucketed(spark.newSession(), s"$dir/store")
     val reServed = graft.operators.TextAnalysis.bm25RelatedTopKFrom(
       reTf, queryIds = Seq(0L, 1L), k = 3, statsOpt = Some(reStats))
     assert(exchanges(planOf(reServed)) == bucketed,
-      "the re-attached catalog must restore the bucketed plan")
+      "the store loaded in a new session must restore the bucketed plan")
     assert(reServed.orderBy("query_id", "rank").collect().toSeq == expect)
   }
 
@@ -602,14 +592,14 @@ class PlanSpec extends SparkSpec {
   }
 
   test("BUCKETED stored ppjoin index serves the screen with no corpus-side exchange") {
-    // r18: storePpJoinIndexBucketed writes the df vocabulary bucketBy sh
-    // and the sets bucketBy id — the store-durable form of the r17
+    // r18: storePpJoinIndexBucketed writes the df vocabulary bucketed by
+    // sh and the sets by id — the store-durable form of the r17
     // co-location. A screen over the LOADED index must (a) engage the
     // bucketed scans (the planner sees HashPartitioning from the files
     // themselves), (b) shuffle strictly less than the same screen over
     // the plain in-memory index (the removed exchanges are exactly the
     // corpus-side re-distributions), and (c) return the identical
-    // answer across the parquet + catalog round trip.
+    // answer across the parquet round trip.
     val rnd = new scala.util.Random(12)
     val docs = (0 until 80).map { i =>
       (i.toLong, (0 until 6 + rnd.nextInt(8)).map(_ => s"w${rnd.nextInt(30)}").mkString(" "))
@@ -618,9 +608,8 @@ class PlanSpec extends SparkSpec {
     val corpus = docs.filter(col("doc_id") % 4 =!= 0)
     val idx = graft.operators.Dedup.ppJoinIndex(corpus, n = 1, threshold = 0.5)
     val root = java.nio.file.Files.createTempDirectory("ppjoin_bt").toString
-    graft.operators.Dedup.storePpJoinIndexBucketed(idx, "ppjoin_bt_test", root,
-      nBuckets = 4)
-    val loaded = graft.operators.Dedup.loadPpJoinIndexBucketed(spark, "ppjoin_bt_test")
+    graft.operators.Dedup.storePpJoinIndexBucketed(idx, root, nBuckets = 4)
+    val loaded = graft.operators.Dedup.loadPpJoinIndexBucketed(spark, root)
     // params travel with the store
     assert(loaded.n == 1 && loaded.threshold == 0.5 && loaded.idCol == "doc_id")
     val screen = graft.operators.Dedup.ppJoinAgainst(batch, loaded)
@@ -637,15 +626,10 @@ class PlanSpec extends SparkSpec {
     val got = screen.orderBy("new_id", "seen_id").collect().toSeq
     assert(got == expect, s"round-trip answer changed: $got vs $expect")
     assert(got.nonEmpty, "degenerate pin: the screen found no pairs")
-    // cross-SESSION re-attach (r18): the in-memory catalog entry dies
-    // with its session while the files persist — dropping the tables
-    // simulates a fresh session, and IndexStore.register must
-    // re-declare the bucket spec from the store's own meta row so the
+    // cross-SESSION load (r18): a fresh session loads the store by path,
+    // declaring the bucket spec from the store's own meta row, so the
     // re-attached screen plans AND answers exactly as the writer's
-    Seq("df", "sets", "postings", "meta").foreach(s =>
-      spark.sql(s"DROP TABLE ppjoin_bt_test_$s"))
-    graft.sources.IndexStore.register(spark, "ppjoin_bt_test", root)
-    val reattached = graft.operators.Dedup.loadPpJoinIndexBucketed(spark, "ppjoin_bt_test")
+    val reattached = graft.operators.Dedup.loadPpJoinIndexBucketed(spark.newSession(), root)
     assert(reattached.n == 1 && reattached.threshold == 0.5)
     val reScreen = graft.operators.Dedup.ppJoinAgainst(batch, reattached)
     val rePlan = planOf(reScreen)
@@ -654,13 +638,11 @@ class PlanSpec extends SparkSpec {
     assert(exchanges(rePlan) < plain,
       s"re-attached screen must shuffle less: ${exchanges(rePlan)} vs $plain")
     assert(reScreen.orderBy("new_id", "seen_id").collect().toSeq == expect)
-    // idempotent in the writing session: existing tables untouched
-    graft.sources.IndexStore.register(spark, "ppjoin_bt_test", root)
   }
 
   test("BUCKETED stored neardup (LSH) index: layout parity, identical screens") {
     // r19 (verdict #8): the minhash-band epoch index joins the
-    // ppjoin/BM25 stores in persisting bucketBy its join key. The
+    // ppjoin/BM25 stores in persisting bucketed by its join key. The
     // incremental screen BROADCASTS the batch side, so the serve plan
     // has no corpus exchange to remove — the pin is therefore
     // (a) answer identity across the store round trip and the
@@ -678,8 +660,8 @@ class PlanSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("neardup_bt").toString
     graft.operators.Dedup.storeNearDupIndexBucketed(idx, n = 2, numHashes = 16,
       bands = 8, maxBucket = graft.operators.Dedup.DefaultMaxBucket,
-      tablePrefix = "neardup_bt_test", path = root, nBuckets = 4)
-    val loaded = graft.operators.Dedup.loadNearDupIndexBucketed(spark, "neardup_bt_test")
+      path = root, nBuckets = 4)
+    val loaded = graft.operators.Dedup.loadNearDupIndexBucketed(spark, root)
     val expect = graft.operators.Dedup.incrementalNearDupAgainst(
         batch, idx, n = 2, numHashes = 16, bands = 8)
       .orderBy("new_id", "seen_id").collect().toSeq
@@ -698,10 +680,8 @@ class PlanSpec extends SparkSpec {
       s"bucket-keyed aggregate over the loaded store must not shuffle:\n$aggPlan")
     assert(aggPlan.contains("SelectedBucketsCount"),
       s"the aggregate must engage the bucketed scan:\n$aggPlan")
-    // cross-session re-attach from the store's own meta
-    Seq("postings", "meta").foreach(s => spark.sql(s"DROP TABLE neardup_bt_test_$s"))
-    graft.sources.IndexStore.register(spark, "neardup_bt_test", root)
-    val reattached = graft.operators.Dedup.loadNearDupIndexBucketed(spark, "neardup_bt_test")
+    // cross-session load by path, from the store's own meta
+    val reattached = graft.operators.Dedup.loadNearDupIndexBucketed(spark.newSession(), root)
     assert(graft.operators.Dedup.incrementalNearDupAgainst(
         batch, reattached, n = 2, numHashes = 16, bands = 8)
       .orderBy("new_id", "seen_id").collect().toSeq == expect)
@@ -710,8 +690,6 @@ class PlanSpec extends SparkSpec {
     assert(!rePlan.contains("Exchange hashpartitioning") &&
       rePlan.contains("SelectedBucketsCount"),
       s"re-attached store must keep the bucketed layout:\n$rePlan")
-    // idempotent in the writing session
-    graft.sources.IndexStore.register(spark, "neardup_bt_test", root)
   }
 
   test("segmented BM25 serve pushes the query vocabulary into the store scans") {

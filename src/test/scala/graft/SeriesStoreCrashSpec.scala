@@ -9,9 +9,10 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 
 import graft.operators.WritePipeline
-import graft.sources.SeriesStore
+import graft.sources.{IndexStore, SeriesStore}
 
-/** Crash-point matrix for every mutation of the series store. Each
+/** Crash-point matrix for every mutation of the series store and of a
+  * bucketed [[IndexStore]] (here under the store's `bucketed/`). Each
   * mutation first runs clean on [[CrashFs]] to count its creates,
   * renames and deletes (n); then, for every k in 1..n, a copy of the
   * same starting store runs it with the k-th of those calls (and every
@@ -42,16 +43,32 @@ class SeriesStoreCrashSpec extends SparkSpec {
   private def runs(runId: Long): DataFrame =
     Seq((1L, runId, kt0), (2L, runId, kt0)).toDF("series_id", "run_id", "first_seen")
 
-  /** Everything a reader of the store can see, as sorted strings. */
-  private def state(base: String): Seq[String] = {
-    val store = new SeriesStore(spark, base)
+  /** A two-table bucketed store: `a` bucketed by `k`, `b` plain. */
+  private def pairStore(s: SeriesStore, v: Int): Unit =
+    IndexStore.write(s.valuesPath.stripSuffix("series_values") + "bucketed/pair", 2, Seq(
+        IndexStore.Table("a", (0 until 6).map(k => (k.toLong, k * v)).toDF("k", "x"), Seq("k")),
+        IndexStore.Table("b", Seq((v, "b")).toDF("v", "tag"))),
+      Seq((v, 2)).toDF("v", "n_buckets"))
+
+  /** Everything a reader of the store at `dir` can see, as sorted strings. */
+  private def state(dir: JPath): Seq[String] = {
+    val store = new SeriesStore(spark, CrashFs.uri(dir.toString))
     def rows(tag: String, df: DataFrame) =
       df.collect().map(r => s"$tag ${r.mkString(",")}").sorted.toSeq
+    val bucketed = dir.resolve("bucketed")
+    val stores =
+      if (!Files.isDirectory(bucketed)) Nil
+      else Files.list(bucketed).iterator().asScala.map(_.getFileName.toString).toSeq.sorted
     rows("values", store.scanValues().drop("valid_month")) ++
       rows("runs", store.scanRunSeries()) ++
       (try rows("zmirror", store.scanZOrdered("z"))
        catch { case e: IllegalArgumentException
-         if e.getMessage.contains("run createZOrderedMirror first") => Seq("zmirror none") })
+         if e.getMessage.contains("run createZOrderedMirror first") => Seq("zmirror none") }) ++
+      stores.flatMap { name =>
+        val loaded = IndexStore.load(spark, CrashFs.uri(bucketed.resolve(name).toString))
+        loaded.tables.toSeq.sortBy(_._1).flatMap { case (t, df) => rows(s"$name/$t", df) } :+
+          s"$name/meta ${loaded.meta.mkString(",")}"
+      }
   }
 
   /** Local files under `dir` that no retained manifest of their table
@@ -64,8 +81,8 @@ class SeriesStoreCrashSpec extends SparkSpec {
         try walk.iterator().asScala.filter(Files.isRegularFile(_)).toSeq finally walk.close()
       }
     val tables = Seq(dir.resolve("series_values"), dir.resolve("run_series")) ++
-      (if (Files.isDirectory(dir.resolve("zordered")))
-         Files.list(dir.resolve("zordered")).iterator().asScala.toSeq else Nil)
+      Seq("zordered", "bucketed").map(dir.resolve).filter(Files.isDirectory(_))
+        .flatMap(d => Files.list(d).iterator().asScala.toSeq)
     val listed = tables.flatMap { t =>
       val manifests = files(t.resolve("_manifests"))
         .filter(_.getFileName.toString.matches("v\\d{8}\\.list"))
@@ -101,14 +118,14 @@ class SeriesStoreCrashSpec extends SparkSpec {
     val seed = new SeriesStore(spark, uriOf(template))
     seed.create()
     setup(seed)
-    val before = state(uriOf(template))
+    val before = state(template)
 
     val clean = Files.createTempDirectory(s"crash_${name}_clean_")
     copyTree(template, clean)
     CrashFs.reset()
     mutate(new SeriesStore(spark, uriOf(clean)))
     val n = CrashFs.mutationCount
-    val after = state(uriOf(clean))
+    val after = state(clean)
     assert(n > 0, s"$name: a clean run made no create/rename/delete")
 
     for (k <- 1L to n) {
@@ -118,17 +135,17 @@ class SeriesStoreCrashSpec extends SparkSpec {
       try mutate(new SeriesStore(spark, uriOf(dir))) catch { case _: Exception => () }
       quiesce()
       CrashFs.disarm()
-      val got = state(uriOf(dir))
+      val got = state(dir)
       assert(got == before || got == after,
         s"$name crashed at call $k of $n answers neither the state before nor after:\n" +
           got.mkString("\n"))
       if (got == before) {
         mutate(new SeriesStore(spark, uriOf(dir)))
-        assert(state(uriOf(dir)) == after, s"$name crashed at call $k: re-run did not reach after")
+        assert(state(dir) == after, s"$name crashed at call $k: re-run did not reach after")
       }
       new SeriesStore(spark, uriOf(dir)).vacuum(minAgeMillis = 0L)
       assert(unlisted(dir).isEmpty, s"$name crashed at call $k: vacuum left ${unlisted(dir)}")
-      assert(state(uriOf(dir)) == after)
+      assert(state(dir) == after)
       FsUtil.deleteRecursively(dir.toFile)
     }
     Seq(template, clean).foreach(d => FsUtil.deleteRecursively(d.toFile))
@@ -182,6 +199,20 @@ class SeriesStoreCrashSpec extends SparkSpec {
     info(s"$n crash points")
   }
 
+  test("crash matrix: bucketed-mirror rebuild") {
+    val n = matrix("bkmirror") { s =>
+      s.appendValues(batch("2024-03-01T00:00:00Z", 3, kt0))
+      s.createBucketedMirror("b", nBuckets = 2)
+      s.appendValues(batch("2024-03-01T03:00:00Z", 3, ts("2024-03-01T01:00:00Z")))
+    }(_.createBucketedMirror("b", nBuckets = 2))
+    info(s"$n crash points")
+  }
+
+  test("crash matrix: IndexStore.write of a two-table store") {
+    val n = matrix("indexstore")(pairStore(_, 1))(pairStore(_, 2))
+    info(s"$n crash points")
+  }
+
   test("a TimeDb.write makes a pinned set of filesystem calls") {
     val local = Files.createTempDirectory("crash_write_")
     val db = new TimeDb(spark, CrashFs.uri(local.toString))
@@ -192,9 +223,10 @@ class SeriesStoreCrashSpec extends SparkSpec {
       knowledgeTime = Some(ts("2024-03-01T01:00:00Z")))
     // per lane: one data file created in the flat staging dir and
     // renamed into place, and one manifest created and renamed; no
-    // attempt tree, merge rename or _SUCCESS marker
-    assert(CrashFs.counts == Map("create" -> 4L, "delete" -> 2L, "exists" -> 10L,
-      "getFileStatus" -> 16L, "listStatus" -> 6L, "mkdirs" -> 8L, "open" -> 2L, "rename" -> 4L))
+    // attempt tree, merge rename or _SUCCESS marker; one listing of
+    // `_manifests` per lane gives the file list and the next version
+    assert(CrashFs.counts == Map("create" -> 4L, "delete" -> 2L, "exists" -> 4L,
+      "getFileStatus" -> 8L, "listStatus" -> 2L, "mkdirs" -> 8L, "open" -> 2L, "rename" -> 4L))
     FsUtil.deleteRecursively(local.toFile)
   }
 
@@ -210,11 +242,9 @@ class SeriesStoreCrashSpec extends SparkSpec {
     db.read(filter).collect() // warm
     CrashFs.reset()
     assert(db.read(filter).collect().length == 3)
-    // the manifest listing and read, the file index over the one pruned
-    // file, and the parquet footer and row read — the same calls as
-    // before the tables shared one commit protocol
-    assert(CrashFs.counts ==
-      Map("exists" -> 2L, "getFileStatus" -> 8L, "listStatus" -> 2L, "open" -> 2L))
+    // the manifest listing and read, one listing of the pruned file's
+    // directory for the file index, and the parquet footer and row read
+    assert(CrashFs.counts == Map("getFileStatus" -> 8L, "listStatus" -> 2L, "open" -> 2L))
     FsUtil.deleteRecursively(local.toFile)
   }
 }

@@ -1316,9 +1316,8 @@ class StreamingSpec extends SparkSpec {
     }
     val idx0 = graft.operators.Dedup.ppJoinIndex(
       corpusDocs.toDF("doc_id", "text"), n = 1, threshold = 0.5)
-    graft.operators.Dedup.storePpJoinIndexBucketed(
-      idx0, "ppjoin_stream_idx", s"$dir/idx", nBuckets = 4)
-    val index = graft.operators.Dedup.loadPpJoinIndexBucketed(spark, "ppjoin_stream_idx")
+    graft.operators.Dedup.storePpJoinIndexBucketed(idx0, s"$dir/idx", nBuckets = 4)
+    val index = graft.operators.Dedup.loadPpJoinIndexBucketed(spark, s"$dir/idx")
     // each incoming doc is a near-copy of one corpus doc (one word
     // appended): Jaccard = |t| / (|t| + 1) >= 6/7, a guaranteed pair
     def probe(i: Long) = (1000L + i, corpusDocs(i.toInt)._2 + " extra")

@@ -57,6 +57,7 @@ class TimeDbSpec extends SparkSpec {
       val expectedRows = db.store.scanValues().count()
       val expectedSum = db.store.scanValues().agg(sum("value")).head().getDouble(0)
       db.store.createZOrderedMirror("tdspec_race", files = 2)
+      db.store.createBucketedMirror("tdspec_race_bk", nBuckets = 2)
       val runsBefore = db.store.scanRunSeries().count()
       val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       @volatile var stop = false
@@ -69,6 +70,9 @@ class TimeDbSpec extends SparkSpec {
             val z = db.store.scanZOrdered("tdspec_race").agg(count(lit(1)), sum("value")).head()
             if (z.getLong(0) != expectedRows || z.getDouble(1) != expectedSum)
               errors.add(s"partial z-mirror: rows=${z.getLong(0)} sum=${z.getDouble(1)}")
+            val b = db.store.scanBucketed("tdspec_race_bk").agg(count(lit(1)), sum("value")).head()
+            if (b.getLong(0) != expectedRows || b.getDouble(1) != expectedSum)
+              errors.add(s"partial bucketed mirror: rows=${b.getLong(0)} sum=${b.getDouble(1)}")
             val runs = db.store.scanRunSeries().count()
             if (runs != runsBefore && runs != runsBefore + 2)
               errors.add(s"partial run_series: $runs runs")
@@ -80,6 +84,7 @@ class TimeDbSpec extends SparkSpec {
         val compacted = db.store.compactPartitions(maxFiles = 2)
         assert(compacted.nonEmpty)
         db.store.createZOrderedMirror("tdspec_race", files = 2)
+        db.store.createBucketedMirror("tdspec_race_bk", nBuckets = 2)
         db.store.appendRunSeries(Seq((7L, 99L, ts("2024-03-02T00:00:00Z")),
           (8L, 99L, ts("2024-03-02T00:00:00Z"))).toDF("series_id", "run_id", "first_seen"))
         Thread.sleep(300) // let the reader also observe the post-commit snapshots
@@ -116,26 +121,24 @@ class TimeDbSpec extends SparkSpec {
       db.write(revision(100), knowledgeTime = Some(ts("2024-03-01T03:00:00Z")))
       val store = db.store
       store.createBucketedMirror("tdspec_bucketed", nBuckets = 4)
-      try {
-        val mirror = store.scanBucketed("tdspec_bucketed")
-        // content identical to the plain scan
-        val plain = store.scanValues().drop("valid_month")
-        assert(mirror.exceptAll(plain).isEmpty && plain.exceptAll(mirror).isEmpty)
-        // the argmax latest-read over the mirror needs NO shuffle; the
-        // same shape over the plain scan does
-        val bucketedPlan = graft.operators.ReadShapes.latest(mirror)
-          .queryExecution.executedPlan.toString
-        assert(!bucketedPlan.contains("Exchange hashpartitioning"),
-          s"bucketed latest-read should be exchange-free:\n$bucketedPlan")
-        val plainPlan = graft.operators.ReadShapes.latest(plain)
-          .queryExecution.executedPlan.toString
-        assert(plainPlan.contains("Exchange hashpartitioning"))
-        // result equivalence on the mirror
-        assert(graft.operators.ReadShapes.latest(mirror)
-          .agg(sum("value")).head().getDouble(0) ==
-          graft.operators.ReadShapes.latest(plain)
-            .agg(sum("value")).head().getDouble(0))
-      } finally spark.sql("DROP TABLE IF EXISTS tdspec_bucketed")
+      val mirror = store.scanBucketed("tdspec_bucketed")
+      // content identical to the plain scan
+      val plain = store.scanValues().drop("valid_month")
+      assert(mirror.exceptAll(plain).isEmpty && plain.exceptAll(mirror).isEmpty)
+      // the argmax latest-read over the mirror needs NO shuffle; the
+      // same shape over the plain scan does
+      val bucketedPlan = graft.operators.ReadShapes.latest(mirror)
+        .queryExecution.executedPlan.toString
+      assert(!bucketedPlan.contains("Exchange hashpartitioning"),
+        s"bucketed latest-read should be exchange-free:\n$bucketedPlan")
+      val plainPlan = graft.operators.ReadShapes.latest(plain)
+        .queryExecution.executedPlan.toString
+      assert(plainPlan.contains("Exchange hashpartitioning"))
+      // result equivalence on the mirror
+      assert(graft.operators.ReadShapes.latest(mirror)
+        .agg(sum("value")).head().getDouble(0) ==
+        graft.operators.ReadShapes.latest(plain)
+          .agg(sum("value")).head().getDouble(0))
     }
   }
 
@@ -248,13 +251,14 @@ class TimeDbSpec extends SparkSpec {
       val store = db.store
       store.createZOrderedMirror("tdspec_gone", files = 2)
       store.createBucketedMirror("tdspec_gone_bk", nBuckets = 2)
-      assert(spark.catalog.tableExists("tdspec_gone_bk"))
+      val base = store.valuesPath.stripSuffix("/series_values")
+      assert(new java.io.File(s"$base/bucketed/tdspec_gone_bk/_manifests").isDirectory)
       db.delete()
       db.create()
       val e = intercept[IllegalArgumentException](store.scanZOrdered("tdspec_gone"))
       assert(e.getMessage.contains("run createZOrderedMirror first"))
-      assert(!spark.catalog.listTables().collect().exists(_.name.startsWith("tdspec_gone_bk")))
-      val base = store.valuesPath.stripSuffix("/series_values")
+      val bk = intercept[IllegalStateException](store.scanBucketed("tdspec_gone_bk"))
+      assert(bk.getMessage.contains("createBucketedMirror"), bk.getMessage)
       assert(new java.io.File(base).list().toSet == Set("series_values", "run_series"))
     }
   }
@@ -300,6 +304,16 @@ class TimeDbSpec extends SparkSpec {
       assert(jobsDuring { db.store.scanRunSeries(); () } == 0)
       val jobs = jobsDuring { assert(db.readRunSeries(1L).length == 40) }
       assert(jobs <= 2, s"readRunSeries ran $jobs jobs")
+      // series_values too: 40 one-file appends, scanned with no job
+      val kt = ts("2024-03-01T00:00:00Z")
+      (1 to 40).foreach { r =>
+        db.store.appendValues(graft.operators.WritePipeline.stamp(
+          Seq((1L, new java.sql.Timestamp(kt.getTime + 3600000L * r), r.toDouble))
+            .toDF("series_id", "valid_time", "value"),
+          Some("short"), Some(kt), now = kt, runId = r.toLong), oneTask = true)
+      }
+      assert(db.store.scanValues().inputFiles.length == 40)
+      assert(jobsDuring { db.store.scanValues(); () } == 0)
       db.write(revision(1))
       db.store.createZOrderedMirror("tdspec_zscan", files = 2)
       assert(jobsDuring { db.store.scanZOrdered("tdspec_zscan"); () } == 0)
