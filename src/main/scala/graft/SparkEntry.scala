@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators._
 import graft.functions.Portable
+import graft.sources.IndexStore
 
 /** Driver contract (SURVEY.md §5.3): one named query per implemented
   * operator from SURVEY.md §2, each with a DuckDB-runnable ANSI oracle
@@ -258,52 +259,36 @@ object SparkEntry {
   private val bm25DeletedOracleSql: String = bm25RelatedOracleSqlFor(
     s"WHERE doc_id NOT IN (${bm25DeletedIds.mkString(", ")})")
 
-  /** Memoized SEGMENTED BM25 store per (session, data dir) — the
+  /** Memoized SEGMENTED BM25 stores per (session, data dir) — the
     * incremental text index `x_text_bm25_incremental` serves from:
     * the corpus lands in TWO immutable segments (doc_id % 3 == 0,
     * then the rest) through
-    * [[graft.operators.TextAnalysis.bm25AppendSegment]], so the serve
+    * [[graft.operators.TextAnalysis.bm25AppendSegment]], each ONE
+    * manifest commit of all three trees, read back from the manifest
+    * ([[graft.operators.TextAnalysis.loadBm25Segments]]), so the serve
     * must merge df and corpus stats across segments at query time to
-    * match the whole-corpus oracle. */
-  private val segmentedBm25Memo = buildMemo[(DataFrame, DataFrame, DataFrame)]()
+    * match the whole-corpus oracle. The `deleted` store, which
+    * `x_text_bm25_deleted` serves from, is the same build at its own
+    * path (tombstones mutate the serve-visible folds, so the stores
+    * cannot share) plus tombstone segment 2: [[bm25DeletedIds]] landed
+    * by [[graft.operators.TextAnalysis.bm25DeleteDocs]] (del-id list +
+    * negative dictionary/stats rows, one more manifest commit). Its
+    * serve must answer exactly like a rebuild on the surviving docs. */
+  private val segmentedBm25Memos =
+    Seq(false, true).map(_ -> buildMemo[(DataFrame, DataFrame, DataFrame, Option[DataFrame])]()).toMap
 
-  private def segmentedBm25Store(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
+  private def segmentedBm25Store(s: SparkSession, dir: String, deleted: Boolean)
+      : (DataFrame, DataFrame, DataFrame, Option[DataFrame]) =
     scratchLock.synchronized {
-      segmentedBm25Memo.getOrElseUpdate((s, dir), {
+      segmentedBm25Memos(deleted).getOrElseUpdate((s, dir), {
         val docs = Tables.documents(s, dir)
-        val path = scratchPath("graft_bm25_segments", dir)
+        val path = scratchPath(if (deleted) "graft_bm25_segdel" else "graft_bm25_segments", dir)
         TextAnalysis.bm25AppendSegment(
           docs.filter(pmod(col("doc_id"), lit(3)) === 0), path, segmentId = 0L)
         TextAnalysis.bm25AppendSegment(
           docs.filter(pmod(col("doc_id"), lit(3)) =!= 0), path, segmentId = 1L)
-        (s.read.parquet(s"$path/tf"), s.read.parquet(s"$path/df"),
-          s.read.parquet(s"$path/meta"))
-      })
-    }
-
-  /** Memoized TOMBSTONED segmented BM25 store per (session, data
-    * dir) — `x_text_bm25_deleted` serves from it: the same two-segment
-    * build as [[segmentedBm25Store]] (its own path — tombstones mutate
-    * the serve-visible folds, so the stores cannot share), then
-    * [[graft.operators.TextAnalysis.bm25DeleteDocs]] lands
-    * [[bm25DeletedIds]] as tombstone segment 2 (del-id list + negative
-    * dictionary/stats rows). The serve must answer exactly like a
-    * rebuild on the surviving docs. */
-  private val segmentedBm25DelMemo = buildMemo[(DataFrame, DataFrame, DataFrame, DataFrame)]()
-
-  private def segmentedBm25DeletedStore(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    scratchLock.synchronized {
-      segmentedBm25DelMemo.getOrElseUpdate((s, dir), {
-        val docs = Tables.documents(s, dir)
-        val path = scratchPath("graft_bm25_segdel", dir)
-        TextAnalysis.bm25AppendSegment(
-          docs.filter(pmod(col("doc_id"), lit(3)) === 0), path, segmentId = 0L)
-        TextAnalysis.bm25AppendSegment(
-          docs.filter(pmod(col("doc_id"), lit(3)) =!= 0), path, segmentId = 1L)
-        TextAnalysis.bm25DeleteDocs(s, path, bm25DeletedIds, segmentId = 2L)
-        (s.read.parquet(s"$path/tf"), s.read.parquet(s"$path/df"),
-          s.read.parquet(s"$path/meta"), s.read.parquet(s"$path/del"))
+        if (deleted) TextAnalysis.bm25DeleteDocs(s, path, bm25DeletedIds, segmentId = 2L)
+        TextAnalysis.loadBm25Segments(s, path)
       })
     }
 
@@ -1051,6 +1036,13 @@ object SparkEntry {
       })
     }
 
+  /** The vec ids `x_ann_deleted` tombstones out of the appended IVF
+    * store — includes query vec 5, which must vanish as a CANDIDATE
+    * for the other queries (query vectors are external to the store,
+    * so 5 still queries; the text-side twin covers the
+    * query-from-the-store case). */
+  private val annDeletedIds: Seq[Long] = Seq(5L, 9L, 18L, 27L)
+
   /** Memoized APPENDED IVF store per (session, data dir) — the
     * incremental-maintenance lifecycle `x_ann_incremental` serves
     * from: centroids train on the RESIDENT three-quarter slice
@@ -1058,12 +1050,19 @@ object SparkEntry {
     * [[graft.operators.Similarity.ivfAppend]] as the epoch build
     * (batch_id = 0); the held-out quarter then arrives as a later
     * batch (batch_id = 1), ASSIGNED against the frozen codebook —
-    * never retrained on — and appended as new files under the
-    * existing cell directories. Build-once/serve-many like every
-    * stored artifact here. */
-  private val appendedIvfMemo = buildMemo[(DataFrame, DataFrame)]()
+    * never retrained on — and committed as new files under the
+    * existing cell directories, each batch one manifest commit; the
+    * corpus is read back from the manifest
+    * ([[graft.sources.IndexStore.levels]]). Beside it,
+    * [[graft.operators.Similarity.ivfDelete]] lands [[annDeletedIds]]
+    * in the SIBLING tombstone store (its own manifest, invisible to
+    * corpus reads), so `x_ann_incremental` serves the corpus untouched
+    * while `x_ann_deleted` serves it through the tombstone anti-join.
+    * Build-once/serve-many like every stored artifact here. Returns
+    * (centroids, corpus, tombstones). */
+  private val appendedIvfMemo = buildMemo[(DataFrame, DataFrame, DataFrame)]()
 
-  private def appendedIvfIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+  private def appendedIvfIndex(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
     scratchLock.synchronized {
       appendedIvfMemo.getOrElseUpdate((s, dir), {
         val emb = Tables.embeddings(s, dir)
@@ -1074,37 +1073,11 @@ object SparkEntry {
         cent.write.mode("overwrite").parquet(s"$base/centroids")
         Similarity.ivfAppend(resident, cent, s"$base/corpus", batchId = 0L)
         Similarity.ivfAppend(batch, cent, s"$base/corpus", batchId = 1L)
-        (s.read.parquet(s"$base/centroids"), s.read.parquet(s"$base/corpus"))
-      })
-    }
-
-  /** The vec ids `x_ann_deleted` tombstones out of the appended IVF
-    * store — includes query vec 5, which must vanish as a CANDIDATE
-    * for the other queries (query vectors are external to the store,
-    * so 5 still queries; the text-side twin covers the
-    * query-from-the-store case). */
-  private val annDeletedIds: Seq[Long] = Seq(5L, 9L, 18L, 27L)
-
-  /** Memoized tombstone tree for [[appendedIvfIndex]]'s store — the
-    * del tree is a SIBLING of the corpus path
-    * ([[graft.operators.Similarity.ivfDelete]]), invisible to corpus
-    * reads, so `x_ann_incremental` shares the store untouched while
-    * `x_ann_deleted` serves the same corpus through the tombstone
-    * anti-join. */
-  private val annDeletedMemo = buildMemo[DataFrame]()
-
-  private def annDeletedStore(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val (cent, corpus) = appendedIvfIndex(s, dir)
-    val del = scratchLock.synchronized {
-      annDeletedMemo.getOrElseUpdate((s, dir), {
-        val base = scratchPath("graft_ivf_append", dir)
         Similarity.ivfDelete(s, s"$base/corpus", annDeletedIds, batchId = 2L)
-        s.read.parquet(s"$base/corpus_del")
+        (s.read.parquet(s"$base/centroids"), IndexStore.levels(s, s"$base/corpus").get,
+          IndexStore.levels(s, s"$base/corpus_del").get)
       })
     }
-    (cent, corpus, del)
-  }
 
   /** Memoized STORED IVFPQ index per (session, data dir) — the
     * encoded-at-rest form `x_ann_ivfpq_stored` serves from: the built
@@ -1435,11 +1408,10 @@ object SparkEntry {
     timed("ppjoin_index_full_stored") { storedFullPpJoinIndex(s, dir); () }
     timed("ivf_index_stored") { storedIvfIndex(s, dir); () }
     timed("ivf_index_appended") { appendedIvfIndex(s, dir); () }
-    timed("ivf_index_deleted") { annDeletedStore(s, dir); () }
     timed("ivfpq_index_stored") { storedIvfPqIndex(s, dir); () }
     timed("bm25_index_stored") { storedBm25Index(s, dir); () }
-    timed("bm25_segments") { segmentedBm25Store(s, dir); () }
-    timed("bm25_segments_del") { segmentedBm25DeletedStore(s, dir); () }
+    timed("bm25_segments") { segmentedBm25Store(s, dir, deleted = false); () }
+    timed("bm25_segments_del") { segmentedBm25Store(s, dir, deleted = true); () }
     timed("dup_clusters") { builtClusters(s, dir).count(); () }
     timed("timetravel_store") { timeTravelStore(s, dir); () }
     timed("compacted_store") { compactedStore(s, dir); () }
@@ -3831,7 +3803,7 @@ object SparkEntry {
       // x_text_bm25_stored: a hash match proves segmentation +
       // append-then-serve ≡ whole-corpus rebuild.
       (s, dir) => {
-        val (segTf, segDf, segMeta) = segmentedBm25Store(s, dir)
+        val (segTf, segDf, segMeta, _) = segmentedBm25Store(s, dir, deleted = false)
         TextAnalysis.bm25SegmentedTopK(segTf, segDf, segMeta,
           queryIds = (0L to 7L), k = 10)
           .orderBy("query_id", "rank")
@@ -3850,9 +3822,9 @@ object SparkEntry {
       // the output, not just the candidates), so a hash match proves
       // tombstoning ≡ rebuild-without-the-docs.
       (s, dir) => {
-        val (segTf, segDf, segMeta, segDel) = segmentedBm25DeletedStore(s, dir)
+        val (segTf, segDf, segMeta, segDel) = segmentedBm25Store(s, dir, deleted = true)
         TextAnalysis.bm25SegmentedTopK(segTf, segDf, segMeta,
-          queryIds = (0L to 7L), k = 10, segDel = Some(segDel))
+          queryIds = (0L to 7L), k = 10, segDel = segDel)
           .orderBy("query_id", "rank")
       },
       Some(bm25DeletedOracleSql)),
@@ -4559,7 +4531,7 @@ object SparkEntry {
       // the index does not degrade by being maintained incrementally.
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        val (cent, corpus) = appendedIvfIndex(s, dir)
+        val (cent, corpus, _) = appendedIvfIndex(s, dir)
         Similarity.ivfProbeTopKPruned(corpus, emb.filter(col("vec_id") < 8), cent,
           k = 5, nprobe = 2, cellCol = "cell")
           .orderBy("query_id", "rank")
@@ -4613,7 +4585,7 @@ object SparkEntry {
       // hash match proves tombstoning ≡ serve-without-the-rows.
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        val (cent, corpus, del) = annDeletedStore(s, dir)
+        val (cent, corpus, del) = appendedIvfIndex(s, dir)
         Similarity.ivfProbeTopKPruned(corpus, emb.filter(col("vec_id") < 8), cent,
           k = 5, nprobe = 2, cellCol = "cell", delOpt = Some(del))
           .orderBy("query_id", "rank")

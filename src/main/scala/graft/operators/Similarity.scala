@@ -375,14 +375,14 @@ object Similarity {
     * is new files under existing cell directories — zero rewrite of
     * resident data, no layout migration, invisible to the serve plan.
     *
-    * Replay safety (the streaming face's contract): rows land under
-    * DYNAMIC partition overwrite keyed by (cell, batch_id). Cell
-    * assignment is deterministic (4dp-rounded cosine, ascending-cell
-    * tie-break), so a replayed batch regenerates EXACTLY its original
-    * (cell, batch_id) leaves and overwrites them in place —
-    * exactly-once store state from an at-least-once trigger, the
-    * [[graft.streaming.StreamingIngest.dedupIngest]] partition
-    * discipline. */
+    * Replay safety (the streaming face's contract): the batch's files
+    * publish in one manifest commit that replaces whatever its
+    * `batch_id` level held ([[graft.sources.IndexStore.writeLevel]]).
+    * Cell assignment is deterministic (4dp-rounded cosine,
+    * ascending-cell tie-break), so a replayed batch regenerates
+    * EXACTLY its original (cell, batch_id) rows and replaces them —
+    * exactly-once store state from an at-least-once trigger. Read the
+    * store with [[graft.sources.IndexStore.levels]]. */
   def ivfAppend(batch: DataFrame, centroids: DataFrame, corpusPath: String,
       batchId: Long,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
@@ -396,9 +396,9 @@ object Similarity {
     * listing degrades long before data volume does). Fold-forward
     * semantics: assign `batch` exactly as [[ivfAppend]] would, UNION
     * it with every resident row at `batch_id <= batchId`, dedupe by
-    * `idCol`, rewrite the merged set under THIS batch's level
-    * (dynamic overwrite), then delete the now-folded older levels —
-    * so a compaction trigger costs one corpus rewrite and the store
+    * `idCol`, and commit the merged set as THIS batch's level with the
+    * now-folded older levels dropped, in one manifest — so a
+    * compaction trigger costs one corpus rewrite and the store
     * collapses back to one level per cell.
     *
     * Crash convergence (the merged read deliberately INCLUDES
@@ -422,8 +422,8 @@ object Similarity {
     * `partitionBy(cell, batch_id)` — the compressed maintenance
     * shape: what lands on disk per batch is code bytes, never floats.
     * Same replay contract as [[ivfAppend]] (assignment and encoding
-    * are both deterministic, so dynamic partition overwrite makes a
-    * replayed batch rewrite exactly its original leaves), and
+    * are both deterministic, so a replayed batch's level commit
+    * replaces exactly its original rows), and
     * [[ivfPqTopKFromCodes]] serves the two-level layout unchanged
     * (its static cell filter prunes the first partition level). */
   def ivfPqAppend(batch: DataFrame, centroids: DataFrame, pq: DataFrame,
@@ -465,47 +465,43 @@ object Similarity {
     * [[graft.operators.TextAnalysis.bm25DeleteDocs]], simpler because
     * the serve has no corpus-global statistics to adjust (the coarse
     * codebook is frozen): the tombstone is just the doomed id list,
-    * landed as one immutable `batch_id=<id>` leaf in the sibling
-    * `<corpusPath>_del` tree under dynamic partition overwrite (a
-    * replay rewrites exactly its leaf). A delete costs O(ids) — no
-    * store read, no rewrite. Query-time application is one broadcast
-    * anti-join ([[ivfProbeTopKPruned]]'s `delOpt`); physical removal
-    * happens at the next [[ivfCompact]]/[[ivfPqCompact]] merge, which
-    * filters the del set out of the fold and drops the applied
-    * tombstone leaves. Same single-writer / append-only-id contract
-    * as the other maintenance faces. */
+    * committed as level `batch_id=<id>` of the sibling levelled store
+    * `<corpusPath>_del` (a replay replaces exactly its level). A delete
+    * costs O(ids) — no store read, no rewrite. Query-time application
+    * is one broadcast anti-join ([[ivfProbeTopKPruned]]'s `delOpt`,
+    * given `IndexStore.levels` of the tombstone store); physical
+    * removal happens at the next [[ivfCompact]]/[[ivfPqCompact]] merge,
+    * which filters the del set out of the fold and commits the applied
+    * tombstone levels away. Same single-writer / append-only-id
+    * contract as the other maintenance faces. */
   def ivfDelete(spark: org.apache.spark.sql.SparkSession,
       corpusPath: String, ids: Seq[Long], batchId: Long,
       idCol: String = "vec_id"): Unit = {
     require(ids.nonEmpty, "ids must be non-empty")
-    IndexStore.writeLeaf(
-      spark.createDataset(ids)(org.apache.spark.sql.Encoders.scalaLong).toDF(idCol),
-      deletePath(corpusPath), "batch_id", batchId)
+    IndexStore.writeLevel(deletePath(corpusPath), "batch_id", batchId)(
+      "" -> spark.createDataset(ids)(org.apache.spark.sql.Encoders.scalaLong).toDF(idCol))
   }
 
-  /** One store level under the replay contract: a `batch_id` leaf under
-    * the `cell` partition level — shared by the appends and the
-    * fold-forward rewrite. `prepared` carries a `cell` column beside
-    * the data columns and no `batch_id`. */
+  /** One store level under the replay contract: `batch_id` leaves under
+    * the `cell` partition level. `prepared` carries a `cell` column
+    * beside the data columns and no `batch_id`. */
   private def writeLevel(prepared: DataFrame, corpusPath: String, batchId: Long): Unit =
-    IndexStore.writeLeaf(prepared, corpusPath, "batch_id", batchId, "cell")
+    IndexStore.writeLevel(corpusPath, "batch_id", batchId, "cell")("" -> prepared)
 
   /** Shared fold-forward core of [[ivfCompact]] / [[ivfPqCompact]]:
     * merge the trigger batch with the [[graft.sources.IndexStore
     * .resident]] rows (tombstones at `batch_id <= batchId` applied
     * PHYSICALLY — the del set anti-joins them out of the fold), dedupe
-    * by id, rewrite as this level, then reap the superseded levels and
-    * the applied tombstone leaves (a crash in between just means the
-    * replay — or the serve's `delOpt` — applies an
-    * already-physically-absent del set again: a no-op). */
+    * by id, and commit it as this level with the superseded levels and
+    * the applied tombstones dropped ([[graft.sources.IndexStore
+    * .foldLevel]]). */
   private def foldForward(prepared: DataFrame, corpusPath: String,
       batchId: Long, idCol: String): Unit = {
-    val spark = prepared.sparkSession
-    val merged = IndexStore.resident(spark, corpusPath, deletePath(corpusPath),
-        "batch_id", batchId, idCol)
+    val merged = IndexStore.resident(prepared.sparkSession, corpusPath, "",
+        deletePath(corpusPath), "", "batch_id", batchId, idCol)
       .fold(prepared)(r => prepared.unionByName(r).dropDuplicates(idCol))
-    writeLevel(merged, corpusPath, batchId)
-    IndexStore.reap(spark, Seq(corpusPath), deletePath(corpusPath), "batch_id", batchId)
+    IndexStore.foldLevel(corpusPath, deletePath(corpusPath), "batch_id", batchId, "cell")(
+      "" -> merged)
   }
 
   /** Per-cell centroids — the training step an IVF index needs: mean of

@@ -569,36 +569,47 @@ object TextAnalysis {
     * segment's TERM DICTIONARY (per-token document frequency WITHIN
     * this segment — Lucene's per-segment df) at
     * `<path>/df/segment=<id>`, and a ONE-ROW per-segment stats record
-    * (n docs, total tokens) at `<path>/meta/segment=<id>` — all under
-    * DYNAMIC partition overwrite, and all pure functions of the batch,
-    * so a replayed micro-batch rewrites exactly its original leaves
-    * (the standard at-least-once → store exactly-once discipline
-    * here). Appends never touch resident segments: corpus-GLOBAL df
+    * (n docs, total tokens) at `<path>/meta/segment=<id>` — all three
+    * published by ONE manifest commit of the levelled store at `path`
+    * ([[graft.sources.IndexStore.writeLevel]]), so a reader sees the
+    * whole segment or none of it. All three are pure functions of the
+    * batch, and the commit replaces whatever the segment held, so a
+    * replayed micro-batch rewrites exactly its original segment (the
+    * standard at-least-once → store exactly-once discipline here).
+    * Read the store with [[loadBm25Segments]]. Appends never touch
+    * resident segments: corpus-GLOBAL df
     * and stats are never stored — because segments hold disjoint doc
     * sets, global df is the SUM of the per-segment dictionaries and
     * the corpus stats fold from the additive meta rows, both
     * vocab-/one-row-sized merges [[bm25SegmentedTopK]] pays at query
     * time instead of a store rewrite at append time. */
   def bm25AppendSegment(docs: DataFrame, path: String, segmentId: Long,
-      idCol: String = "doc_id", textCol: String = "text"): Unit =
-    writeBm25Segment(
-      bm25SegmentRows(docs, idCol, textCol).localCheckpoint(),
-      path, segmentId, idCol)
+      idCol: String = "doc_id", textCol: String = "text"): Unit = {
+    val rows = bm25SegmentRows(docs, idCol, textCol).localCheckpoint()
+    IndexStore.writeLevel(path, "segment", segmentId)(
+      ("tf" -> rows) +: bm25SegmentStats(rows, idCol, 1L): _*)
+  }
 
-  /** One segment of the store under the replay contract: the three
-    * trees (tf rows, term dictionary, stats row — each a pure
-    * function of `rows`) land at their `segment=<id>` leaves under
-    * dynamic partition overwrite. Shared by the appends and
-    * [[bm25CompactSegments]]' fold-forward rewrite. `rows` should be
-    * pinned by the caller — it feeds all three writes. */
-  private def writeBm25Segment(rows: DataFrame, path: String,
-      segmentId: Long, idCol: String): Unit = {
-    IndexStore.writeLeaf(rows, s"$path/tf", "segment", segmentId)
-    IndexStore.writeLeaf(rows.groupBy(col("__tok"))
-      .agg(count(lit(1)).as("__df")), s"$path/df", "segment", segmentId)
-    IndexStore.writeLeaf(rows.groupBy(col(idCol)).agg(first(col("__dl")).as("__dl"))
-      .agg(count(lit(1)).as("n"), sum(col("__dl")).as("sum_dl")),
-      s"$path/meta", "segment", segmentId)
+  /** The term dictionary and stats row of a segment's `rows` (tf rows,
+    * or a tombstone's doomed postings; pin them, as they feed both),
+    * counted with `sign`: -1 subtracts a tombstone's mass from the
+    * serve's additive folds. */
+  private def bm25SegmentStats(rows: DataFrame, idCol: String,
+      sign: Long): Seq[(String, DataFrame)] = Seq(
+    "df" -> rows.groupBy(col("__tok")).agg((lit(sign) * count(lit(1))).as("__df")),
+    "meta" -> rows.groupBy(col(idCol)).agg(first(col("__dl")).as("__dl"))
+      .agg((lit(sign) * count(lit(1))).as("n"), (lit(sign) * sum(col("__dl"))).as("sum_dl")))
+
+  /** A segmented BM25 store's tf, df and meta trees and, when it holds
+    * tombstones, its del tree — each the scan of its files in the
+    * current manifest ([[graft.sources.IndexStore.levels]]), with the
+    * `segment` partition column. Fails on a path with no segment. */
+  def loadBm25Segments(spark: org.apache.spark.sql.SparkSession, path: String)
+      : (DataFrame, DataFrame, DataFrame, Option[DataFrame]) = {
+    val Seq(tf, df, meta, del) = Seq("tf", "df", "meta", "del").map(IndexStore.levels(spark, path, _))
+    def needed(tree: Option[DataFrame]) =
+      tree.getOrElse(throw new IllegalStateException(s"no segmented BM25 store at $path"))
+    (needed(tf), needed(df), needed(meta), del)
   }
 
   /** DELETE-BY-ID for the segmented BM25 store — Lucene's tombstone
@@ -613,8 +624,10 @@ object TextAnalysis {
     * id filter), so a delete costs O(deleted docs), not a store
     * rewrite; physical removal happens at the next
     * [[bm25CompactSegments]] merge, which filters the del set out of
-    * the fold and drops the applied tombstones. Replay-safe: every
-    * written leaf is a pure function of (resident store, ids).
+    * the fold and drops the applied tombstones. The three trees
+    * publish in ONE manifest commit, like an append's. Replay-safe:
+    * every tree is a pure function of (resident store, ids), and the
+    * commit replaces whatever the segment held.
     * Contract: ids are deleted as of their resident rows at delete
     * time; re-adding a deleted id is undefined (append-only id
     * space), same single-writer discipline as the other maintenance
@@ -623,15 +636,10 @@ object TextAnalysis {
       path: String, ids: Seq[Long], segmentId: Long,
       idCol: String = "doc_id"): Unit = {
     require(ids.nonEmpty, "ids must be non-empty")
-    val doomed = spark.read.parquet(s"$path/tf")
-      .filter(col(idCol).isin(ids: _*)).drop("segment").localCheckpoint()
-    IndexStore.writeLeaf(doomed.select(col(idCol)).distinct(),
-      s"$path/del", "segment", segmentId)
-    IndexStore.writeLeaf(doomed.groupBy(col("__tok"))
-      .agg((-count(lit(1))).as("__df")), s"$path/df", "segment", segmentId)
-    IndexStore.writeLeaf(doomed.groupBy(col(idCol)).agg(first(col("__dl")).as("__dl"))
-      .agg((-count(lit(1))).as("n"), (-sum(col("__dl"))).as("sum_dl")),
-      s"$path/meta", "segment", segmentId)
+    val (tf, _, _, _) = loadBm25Segments(spark, path)
+    val doomed = tf.filter(col(idCol).isin(ids: _*)).drop("segment").localCheckpoint()
+    IndexStore.writeLevel(path, "segment", segmentId)(
+      ("del" -> doomed.select(col(idCol)).distinct()) +: bm25SegmentStats(doomed, idCol, -1L): _*)
   }
 
   /** Segment-merge COMPACTION for the segmented BM25 store — Lucene's
@@ -642,9 +650,10 @@ object TextAnalysis {
     * (doc, token) — rows are bit-identical across levels because
     * tf/dl are deterministic in the text, so the dedupe keeps one —
     * then rewrite ALL THREE trees (tf, term dictionary, stats) from
-    * the merged set under THIS segment's leaf and delete the
-    * now-folded older segments. One corpus rewrite collapses the
-    * store back to a single segment, and the dictionary/stats rows
+    * the merged set as THIS segment and drop the now-folded older
+    * segments, in ONE manifest commit
+    * ([[graft.sources.IndexStore.foldLevel]]). One corpus rewrite
+    * collapses the store back to a single segment, and the dictionary/stats rows
     * are recomputed from the merged set, so the serve's query-time
     * folds see exactly the state a whole-corpus rebuild would write.
     *
@@ -654,22 +663,20 @@ object TextAnalysis {
     * applied PHYSICALLY here (Lucene's merge-time removal): the del
     * set anti-joins the resident rows out of the fold, the rewritten
     * dictionary/stats are computed from the surviving rows only, and
-    * the applied tombstone leaves are dropped — including one at
+    * the applied tombstone segments are dropped — including one at
     * `segmentId` itself, whose negative dictionary/stats rows the
     * rewrite has just replaced. Run it from the ingest loop's own
     * foreachBatch thread ([[graft.streaming.StreamingIngest
     * .bm25Ingest]]'s `compactEvery` does). */
   def bm25CompactSegments(docs: DataFrame, path: String, segmentId: Long,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val spark = docs.sparkSession
     val prepared = bm25SegmentRows(docs, idCol, textCol)
-    val merged = IndexStore.resident(spark, s"$path/tf", s"$path/del",
+    val merged = IndexStore.resident(docs.sparkSession, path, "tf", path, "del",
         "segment", segmentId, idCol)
       .fold(prepared)(r => prepared.unionByName(r).dropDuplicates(idCol, "__tok"))
       .localCheckpoint()
-    writeBm25Segment(merged, path, segmentId, idCol)
-    IndexStore.reap(spark, Seq("tf", "df", "meta").map(sub => s"$path/$sub"),
-      s"$path/del", "segment", segmentId)
+    IndexStore.foldLevel(path, path, "segment", segmentId)(
+      ("tf" -> merged) +: bm25SegmentStats(merged, idCol, 1L): _*)
   }
 
   /** Related-doc BM25 over a SEGMENTED store — identical output to

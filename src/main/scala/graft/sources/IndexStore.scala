@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions._
@@ -32,25 +31,27 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *    replaces the whole file list, so it is atomic across the store's
   *    tables: a reader sees the old store or the new one.
   *
-  *  - **Levelled store** ([[writeLeaf]] / [[resident]] / [[reap]] /
-  *    [[maintain]]): immutable `<levelCol>=<id>` leaves (under any
-  *    leading partition columns) written with DYNAMIC partition
-  *    overwrite — every leaf is a pure function of its input, so a
-  *    replayed append rewrites exactly its original leaves
-  *    (exactly-once in the store from an at-least-once trigger).
-  *    Deletes are tombstone leaves (doomed ids) in a sibling tree.
-  *    Fold-forward compaction at level L reads [[resident]] (rows at
-  *    levels ≤ L minus ids tombstoned at ≤ L — deliberately INCLUDING
-  *    L, so a replay after a crash re-reads its own committed merge
-  *    and converges), the family dedupes and rewrites the merged set
-  *    as level L, then [[reap]] drops the superseded levels (< L) and
-  *    the applied tombstones (≤ L). Contract: SINGLE WRITER (the
-  *    [[maintain]] loop runs every mutation on the stream's own
-  *    foreachBatch thread), and concurrent readers must tolerate the
-  *    reap window — directory-listing readers can hit a vanished
-  *    level mid-scan; putting the levels on a [[ManifestTable]] (as
-  *    the bucketed form is) is the upgrade path when readers can't
-  *    quiesce.
+  *  - **Levelled store** ([[writeLevel]] / [[resident]] /
+  *    [[foldLevel]] / [[levels]] / [[maintain]]): ONE [[ManifestTable]]
+  *    at `<path>` holding immutable `<levelCol>=<id>` leaves (under any
+  *    leading partition columns — the IVF stores lead with `cell` — and
+  *    under a sub-directory per tree when the store has several, as
+  *    BM25's `tf`/`df`/`meta`/`del` do). A level write stages its
+  *    frames and commits the current files minus that level's plus the
+  *    staged ones in one manifest, so every tree of a level publishes
+  *    at once, and a replayed append — every level is a pure function
+  *    of its input — replaces exactly its own level (exactly-once in
+  *    the store from an at-least-once trigger). Deletes are tombstone
+  *    levels (doomed ids), in the store's own `del` tree or in a
+  *    sibling store. Fold-forward compaction at level L reads
+  *    [[resident]] (rows at levels ≤ L minus ids tombstoned at ≤ L,
+  *    picked from the manifests' file lists), the family dedupes, and
+  *    [[foldLevel]] commits the merged set as level L with every level
+  *    ≤ L dropped, then vacuums keeping the previous manifest: a reader
+  *    planned before the compaction keeps its files. Readers scan a
+  *    store's manifest through [[levels]]. Writers are single-writer
+  *    per store (the [[maintain]] loop runs every mutation on the
+  *    stream's own foreachBatch thread), as for every ManifestTable.
   */
 object IndexStore {
 
@@ -109,8 +110,12 @@ object IndexStore {
         "before index stores committed through one) — rebuild it with the call that " +
         "writes it (IndexStore.write, a store*IndexBucketed, createBucketedMirror)"))
     val bySub = files.groupBy(_.takeWhile(_ != '/')).map { case (sub, fs) => sub -> store.listed(fs) }
-    val metaFiles = bySub(MetaSub)
-    val meta = store.collectSmall(metaFiles, store.footerSchema(metaFiles.head)).head
+    // a levelled store has no layout row (BM25's `meta` tree holds
+    // per-segment stats): read it with `levels`
+    val metaFiles = bySub.getOrElse(MetaSub, Nil)
+    val meta = metaFiles.headOption.map(f => store.collectSmall(metaFiles, store.footerSchema(f)).head)
+      .filter(_.schema.fieldNames.contains(LayoutCol)).getOrElse(throw new IllegalStateException(
+        s"$path is not a bucketed index store: no meta row carries its $LayoutCol layout"))
     val nBuckets = meta.getAs[Int]("n_buckets")
     val layout = meta.getMap[String, scala.collection.Seq[String]](meta.fieldIndex(LayoutCol))
     Loaded(meta, layout.toMap.map { case (sub, keys) =>
@@ -120,58 +125,93 @@ object IndexStore {
     })
   }
 
-  /** One `<levelCol>=<level>` leaf of the tree at `root`, under
-    * `partitionCols` when given (the IVF stores lead with `cell`),
-    * written under dynamic partition overwrite. `df` carries no
-    * `levelCol`; levels are non-negative (0 is the epoch build). */
-  def writeLeaf(df: DataFrame, root: String, levelCol: String, level: Long,
-      partitionCols: String*): Unit = {
-    require(level >= 0, s"$levelCol must be >= 0 (0 is the epoch build)")
-    df.withColumn(levelCol, lit(level))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols :+ levelCol: _*)
-      .parquet(root)
-  }
+  /** The scan of tree `sub` (`""`: every file) of the levelled store
+    * at `root`: the files of its current manifest — of a store written
+    * before it had one, the files its next mutation adopts — with the
+    * `key=value` directories below `sub` as partition columns, typed as
+    * a path read types them. None when the tree holds no file. Runs no
+    * Spark job and writes nothing. */
+  def levels(spark: SparkSession, root: String, sub: String = ""): Option[DataFrame] =
+    scanLevels(new ManifestTable(spark, root), sub, _ => true)
 
-  private def fsOf(spark: SparkSession, root: String) =
-    new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-
-  /** The rows a fold-forward compaction at `level` merges: rows of the
-    * tree at `root` at levels ≤ `level` (without `levelCol`), minus the
-    * ids tombstoned in `tombstoneRoot` at levels ≤ `level` (one
-    * broadcast anti-join). None when the tree does not exist yet. */
-  def resident(spark: SparkSession, root: String, tombstoneRoot: String,
-      levelCol: String, level: Long, idCol: String): Option[DataFrame] = {
-    val fs = fsOf(spark, root)
-    if (!fs.exists(new Path(root))) None
+  /** [[levels]] over the files of tree `sub` that `keep` selects. */
+  private def scanLevels(table: ManifestTable, sub: String, keep: String => Boolean)
+      : Option[DataFrame] = {
+    val files = table.snapshot().filter(f => (sub.isEmpty || f.startsWith(s"$sub/")) && keep(f))
+    if (files.isEmpty) None
     else {
-      val raw = spark.read.parquet(root).filter(col(levelCol) <= level).drop(levelCol)
-      Some(if (fs.exists(new Path(tombstoneRoot)))
-        raw.join(broadcast(spark.read.parquet(tombstoneRoot)
-          .filter(col(levelCol) <= level).select(col(idCol)).distinct()),
-          Seq(idCol), "left_anti")
-      else raw)
+      val statuses = table.listed(files)
+      Some(table.scanListed(statuses, table.footerSchema(statuses.head)))
     }
   }
 
-  /** After a fold-forward rewrite at `level` has committed: delete every
-    * `<levelCol>=N` directory, at any depth, with N < `level` under
-    * `roots` (superseded levels) and N ≤ `level` under `tombstoneRoot`
-    * (applied tombstones). A crash mid-reap just leaves fewer levels
-    * for the replay to fold. */
-  def reap(spark: SparkSession, roots: Seq[String], tombstoneRoot: String,
-      levelCol: String, level: Long): Unit = {
-    val fs = fsOf(spark, tombstoneRoot)
-    val prefix = s"$levelCol="
-    def walk(dir: Path, drop: Long => Boolean): Unit =
-      if (fs.exists(dir)) fs.listStatus(dir).filter(_.isDirectory).foreach { st =>
-        val n = st.getPath.getName
-        if (!n.startsWith(prefix)) walk(st.getPath, drop)
-        else if (n.stripPrefix(prefix).toLongOption.exists(drop)) fs.delete(st.getPath, true)
+  /** The N of the `<levelCol>=N` directory a store file sits in. */
+  private def levelOf(levelCol: String, file: String): Option[Long] =
+    file.split('/').collectFirst {
+      case d if d.startsWith(s"$levelCol=") => d.stripPrefix(s"$levelCol=")
+    }.flatMap(_.toLongOption)
+
+  /** Land `trees` — (sub, frame) pairs, `""` for the table's own root;
+    * no frame carries `levelCol` — as level `level` of the levelled
+    * store at `root`: each frame is staged as
+    * `<sub>/<partitionCols>/<levelCol>=<level>/` files, and ONE manifest
+    * commits the current files minus those at the levels `drop` selects
+    * plus the staged ones. Every tree is a pure function of its input,
+    * so a replay that drops its own level rewrites exactly that level.
+    * Levels are non-negative (0 is the epoch build). */
+  private def commitLevel(root: String, levelCol: String, level: Long, partitionCols: Seq[String],
+      trees: Seq[(String, DataFrame)], drop: Long => Boolean): ManifestTable = {
+    require(level >= 0, s"$levelCol must be >= 0 (0 is the epoch build)")
+    val table = new ManifestTable(trees.head._2.sparkSession, root)
+    table.update(f => levelOf(levelCol, f).exists(drop)) {
+      trees.flatMap { case (sub, frame) =>
+        table.stage(frame.withColumn(levelCol, lit(level)), Some(sub).filter(_.nonEmpty))(
+          (w, dir) => w.partitionBy(partitionCols :+ levelCol: _*).parquet(dir))
       }
-    roots.foreach(r => walk(new Path(r), _ < level))
-    walk(new Path(tombstoneRoot), _ <= level)
+    }
+    table
+  }
+
+  /** An append, a tombstone or a replay of either: `trees` land as level
+    * `level`, replacing whatever that level held ([[commitLevel]]). */
+  def writeLevel(root: String, levelCol: String, level: Long, partitionCols: String*)(
+      trees: (String, DataFrame)*): Unit =
+    commitLevel(root, levelCol, level, partitionCols, trees, _ == level)
+
+  /** The rows a fold-forward compaction at `level` merges: the rows of
+    * tree `sub` of the store at `root` at levels ≤ `level` (without
+    * `levelCol`), minus the ids in tree `delSub` of the store at
+    * `delRoot` (the same store or a sibling) at levels ≤ `level` (one
+    * broadcast anti-join) — deliberately INCLUDING `level`, so a replay
+    * after a crash re-reads its own committed merge and converges. The
+    * levels are picked from the manifests' file lists on the driver.
+    * None when the tree holds no such row. */
+  def resident(spark: SparkSession, root: String, sub: String, delRoot: String, delSub: String,
+      levelCol: String, level: Long, idCol: String): Option[DataFrame] = {
+    def upTo(r: String, s: String) =
+      scanLevels(new ManifestTable(spark, r), s, levelOf(levelCol, _).exists(_ <= level))
+        .map(_.drop(levelCol))
+    upTo(root, sub).map(raw => upTo(delRoot, delSub).fold(raw)(del =>
+      raw.join(broadcast(del.select(col(idCol)).distinct()), Seq(idCol), "left_anti")))
+  }
+
+  /** The commit of a fold-forward compaction at `level`: `trees` (the
+    * merged [[resident]] rows and the trigger batch) land as level
+    * `level` in ONE manifest that drops every level ≤ `level` of the
+    * store at `root` — the superseded levels and, in a store that holds
+    * its own tombstones, the applied ones. A sibling tombstone store at
+    * `delRoot` then commits its levels ≤ `level` away; a crash between
+    * the two leaves tombstones the merge already applied, which screen
+    * nothing and go with the next compaction. Both stores are then
+    * vacuumed, keeping the previous manifest: a reader planned before
+    * the compaction still finds its files. */
+  def foldLevel(root: String, delRoot: String, levelCol: String, level: Long,
+      partitionCols: String*)(trees: (String, DataFrame)*): Unit = {
+    val table = commitLevel(root, levelCol, level, partitionCols, trees, _ <= level)
+    val del = new ManifestTable(trees.head._2.sparkSession, delRoot)
+    val applied = (f: String) => levelOf(levelCol, f).exists(_ <= level)
+    if (delRoot != root && del.snapshot().exists(applied)) del.update(applied)(Nil)
+    Seq(table, del).distinctBy(_.root).foreach(_.vacuum(keepManifests = 2, minAgeMillis = 0L))
   }
 
   /** The streaming maintenance loop of a levelled store: micro-batch

@@ -19,8 +19,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * (Delta Lake, VLDB 2020; Iceberg), scaled down to what this store
   * needs, and the one way the stores publish files: [[SeriesStore]]'s
   * `series_values` and `run_series` tables and each z-ordered mirror,
-  * and each bucketed [[IndexStore]] (the bucketed mirrors among them)
-  * are ManifestTables, and every read of one goes through [[scan]].
+  * each bucketed [[IndexStore]] (the bucketed mirrors among them), and
+  * each levelled one (a segmented BM25 store; an IVF or IVFPQ corpus
+  * and its `_del` tombstone store) are ManifestTables, and every read
+  * of one goes through [[scan]].
   * Every mutation follows write-ahead ordering:
   *
   *   1. new data files are written ONCE, each straight into the flat
@@ -100,6 +102,14 @@ final class ManifestTable(spark: SparkSession, rootPath: String) {
   /** [[current]], with no files before the first commit. */
   def currentFiles(): Seq[String] = current().getOrElse(Seq.empty)
 
+  /** [[current]]; for a table with no manifest yet, the data files a
+    * [[create]] would adopt (none when the root does not exist). Writes
+    * nothing. */
+  def snapshot(): Seq[String] = current().getOrElse(unadopted())
+
+  private def unadopted(): Seq[String] =
+    if (fs.exists(root)) dataFiles(root).map(relativeTo(root)) else Seq.empty
+
   /** The file list of committed version `version`. Unknown versions fail
     * loudly with the available range — a silent empty list would look
     * like data loss. */
@@ -141,15 +151,15 @@ final class ManifestTable(spark: SparkSession, rootPath: String) {
 
   /** Commit the data files under the root as version 1; returns them. */
   private def adopt(): Seq[String] = {
-    val files = if (fs.exists(root)) dataFiles(root).map(relativeTo(root)) else Seq.empty
+    val files = unadopted()
     commitAs(1L, files)
     files
   }
 
   /** Write `frame` into a fresh staging directory — `write` configures
     * the writer (partitioning, options) and names the format with the
-    * staging path — and move each file the commit reported under the
-    * root: into directory `into` when given, else at its reported path.
+    * staging path — and move each file the commit reported to its
+    * reported path under the root, below directory `into` when given.
     * Returns the moved files' relative paths; they stay invisible until
     * a [[commit]] lists them. Each moved file's mtime is bumped to move
     * time: rename keeps the WRITE-time mtime, and [[vacuum]]'s age guard
@@ -161,7 +171,7 @@ final class ManifestTable(spark: SparkSession, rootPath: String) {
     try {
       write(ManifestTable.inWriterSession(frame).write.mode(SaveMode.Append), staging.toString)
       val moves = ManifestCommitProtocol.committedFiles(staging).map { case (name, path) =>
-        val rel = into.fold(path)(d => s"$d/${new Path(path).getName}")
+        val rel = into.fold(path)(d => s"$d/$path")
         new Path(staging, name) -> rel
       }
       moves.map(m => new Path(root, m._2).getParent).distinct.foreach(fs.mkdirs)
@@ -180,18 +190,25 @@ final class ManifestTable(spark: SparkSession, rootPath: String) {
   }
 
   /** [[stage]] `frame`, then commit the current files plus the staged
-    * ones (no commit when nothing was staged). A table with no manifest
-    * is [[create]]d first, so a directory written before it had
-    * manifests keeps its files, and no staged file lands under a root
-    * that a later create would adopt. */
-  def append(frame: DataFrame)(write: (DataFrameWriter[Row], String) => Unit): Unit = {
+    * ones; see [[update]]. */
+  def append(frame: DataFrame)(write: (DataFrameWriter[Row], String) => Unit): Unit =
+    update(_ => false)(stage(frame)(write))
+
+  /** One mutation: run `staged` (which [[stage]]s files and returns
+    * them), then commit the current files that `drop` does not select
+    * plus the staged ones as ONE manifest — none when that changes
+    * nothing. A table with no manifest is [[create]]d first, so a
+    * directory written before it had manifests keeps its files, and no
+    * staged file lands under a root that a later create would adopt. */
+  def update(drop: String => Boolean)(staged: => Seq[String]): Unit = {
     // one listing gives the adoption check, the file list and the next version
     val (version, files) = manifestVersions().lastOption match {
       case Some((v, p)) => (v, readManifest(p))
       case None => (1L, adopt())
     }
-    val added = stage(frame)(write)
-    if (added.nonEmpty) commitAs(version + 1L, files ++ added)
+    val added = staged
+    val kept = files.filterNot(drop)
+    if (added.nonEmpty || kept.length < files.length) commitAs(version + 1L, kept ++ added)
   }
 
   /** Statuses of the manifest-listed `files`, from ONE listing of each
@@ -237,7 +254,7 @@ final class ManifestTable(spark: SparkSession, rootPath: String) {
         Map("basePath" -> root.toString), Some(schema), cache)
       val partitionCols = index.partitionSchema.fieldNames.toSet
       // nullable, as a path read types every file-source column
-      val dataSchema = StructType(schema.filterNot(f => partitionCols(f.name)).map(_.copy(nullable = true)))
+      val dataSchema = GraftSessionBridge.asNullable(StructType(schema.filterNot(f => partitionCols(f.name))))
       spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, dataSchema,
         bucketSpec, new ParquetFileFormat, Map.empty)(spark))
     }
@@ -333,10 +350,12 @@ final class ManifestTable(spark: SparkSession, rootPath: String) {
     def sweep(dir: Path, prefix: String): Unit =
       fs.listStatus(dir).foreach { st =>
         val rel = prefix + st.getPath.getName
-        if (rel == "_manifests" || rel == "_staging") ()
+        if (rel == "_manifests") ()
         else if (st.isDirectory) {
-          sweep(st.getPath, rel + "/")
-          // a writer's freshly made directory is young: leave it
+          // `_staging` holds no data files; its dirs were aged above
+          if (rel != "_staging") sweep(st.getPath, rel + "/")
+          // a writer's freshly made directory is young (and making its
+          // staging dir refreshes `_staging`): leave it
           if (st.getModificationTime <= cutoff && fs.listStatus(st.getPath).isEmpty)
             fs.delete(st.getPath, false)
         } else if (!liveSet.contains(rel) && st.getModificationTime <= cutoff) {

@@ -220,8 +220,8 @@ object StreamingIngest {
                     .join(idx, Seq("digest"), "left_anti"))
             }
           }
-          IndexStore.writeLeaf(fresh, outPath, "batch_id", batchId)
-          IndexStore.writeLeaf(fresh.select("digest"), indexPath, "batch_id", batchId)
+          writeBatchLeaf(fresh, outPath, batchId)
+          writeBatchLeaf(fresh.select("digest"), indexPath, batchId)
           if (incrementalBloom) {
             // this batch's digests from the COMMITTED index partition
             // (not a recompute of the gate chain), same sizing so the
@@ -279,6 +279,13 @@ object StreamingIngest {
       }
   }
 
+  /** One `batch_id=<batchId>` leaf of the path-read tree at `root`,
+    * written under DYNAMIC partition overwrite: a replayed batch
+    * rewrites exactly its own leaf. */
+  private def writeBatchLeaf(df: DataFrame, root: String, batchId: Long): Unit =
+    df.withColumn("batch_id", lit(batchId)).write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").partitionBy("batch_id").parquet(root)
+
   /** Streaming BM25 segment ingest — each micro-batch of documents
     * lands as ONE immutable index segment through
     * [[graft.operators.TextAnalysis.bm25AppendSegment]]
@@ -287,9 +294,9 @@ object StreamingIngest {
     * [[graft.operators.TextAnalysis.bm25SegmentedTopK]] serves the
     * growing store with query-time df/stats merge — answers always
     * equal a whole-corpus rebuild (spec-pinned). State lives in the
-    * STORE: segment rows are a pure function of the batch, dynamic
-    * partition overwrite makes replays rewrite their own leaf, and
-    * restarts resume from the source checkpoint — the same
+    * STORE: segment rows are a pure function of the batch, each
+    * segment's manifest commit replaces whatever a replay's segment
+    * held, and restarts resume from the source checkpoint — the same
     * exactly-once-in-store contract as [[dedupIngest]] and the IVF
     * faces. `compactEvery` > 0 folds segment-merge maintenance into
     * the ingest loop ([[graft.operators.TextAnalysis

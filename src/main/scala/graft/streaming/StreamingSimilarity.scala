@@ -55,8 +55,8 @@ object StreamingSimilarity {
     * [[StreamingIngest.dedupIngest]] discipline): nothing rides the
     * streaming state store, restarts resume from the source
     * checkpoint, and a replayed micro-batch regenerates exactly its
-    * original (cell, batch_id) leaves under dynamic partition
-    * overwrite — idempotent appends from an at-least-once trigger, so
+    * original (cell, batch_id) rows, whose level commit replaces the
+    * first landing — idempotent appends from an at-least-once trigger, so
     * the served index never double-counts a vector
     * (StreamingSpec-pinned with a checkpoint-restart proof).
     *
@@ -85,7 +85,7 @@ object StreamingSimilarity {
     * growing store unchanged. Identical replay/restart contract and
     * `compactEvery` discipline as the raw face (both assignment and
     * encoding are deterministic, so replays rewrite their own
-    * leaves). */
+    * level). */
   def ingestIvfPq(vectorStream: DataFrame, centroids: DataFrame,
       pq: DataFrame, corpusPath: String, m: Int, dim: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",

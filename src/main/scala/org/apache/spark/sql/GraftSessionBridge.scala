@@ -26,4 +26,8 @@ object GraftSessionBridge {
     * there, with cached fragments served from the shared cache manager. */
   def rebind(df: DataFrame, session: SparkSession): DataFrame =
     classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession], df.queryExecution.analyzed)
+
+  /** `schema` with every field and nested element nullable, as a file
+    * source path read types a file's columns. */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.datasources.{BucketingUtils, HadoopFsRelat
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Similarity, TextAnalysis}
-import graft.sources.IndexStore
+import graft.sources.{IndexStore, ManifestTable}
 
 /** On-disk layout pins for the six stored indexes (the bucketed ppjoin,
   * LSH near-dup and BM25 epoch stores; the levelled BM25 segment, IVF
@@ -23,8 +23,34 @@ class IndexStoreSpec extends SparkSpec {
   /** The meta row's layout column, appended after the family's own. */
   private val layoutCols = Seq("bucket_cols")
 
-  /** The directories of a bucketed store beside its tables'. */
-  private val storeDirs = Seq("_manifests", "_staging")
+  /** The directories of a bucketed store beside its tables': its
+    * write ends with a vacuum, which removes the emptied `_staging`. */
+  private val storeDirs = Seq("_manifests")
+
+  /** The directories of a levelled store beside its trees until its
+    * first compaction vacuums it. */
+  private val levelledDirs = Seq("_manifests", "_staging")
+
+  /** The directories holding the files the current manifest of the
+    * store at `root` lists. */
+  private def listedDirs(root: String): Seq[String] =
+    new ManifestTable(spark, root).currentFiles().map(f => f.take(f.lastIndexOf('/'))).distinct.sorted
+
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.mkString("|")).toSeq.sorted
+
+  /** Copy trees `subs` of the levelled store at `from` to `to` in the
+    * on-disk form levelled stores had before they committed through a
+    * manifest: a plain `partitionBy` parquet write per tree, with no
+    * `_manifests`. Loaded scans of the copy must type like its path
+    * reads, partition columns included. */
+  private def premanifest(from: String, to: String, subs: Seq[String], partitionCols: String*): Unit =
+    subs.foreach { sub =>
+      val dst = if (sub.isEmpty) to else s"$to/$sub"
+      IndexStore.levels(spark, from, sub).get.write.partitionBy(partitionCols: _*).parquet(dst)
+      assert(!new java.io.File(to, "_manifests").exists)
+      assert(IndexStore.levels(spark, to, sub).get.schema == spark.read.parquet(dst).schema)
+      assert(IndexStore.levels(spark, to, sub).get.schema == IndexStore.levels(spark, from, sub).get.schema)
+    }
 
   /** Every directory under `root`, relative and sorted. */
   private def dirs(root: String): Seq[String] = {
@@ -132,21 +158,41 @@ class IndexStoreSpec extends SparkSpec {
     TextAnalysis.bm25AppendSegment(docs.filter(col("doc_id") < 20), path, segmentId = 0L)
     TextAnalysis.bm25AppendSegment(docs.filter(col("doc_id") >= 20), path, segmentId = 1L)
     TextAnalysis.bm25DeleteDocs(spark, path, Seq(3L, 30L), segmentId = 2L)
-    assert(dirs(path) == Seq("del", "del/segment=2",
+    val leaves = Seq("del/segment=2", "df/segment=0", "df/segment=1", "df/segment=2",
+      "meta/segment=0", "meta/segment=1", "meta/segment=2", "tf/segment=0", "tf/segment=1")
+    assert(dirs(path) == levelledDirs ++ Seq("del", "del/segment=2",
       "df", "df/segment=0", "df/segment=1", "df/segment=2",
       "meta", "meta/segment=0", "meta/segment=1", "meta/segment=2",
       "tf", "tf/segment=0", "tf/segment=1"))
+    assert(listedDirs(path) == leaves)
+    // the per-segment stats tree is no bucketed store's layout row
+    assert(IndexStore.levels(spark, path, "meta").get.columns.toSeq == Seq("n", "sum_dl", "segment"))
+    val e = intercept[IllegalStateException](IndexStore.load(spark, path))
+    assert(e.getMessage.contains("not a bucketed index store"), e.getMessage)
+    // a store written before levelled stores had manifests is adopted,
+    // tombstones included, by its next mutation
+    val old = s"${tmp("layout_bm25_premanifest")}/segs"
+    premanifest(path, old, Seq("tf", "df", "meta", "del"), "segment")
+    def trees(p: String) = { val (tf, df, meta, del) = TextAnalysis.loadBm25Segments(spark, p)
+      Seq(tf, df, meta, del.get).map(t => rows(t.filter(col("segment") < 5))) }
+    TextAnalysis.bm25AppendSegment(Seq((200L, "w1 w9")).toDF("doc_id", "text"), old, segmentId = 5L)
+    assert(new ManifestTable(spark, old).versions() == Seq(1L, 2L))
+    assert(trees(old) == trees(path))
+    val before = dirs(path)
     TextAnalysis.bm25CompactSegments(
       Seq((100L, "w1 w2 w3")).toDF("doc_id", "text"), path, segmentId = 3L)
-    assert(dirs(path) == Seq("del", "df", "df/segment=3", "meta", "meta/segment=3",
-      "tf", "tf/segment=3"))
+    val compacted = Seq("df/segment=3", "meta/segment=3", "tf/segment=3")
+    // the vacuum keeps the previous manifest's files for readers planned
+    // against it, and removes the emptied _staging
+    assert(dirs(path) == (before.filterNot(_ == "_staging") ++ compacted).sorted)
+    assert(listedDirs(path) == compacted)
   }
 
   /** The (cell, batch_id) leaves the rows of the store at `path` say it
     * holds, as directory paths. */
   private def cellLeaves(path: String): Seq[String] =
-    spark.read.parquet(path).select("cell", "batch_id").distinct().collect()
-      .map(r => s"cell=${r.get(0)}/batch_id=${r.get(1)}").toSeq
+    IndexStore.levels(spark, path).get.select("cell", "batch_id").distinct().collect()
+      .map(r => s"cell=${r.get(0)}/batch_id=${r.get(1)}").toSeq.sorted
 
   private def withCells(leaves: Seq[String]): Seq[String] =
     (leaves ++ leaves.map(_.takeWhile(_ != '/'))).distinct.sorted
@@ -161,13 +207,31 @@ class IndexStoreSpec extends SparkSpec {
     Similarity.ivfDelete(spark, path, Seq(2L, 50L), batchId = 2L)
     val appended = cellLeaves(path)
     assert(appended.map(_.dropWhile(_ != '/')).toSet == Set("/batch_id=0", "/batch_id=1"))
-    assert(dirs(root) == (Seq("corpus", "corpus_del", "corpus_del/batch_id=2") ++
+    val stores = Seq("corpus", "corpus_del").flatMap(t => t +: levelledDirs.map(d => s"$t/$d"))
+    assert(dirs(root) == (stores ++ Seq("corpus_del/batch_id=2") ++
       withCells(appended).map(d => s"corpus/$d")).sorted)
+    assert(listedDirs(path) == appended && listedDirs(s"${path}_del") == Seq("batch_id=2"))
+    // a corpus and tombstone store written before levelled stores had
+    // manifests are each adopted, every row intact, by their next mutation
+    val old = s"${tmp("layout_ivf_premanifest")}/corpus"
+    premanifest(path, old, Seq(""), "cell", "batch_id")
+    premanifest(s"${path}_del", s"${old}_del", Seq(""), "batch_id")
+    def corpusRows(p: String) = rows(IndexStore.levels(spark, p).get.filter(col("batch_id") < 5))
+    Similarity.ivfAppend(emb.filter(col("vec_id") === 58L), cent, old, batchId = 5L)
+    Similarity.ivfDelete(spark, old, Seq(4L), batchId = 6L)
+    assert(corpusRows(old) == corpusRows(path))
+    assert(rows(IndexStore.levels(spark, s"${old}_del").get.filter(col("batch_id") < 5)) ==
+      rows(IndexStore.levels(spark, s"${path}_del").get))
+    assert(Seq(old, s"${old}_del").forall(new ManifestTable(spark, _).versions() == Seq(1L, 2L)))
+    val before = dirs(root)
     Similarity.ivfCompact(emb.filter(col("vec_id") === 59L), cent, path, batchId = 3L)
     val compacted = cellLeaves(path)
     assert(compacted.forall(_.endsWith("/batch_id=3")) && compacted.nonEmpty)
-    assert(dirs(root) == (Seq("corpus", "corpus_del") ++
-      withCells(compacted).map(d => s"corpus/$d")).sorted)
+    // the vacuum keeps the previous manifests' files for readers planned
+    // against them, and removes the emptied _staging dirs
+    assert(dirs(root) == (before.filterNot(_.endsWith("/_staging")) ++
+      withCells(compacted).map(d => s"corpus/$d")).distinct.sorted)
+    assert(listedDirs(path) == compacted && listedDirs(s"${path}_del").isEmpty)
   }
 
   test("IVFPQ code store: the IVF leaf layout over code rows") {
@@ -179,14 +243,19 @@ class IndexStoreSpec extends SparkSpec {
     Similarity.ivfPqAppend(resident, cent, pq, path, batchId = 0L, m = 2, dim = 8)
     Similarity.ivfPqAppend(emb.filter(col("vec_id") >= 45), cent, pq, path,
       batchId = 1L, m = 2, dim = 8)
-    assert(spark.read.parquet(path).columns.toSeq == Seq("vec_id", "codes", "cell", "batch_id"))
+    assert(IndexStore.levels(spark, path).get.columns.toSeq == Seq("vec_id", "codes", "cell", "batch_id"))
     val appended = cellLeaves(path)
     assert(appended.map(_.dropWhile(_ != '/')).toSet == Set("/batch_id=0", "/batch_id=1"))
-    assert(dirs(root) == (Seq("codes") ++ withCells(appended).map(d => s"codes/$d")).sorted)
+    assert(dirs(root) == (Seq("codes") ++ levelledDirs.map(d => s"codes/$d") ++
+      withCells(appended).map(d => s"codes/$d")).sorted)
+    assert(listedDirs(path) == appended)
+    premanifest(path, s"${tmp("layout_ivfpq_premanifest")}/codes", Seq(""), "cell", "batch_id")
     Similarity.ivfPqCompact(emb.filter(col("vec_id") === 59L), cent, pq, path,
       batchId = 2L, m = 2, dim = 8)
     val compacted = cellLeaves(path)
     assert(compacted.forall(_.endsWith("/batch_id=2")) && compacted.nonEmpty)
-    assert(dirs(root) == (Seq("codes") ++ withCells(compacted).map(d => s"codes/$d")).sorted)
+    assert(dirs(root) == (Seq("codes", "codes/_manifests") ++
+      withCells(appended ++ compacted).map(d => s"codes/$d")).sorted)
+    assert(listedDirs(path) == compacted)
   }
 }

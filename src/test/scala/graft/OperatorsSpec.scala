@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Portable
 import graft.operators.{Curation, Dedup, Multimodal, RangeJoin, Salting, Similarity, Skew, TextAnalysis}
+import graft.sources.IndexStore
 
 /** Unit specs for the extension operators (SURVEY.md §2.12) on
   * handcrafted inputs with known answers. */
@@ -758,7 +759,7 @@ class OperatorsSpec extends SparkSpec {
     val path = s"$dir/corpus"
     Similarity.ivfAppend(resident, cent, path, batchId = 0L)
     Similarity.ivfAppend(batch, cent, path, batchId = 1L)
-    val stored = spark.read.parquet(path)
+    val stored = IndexStore.levels(spark, path).get
     assert(stored.count() == 80)
     assert(stored.filter(col("batch_id") === 1).count() == batch.count())
     val queries = emb.filter(col("vec_id") < 3).select("vec_id", "embedding")
@@ -778,7 +779,7 @@ class OperatorsSpec extends SparkSpec {
     // deterministic assignment regenerates exactly the original
     // (cell, batch_id) leaves, dynamic overwrite replaces them in place
     Similarity.ivfAppend(batch, cent, path, batchId = 1L)
-    val replayed = spark.read.parquet(path)
+    val replayed = IndexStore.levels(spark, path).get
     assert(replayed.count() == 80,
       "a replayed batch must overwrite its own leaves, not duplicate them")
     val afterReplay = Similarity.ivfProbeTopKPruned(replayed, queries, cent,
@@ -801,18 +802,25 @@ class OperatorsSpec extends SparkSpec {
     Similarity.ivfAppend(resident, cent, path, batchId = 0L)
     Similarity.ivfAppend(b1Rows.toDF("vec_id", "embedding", "label"), cent, path, batchId = 1L)
     val b2 = b2Rows.toDF("vec_id", "embedding", "label")
+    val queries = resident.filter(col("vec_id") < 3).select("vec_id", "embedding")
+    def probe(c: org.apache.spark.sql.DataFrame) =
+      Similarity.ivfProbeTopKPruned(c, queries, cent, k = 4, nprobe = 2, cellCol = "cell")
+    def serve(c: org.apache.spark.sql.DataFrame) =
+      probe(c).orderBy("query_id", "rank").collect().toSeq
+    // a reader planned before the compaction executes after it, as of
+    // its plan: the compaction keeps the previous manifest's files
+    val plannedBefore = probe(IndexStore.levels(spark, path).get)
+    val answerBefore = serve(IndexStore.levels(spark, path).get)
     Similarity.ivfCompact(b2, cent, path, batchId = 2L)
-    val stored = spark.read.parquet(path)
+    assert(plannedBefore.orderBy("query_id", "rank").collect().toSeq == answerBefore &&
+      answerBefore.nonEmpty)
+    val stored = IndexStore.levels(spark, path).get
     assert(stored.count() == 80)
     assert(stored.select("batch_id").distinct().as[Int].collect().toSeq == Seq(2),
       "compaction must fold every older level into the trigger batch's own")
     val all = (residentRows ++ b1Rows ++ b2Rows).toDF("vec_id", "embedding", "label")
     val allAssigned = all.join(
       Similarity.assignCells(all, cent).select(col("vec_id"), col("cell")), "vec_id")
-    val queries = resident.filter(col("vec_id") < 3).select("vec_id", "embedding")
-    def serve(c: org.apache.spark.sql.DataFrame) =
-      Similarity.ivfProbeTopKPruned(c, queries, cent, k = 4, nprobe = 2, cellCol = "cell")
-        .orderBy("query_id", "rank").collect().toSeq
     val expect = Similarity.ivfProbeTopK(allAssigned, queries, cent,
       k = 4, nprobe = 2, cellCol = "cell")
       .orderBy("query_id", "rank").collect().toSeq
@@ -821,13 +829,13 @@ class OperatorsSpec extends SparkSpec {
     // the merged read includes its own committed level, dedupes, and
     // rewrites the same leaves — state converges, nothing duplicates
     Similarity.ivfCompact(b2, cent, path, batchId = 2L)
-    val replayed = spark.read.parquet(path)
+    val replayed = IndexStore.levels(spark, path).get
     assert(replayed.count() == 80)
     assert(serve(replayed) == expect)
     // a later append lands beside the compacted level untouched
     val b3Rows = mk(80L until 86L)
     Similarity.ivfAppend(b3Rows.toDF("vec_id", "embedding", "label"), cent, path, batchId = 3L)
-    val grown = spark.read.parquet(path)
+    val grown = IndexStore.levels(spark, path).get
     assert(grown.count() == 86)
     val all2 = (residentRows ++ b1Rows ++ b2Rows ++ b3Rows)
       .toDF("vec_id", "embedding", "label")
@@ -858,8 +866,8 @@ class OperatorsSpec extends SparkSpec {
       Similarity.ivfProbeTopKPruned(c, queries, cent, k = 4, nprobe = 2,
         cellCol = "cell", delOpt = del)
         .orderBy("query_id", "rank").collect().toSeq
-    val stored = spark.read.parquet(path)
-    val delTree = spark.read.parquet(s"${path}_del")
+    val stored = IndexStore.levels(spark, path).get
+    val delTree = IndexStore.levels(spark, s"${path}_del").get
     // ground truth: the store with the rows physically absent
     val expect = serve(stored.filter(!col("vec_id").isin(doomed: _*)), None)
     assert(serve(stored, Some(delTree)) == expect && expect.nonEmpty,
@@ -879,19 +887,17 @@ class OperatorsSpec extends SparkSpec {
     assert(planAsc.contains("IN (28,37,47)"), planAsc)
     // replayed delete rewrites exactly its own leaf
     Similarity.ivfDelete(spark, path, doomed, batchId = 1L)
-    assert(serve(spark.read.parquet(path),
-      Some(spark.read.parquet(s"${path}_del"))) == expect)
+    assert(serve(IndexStore.levels(spark, path).get,
+      Some(IndexStore.levels(spark, s"${path}_del").get)) == expect)
     // compaction applies the tombstones physically and drops them
     val b2 = Seq((100L, Array.fill(4)(rnd.nextFloat()), 0))
       .toDF("vec_id", "embedding", "label")
     Similarity.ivfCompact(b2, cent, path, batchId = 2L)
-    val compacted = spark.read.parquet(path)
+    val compacted = IndexStore.levels(spark, path).get
     assert(compacted.filter(col("vec_id").isin(doomed: _*)).count() == 0,
       "merge-time removal: doomed rows gone from the corpus tree")
     assert(compacted.count() == 58, "60 - 3 deleted + 1 new")
-    val delDir = new java.io.File(s"${path}_del")
-    assert(!delDir.exists ||
-      delDir.listFiles().forall(f => !f.getName.startsWith("batch_id=")),
+    assert(IndexStore.levels(spark, s"${path}_del").isEmpty,
       "applied tombstone leaves dropped")
     // the compacted store serves the survivors WITHOUT the del tree
     val all2 = rows.filterNot(r => doomed.contains(r._1))
@@ -923,7 +929,7 @@ class OperatorsSpec extends SparkSpec {
       cent, pq, path, batchId = 1L, m = 2, dim = 8)
     val b2 = b2Rows.toDF("vec_id", "embedding", "label")
     Similarity.ivfPqCompact(b2, cent, pq, path, batchId = 2L, m = 2, dim = 8)
-    val stored = spark.read.parquet(path)
+    val stored = IndexStore.levels(spark, path).get
     assert(stored.count() == 70)
     assert(stored.select("batch_id").distinct().as[Int].collect().toSeq == Seq(2),
       "compaction must fold the code levels into the trigger batch's own")
@@ -942,7 +948,7 @@ class OperatorsSpec extends SparkSpec {
     assert(got == expect && got.nonEmpty)
     // replayed compaction converges (same argument as the raw store)
     Similarity.ivfPqCompact(b2, cent, pq, path, batchId = 2L, m = 2, dim = 8)
-    val replayed = spark.read.parquet(path)
+    val replayed = IndexStore.levels(spark, path).get
     assert(replayed.count() == 70)
     assert(Similarity.ivfPqTopKFromCodes(replayed, queries, cent, pq,
       k = 4, nprobe = 2, m = 2, dim = 8)
@@ -951,7 +957,7 @@ class OperatorsSpec extends SparkSpec {
     // serve must equal the code store with those rows absent
     val doomedPq = expect.map(_.getLong(1)).distinct.take(2)
     Similarity.ivfDelete(spark, path, doomedPq, batchId = 3L)
-    val delTree = spark.read.parquet(s"${path}_del")
+    val delTree = IndexStore.levels(spark, s"${path}_del").get
     val expectDel = Similarity.ivfPqTopKFromCodes(
       replayed.filter(!col("vec_id").isin(doomedPq: _*)), queries, cent, pq,
       k = 4, nprobe = 2, m = 2, dim = 8)
@@ -967,7 +973,7 @@ class OperatorsSpec extends SparkSpec {
     val b3Rows = mk(70L until 72L)
     Similarity.ivfPqCompact(b3Rows.toDF("vec_id", "embedding", "label"),
       cent, pq, path, batchId = 4L, m = 2, dim = 8)
-    val afterCompact = spark.read.parquet(path)
+    val afterCompact = IndexStore.levels(spark, path).get
     assert(afterCompact.filter(col("vec_id").isin(doomedPq: _*)).count() == 0)
     val all3 = (residentRows ++ b1Rows ++ b2Rows ++ b3Rows)
       .filterNot(r => doomedPq.contains(r._1))
@@ -997,11 +1003,11 @@ class OperatorsSpec extends SparkSpec {
     val s2 = docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
     TextAnalysis.bm25AppendSegment(s1, path, segmentId = 0L)
     TextAnalysis.bm25AppendSegment(s2, path, segmentId = 1L)
-    def serve() = TextAnalysis.bm25SegmentedTopK(
-      spark.read.parquet(s"$path/tf"), spark.read.parquet(s"$path/df"),
-      spark.read.parquet(s"$path/meta"),
-      queryIds = Seq(0L, 1L), k = 3)
-      .orderBy("query_id", "rank").collect().toSeq
+    def serve() = {
+      val (tf, df, meta, _) = TextAnalysis.loadBm25Segments(spark, path)
+      TextAnalysis.bm25SegmentedTopK(tf, df, meta, queryIds = Seq(0L, 1L), k = 3)
+        .orderBy("query_id", "rank").collect().toSeq
+    }
     // the whole-corpus ground truth: one bm25Index over ALL docs
     def oneShot(d: org.apache.spark.sql.DataFrame) =
       TextAnalysis.bm25RelatedTopKFrom(
@@ -1025,11 +1031,18 @@ class OperatorsSpec extends SparkSpec {
     // resident segments into ONE leaf; the serve must not notice
     val s4 = Seq((200L, "merge fold segment compact"))
       .toDF("doc_id", "text")
+    // a reader planned before the compaction executes after it, as of
+    // its plan: the compaction keeps the previous manifest's files
+    val (tf0, df0, meta0, _) = TextAnalysis.loadBm25Segments(spark, path)
+    val plannedBefore = TextAnalysis.bm25SegmentedTopK(tf0, df0, meta0,
+      queryIds = Seq(0L, 1L), k = 3)
     TextAnalysis.bm25CompactSegments(s4, path, segmentId = 3L)
+    assert(plannedBefore.orderBy("query_id", "rank").collect().toSeq ==
+      oneShot(docs.unionByName(s3)))
     val allDocs = docs.unionByName(s3).unionByName(s4)
     assert(serve() == oneShot(allDocs),
       "compaction must be invisible to the scores")
-    def segs(sub: String) = spark.read.parquet(s"$path/$sub")
+    def segs(sub: String) = IndexStore.levels(spark, path, sub).get
       .select(col("segment").cast("long")).distinct()
       .collect().map(_.getLong(0)).toSet
     assert(segs("tf") == Set(3L) && segs("df") == Set(3L) &&
@@ -1057,12 +1070,11 @@ class OperatorsSpec extends SparkSpec {
       docs.filter(col("doc_id") >= 5), path, segmentId = 1L)
     // tombstone doc 3 (a candidate) and doc 1 (a QUERY doc)
     TextAnalysis.bm25DeleteDocs(spark, path, Seq(1L, 3L), segmentId = 2L)
-    def serve() = TextAnalysis.bm25SegmentedTopK(
-      spark.read.parquet(s"$path/tf"), spark.read.parquet(s"$path/df"),
-      spark.read.parquet(s"$path/meta"),
-      queryIds = Seq(0L, 1L), k = 3,
-      segDel = Some(spark.read.parquet(s"$path/del")))
-      .orderBy("query_id", "rank").collect().toSeq
+    def serve() = {
+      val (tf, df, meta, del) = TextAnalysis.loadBm25Segments(spark, path)
+      TextAnalysis.bm25SegmentedTopK(tf, df, meta, queryIds = Seq(0L, 1L), k = 3, segDel = del)
+        .orderBy("query_id", "rank").collect().toSeq
+    }
     val survivors = docs.filter(!col("doc_id").isin(1L, 3L))
     val expect = TextAnalysis.bm25RelatedTopKFrom(
       TextAnalysis.bm25Index(survivors), queryIds = Seq(0L, 1L), k = 3)
@@ -1078,16 +1090,16 @@ class OperatorsSpec extends SparkSpec {
     val noDocs = spark.emptyDataFrame.select(lit(0L).as("doc_id"), lit("").as("text"))
       .limit(0)
     TextAnalysis.bm25CompactSegments(noDocs, path, segmentId = 3L)
-    val tfAfter = spark.read.parquet(s"$path/tf")
+    val (tfAfter, _, _, delAfter) = TextAnalysis.loadBm25Segments(spark, path)
     assert(tfAfter.filter(col("doc_id").isin(1L, 3L)).count() == 0,
       "merge-time removal: doomed rows gone from the tf tree")
-    assert(!new java.io.File(s"$path/del/segment=2").exists,
-      "applied tombstones dropped")
+    assert(delAfter.isEmpty, "applied tombstones dropped")
     // the compacted store serves identically WITHOUT the del tree
-    def serveNoDel() = TextAnalysis.bm25SegmentedTopK(
-      spark.read.parquet(s"$path/tf"), spark.read.parquet(s"$path/df"),
-      spark.read.parquet(s"$path/meta"), queryIds = Seq(0L, 1L), k = 3)
-      .orderBy("query_id", "rank").collect().toSeq
+    def serveNoDel() = {
+      val (tf, df, meta, _) = TextAnalysis.loadBm25Segments(spark, path)
+      TextAnalysis.bm25SegmentedTopK(tf, df, meta, queryIds = Seq(0L, 1L), k = 3)
+        .orderBy("query_id", "rank").collect().toSeq
+    }
     assert(serveNoDel() == expect)
     // a delete AT the compaction's own segment id is applied by that
     // compaction too, so its leaf must go with it (tombstones reap at
@@ -1095,7 +1107,7 @@ class OperatorsSpec extends SparkSpec {
     // on the tombstone branch
     TextAnalysis.bm25DeleteDocs(spark, path, Seq(5L), segmentId = 4L)
     TextAnalysis.bm25CompactSegments(noDocs, path, segmentId = 4L)
-    assert(!new java.io.File(s"$path/del/segment=4").exists,
+    assert(IndexStore.levels(spark, path, "del").isEmpty,
       "a tombstone at the compaction's own segment must be dropped")
     val expect2 = TextAnalysis.bm25RelatedTopKFrom(
       TextAnalysis.bm25Index(docs.filter(!col("doc_id").isin(1L, 3L, 5L))),

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.ReadShapes
+import graft.sources.IndexStore
 
 /** Physical-plan shape pins (SURVEY §4.1): these are the properties the
   * 100 TB design depends on — partition pruning at the store, filter
@@ -447,7 +448,7 @@ class PlanSpec extends SparkSpec {
     graft.operators.Similarity.ivfAppend(resident, cents, path, batchId = 0L)
     graft.operators.Similarity.ivfAppend(
       emb.filter(col("vec_id") % 4 === 3), cents, path, batchId = 1L)
-    val stored = spark.read.parquet(path)
+    val stored = IndexStore.levels(spark, path).get
     val queries = emb.filter(col("vec_id") < 3).select("vec_id", "embedding")
     val plan = planOf(graft.operators.Similarity.ivfProbeTopKPruned(
       stored, queries, cents, k = 4, nprobe = 2, cellCol = "cell"))
@@ -462,7 +463,7 @@ class PlanSpec extends SparkSpec {
     // anti-join (the arbitrarily-large-list shape), and both shapes
     // answer identically.
     graft.operators.Similarity.ivfDelete(spark, path, Seq(7L, 11L), batchId = 2L)
-    val del = spark.read.parquet(s"${path}_del")
+    val del = IndexStore.levels(spark, s"${path}_del").get
     val pushed = graft.operators.Similarity.ivfProbeTopKPruned(
       stored, queries, cents, k = 4, nprobe = 2, cellCol = "cell",
       delOpt = Some(del))
@@ -714,9 +715,7 @@ class PlanSpec extends SparkSpec {
     graft.operators.TextAnalysis.bm25AppendSegment(
       docs.filter(col("doc_id") >= 3), path, segmentId = 1L)
     graft.operators.TextAnalysis.bm25DeleteDocs(spark, path, Seq(4L), segmentId = 2L)
-    val tf = spark.read.parquet(s"$path/tf")
-    val df = spark.read.parquet(s"$path/df")
-    val meta = spark.read.parquet(s"$path/meta")
+    val (tf, df, meta, Some(del)) = graft.operators.TextAnalysis.loadBm25Segments(spark, path)
     def broadcasts(p: String): Int =
       "BroadcastExchange".r.findAllIn(p).length
     val served = graft.operators.TextAnalysis.bm25SegmentedTopK(
@@ -727,7 +726,7 @@ class PlanSpec extends SparkSpec {
       s"exactly the qterms broadcast expected, got ${broadcasts(plan)}:\n$plan")
     val servedDel = graft.operators.TextAnalysis.bm25SegmentedTopK(
       tf, df, meta, queryIds = Seq(0L, 1L), k = 3,
-      segDel = Some(spark.read.parquet(s"$path/del")))
+      segDel = Some(del))
     val delPlan = planOf(servedDel)
     assert(broadcasts(delPlan) == 1,
       s"small del list must push down, not anti-join: ${broadcasts(delPlan)}:\n$delPlan")
@@ -766,8 +765,8 @@ class PlanSpec extends SparkSpec {
     val vpath = s"$dir/corpus"
     graft.operators.Similarity.ivfAppend(emb, cents, vpath, batchId = 0L)
     graft.operators.Similarity.ivfDelete(spark, vpath, Seq(7L, 11L), batchId = 1L)
-    val stored = spark.read.parquet(vpath)
-    val vdel = spark.read.parquet(s"${vpath}_del")
+    val stored = IndexStore.levels(spark, vpath).get
+    val vdel = IndexStore.levels(spark, s"${vpath}_del").get
     val queries = emb.filter(col("vec_id") < 3).select("vec_id", "embedding")
     def vServe(del: Option[org.apache.spark.sql.DataFrame]): Unit = {
       graft.operators.Similarity.ivfProbeTopKPruned(
@@ -786,10 +785,7 @@ class PlanSpec extends SparkSpec {
     graft.operators.TextAnalysis.bm25AppendSegment(
       docs.filter(col("doc_id") >= 3), tpath, segmentId = 1L)
     graft.operators.TextAnalysis.bm25DeleteDocs(spark, tpath, Seq(4L), segmentId = 2L)
-    val tf = spark.read.parquet(s"$tpath/tf")
-    val sdf = spark.read.parquet(s"$tpath/df")
-    val meta = spark.read.parquet(s"$tpath/meta")
-    val tdel = spark.read.parquet(s"$tpath/del")
+    val (tf, sdf, meta, Some(tdel)) = graft.operators.TextAnalysis.loadBm25Segments(spark, tpath)
     def tServe(del: Option[org.apache.spark.sql.DataFrame]): Unit = {
       graft.operators.TextAnalysis.bm25SegmentedTopK(
         tf, sdf, meta, queryIds = Seq(0L, 1L), k = 3, segDel = del); ()
@@ -829,8 +825,8 @@ class PlanSpec extends SparkSpec {
     // 20 tombstones, far over a maxDel of 3
     graft.operators.Similarity.ivfDelete(
       spark, vpath, (30L until 50L).toSeq, batchId = 1L)
-    val stored = spark.read.parquet(vpath)
-    val vdel = spark.read.parquet(s"${vpath}_del")
+    val stored = IndexStore.levels(spark, vpath).get
+    val vdel = IndexStore.levels(spark, s"${vpath}_del").get
     val queries = emb.filter(col("vec_id") < 3).select("vec_id", "embedding")
     // 1) the fold itself: driver receives at most maxDel + 1 del ids
     //    (the limit is in the collected plan), and reports the
@@ -904,10 +900,7 @@ class PlanSpec extends SparkSpec {
     graft.operators.TextAnalysis.bm25AppendSegment(docs, tpath, segmentId = 0L)
     graft.operators.TextAnalysis.bm25DeleteDocs(
       spark, tpath, 0L +: (10L until 20L).toSeq, segmentId = 1L)
-    val tf = spark.read.parquet(s"$tpath/tf")
-    val sdf = spark.read.parquet(s"$tpath/df")
-    val meta = spark.read.parquet(s"$tpath/meta")
-    val tdel = spark.read.parquet(s"$tpath/del")
+    val (tf, sdf, meta, Some(tdel)) = graft.operators.TextAnalysis.loadBm25Segments(spark, tpath)
     def tServe(maxDel: Int) = graft.operators.TextAnalysis.bm25SegmentedTopK(
       tf, sdf, meta, queryIds = Seq(0L, 1L), k = 3,
       segDel = Some(tdel), delPushdownMax = maxDel)

@@ -8,19 +8,21 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 
-import graft.operators.WritePipeline
-import graft.sources.{IndexStore, SeriesStore}
+import graft.operators.{Similarity, TextAnalysis, WritePipeline}
+import graft.sources.{IndexStore, ManifestTable, SeriesStore}
 
-/** Crash-point matrix for every mutation of the series store and of a
-  * bucketed [[IndexStore]] (here under the store's `bucketed/`). Each
+/** Crash-point matrix for every mutation of the series store, of a
+  * bucketed [[IndexStore]] (here under the store's `bucketed/`) and of
+  * the levelled ones: a segmented BM25 store and an IVF corpus with its
+  * tombstone store (under `levelled/`). Each
   * mutation first runs clean on [[CrashFs]] to count its creates,
   * renames and deletes (n); then, for every k in 1..n, a copy of the
   * same starting store runs it with the k-th of those calls (and every
   * later one) failing. A fresh [[SeriesStore]] on the crashed copy must
   * answer with exactly the state before or the state after; where it
   * answers "before", re-running the mutation reaches "after"; and then
-  * `vacuum(minAgeMillis = 0)` leaves no file that no retained manifest
-  * lists. */
+  * `vacuum(minAgeMillis = 0)` of every table leaves no file that no
+  * retained manifest lists. */
 class SeriesStoreCrashSpec extends SparkSpec {
   import spark.implicits._
 
@@ -50,11 +52,39 @@ class SeriesStoreCrashSpec extends SparkSpec {
         IndexStore.Table("b", Seq((v, "b")).toDF("v", "tag"))),
       Seq((v, 2)).toDF("v", "n_buckets"))
 
-  /** Everything a reader of the store at `dir` can see, as sorted strings. */
+  /** Root of the levelled store `name` beside the series store `s`. */
+  private def levelled(s: SeriesStore, name: String): String =
+    s.valuesPath.stripSuffix("series_values") + s"levelled/$name"
+
+  private def docs(ids: Long*): DataFrame =
+    ids.map(i => (i, s"w${i % 3} w${i % 5} w$i")).toDF("doc_id", "text")
+
+  private def vectors(ids: Long*): DataFrame =
+    ids.map(i => (i, Array.tabulate(4)(d => ((i * 7 + d * 3) % 11).toFloat), (i % 3).toInt))
+      .toDF("vec_id", "embedding", "label")
+
+  private lazy val centroids = Similarity.cellCentroids(vectors(0L until 12L: _*)).localCheckpoint()
+
+  /** An IVF corpus of vectors 0..11 in two levels, with vectors 2 and 7
+    * tombstoned at level 2. */
+  private def ivfStore(s: SeriesStore): Unit = {
+    val path = levelled(s, "corpus")
+    Similarity.ivfAppend(vectors(0L until 6L: _*), centroids, path, batchId = 0L)
+    Similarity.ivfAppend(vectors(6L until 12L: _*), centroids, path, batchId = 1L)
+    Similarity.ivfDelete(spark, path, Seq(2L, 7L), batchId = 2L)
+  }
+
+  /** Everything a reader of the store at `dir` can see, as sorted strings:
+    * each levelled tree through [[IndexStore.levels]], the IVF corpus
+    * through its tombstones as its serve sees it (a crash between the
+    * corpus commit and the tombstone store's leaves tombstones that the
+    * merge already applied). */
   private def state(dir: JPath): Seq[String] = {
     val store = new SeriesStore(spark, CrashFs.uri(dir.toString))
     def rows(tag: String, df: DataFrame) =
       df.collect().map(r => s"$tag ${r.mkString(",")}").sorted.toSeq
+    def levels(name: String, sub: String = "") =
+      IndexStore.levels(spark, CrashFs.uri(dir.resolve(s"levelled/$name").toString), sub)
     val bucketed = dir.resolve("bucketed")
     val stores =
       if (!Files.isDirectory(bucketed)) Nil
@@ -68,7 +98,10 @@ class SeriesStoreCrashSpec extends SparkSpec {
         val loaded = IndexStore.load(spark, CrashFs.uri(bucketed.resolve(name).toString))
         loaded.tables.toSeq.sortBy(_._1).flatMap { case (t, df) => rows(s"$name/$t", df) } :+
           s"$name/meta ${loaded.meta.mkString(",")}"
-      }
+      } ++
+      Seq("tf", "df", "meta", "del").flatMap(t => levels("bm25", t).toSeq.flatMap(rows(s"bm25/$t", _))) ++
+      levels("corpus").toSeq.flatMap(c => rows("corpus", levels("corpus_del").fold(c)(d =>
+        c.join(d.select("vec_id"), Seq("vec_id"), "left_anti"))))
   }
 
   /** Local files under `dir` that no retained manifest of their table
@@ -81,7 +114,7 @@ class SeriesStoreCrashSpec extends SparkSpec {
         try walk.iterator().asScala.filter(Files.isRegularFile(_)).toSeq finally walk.close()
       }
     val tables = Seq(dir.resolve("series_values"), dir.resolve("run_series")) ++
-      Seq("zordered", "bucketed").map(dir.resolve).filter(Files.isDirectory(_))
+      Seq("zordered", "bucketed", "levelled").map(dir.resolve).filter(Files.isDirectory(_))
         .flatMap(d => Files.list(d).iterator().asScala.toSeq)
     val listed = tables.flatMap { t =>
       val manifests = files(t.resolve("_manifests"))
@@ -144,6 +177,9 @@ class SeriesStoreCrashSpec extends SparkSpec {
         assert(state(dir) == after, s"$name crashed at call $k: re-run did not reach after")
       }
       new SeriesStore(spark, uriOf(dir)).vacuum(minAgeMillis = 0L)
+      val levelledDir = dir.resolve("levelled")
+      if (Files.isDirectory(levelledDir)) Files.list(levelledDir).iterator().asScala.foreach(t =>
+        new ManifestTable(spark, uriOf(t)).vacuum(keepManifests = 2, minAgeMillis = 0L))
       assert(unlisted(dir).isEmpty, s"$name crashed at call $k: vacuum left ${unlisted(dir)}")
       assert(state(dir) == after)
       FsUtil.deleteRecursively(dir.toFile)
@@ -210,6 +246,36 @@ class SeriesStoreCrashSpec extends SparkSpec {
 
   test("crash matrix: IndexStore.write of a two-table store") {
     val n = matrix("indexstore")(pairStore(_, 1))(pairStore(_, 2))
+    info(s"$n crash points")
+  }
+
+  test("crash matrix: BM25 segment append") {
+    val n = matrix("bm25append")(s =>
+      TextAnalysis.bm25AppendSegment(docs(0L, 1L, 2L), levelled(s, "bm25"), segmentId = 0L))(s =>
+      TextAnalysis.bm25AppendSegment(docs(3L, 4L), levelled(s, "bm25"), segmentId = 1L))
+    info(s"$n crash points")
+  }
+
+  test("crash matrix: BM25 delete") {
+    val n = matrix("bm25delete") { s =>
+      TextAnalysis.bm25AppendSegment(docs(0L, 1L, 2L), levelled(s, "bm25"), segmentId = 0L)
+      TextAnalysis.bm25AppendSegment(docs(3L, 4L), levelled(s, "bm25"), segmentId = 1L)
+    }(s => TextAnalysis.bm25DeleteDocs(spark, levelled(s, "bm25"), Seq(1L, 4L), segmentId = 2L))
+    info(s"$n crash points")
+  }
+
+  test("crash matrix: BM25 compaction applying a tombstone at its own segment") {
+    val n = matrix("bm25compact") { s =>
+      TextAnalysis.bm25AppendSegment(docs(0L, 1L, 2L), levelled(s, "bm25"), segmentId = 0L)
+      TextAnalysis.bm25AppendSegment(docs(3L, 4L), levelled(s, "bm25"), segmentId = 1L)
+      TextAnalysis.bm25DeleteDocs(spark, levelled(s, "bm25"), Seq(1L, 4L), segmentId = 2L)
+    }(s => TextAnalysis.bm25CompactSegments(docs(5L), levelled(s, "bm25"), segmentId = 2L))
+    info(s"$n crash points")
+  }
+
+  test("crash matrix: IVF compaction applying a tombstone") {
+    val n = matrix("ivfcompact")(ivfStore)(s =>
+      Similarity.ivfCompact(vectors(12L, 13L), centroids, levelled(s, "corpus"), batchId = 3L))
     info(s"$n crash points")
   }
 

@@ -692,7 +692,7 @@ class StreamingSpec extends SparkSpec {
     val wave2 = vecs(200 until 204).toDF("vec_id", "embedding", "label")
     wave2.write.mode("append").parquet(inDir)
     val q2 = start(); q2.processAllAvailable(); q2.stop()
-    val stored = spark.read.parquet(path)
+    val stored = graft.sources.IndexStore.levels(spark, path).get
     assert(stored.count() == 38, s"30 resident + 8 appended, got ${stored.count()}")
     assert(stored.select("vec_id").distinct().count() == 38,
       "a restart must not re-land an already-committed wave")
@@ -731,7 +731,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(w2: _*); q.processAllAvailable() // batch 1: append (bid 2)
     mem.addData(w3: _*); q.processAllAvailable() // batch 2: COMPACT (bid 3)
     q.stop()
-    val stored = spark.read.parquet(path)
+    val stored = graft.sources.IndexStore.levels(spark, path).get
     assert(stored.count() == 36, s"24 resident + 12 streamed, got ${stored.count()}")
     assert(stored.select("batch_id").distinct().as[Int].collect().toSeq == Seq(3),
       "the compaction trigger must fold epoch + appends into one level")
@@ -772,7 +772,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(w2: _*); q.processAllAvailable() // batch 1: append (bid 2)
     mem.addData(w3: _*); q.processAllAvailable() // batch 2: COMPACT (bid 3)
     q.stop()
-    val stored = spark.read.parquet(path)
+    val stored = graft.sources.IndexStore.levels(spark, path).get
     assert(stored.count() == 36, s"24 resident + 12 streamed, got ${stored.count()}")
     assert(stored.select("batch_id").distinct().as[Int].collect().toSeq == Seq(3),
       "the compaction trigger must fold epoch + appends into one code level")
@@ -828,7 +828,7 @@ class StreamingSpec extends SparkSpec {
       .toDF("doc_id", "text")
     w3.write.mode("append").parquet(inDir)
     val q3 = start(); q3.processAllAvailable(); q3.stop()
-    val segTf = spark.read.parquet(s"$path/tf")
+    val (segTf, segDf, segMeta, _) = graft.operators.TextAnalysis.loadBm25Segments(spark, path)
     assert(segTf.select("doc_id").distinct().count() == 9,
       "3 seed + 6 streamed docs, no replay duplicates")
     assert(segTf.select(col("segment").cast("long")).distinct()
@@ -836,8 +836,7 @@ class StreamingSpec extends SparkSpec {
       "the in-stream compaction must fold every prior segment")
     val all = seed.unionByName(w1).unionByName(w2).unionByName(w3)
     val got = graft.operators.TextAnalysis.bm25SegmentedTopK(
-      segTf, spark.read.parquet(s"$path/df"),
-      spark.read.parquet(s"$path/meta"), queryIds = Seq(0L, 1L), k = 3)
+      segTf, segDf, segMeta, queryIds = Seq(0L, 1L), k = 3)
       .orderBy("query_id", "rank").collect().toSeq
     val expect = graft.operators.TextAnalysis.bm25RelatedTopKFrom(
       graft.operators.TextAnalysis.bm25Index(all), queryIds = Seq(0L, 1L), k = 3)
