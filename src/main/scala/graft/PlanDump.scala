@@ -38,8 +38,6 @@ object PlanDump {
   }
 }
 
-/** Diagnostic: list every query whose executed plan contains a
-  * SortAggregate (the struct-buffer hash-aggregation fallback). */
 /** Repeated-source sweep: flag every registered query whose EXECUTED
   * plan scans the same parquet location more than once. A repeated
   * scan is either a deliberate multi-pass (self-join, union of slices,
@@ -238,6 +236,8 @@ object JobBudgetScan {
   }
 }
 
+/** Diagnostic: list every query whose executed plan contains a
+  * SortAggregate (the struct-buffer hash-aggregation fallback). */
 object SortAggScan {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"

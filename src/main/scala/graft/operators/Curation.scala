@@ -332,8 +332,8 @@ object Curation {
     * `count(score >= thr)` beside the exact gate's
     * `count(pr <= q)`, so no second corpus pass and no join of three
     * per-stratum legs. 2 source scans + 2 corpus exchanges vs the
-    * split form's 3 + 3; value equality with
-    * [[quantileGateAuditSplit]] is spec-pinned (PropertiesSpec) and
+    * split form's 3 + 3; value equality with the split form is
+    * spec-pinned (PropertiesSpec) and
     * was collect-compared at sf0.001/sf0.01 before promotion.
     *
     * Same sketch, same cut: the thresholds are the identical
@@ -356,26 +356,6 @@ object Curation {
         first(col("n_rows")).as("n_rows"),
         count(when(col("__pr") <= q, 1)).as("n_exact"),
         count(when(col(scoreCol) >= col("__thr"), 1)).as("__n_approx"))
-      .select(col(stratumCol), col("n_rows"), col("n_exact"),
-        (abs(col("__n_approx") - col("n_exact"))
-          <= greatest(ceil(col("n_rows") * lit(boundFactor) / lit(accuracy)),
-            lit(2L))).as("within_bound"))
-  }
-
-  /** The pre-r18 three-leg formulation of [[quantileGateAudit]] —
-    * totals, [[keepTopQuantile]], and [[keepTopQuantileApprox]] each
-    * re-aggregating the input, joined per stratum. Kept as the
-    * value-equality reference that PropertiesSpec pins the fused
-    * plan against. */
-  private[graft] def quantileGateAuditSplit(df: DataFrame,
-      stratumCol: String, scoreCol: String, tieCol: String, q: Double,
-      accuracy: Int, boundFactor: Double = 5.0): DataFrame = {
-    val approxN = keepTopQuantileApprox(df, stratumCol, scoreCol, q, accuracy)
-      .groupBy(stratumCol).agg(count(lit(1)).as("__n_approx"))
-    val exactN = keepTopQuantile(df, stratumCol, scoreCol, tieCol, q)
-      .groupBy(stratumCol).agg(count(lit(1)).as("n_exact"))
-    val totals = df.groupBy(stratumCol).agg(count(lit(1)).as("n_rows"))
-    totals.join(exactN, stratumCol).join(approxN, stratumCol)
       .select(col(stratumCol), col("n_rows"), col("n_exact"),
         (abs(col("__n_approx") - col("n_exact"))
           <= greatest(ceil(col("n_rows") * lit(boundFactor) / lit(accuracy)),

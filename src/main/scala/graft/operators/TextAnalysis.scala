@@ -1324,7 +1324,7 @@ object TextAnalysis {
     * the windows. One documents scan, two vocab-sized window
     * exchanges, zero broadcast builds; A/B'd min 0.330 vs 0.405 /
     * med 0.368 vs 0.514 interleaved, value equality spec-pinned
-    * against [[classTfIdfUnfolded]].
+    * against the unfolded form (PropertiesSpec).
     *
     * Like the siblings with collected model state ([[bm25TopK]]'s
     * corpus stats, [[nbClassify]]'s model, [[importanceWeights]]'
@@ -1354,36 +1354,6 @@ object TextAnalysis {
           org.apache.spark.sql.expressions.Window.partitionBy(col("token"))))
       .withColumn("ctfidf",
         round(col("tf") * (log((lit(ngVal) + 1.0) / (col("groups_with") + 1.0)) + 1.0), 6))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("group"))
-      .orderBy(col("ctfidf").desc, col("token").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select(col("group"), col("token"), col("tf"), col("groups_with"),
-        col("ctfidf"), col("rank"))
-  }
-
-  /** The pre-r18 [[classTfIdf]] formulation — the ng term as an
-    * IN-PLAN 1-row broadcast (distinct → agg → crossJoin) running a
-    * second documents scan. Kept as the value-equality reference
-    * that PropertiesSpec pins the folded plan against. */
-  private[graft] def classTfIdfUnfolded(docs: DataFrame, groupCol: String,
-      topK: Int = 10, textCol: String = "text"): DataFrame = {
-    require(topK >= 1, "topK must be >= 1")
-    val terms = docs.filter(col(groupCol).isNotNull)
-      .select(col(groupCol).cast("string").as("group"),
-        explode(toks(col(textCol))).as("token"))
-    val tf = terms.groupBy(col("group"), col("token"))
-      .agg(count(lit(1)).as("tf"))
-      .withColumn("groups_with",
-        count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("token"))))
-    val ng = docs.filter(col(groupCol).isNotNull)
-      .select(col(groupCol)).distinct().agg(count(lit(1)).as("__ng"))
-    val scored = tf
-      .crossJoin(broadcast(ng))
-      .withColumn("ctfidf",
-        round(col("tf") * (log((col("__ng") + 1.0) / (col("groups_with") + 1.0)) + 1.0), 6))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("group"))
       .orderBy(col("ctfidf").desc, col("token").asc)

@@ -31,17 +31,23 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *    replaces the whole file list, so it is atomic across the store's
   *    tables: a reader sees the old store or the new one.
   *
-  *  - **Levelled store** ([[writeLevel]] / [[resident]] /
-  *    [[foldLevel]] / [[levels]] / [[maintain]]): ONE [[ManifestTable]]
-  *    at `<path>` holding immutable `<levelCol>=<id>` leaves (under any
-  *    leading partition columns — the IVF stores lead with `cell` — and
-  *    under a sub-directory per tree when the store has several, as
-  *    BM25's `tf`/`df`/`meta`/`del` do). A level write stages its
-  *    frames and commits the current files minus that level's plus the
-  *    staged ones in one manifest, so every tree of a level publishes
-  *    at once, and a replayed append — every level is a pure function
-  *    of its input — replaces exactly its own level (exactly-once in
-  *    the store from an at-least-once trigger). Deletes are tombstone
+  *  - **Levelled store** ([[writeLevel]] / [[writeVersion]] /
+  *    [[resident]] / [[foldLevel]] / [[levels]] / [[maintain]]): ONE
+  *    [[ManifestTable]] at `<path>` holding immutable `<levelCol>=<id>`
+  *    leaves (under any leading partition columns — the IVF stores lead
+  *    with `cell` — and under a sub-directory per tree when the store
+  *    has several, as BM25's `tf`/`df`/`meta`/`del` do). The segmented
+  *    BM25 store, the IVF and IVFPQ corpora with their `_del` tombstone
+  *    stores, and dedupIngest's sink, digest index and `_bloom` filter
+  *    chain (one level per micro-batch id) are levelled stores. A level
+  *    write stages its frames and commits the current files minus that
+  *    level's plus the staged ones in one manifest, so every tree of a
+  *    level publishes at once, and a replayed append — every level is a
+  *    pure function of its input — replaces exactly its own level
+  *    (exactly-once in the store from an at-least-once trigger); the
+  *    store is then vacuumed, keeping the previous manifest. A version
+  *    chain keeps one version per level and each [[writeVersion]] drops
+  *    all but the version its writer read. Deletes are tombstone
   *    levels (doomed ids), in the store's own `del` tree or in a
   *    sibling store. Fold-forward compaction at level L reads
   *    [[resident]] (rows at levels ≤ L minus ids tombstoned at ≤ L,
@@ -49,7 +55,9 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *    [[foldLevel]] commits the merged set as level L with every level
   *    ≤ L dropped, then vacuums keeping the previous manifest: a reader
   *    planned before the compaction keeps its files. Readers scan a
-  *    store's manifest through [[levels]]. Writers are single-writer
+  *    store's manifest through [[levels]] / [[levelsWhere]], list its
+  *    levels with [[levelIds]] and decode a small level on the driver
+  *    with [[levelRows]]. Writers are single-writer
   *    per store (the [[maintain]] loop runs every mutation on the
   *    stream's own foreachBatch thread), as for every ManifestTable.
   */
@@ -94,8 +102,7 @@ object IndexStore {
       store.stage(laid, into = Some(t.sub))((w, dir) => w.parquet(dir))
     }
     store.commit(files)
-    store.vacuum(keepManifests = 2, minAgeMillis = 0L)
-    ()
+    vacuumed(store)
   }
 
   /** Load a [[write]] store from its current manifest, in any session:
@@ -133,6 +140,30 @@ object IndexStore {
     * Spark job and writes nothing. */
   def levels(spark: SparkSession, root: String, sub: String = ""): Option[DataFrame] =
     scanLevels(new ManifestTable(spark, root), sub, _ => true)
+
+  /** [[levels]] over the files at the `<levelCol>=N` levels that `keep`
+    * selects, picked from the manifest's file list on the driver: no
+    * partition filter is planned and no other level's directory is
+    * listed. */
+  def levelsWhere(spark: SparkSession, root: String, levelCol: String, sub: String = "")(
+      keep: Long => Boolean): Option[DataFrame] =
+    scanLevels(new ManifestTable(spark, root), sub, levelOf(levelCol, _).exists(keep))
+
+  /** The `<levelCol>=N` levels the levelled store at `root` holds,
+    * ascending, from its manifest's file list (of a store written before
+    * it had one, from the files its next mutation adopts). Runs no Spark
+    * job and writes nothing. */
+  def levelIds(spark: SparkSession, root: String, levelCol: String): Seq[Long] =
+    new ManifestTable(spark, root).snapshot().flatMap(levelOf(levelCol, _)).distinct.sorted
+
+  /** The rows of level `level` of the levelled store at `root` (without
+    * `levelCol`), decoded on the driver: for a small level, such as one
+    * serialized sketch. Runs no Spark job. */
+  def levelRows(spark: SparkSession, root: String, levelCol: String, level: Long): Seq[Row] = {
+    val table = new ManifestTable(spark, root)
+    val statuses = table.listed(table.snapshot().filter(levelOf(levelCol, _).contains(level)))
+    statuses.headOption.fold(Seq.empty[Row])(st => table.collectSmall(statuses, table.footerSchema(st)))
+  }
 
   /** [[levels]] over the files of tree `sub` that `keep` selects. */
   private def scanLevels(table: ManifestTable, sub: String, keep: String => Boolean)
@@ -173,10 +204,27 @@ object IndexStore {
   }
 
   /** An append, a tombstone or a replay of either: `trees` land as level
-    * `level`, replacing whatever that level held ([[commitLevel]]). */
+    * `level`, replacing whatever that level held ([[commitLevel]]). The
+    * store is then vacuumed on the writer thread, keeping the previous
+    * manifest: a replay's superseded files go once a reader planned
+    * before it can no longer need them, even in a store never compacted. */
   def writeLevel(root: String, levelCol: String, level: Long, partitionCols: String*)(
       trees: (String, DataFrame)*): Unit =
-    commitLevel(root, levelCol, level, partitionCols, trees, _ == level)
+    vacuumed(commitLevel(root, levelCol, level, partitionCols, trees, _ == level))
+
+  /** Version `level` of a chain kept as a levelled store (one level per
+    * version): `frame` lands as level `level` in ONE manifest that drops
+    * every other version but `read`, the one its writer read — a replay
+    * of `level` reads it again — and the store is vacuumed as
+    * [[writeLevel]] does. */
+  def writeVersion(root: String, levelCol: String, level: Long, read: Option[Long])(
+      frame: DataFrame): Unit =
+    vacuumed(commitLevel(root, levelCol, level, Nil, Seq("" -> frame), v => !read.contains(v)))
+
+  private def vacuumed(table: ManifestTable): Unit = {
+    table.vacuum(keepManifests = 2, minAgeMillis = 0L)
+    ()
+  }
 
   /** The rows a fold-forward compaction at `level` merges: the rows of
     * tree `sub` of the store at `root` at levels ≤ `level` (without
@@ -188,9 +236,7 @@ object IndexStore {
     * None when the tree holds no such row. */
   def resident(spark: SparkSession, root: String, sub: String, delRoot: String, delSub: String,
       levelCol: String, level: Long, idCol: String): Option[DataFrame] = {
-    def upTo(r: String, s: String) =
-      scanLevels(new ManifestTable(spark, r), s, levelOf(levelCol, _).exists(_ <= level))
-        .map(_.drop(levelCol))
+    def upTo(r: String, s: String) = levelsWhere(spark, r, levelCol, s)(_ <= level).map(_.drop(levelCol))
     upTo(root, sub).map(raw => upTo(delRoot, delSub).fold(raw)(del =>
       raw.join(broadcast(del.select(col(idCol)).distinct()), Seq(idCol), "left_anti")))
   }
@@ -211,7 +257,7 @@ object IndexStore {
     val del = new ManifestTable(trees.head._2.sparkSession, delRoot)
     val applied = (f: String) => levelOf(levelCol, f).exists(_ <= level)
     if (delRoot != root && del.snapshot().exists(applied)) del.update(applied)(Nil)
-    Seq(table, del).distinctBy(_.root).foreach(_.vacuum(keepManifests = 2, minAgeMillis = 0L))
+    Seq(table, del).distinctBy(_.root).foreach(vacuumed)
   }
 
   /** The streaming maintenance loop of a levelled store: micro-batch

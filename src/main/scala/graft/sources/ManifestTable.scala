@@ -21,8 +21,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * `series_values` and `run_series` tables and each z-ordered mirror,
   * each bucketed [[IndexStore]] (the bucketed mirrors among them), and
   * each levelled one (a segmented BM25 store; an IVF or IVFPQ corpus
-  * and its `_del` tombstone store) are ManifestTables, and every read
-  * of one goes through [[scan]].
+  * and its `_del` tombstone store; a dedupIngest sink, digest index and
+  * its `_bloom` filter chain) are ManifestTables, and every read of one
+  * goes through [[scan]].
   * Every mutation follows write-ahead ordering:
   *
   *   1. new data files are written ONCE, each straight into the flat

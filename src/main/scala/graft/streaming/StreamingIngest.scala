@@ -1,11 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
-import org.apache.spark.sql.Row
+import org.apache.spark.util.sketch.BloomFilter
 
 import graft.TimeDb
+import graft.functions.BloomProbe
 import graft.operators.TextAnalysis
 import graft.sources.IndexStore
 
@@ -98,7 +100,7 @@ object StreamingIngest {
     * `indexPath`, so state size is bounded by the corpus (not executor
     * memory) and survives restarts by construction.
     *
-    * Per micro-batch:
+    * Per micro-batch ([[dedupBatch]]):
     *  1. within-batch winners — deterministic min-`idCol` row per
     *     digest (a replayed batch picks the SAME rows);
     *  2. cross-batch gate — anti-join against the index, or the
@@ -106,12 +108,16 @@ object StreamingIngest {
     *     `bloomExpectedDigests` is set (definitely-new rows skip the
     *     join; exact either way);
     *  3. accepted rows land at `outPath` and their digests at
-    *     `indexPath`, both partitioned by `batch_id` with DYNAMIC
-    *     partition overwrite — a replayed batch overwrites exactly its
-    *     own partition, and the gate reads the index EXCLUDING the
-    *     current batch id, so replay reproduces the original decision
-    *     instead of rejecting everything it already accepted
-    *     (exactly-once output from an at-least-once trigger).
+    *     `indexPath`, each a levelled [[graft.sources.IndexStore]] whose
+    *     level is the micro-batch id (`batch_id=<id>` leaves): each is
+    *     ONE [[graft.sources.IndexStore.writeLevel]] commit, sink first,
+    *     so a replayed batch replaces exactly its own level, and the gate
+    *     reads the index levels OTHER than the current batch id, so
+    *     replay reproduces the original decision instead of rejecting
+    *     everything it already accepted (exactly-once output from an
+    *     at-least-once trigger; a crash between the two commits is
+    *     mended by that replay). A store written as plain `batch_id`
+    *     partition directories is adopted in place by its next batch.
     *
     * Scale note: the anti-join shuffles (batch ∪ index-digests) per
     * batch — O(index) work each trigger. At a history where that scan
@@ -119,23 +125,23 @@ object StreamingIngest {
     * per-batch cost becomes one index scan (filter build, no shuffle)
     * plus a join on the ~fpp sliver. With `incrementalBloom` the
     * filter build's per-batch index scan ALSO goes away: the merged
-    * filter of every prior batch persists beside the index
-    * (`<indexPath>/_bloom/v<batchId>`, written temp+rename), and each
-    * batch reads the highest version BELOW its own id — the same
-    * prior-state-only discipline as the `batch_id =!= batchId` index
-    * read, so a replayed batch routes on exactly the state it
-    * originally saw — ORs in its own accepted digests (read back from
-    * the just-committed index partition, same filter sizing so the
-    * sketches merge), and commits the new version. Versions other
-    * than {the one just written, the one it read} are pruned — the
-    * one-deep replay window foreachBatch guarantees. Per-trigger cost
-    * at a billion-digest history: O(filter bytes) + the ~fpp sliver
-    * verify, with the full index touched only by that sliver's
-    * anti-join. Exactness is untouched: the filter has no false
-    * negatives by construction (induction: v0 = batch 0's digests;
-    * vN = v(N−1) ∪ accepted(N); a missing _bloom dir bootstraps from
-    * one prior-only index scan), and false positives fall to the same
-    * verify join as the per-batch-built filter. */
+    * filter of every prior batch persists beside the index as a
+    * version chain — the levelled sibling store `<indexPath>_bloom`,
+    * one serialized filter per `batch_id=<id>` level — and each batch
+    * reads the highest version BELOW its own id on the driver — the
+    * same prior-state-only discipline as the index read, so a replayed
+    * batch routes on exactly the state it originally saw — ORs in its
+    * own accepted digests (read back from the just-committed index
+    * level, same filter sizing so the sketches merge), and commits the
+    * new version in ONE manifest that drops every version but the one
+    * it read — the one-deep replay window foreachBatch guarantees.
+    * Per-trigger cost at a billion-digest history: O(filter bytes) +
+    * the ~fpp sliver verify, with the full index touched only by that
+    * sliver's anti-join. Exactness is untouched: the filter has no
+    * false negatives by construction (induction: v0 = batch 0's
+    * digests; vN = v(N−1) ∪ accepted(N); an empty chain bootstraps
+    * from one prior-only index scan), and false positives fall to the
+    * same verify join as the per-batch-built filter. */
   def dedupIngest(stream: DataFrame, outPath: String, indexPath: String,
       idCol: String = "doc_id", textCol: String = "text",
       bloomExpectedDigests: Option[Long] = None,
@@ -145,146 +151,115 @@ object StreamingIngest {
     stream.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          import org.apache.spark.sql.expressions.Window
-          val digested = batch.withColumn("digest", md5(col(textCol).cast("binary")))
-          val w = Window.partitionBy(col("digest")).orderBy(col(idCol))
-          val winners = digested
-            .withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1).drop("__rn")
-          val indexDir = new org.apache.hadoop.fs.Path(indexPath)
-          val fs = indexDir.getFileSystem(spark.sessionState.newHadoopConf())
-          val seen: Option[DataFrame] =
-            if (fs.exists(indexDir))
-              Some(spark.read.parquet(indexPath)
-                .filter(col("batch_id") =!= batchId) // replay reads PRIOR state only
-                .select("digest"))
-            else None
-          val bloomDir = new org.apache.hadoop.fs.Path(indexPath, "_bloom")
-          def bloomVersions(): Seq[Long] =
-            if (fs.exists(bloomDir))
-              fs.listStatus(bloomDir).toSeq.map(_.getPath.getName)
-                .filter(_.startsWith("v"))
-                .flatMap(n => scala.util.Try(n.stripPrefix("v").toLong).toOption)
-            else Seq.empty
-          // prior-state-only filter: highest persisted version BELOW
-          // this batch id (replay must never route on its own output).
-          // COVERAGE guard: a version is trusted only if no prior
-          // index partition is newer than it — a stretch ingested with
-          // incrementalBloom OFF leaves the chain behind the index,
-          // and routing on that stale filter would accept duplicates
-          // silently (false negatives). batch_id is a partition
-          // column, so the newest prior partition comes from a dir
-          // listing, not a data scan; a stale chain falls back to the
-          // bootstrap scan, which the next version write then absorbs.
-          val priorVersion: Option[Long] =
-            if (!incrementalBloom) None
-            else {
-              val maxPriorPartition: Long = (if (fs.exists(indexDir))
-                fs.listStatus(indexDir).toSeq else Seq.empty)
-                .map(_.getPath.getName)
-                .filter(_.startsWith("batch_id="))
-                .flatMap(n => scala.util.Try(
-                  n.stripPrefix("batch_id=").toLong).toOption)
-                .filter(_ != batchId)
-                .foldLeft(-1L)(math.max)
-              bloomVersions().filter(v => v < batchId && v >= maxPriorPartition)
-                .sorted.lastOption
-            }
-          val routeFilter: Option[org.apache.spark.util.sketch.BloomFilter] =
-            (bloomExpectedDigests, seen) match {
-              case (Some(n), Some(idx)) =>
-                priorVersion match {
-                  case Some(v) =>
-                    val in = fs.open(new org.apache.hadoop.fs.Path(bloomDir, s"v$v"))
-                    try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(in))
-                    finally in.close()
-                  case None =>
-                    // per-batch build (non-incremental mode), or the
-                    // incremental mode's bootstrap/stale-chain rescan
-                    Some(graft.functions.BloomProbe.build(idx, col("digest"), n, 0.01))
-                }
-              case _ => None
-            }
-          val fresh = seen match {
-            case None => winners
-            case Some(idx) => routeFilter match {
-              case None => winners.join(idx, Seq("digest"), "left_anti")
-              case Some(bf) =>
-                // paired codegen build/probe (BloomFilterMightContain),
-                // same route-then-verify exactness as the batch leg
-                val maybeSeen = graft.functions.BloomProbe.mightContain(bf, col("digest"))
-                winners.filter(!maybeSeen)
-                  .unionByName(winners.filter(maybeSeen)
-                    .join(idx, Seq("digest"), "left_anti"))
-            }
-          }
-          writeBatchLeaf(fresh, outPath, batchId)
-          writeBatchLeaf(fresh.select("digest"), indexPath, batchId)
-          if (incrementalBloom) {
-            // this batch's digests from the COMMITTED index partition
-            // (not a recompute of the gate chain), same sizing so the
-            // sketches stay mergeable. An all-duplicates batch commits
-            // NO partition (the bloom aggregate over zero rows yields a
-            // null sketch) and changes no state — skip the version
-            // write and let the next batch read the same prior; the
-            // exception is a fresh bootstrap (no prior version), whose
-            // scan-built filter is worth persisting either way.
-            val n = bloomExpectedDigests.get
-            val committed = spark.read.parquet(indexPath)
-              .filter(col("batch_id") === batchId).select("digest")
-            val merged: Option[org.apache.spark.util.sketch.BloomFilter] =
-              if (committed.isEmpty) {
-                if (priorVersion.isEmpty) routeFilter else None
-              } else {
-                val bf = graft.functions.BloomProbe.build(
-                  committed, col("digest"), n, 0.01)
-                routeFilter match {
-                  case Some(p) if bf.isCompatible(p) =>
-                    bf.mergeInPlace(p); Some(bf)
-                  case Some(_) =>
-                    // bloomExpectedDigests changed across restarts —
-                    // the persisted sketch no longer merges (routing
-                    // above was still exact: ANY chain version has no
-                    // false negatives regardless of sizing). Re-derive
-                    // the merged state at the NEW sizing from the full
-                    // index, this batch included — a one-time resize
-                    // scan, not a per-trigger cost, and strictly
-                    // better than wedging the stream on
-                    // IncompatibleMergeException.
-                    Some(graft.functions.BloomProbe.build(
-                      spark.read.parquet(indexPath).select("digest"),
-                      col("digest"), n, 0.01))
-                  case None => Some(bf)
-                }
-              }
-            merged.foreach { bf =>
-              val tmp = new org.apache.hadoop.fs.Path(bloomDir, s".tmp-v$batchId")
-              val out = fs.create(tmp, true)
-              try bf.writeTo(out) finally out.close()
-              val dst = new org.apache.hadoop.fs.Path(bloomDir, s"v$batchId")
-              if (fs.exists(dst)) fs.delete(dst, false)
-              if (!fs.rename(tmp, dst))
-                throw new IllegalStateException(s"failed to commit bloom version $dst")
-              // keep {just-written, just-read}: foreachBatch replays at
-              // most the one uncommitted batch, which reads max(v < id)
-              bloomVersions()
-                .filter(v => v != batchId && !priorVersion.contains(v))
-                .foreach(v => fs.delete(
-                  new org.apache.hadoop.fs.Path(bloomDir, s"v$v"), false))
-            }
-          }
-        }
+        dedupBatch(batch, batchId, outPath, indexPath, idCol, textCol,
+          bloomExpectedDigests, incrementalBloom)
       }
   }
 
-  /** One `batch_id=<batchId>` leaf of the path-read tree at `root`,
-    * written under DYNAMIC partition overwrite: a replayed batch
-    * rewrites exactly its own leaf. */
-  private def writeBatchLeaf(df: DataFrame, root: String, batchId: Long): Unit =
-    df.withColumn("batch_id", lit(batchId)).write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").partitionBy("batch_id").parquet(root)
+  /** One [[dedupIngest]] micro-batch: the body of its `foreachBatch`. */
+  private[graft] def dedupBatch(batch: DataFrame, batchId: Long, outPath: String,
+      indexPath: String, idCol: String, textCol: String,
+      bloomExpectedDigests: Option[Long], incrementalBloom: Boolean): Unit =
+    if (!batch.isEmpty) {
+      val spark = batch.sparkSession
+      val digested = batch.withColumn("digest", md5(col(textCol).cast("binary")))
+      val w = Window.partitionBy(col("digest")).orderBy(col(idCol))
+      val winners = digested
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn")
+      // replay reads PRIOR state only
+      val seen = IndexStore.levelsWhere(spark, indexPath, "batch_id")(_ != batchId)
+        .map(_.select("digest"))
+      val bloomPath = s"${indexPath}_bloom"
+      // prior-state-only filter: highest persisted version BELOW this
+      // batch id (replay must never route on its own output). COVERAGE
+      // guard: a version is trusted only if no prior index level is
+      // newer than it — a stretch ingested with incrementalBloom OFF
+      // leaves the chain behind the index, and routing on that stale
+      // filter would accept duplicates silently (false negatives). The
+      // index levels come from its manifest, not a data scan; a stale
+      // chain falls back to the bootstrap scan, which the next version
+      // write then absorbs.
+      val priorVersion: Option[Long] =
+        if (!incrementalBloom) None
+        else {
+          val maxPriorLevel = IndexStore.levelIds(spark, indexPath, "batch_id")
+            .filter(_ != batchId).foldLeft(-1L)(math.max)
+          IndexStore.levelIds(spark, bloomPath, "batch_id")
+            .filter(v => v < batchId && v >= maxPriorLevel).lastOption
+        }
+      val routeFilter: Option[BloomFilter] =
+        (bloomExpectedDigests, seen) match {
+          case (Some(n), Some(idx)) =>
+            priorVersion match {
+              case Some(v) =>
+                val bytes = IndexStore.levelRows(spark, bloomPath, "batch_id", v).head
+                  .getAs[Array[Byte]]("bloom")
+                Some(BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes)))
+              case None =>
+                // per-batch build (non-incremental mode), or the
+                // incremental mode's bootstrap/stale-chain rescan
+                Some(BloomProbe.build(idx, col("digest"), n, 0.01))
+            }
+          case _ => None
+        }
+      // in the batch's own column order whatever the gate: the join
+      // would lead with `digest`, and a sink's levels should agree
+      val fresh = (seen match {
+        case None => winners
+        case Some(idx) => routeFilter match {
+          case None => winners.join(idx, Seq("digest"), "left_anti")
+          case Some(bf) =>
+            // paired codegen build/probe (BloomFilterMightContain),
+            // same route-then-verify exactness as the batch leg
+            val maybeSeen = BloomProbe.mightContain(bf, col("digest"))
+            winners.filter(!maybeSeen)
+              .unionByName(winners.filter(maybeSeen)
+                .join(idx, Seq("digest"), "left_anti"))
+        }
+      }).select(winners.columns.map(col): _*)
+      IndexStore.writeLevel(outPath, "batch_id", batchId)("" -> fresh)
+      IndexStore.writeLevel(indexPath, "batch_id", batchId)("" -> fresh.select("digest"))
+      if (incrementalBloom) {
+        // this batch's digests from the COMMITTED index level (not a
+        // recompute of the gate chain), same sizing so the sketches stay
+        // mergeable. An all-duplicates batch commits NO level and
+        // changes no state — skip the version write and let the next
+        // batch read the same prior; the exception is a fresh bootstrap
+        // (no prior version), whose scan-built filter is worth
+        // persisting either way.
+        val n = bloomExpectedDigests.get
+        val merged: Option[BloomFilter] =
+          IndexStore.levelsWhere(spark, indexPath, "batch_id")(_ == batchId) match {
+            case None => if (priorVersion.isEmpty) routeFilter else None
+            case Some(committed) =>
+              val bf = BloomProbe.build(committed, col("digest"), n, 0.01)
+              routeFilter match {
+                case Some(p) if bf.isCompatible(p) =>
+                  bf.mergeInPlace(p); Some(bf)
+                case Some(_) =>
+                  // bloomExpectedDigests changed across restarts — the
+                  // persisted sketch no longer merges (routing above was
+                  // still exact: ANY chain version has no false
+                  // negatives regardless of sizing). Re-derive the
+                  // merged state at the NEW sizing from the full index,
+                  // this batch included — a one-time resize scan, not a
+                  // per-trigger cost, and strictly better than wedging
+                  // the stream on IncompatibleMergeException.
+                  Some(BloomProbe.build(IndexStore.levels(spark, indexPath).get,
+                    col("digest"), n, 0.01))
+                case None => Some(bf)
+              }
+          }
+        merged.foreach { bf =>
+          val bytes = new java.io.ByteArrayOutputStream()
+          bf.writeTo(bytes)
+          import spark.implicits._
+          IndexStore.writeVersion(bloomPath, "batch_id", batchId, priorVersion)(
+            Seq(bytes.toByteArray).toDF("bloom"))
+        }
+      }
+    }
 
   /** Streaming BM25 segment ingest — each micro-batch of documents
     * lands as ONE immutable index segment through

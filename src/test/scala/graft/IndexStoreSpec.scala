@@ -23,13 +23,9 @@ class IndexStoreSpec extends SparkSpec {
   /** The meta row's layout column, appended after the family's own. */
   private val layoutCols = Seq("bucket_cols")
 
-  /** The directories of a bucketed store beside its tables': its
+  /** The directories of a store beside its tables' or trees': every
     * write ends with a vacuum, which removes the emptied `_staging`. */
   private val storeDirs = Seq("_manifests")
-
-  /** The directories of a levelled store beside its trees until its
-    * first compaction vacuums it. */
-  private val levelledDirs = Seq("_manifests", "_staging")
 
   /** The directories holding the files the current manifest of the
     * store at `root` lists. */
@@ -160,7 +156,7 @@ class IndexStoreSpec extends SparkSpec {
     TextAnalysis.bm25DeleteDocs(spark, path, Seq(3L, 30L), segmentId = 2L)
     val leaves = Seq("del/segment=2", "df/segment=0", "df/segment=1", "df/segment=2",
       "meta/segment=0", "meta/segment=1", "meta/segment=2", "tf/segment=0", "tf/segment=1")
-    assert(dirs(path) == levelledDirs ++ Seq("del", "del/segment=2",
+    assert(dirs(path) == storeDirs ++ Seq("del", "del/segment=2",
       "df", "df/segment=0", "df/segment=1", "df/segment=2",
       "meta", "meta/segment=0", "meta/segment=1", "meta/segment=2",
       "tf", "tf/segment=0", "tf/segment=1"))
@@ -183,8 +179,8 @@ class IndexStoreSpec extends SparkSpec {
       Seq((100L, "w1 w2 w3")).toDF("doc_id", "text"), path, segmentId = 3L)
     val compacted = Seq("df/segment=3", "meta/segment=3", "tf/segment=3")
     // the vacuum keeps the previous manifest's files for readers planned
-    // against it, and removes the emptied _staging
-    assert(dirs(path) == (before.filterNot(_ == "_staging") ++ compacted).sorted)
+    // against it
+    assert(dirs(path) == (before ++ compacted).sorted)
     assert(listedDirs(path) == compacted)
   }
 
@@ -207,7 +203,7 @@ class IndexStoreSpec extends SparkSpec {
     Similarity.ivfDelete(spark, path, Seq(2L, 50L), batchId = 2L)
     val appended = cellLeaves(path)
     assert(appended.map(_.dropWhile(_ != '/')).toSet == Set("/batch_id=0", "/batch_id=1"))
-    val stores = Seq("corpus", "corpus_del").flatMap(t => t +: levelledDirs.map(d => s"$t/$d"))
+    val stores = Seq("corpus", "corpus_del").flatMap(t => t +: storeDirs.map(d => s"$t/$d"))
     assert(dirs(root) == (stores ++ Seq("corpus_del/batch_id=2") ++
       withCells(appended).map(d => s"corpus/$d")).sorted)
     assert(listedDirs(path) == appended && listedDirs(s"${path}_del") == Seq("batch_id=2"))
@@ -228,8 +224,8 @@ class IndexStoreSpec extends SparkSpec {
     val compacted = cellLeaves(path)
     assert(compacted.forall(_.endsWith("/batch_id=3")) && compacted.nonEmpty)
     // the vacuum keeps the previous manifests' files for readers planned
-    // against them, and removes the emptied _staging dirs
-    assert(dirs(root) == (before.filterNot(_.endsWith("/_staging")) ++
+    // against them
+    assert(dirs(root) == (before ++
       withCells(compacted).map(d => s"corpus/$d")).distinct.sorted)
     assert(listedDirs(path) == compacted && listedDirs(s"${path}_del").isEmpty)
   }
@@ -246,7 +242,7 @@ class IndexStoreSpec extends SparkSpec {
     assert(IndexStore.levels(spark, path).get.columns.toSeq == Seq("vec_id", "codes", "cell", "batch_id"))
     val appended = cellLeaves(path)
     assert(appended.map(_.dropWhile(_ != '/')).toSet == Set("/batch_id=0", "/batch_id=1"))
-    assert(dirs(root) == (Seq("codes") ++ levelledDirs.map(d => s"codes/$d") ++
+    assert(dirs(root) == (Seq("codes") ++ storeDirs.map(d => s"codes/$d") ++
       withCells(appended).map(d => s"codes/$d")).sorted)
     assert(listedDirs(path) == appended)
     premanifest(path, s"${tmp("layout_ivfpq_premanifest")}/codes", Seq(""), "cell", "batch_id")

@@ -777,7 +777,7 @@ class OperatorsSpec extends SparkSpec {
     assert(got == expect && got.nonEmpty)
     // replay of an already-committed batch id (the at-least-once case):
     // deterministic assignment regenerates exactly the original
-    // (cell, batch_id) leaves, dynamic overwrite replaces them in place
+    // (cell, batch_id) leaves, and the level's commit replaces them
     Similarity.ivfAppend(batch, cent, path, batchId = 1L)
     val replayed = IndexStore.levels(spark, path).get
     assert(replayed.count() == 80,
@@ -786,6 +786,13 @@ class OperatorsSpec extends SparkSpec {
       k = 4, nprobe = 2, cellCol = "cell")
       .orderBy("query_id", "rank").collect().toSeq
     assert(afterReplay == expect)
+    // the store is never compacted, yet after one more commit the
+    // replay's superseded files are gone: every file on disk is one the
+    // retained manifests list
+    Similarity.ivfAppend(emb.filter(col("vec_id") === 0L).withColumn("vec_id", lit(80L)), cent,
+      path, batchId = 2L)
+    val (disk, retained) = StoreFiles.diskAndRetained(path)
+    assert(disk == retained, s"${(disk -- retained).size} files on disk that no retained manifest lists")
   }
 
   test("ivfCompact: folds every level into one, serves identically, converges on replay") {
@@ -1016,8 +1023,8 @@ class OperatorsSpec extends SparkSpec {
     val expect = oneShot(docs)
     assert(serve() == expect && expect.nonEmpty,
       "segmentation must be invisible to the scores (df + stats merge exactly)")
-    // replayed segment (the at-least-once case): dynamic overwrite
-    // rewrites exactly the original leaf, nothing duplicates
+    // replayed segment (the at-least-once case): the level's commit
+    // replaces exactly the original leaf, nothing duplicates
     TextAnalysis.bm25AppendSegment(s2, path, segmentId = 1L)
     assert(serve() == expect)
     // a later append SHIFTS df and corpus stats — the segmented serve

@@ -662,7 +662,7 @@ class PropertiesSpec extends SparkSpec {
       }.toDF("doc_id", "source", "text")
       val a = graft.operators.TextAnalysis.classTfIdf(docs, "source", topK = 4)
         .orderBy("group", "rank").collect().map(_.toString).toSeq
-      val b = graft.operators.TextAnalysis.classTfIdfUnfolded(docs, "source", topK = 4)
+      val b = Witnesses.classTfIdfUnfolded(docs, "source", topK = 4)
         .orderBy("group", "rank").collect().map(_.toString).toSeq
       assert(a == b, s"trial $trial: folded != unfolded\na=$a\nb=$b")
       assert(a.nonEmpty, s"trial $trial: degenerate corpus")
@@ -694,7 +694,7 @@ class PropertiesSpec extends SparkSpec {
         val a = graft.operators.Curation
           .quantileGateAudit(rows, "stratum", "score", "doc_id", q, acc)
           .orderBy("stratum").collect().map(_.toString).toSeq
-        val b = graft.operators.Curation
+        val b = Witnesses
           .quantileGateAuditSplit(rows, "stratum", "score", "doc_id", q, acc)
           .orderBy("stratum").collect().map(_.toString).toSeq
         assert(a == b, s"trial $trial q=$q acc=$acc: fused != split\na=$a\nb=$b")

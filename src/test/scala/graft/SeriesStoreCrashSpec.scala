@@ -10,17 +10,21 @@ import org.apache.spark.sql.DataFrame
 
 import graft.operators.{Similarity, TextAnalysis, WritePipeline}
 import graft.sources.{IndexStore, ManifestTable, SeriesStore}
+import graft.streaming.StreamingIngest
 
 /** Crash-point matrix for every mutation of the series store, of a
   * bucketed [[IndexStore]] (here under the store's `bucketed/`) and of
-  * the levelled ones: a segmented BM25 store and an IVF corpus with its
-  * tombstone store (under `levelled/`). Each
+  * the levelled ones: a segmented BM25 store, an IVF corpus with its
+  * tombstone store, and a dedupIngest sink, digest index and Bloom chain
+  * (under `levelled/`). Each
   * mutation first runs clean on [[CrashFs]] to count its creates,
   * renames and deletes (n); then, for every k in 1..n, a copy of the
   * same starting store runs it with the k-th of those calls (and every
   * later one) failing. A fresh [[SeriesStore]] on the crashed copy must
-  * answer with exactly the state before or the state after; where it
-  * answers "before", re-running the mutation reaches "after"; and then
+  * answer with exactly the state before or the state after — for a
+  * mutation that commits several stores one after another, each store
+  * its own state before or after, in commit order; where it does not
+  * answer "after", re-running the mutation reaches "after"; and then
   * `vacuum(minAgeMillis = 0)` of every table leaves no file that no
   * retained manifest lists. */
 class SeriesStoreCrashSpec extends SparkSpec {
@@ -63,6 +67,15 @@ class SeriesStoreCrashSpec extends SparkSpec {
     ids.map(i => (i, Array.tabulate(4)(d => ((i * 7 + d * 3) % 11).toFloat), (i % 3).toInt))
       .toDF("vec_id", "embedding", "label")
 
+  /** The levelled stores a dedupIngest micro-batch commits, in order. */
+  private val dedupStores = Seq("dedup_out", "dedup_index", "dedup_index_bloom")
+
+  /** One incremental-Bloom dedupIngest micro-batch of `docs` into the
+    * stores beside `s`. */
+  private def dedupBatch(s: SeriesStore, batchId: Long, docs: (Long, String)*): Unit =
+    StreamingIngest.dedupBatch(docs.toDF("doc_id", "text"), batchId, levelled(s, "dedup_out"),
+      levelled(s, "dedup_index"), "doc_id", "text", Some(1000L), incrementalBloom = true)
+
   private lazy val centroids = Similarity.cellCentroids(vectors(0L until 12L: _*)).localCheckpoint()
 
   /** An IVF corpus of vectors 0..11 in two levels, with vectors 2 and 7
@@ -101,7 +114,24 @@ class SeriesStoreCrashSpec extends SparkSpec {
       } ++
       Seq("tf", "df", "meta", "del").flatMap(t => levels("bm25", t).toSeq.flatMap(rows(s"bm25/$t", _))) ++
       levels("corpus").toSeq.flatMap(c => rows("corpus", levels("corpus_del").fold(c)(d =>
-        c.join(d.select("vec_id"), Seq("vec_id"), "left_anti"))))
+        c.join(d.select("vec_id"), Seq("vec_id"), "left_anti")))) ++
+      dedupStores.flatMap(t =>
+        levels(t).toSeq.flatMap(df => rows(t, df.selectExpr("to_json(struct(*))"))))
+  }
+
+  /** `got` is the state `before` or `after`, or, for a mutation that
+    * commits the levelled stores `order` one after another, each of them
+    * is at its state after up to some point of `order` and at its state
+    * before from there on, with everything else unchanged. */
+  private def consistent(got: Seq[String], before: Seq[String], after: Seq[String],
+      order: Seq[String]): Boolean = {
+    def of(state: Seq[String], t: String) = state.filter(_.startsWith(s"$t "))
+    val others = (state: Seq[String]) => state.filterNot(l => order.exists(t => l.startsWith(s"$t ")))
+    got == before || got == after || (others(got) == others(before) &&
+      (0 to order.length).exists { i =>
+        val (done, pending) = order.splitAt(i)
+        done.forall(t => of(got, t) == of(after, t)) && pending.forall(t => of(got, t) == of(before, t))
+      })
   }
 
   /** Local files under `dir` that no retained manifest of their table
@@ -143,8 +173,10 @@ class SeriesStoreCrashSpec extends SparkSpec {
     while (running && System.nanoTime() < deadline) Thread.sleep(20)
   }
 
-  /** Run the matrix for one mutation; returns n. */
-  private def matrix(name: String)(setup: SeriesStore => Unit)(mutate: SeriesStore => Unit): Long = {
+  /** Run the matrix for one mutation, which commits the levelled stores
+    * `order` one after another when given; returns n. */
+  private def matrix(name: String, order: Seq[String] = Nil)(setup: SeriesStore => Unit)(
+      mutate: SeriesStore => Unit): Long = {
     val template = Files.createTempDirectory(s"crash_${name}_")
     val uriOf = (d: JPath) => CrashFs.uri(d.toString)
     CrashFs.reset()
@@ -169,10 +201,10 @@ class SeriesStoreCrashSpec extends SparkSpec {
       quiesce()
       CrashFs.disarm()
       val got = state(dir)
-      assert(got == before || got == after,
+      assert(consistent(got, before, after, order),
         s"$name crashed at call $k of $n answers neither the state before nor after:\n" +
           got.mkString("\n"))
-      if (got == before) {
+      if (got != after) {
         mutate(new SeriesStore(spark, uriOf(dir)))
         assert(state(dir) == after, s"$name crashed at call $k: re-run did not reach after")
       }
@@ -276,6 +308,14 @@ class SeriesStoreCrashSpec extends SparkSpec {
   test("crash matrix: IVF compaction applying a tombstone") {
     val n = matrix("ivfcompact")(ivfStore)(s =>
       Similarity.ivfCompact(vectors(12L, 13L), centroids, levelled(s, "corpus"), batchId = 3L))
+    info(s"$n crash points")
+  }
+
+  test("crash matrix: dedupIngest micro-batch (incremental Bloom)") {
+    val n = matrix("dedup", dedupStores) { s =>
+      dedupBatch(s, 0L, (1L, "alpha beta"), (2L, "gamma delta"), (3L, "alpha beta"))
+      dedupBatch(s, 1L, (4L, "gamma delta"), (5L, "epsilon zeta"))
+    }(dedupBatch(_, 2L, (6L, "alpha beta"), (7L, "eta theta"), (8L, "iota kappa")))
     info(s"$n crash points")
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.sources.IndexStore
 import graft.streaming.{StreamingHolt, StreamingIngest, StreamingLttb, StreamingSessionize}
 
 /** Streaming ingest reuses the batch write pipeline and lands rows the
@@ -574,11 +575,11 @@ class StreamingSpec extends SparkSpec {
       mem.addData((6L, "alpha beta"), (7L, "epsilon zeta"))
       q.processAllAvailable()
       q.stop()
-      val accepted = spark.read.parquet(s"$dir/out")
+      val accepted = IndexStore.levels(spark, s"$dir/out").get
         .select("doc_id").as[Long].collect().toSeq.sorted
       assert(accepted == Seq(1L, 2L, 5L), s"bloom=$bloom inc=$incremental: $accepted")
       // the index holds exactly the accepted digests
-      assert(spark.read.parquet(s"$dir/index").select("digest")
+      assert(IndexStore.levels(spark, s"$dir/index").get.select("digest")
         .distinct().count() == 3)
       if (incremental) {
         // merged-filter versions maintained beside the index: batch 2
@@ -586,13 +587,10 @@ class StreamingSpec extends SparkSpec {
         // the chain's head is batch 1's merge, kept within the
         // two-version replay window; every prior accepted digest
         // routes as maybe-seen (no false negatives by construction)
-        val vs = new java.io.File(s"$dir/index/_bloom").list().toSeq
-          .filter(_.startsWith("v")).map(_.stripPrefix("v").toLong).sorted
+        val vs = IndexStore.levelIds(spark, s"$dir/index_bloom", "batch_id")
         assert(vs.nonEmpty && vs.last == 1L && vs.size <= 2, s"versions $vs")
-        val in = new java.io.FileInputStream(s"$dir/index/_bloom/v${vs.last}")
-        val bf = try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
-          finally in.close()
-        val misses = spark.read.parquet(s"$dir/index")
+        val bf = bloomAt(s"$dir/index_bloom", vs.last)
+        val misses = IndexStore.levels(spark, s"$dir/index").get
           .filter(!graft.functions.BloomProbe.mightContain(bf, col("digest")))
           .count()
         assert(misses == 0, "merged filter must contain every accepted digest")
@@ -621,17 +619,16 @@ class StreamingSpec extends SparkSpec {
     Seq((1L, "alpha beta"), (2L, "gamma delta")).toDF("doc_id", "text")
       .write.mode("append").parquet(inDir)
     val q1 = start(); q1.processAllAvailable(); q1.stop()
-    assert(new java.io.File(s"$dir/index/_bloom/v0").isFile,
+    assert(IndexStore.levelIds(spark, s"$dir/index_bloom", "batch_id").contains(0L),
       "first instance must persist its merged filter")
     Seq((3L, "epsilon zeta"), (4L, "alpha beta")).toDF("doc_id", "text")
       .write.mode("append").parquet(inDir)
     val q2 = start(); q2.processAllAvailable(); q2.stop()
-    val accepted = spark.read.parquet(s"$dir/out")
+    val accepted = IndexStore.levels(spark, s"$dir/out").get
       .select("doc_id").as[Long].collect().toSeq.sorted
     assert(accepted == Seq(1L, 2L, 3L), s"got $accepted")
     // the chain advanced and pruned to the replay window
-    val vs = new java.io.File(s"$dir/index/_bloom").list().toSeq
-      .filter(_.startsWith("v")).map(_.stripPrefix("v").toLong).sorted
+    val vs = IndexStore.levelIds(spark, s"$dir/index_bloom", "batch_id")
     assert(vs.last == 1L && vs.size <= 2, s"versions $vs")
   }
 
@@ -656,10 +653,126 @@ class StreamingSpec extends SparkSpec {
     Seq((3L, "epsilon zeta"), (4L, "alpha beta")).toDF("doc_id", "text")
       .write.mode("append").parquet(inDir)
     val q2 = start(); q2.processAllAvailable(); q2.stop()
-    val accepted = spark.read.parquet(s"$dir/out")
+    val accepted = IndexStore.levels(spark, s"$dir/out").get
       .select("doc_id").as[Long].collect().toSeq.sorted
     assert(accepted == Seq(1L, 2L, 3L), s"got $accepted")
-    assert(spark.read.parquet(s"$dir/index").select("digest").distinct().count() == 3)
+    assert(IndexStore.levels(spark, s"$dir/index").get.select("digest").distinct().count() == 3)
+  }
+
+  /** Version `version` of the Bloom chain at `root`. */
+  private def bloomAt(root: String, version: Long): org.apache.spark.util.sketch.BloomFilter =
+    org.apache.spark.util.sketch.BloomFilter.readFrom(new java.io.ByteArrayInputStream(
+      IndexStore.levelRows(spark, root, "batch_id", version).head.getAs[Array[Byte]]("bloom")))
+
+  /** The three gate variants: no Bloom, per-batch Bloom, incremental Bloom. */
+  private val gates = Seq((None, false), (Some(1000L), false), (Some(1000L), true))
+
+  /** One dedupIngest micro-batch of `docs` into the stores under `dir`. */
+  private def dedupBatch(dir: String, batchId: Long, gate: (Option[Long], Boolean),
+      docs: (Long, String)*): Unit =
+    StreamingIngest.dedupBatch(docs.toDF("doc_id", "text"), batchId, s"$dir/out", s"$dir/index",
+      "doc_id", "text", gate._1, gate._2)
+
+  /** What the dedupIngest stores under `dir` hold: the sink's rows, the
+    * index's digests and every Bloom chain version's bytes. */
+  private def dedupState(dir: String): Seq[String] =
+    Seq("out", "index", "index_bloom").flatMap(store => IndexStore.levels(spark, s"$dir/$store").toSeq
+      .flatMap(_.selectExpr("to_json(struct(*))").as[String].collect()).sorted)
+
+  test("dedupIngest: replaying a micro-batch id leaves the stores as one run does") {
+    for (gate <- gates) {
+      val once = java.nio.file.Files.createTempDirectory("graft_dedup_once").toString
+      val twice = java.nio.file.Files.createTempDirectory("graft_dedup_twice").toString
+      def batches(dir: String, replay: Boolean): Unit = {
+        dedupBatch(dir, 0L, gate, (1L, "alpha beta"), (2L, "gamma delta"), (3L, "alpha beta"))
+        dedupBatch(dir, 1L, gate, (4L, "gamma delta"), (5L, "epsilon zeta"))
+        // at-least-once: a crash before the offset commit re-runs batch 1
+        if (replay) dedupBatch(dir, 1L, gate, (4L, "gamma delta"), (5L, "epsilon zeta"))
+      }
+      batches(once, replay = false)
+      batches(twice, replay = true)
+      assert(dedupState(twice) == dedupState(once), s"gate $gate")
+      assert(IndexStore.levels(spark, s"$twice/out").get.select("doc_id").as[Long]
+        .collect().toSeq.sorted == Seq(1L, 2L, 5L))
+      // one more batch: each store's files on disk are exactly the files
+      // its retained manifests list, the replay's superseded ones gone
+      dedupBatch(twice, 2L, gate, (6L, "eta theta"))
+      for (store <- Seq("out", "index", "index_bloom") if gate._2 || store != "index_bloom") {
+        val (disk, retained) = StoreFiles.diskAndRetained(s"$twice/$store")
+        assert(disk == retained, s"gate $gate: $store")
+      }
+    }
+  }
+
+  test("dedupIngest adopts a store in the batch_id partition layout, legacy Bloom chain included") {
+    for (gate <- gates) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_dedup_adopt").toString
+      // the layout before the stores had manifests: plain batch_id
+      // partition directories, and the Bloom chain as raw
+      // `index/_bloom/v<id>` files — here an EMPTY filter, which would
+      // pass every duplicate as definitely-new if anything routed on it
+      val old = Seq((1L, "alpha beta"), (2L, "gamma delta")).toDF("doc_id", "text")
+        .withColumn("digest", org.apache.spark.sql.functions.md5(col("text").cast("binary")))
+        .withColumn("batch_id", org.apache.spark.sql.functions.lit(0L))
+      old.write.partitionBy("batch_id").parquet(s"$dir/out")
+      old.select("digest", "batch_id").write.partitionBy("batch_id").parquet(s"$dir/index")
+      new java.io.File(s"$dir/index/_bloom").mkdirs()
+      val legacy = new java.io.FileOutputStream(s"$dir/index/_bloom/v0")
+      try org.apache.spark.util.sketch.BloomFilter.create(1000L, 0.01).writeTo(legacy)
+      finally legacy.close()
+      dedupBatch(dir, 1L, gate, (3L, "alpha beta"), (4L, "epsilon zeta"))
+      assert(IndexStore.levels(spark, s"$dir/out").get.select("doc_id", "batch_id")
+        .as[(Long, Long)].collect().toSeq.sorted == Seq((1L, 0L), (2L, 0L), (4L, 1L)), s"gate $gate")
+      assert(IndexStore.levels(spark, s"$dir/index").get.select("digest").distinct().count() == 3)
+      assert(Seq("out", "index").forall(s =>
+        new graft.sources.ManifestTable(spark, s"$dir/$s").versions() == Seq(1L, 2L)))
+      // the index root's vacuum takes the unlisted legacy chain with it
+      assert(!new java.io.File(s"$dir/index/_bloom").exists)
+      if (gate._2) {
+        assert(IndexStore.levelIds(spark, s"$dir/index_bloom", "batch_id") == Seq(1L))
+        val bf = bloomAt(s"$dir/index_bloom", 1L)
+        assert(IndexStore.levels(spark, s"$dir/index").get
+          .filter(!graft.functions.BloomProbe.mightContain(bf, col("digest"))).count() == 0)
+      }
+    }
+  }
+
+  test("dedupIngest: Spark jobs per micro-batch, per gate variant") {
+    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        counter.incrementAndGet(); ()
+      }
+    }
+    def jobsDuring(body: => Unit): Int = {
+      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
+      val before = counter.get(); body
+      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
+      counter.get() - before
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val jobs = gates.map { gate =>
+        implicit val sqlCtx = spark.sqlContext
+        val dir = java.nio.file.Files.createTempDirectory("graft_dedup_jobs").toString
+        val mem = MemoryStream[(Long, String)]
+        val q = StreamingIngest.dedupIngest(mem.toDF().toDF("doc_id", "text"),
+          outPath = s"$dir/out", indexPath = s"$dir/index",
+          bloomExpectedDigests = gate._1, incrementalBloom = gate._2).start()
+        // a first batch, a mixed one, an all-duplicates one, an all-new one
+        try Seq(
+          Seq((1L, "alpha beta"), (2L, "gamma delta"), (3L, "alpha beta")),
+          Seq((4L, "gamma delta"), (5L, "epsilon zeta")),
+          Seq((6L, "alpha beta"), (7L, "epsilon zeta")),
+          Seq((8L, "eta theta"), (9L, "iota kappa"))).map { rows =>
+          jobsDuring { mem.addData(rows: _*); q.processAllAvailable() }
+        } finally q.stop()
+      }
+      // each index, sink and chain read plans from a manifest with no
+      // job; the jobs are the empty check, the Bloom builds and the
+      // staged writes (sink, index, one-row chain version)
+      assert(jobs == Seq(Seq(5, 7, 7, 7), Seq(5, 11, 11, 11), Seq(8, 12, 9, 12)), s"jobs $jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("streaming IVF ingest: appends survive a checkpoint restart without duplicating") {
@@ -1249,9 +1362,9 @@ class StreamingSpec extends SparkSpec {
     // corpus dHash index is a per-epoch BATCH table (parquet), and
     // hammingScreen64 is a pure function of (batch, index) — so the
     // only recovered state is the source offset log, and replay
-    // idempotence comes from the batch-id-partitioned dynamic
-    // overwrite (the dedupIngest sink convention). Restarting mid-
-    // stream must neither lose nor duplicate screen rows.
+    // idempotence comes from this sink's batch-id-partitioned dynamic
+    // overwrite (a replay rewrites exactly its own partition).
+    // Restarting mid-stream must neither lose nor duplicate screen rows.
     import org.apache.spark.sql.types._
     val dir = java.nio.file.Files.createTempDirectory("graft_imgscreen_restart").toString
     val inDir = s"$dir/in"; new java.io.File(inDir).mkdirs()
