@@ -456,21 +456,11 @@ object Bench {
     // external scheduler interference, so one retry is not enough to
     // recover the steady state.
     val rerunFloorSec = 0.10
-    // Per-query job counter: a query's wall time is bounded below by
-    // (its Spark job count) × (the per-job overhead floor measured
-    // further down) — the decomposition that lets a sub-second ratio be
-    // read per query as fixed scheduling cost vs. plan defect, instead
-    // of excusing everything with one global floor. The listener bus is
-    // async, so counts are read only after an explicit drain.
-    val jobCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          jobStart: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobCounter.incrementAndGet(); ()
-      }
-    })
-    def drainBus(): Unit =
-      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
+    // Per-query job counts (JobLog, first sample): a query's wall time is
+    // bounded below by (its Spark job count) × (the per-job overhead
+    // floor measured further down) — the decomposition that lets a
+    // sub-second ratio be read per query as fixed scheduling cost vs.
+    // plan defect, instead of excusing everything with one global floor.
     val jobCounts = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     // Samples for one query run CONSECUTIVELY on purpose: a round-robin
     // variant (spreading retries across passes over the list) measured
@@ -515,11 +505,8 @@ object Bench {
             Left(e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage).take(120))
         }
       }
-      drainBus()
-      val jobsBefore = jobCounter.get()
-      val first = once()
-      drainBus()
-      if (first.isRight) jobCounts(name) = jobCounter.get() - jobsBefore
+      val (first, jobs) = JobLog.during(spark)(once())
+      if (first.isRight) jobCounts(name) = jobs.size
       val measured: Either[String, Double] = first match {
         case Right(t) if t > rerunFloorSec =>
           val retries = (1 to 4).map(_ => once()).collect { case Right(v) => v }

@@ -2,12 +2,28 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Diagnostic: print the formatted physical plans of the queries whose
-  * scale behavior the README/PlanSpec claims rest on.
-  * `sbt "runMain graft.PlanDump [sfdir]"`. */
+/** Diagnostic: print the formatted physical plans of registry queries —
+  * those named after the data dir, or by default the queries whose
+  * scale behavior the README/PlanSpec claims rest on. Run it at the code
+  * state whose plans you are claiming (a second checkout for a
+  * historical "before").
+  * `sbt "runMain graft.PlanDump [sfdir [q ...]]"`. */
 object PlanDump {
+  private val Claimed = Seq("td_latest", "td_latest_changes", "rel_join_agg", "x_ann_brute",
+    "x_range_join", "x_sessionize", "ts_moving_zscore", "x_pipeline_curate",
+    "x_ann_ivf_assigned", "x_dedup_lsh_verified",
+    "x_text_lm_score", "x_dedup_spans", "x_embed_kmeans", "x_ann_quantized",
+    "x_sample_pergroup", "x_ann_label_purity", "x_dedup_incremental_lsh",
+    "x_ann_pq", "x_dedup_index_stored", "x_ann_pq_rerank",
+    "x_sketch_cms", "x_sample_weighted", "x_dedup_cdc",
+    "x_text_bm25", "x_funnel",
+    "x_text_nb", "x_dsir_weights", "x_zorder_layout",
+    "x_embed_covariance", "x_mix_temperature", "x_strata_overlap",
+    "x_text_ctfidf", "x_quality_calibrated", "x_quality_gopher")
+
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
+    val names = if (args.length > 1) args.toSeq.drop(1) else Claimed
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -15,17 +31,7 @@ object PlanDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    for (name <- Seq("td_latest", "td_latest_changes", "rel_join_agg", "x_ann_brute",
-        "x_range_join", "x_sessionize", "ts_moving_zscore", "x_pipeline_curate",
-        "x_ann_ivf_assigned", "x_dedup_lsh_verified",
-        "x_text_lm_score", "x_dedup_spans", "x_embed_kmeans", "x_ann_quantized",
-        "x_sample_pergroup", "x_ann_label_purity", "x_dedup_incremental_lsh",
-        "x_ann_pq", "x_dedup_index_stored", "x_ann_pq_rerank",
-        "x_sketch_cms", "x_sample_weighted", "x_dedup_cdc",
-        "x_text_bm25", "x_funnel",
-        "x_text_nb", "x_dsir_weights", "x_zorder_layout",
-        "x_embed_covariance", "x_mix_temperature", "x_strata_overlap",
-        "x_text_ctfidf", "x_quality_calibrated", "x_quality_gopher")) {
+    for (name <- names) {
       println(s"\n===== $name =====")
       // Literal control characters in plan strings (e.g. the sampler's
       // NUL null-id sentinel) would make PLANS.md a binary file —
@@ -160,15 +166,6 @@ object JobBudgetScan {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val jobCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          jobStart: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobCounter.incrementAndGet(); ()
-      }
-    })
-    def drainBus(): Unit =
-      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
     // first pass un-counted: it runs the memoized index/store builds the
     // queries read (the bench charges them to index_build, so the budget
     // must too), first-touch file listings submit their own jobs on some
@@ -190,11 +187,7 @@ object JobBudgetScan {
     val counts = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     names.foreach { n =>
       try {
-        drainBus()
-        val before = jobCounter.get()
-        SparkEntry.queries(n)(spark, dir).count()
-        drainBus()
-        val jobs = jobCounter.get() - before
+        val jobs = JobLog.during(spark)(SparkEntry.queries(n)(spark, dir).count())._2.size
         counts(n) = jobs
         budgets.get(n) match {
           case None =>
@@ -272,46 +265,21 @@ object JobDecomp {
     val names = AbBench.abNames()
     val rounds = AbBench.abRounds(5)
     val spark = AbBench.session(sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"), logLevel = "ERROR")
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long, String)]()
-    val stages = new java.util.concurrent.ConcurrentHashMap[Int, (Double, String)]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(s: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val stage = s.stageInfos.headOption.map(_.name.takeWhile(_ != '\n')).getOrElse("?")
-        jobs.put(s.jobId, (s.time, 0L, stage.take(90))); ()
-      }
-      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        val old = jobs.get(e.jobId)
-        if (old != null) jobs.put(e.jobId, (old._1, e.time, old._3)); ()
-      }
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val i = s.stageInfo
-        val wall = (for { a <- i.submissionTime; b <- i.completionTime }
-          yield (b - a) / 1e3).getOrElse(0.0)
-        stages.put(i.stageId,
-          (wall, s"${i.name.takeWhile(_ != '\n').take(70)} [${i.numTasks}t]")); ()
-      }
-    })
-    def drain(): Unit =
-      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
     names.foreach { n =>
       SparkEntry.queries(n)(spark, dir).count() // warm: also runs the builds n reads
-      val best = (1 to rounds).map { _ =>
-        drain(); jobs.clear(); stages.clear()
-        val t0 = System.nanoTime()
-        SparkEntry.queries(n)(spark, dir).count()
-        val wall = (System.nanoTime() - t0) / 1e9
-        drain()
-        (wall, jobs.values.toArray(Array.empty[(Long, Long, String)]).toSeq.sortBy(_._1),
-          stages.entrySet().toArray(Array.empty[java.util.Map.Entry[Int, (Double, String)]])
-            .toSeq.map(e => (e.getKey, e.getValue)).sortBy(_._1))
+      val (wall, jobs) = (1 to rounds).map { _ =>
+        JobLog.during(spark) {
+          val t0 = System.nanoTime()
+          SparkEntry.queries(n)(spark, dir).count()
+          (System.nanoTime() - t0) / 1e9
+        }
       }.minBy(_._1)
-      println(f"\n== $n: min wall ${best._1}%.3f s, ${best._2.size} jobs")
-      best._2.foreach { case (t0, t1, stage) =>
-        println(f"   ${(t1 - t0) / 1e3}%7.3f s  $stage")
+      println(f"\n== $n: min wall $wall%.3f s, ${jobs.size} jobs")
+      jobs.foreach { j =>
+        println(f"   ${(j.endMs.getOrElse(0L) - j.submitMs) / 1e3}%7.3f s  ${j.firstStage.take(90)}")
       }
-      best._3.foreach { case (id, (w, nm)) =>
-        println(f"     stage $id%3d ${w}%7.3f s  $nm")
+      jobs.flatMap(_.stages).sortBy(_.id).foreach { st =>
+        println(f"     stage ${st.id}%3d ${st.wallSec}%7.3f s  ${st.name.take(70)} [${st.tasks}t]")
       }
     }
     spark.stop()

@@ -39,17 +39,6 @@ final case class ReadFilter(
   def monthRange: (Option[String], Option[String]) = (
     startValid.map(t => Schema.monthOf(t)),
     endValid.map(t => Schema.monthOf(Timestamp.from(t.toInstant.minusNanos(1000)))))
-
-  /** Month-range partition prune derived from the valid_time bounds: the
-    * reader also filters the `valid_month` partition column so Catalyst
-    * prunes whole month directories, mirroring how the retention filter
-    * prunes tiers (ch_create_tables.sql:11-13). */
-  def monthPrune: Option[Column] = monthRange match {
-    case (Some(a), Some(b)) => Some(col("valid_month") >= lit(a) && col("valid_month") <= lit(b))
-    case (Some(a), None) => Some(col("valid_month") >= lit(a))
-    case (None, Some(b)) => Some(col("valid_month") <= lit(b))
-    case _ => None
-  }
 }
 
 /** The public facade (≅ `TimeDBClient`, timedb/client.py:70-214):
@@ -135,16 +124,15 @@ final class TimeDb(val spark: SparkSession, basePath: String,
         else Profiling.phase(Profiling.PhaseWriteSkipUnchanged) {
           // Bounded read-back slab (timedb/write.py:197-214): the incoming
           // batch's series/retentions and valid_time bounds — catalog-sized
-          // driver values (same assumption as the reference). Retention AND
-          // valid_month filters hit partition directories, so the read-back
-          // prunes to the batch's tiers × months before any file is opened.
+          // driver values (same assumption as the reference). The scan
+          // keeps only the manifest files of the batch's tiers × months
+          // (picked on the driver, as a read's are), so no other partition
+          // directory is listed or opened.
           val minVt = bounds("min_vt").asInstanceOf[Timestamp]
           val maxVt = bounds("max_vt").asInstanceOf[Timestamp]
-          val vtSlab = store.scanValues().filter(
-            col("retention").isin(rets: _*) &&
-              col("valid_month") >= lit(Schema.monthOf(minVt)) &&
-              col("valid_month") <= lit(Schema.monthOf(maxVt)) &&
-              col("valid_time") >= lit(minVt) && col("valid_time") <= lit(maxVt))
+          val vtSlab = store.scanValuesPruned(rets,
+            (Some(Schema.monthOf(minVt)), Some(Schema.monthOf(maxVt))))._1.filter(
+            col("valid_time") >= lit(minVt) && col("valid_time") <= lit(maxVt))
           // Under the knowledge_time scope only stored rows carrying one
           // of the batch's knowledge_times can match a scope key, so the
           // slab is also bounded by the batch's knowledge_time range
@@ -166,8 +154,8 @@ final class TimeDb(val spark: SparkSession, basePath: String,
           // OOM the driver on the collect, so above `maxInlineSeriesIds`
           // (the observed id set is then null) the read-back restriction
           // becomes a semi-join on series_id — shuffle-on-key, zero
-          // driver state; the retention + month partition prunes above
-          // still bound the scanned slab.
+          // driver state; the tier × month file prune above still bounds
+          // the scanned slab.
           val slab = Option(bounds("series_ids")) match {
             case Some(sids: scala.collection.Seq[_]) => slabBase.filter(col("series_id").isin(sids.toSeq: _*))
             case _ => slabBase.join(preFilter.select("series_id").distinct(), Seq("series_id"), "left_semi")
@@ -237,7 +225,7 @@ final class TimeDb(val spark: SparkSession, basePath: String,
   private[graft] def planRead(filter: ReadFilter, keys: Seq[String],
       oneTask: Option[Boolean] = None)(shape: DataFrame => DataFrame): DataFrame = {
     val (scan, bytes) = store.scanValuesPruned(filter.retention, filter.monthRange)
-    val base = filter.monthPrune.fold(scan)(p => scan.filter(p)).filter(filter.predicate)
+    val base = scan.filter(filter.predicate)
     val order = keys.map(col)
     val shaped =
       if (oneTask.getOrElse(bytes <= TimeDb.OneTaskReadMaxBytes))

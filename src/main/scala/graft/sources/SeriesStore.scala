@@ -366,39 +366,40 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
 
   private def dirOf(rel: String): String = rel.substring(0, rel.lastIndexOf('/'))
 
+  /** Target size of a compacted file (ClickHouse's merge analog). */
+  private val TargetFileBytes = 512L * 1024 * 1024
+
   /** Small-file compaction, the operational complement of streaming
     * ingest (each micro-batch appends at least one file per touched
     * partition — a day of 1-minute batches is 1440 files). Every
     * (retention, valid_month) partition holding more than `maxFiles`
     * live files is rewritten as sort-key-ordered files sized near
-    * `targetFileBytes` (ClickHouse's merge analog): range-repartition on
-    * the sort key (globally ordered files with tight row-group stats),
-    * stage, move in, then swap via ONE manifest commit per partition.
-    * Readers racing the swap keep the old file set (still on disk until
-    * [[vacuum]]) — no retry needed. Returns the partitions compacted.
-    */
-  def compactPartitions(maxFiles: Int = 4,
-      targetFileBytes: Long = 512L * 1024 * 1024): Seq[String] = {
-    val done = Seq.newBuilder[String]
-    var live = currentFiles()
-    val groups = live.groupBy(dirOf).toSeq.sortBy(_._1)
-    for ((dir, rels) <- groups if rels.length > maxFiles) {
-      val root = values.root
-      val abs = rels.map(r => new Path(root, r))
-      val totalBytes = abs.map(p => fs.getFileStatus(p).getLen).sum
-      val nOut = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-      // the staged layout is flat; its files belong to this partition dir
-      val rewritten = spark.read.schema(dataFileSchema).parquet(abs.map(_.toString): _*)
-        .repartitionByRange(nOut, SortKey.map(col): _*)
-        .sortWithinPartitions(SortKey.map(col): _*)
-      val added = values.stage(rewritten, into = Some(dir)) { (w, staging) =>
-        w.option("compression", "zstd").parquet(staging)
+    * [[TargetFileBytes]]: range-repartition on the sort key (globally
+    * ordered files with tight row-group stats) and stage, one partition
+    * at a time; then ONE manifest commit swaps every rewritten
+    * partition's inputs for its outputs, so a compaction is one version
+    * on the time-travel axis. The input sizes come from the manifest
+    * listing ([[ManifestTable.listed]]). Readers racing the swap keep
+    * the old file set (still on disk until [[vacuum]]) — no retry
+    * needed. Returns the partitions compacted. */
+  def compactPartitions(maxFiles: Int = 4): Seq[String] = {
+    val due = currentFiles().groupBy(dirOf).toSeq.sortBy(_._1).filter(_._2.length > maxFiles)
+    val inputs = due.flatMap(_._2).toSet
+    values.update(inputs) {
+      due.flatMap { case (dir, rels) =>
+        val statuses = values.listed(rels)
+        val nOut = math.max(1L, (statuses.map(_.getLen).sum + TargetFileBytes - 1) / TargetFileBytes).toInt
+        // the staged layout is flat; its files belong to this partition dir
+        val rewritten = values.scanListed(statuses, ValuesScan)
+          .select(dataFileSchema.fieldNames.toSeq.map(col): _*)
+          .repartitionByRange(nOut, SortKey.map(col): _*)
+          .sortWithinPartitions(SortKey.map(col): _*)
+        values.stage(rewritten, into = Some(dir)) { (w, staging) =>
+          w.option("compression", "zstd").parquet(staging)
+        }
       }
-      live = live.filterNot(rels.toSet) ++ added
-      values.commit(live)
-      done += dir
     }
-    done.result()
+    due.map(_._1)
   }
 
   /** Garbage collection over every table the store owns — both tables

@@ -110,8 +110,11 @@ object StreamingIngest {
     *  3. accepted rows land at `outPath` and their digests at
     *     `indexPath`, each a levelled [[graft.sources.IndexStore]] whose
     *     level is the micro-batch id (`batch_id=<id>` leaves): each is
-    *     ONE [[graft.sources.IndexStore.writeLevel]] commit, sink first,
-    *     so a replayed batch replaces exactly its own level, and the gate
+    *     ONE [[graft.sources.IndexStore.writeLevel]] commit, sink first;
+    *     the index level is read back from the committed sink level (a
+    *     manifest read, so the gate runs once per batch) and is skipped
+    *     when that level holds no file. A replayed batch replaces
+    *     exactly its own level, and the gate
     *     reads the index levels OTHER than the current batch id, so
     *     replay reproduces the original decision instead of rejecting
     *     everything it already accepted (exactly-once output from an
@@ -219,7 +222,8 @@ object StreamingIngest {
         }
       }).select(winners.columns.map(col): _*)
       IndexStore.writeLevel(outPath, "batch_id", batchId)("" -> fresh)
-      IndexStore.writeLevel(indexPath, "batch_id", batchId)("" -> fresh.select("digest"))
+      IndexStore.levelsWhere(spark, outPath, "batch_id")(_ == batchId).foreach(sunk =>
+        IndexStore.writeLevel(indexPath, "batch_id", batchId)("" -> sunk.select("digest")))
       if (incrementalBloom) {
         // this batch's digests from the COMMITTED index level (not a
         // recompute of the gate chain), same sizing so the sketches stay

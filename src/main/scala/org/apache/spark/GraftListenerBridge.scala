@@ -1,14 +1,14 @@
 package org.apache.spark
 
-/** Listener-bus drain for graft's bench instrumentation.
+/** Listener-bus drain for graft's job accounting.
   *
   * `SparkContext.listenerBus` is `private[spark]`; this shim (in the
   * spark package, the same pattern as the sql-package bridges) exposes
-  * the one call the bench needs: blocking until every queued listener
-  * event is delivered, so a job-counting listener read AFTER an action
-  * returns reflects exactly that action's jobs — the bus is async, and
-  * without the drain a count read immediately after `count()` races the
-  * delivery thread.
+  * one call: block until every queued listener event is delivered. The
+  * bus is async, so without the drain a listener read right after an
+  * action races the delivery thread. Its one caller in the product
+  * source is [[graft.JobLog.during]], which drains before registering
+  * its listener and again before reading it.
   */
 object GraftListenerBridge {
   def drainListenerBus(sc: SparkContext): Unit =

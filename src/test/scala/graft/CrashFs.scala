@@ -12,7 +12,8 @@ import org.apache.spark.sql.SparkSession
 /** Test-only local filesystem under the `crashfs` scheme (a
   * `RawLocalFileSystem`, so no checksum side files): `crashfs:///tmp/x`
   * is the local `/tmp/x`. It counts its calls by name (`mkdirs` too,
-  * including the ones a create makes for its parents) and, once
+  * including the ones a create makes for its parents), records the
+  * directories it lists and, once
   * [[CrashFs.arm]]ed at k, fails the k-th create, rename or delete
   * with an `IOException`, and every one after it, until
   * [[CrashFs.disarm]] — a writer that crashed at that step. */
@@ -53,6 +54,7 @@ class CrashFs extends RawLocalFileSystem {
   }
   override def listStatus(f: Path): Array[FileStatus] = {
     CrashFs.count("listStatus")
+    CrashFs.listings.add(f.toUri.getPath)
     super.listStatus(f).map(plain)
   }
 
@@ -73,6 +75,7 @@ object CrashFs {
 
   private val calls = new ConcurrentHashMap[String, AtomicLong]()
   private val mutations = new AtomicLong()
+  private val listings = ConcurrentHashMap.newKeySet[String]()
   @volatile private var crashAt = Long.MaxValue
 
   def register(spark: SparkSession): Unit =
@@ -84,6 +87,7 @@ object CrashFs {
   /** Zero the counters and disarm. */
   def reset(): Unit = {
     calls.clear()
+    listings.clear()
     mutations.set(0L)
     crashAt = Long.MaxValue
   }
@@ -103,6 +107,12 @@ object CrashFs {
   def counts: Map[String, Long] = {
     import scala.jdk.CollectionConverters._
     calls.asScala.map { case (k, v) => k -> v.get() }.toMap
+  }
+
+  /** Local paths of the directories listed since the last [[reset]]. */
+  def listed: Set[String] = {
+    import scala.jdk.CollectionConverters._
+    listings.asScala.toSet
   }
 
   private def count(name: String): Unit = {

@@ -742,19 +742,7 @@ class PlanSpec extends SparkSpec {
     // construction without one. jobs × scheduler-floor is a floor-zone
     // serve's wall lower bound (tools/job_budget.txt pins the absolute
     // counts; this pins the delta at zero).
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
-    def jobsDuring(body: => Unit): Int = {
-      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
-      val before = counter.get(); body
-      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
-      counter.get() - before
-    }
+    def jobsDuring(body: => Unit): Int = JobLog.during(spark)(body)._2.size
     // vector side: the appended IVF store + a small tombstone tree
     val dir = java.nio.file.Files.createTempDirectory("fold_del_jobs").toString
     val rnd = new scala.util.Random(31)
@@ -790,20 +778,17 @@ class PlanSpec extends SparkSpec {
       graft.operators.TextAnalysis.bm25SegmentedTopK(
         tf, sdf, meta, queryIds = Seq(0L, 1L), k = 3, segDel = del); ()
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // warmup: first-touch file listings submit their own jobs on some
-      // sources — run both shapes once uncounted
-      vServe(None); vServe(Some(vdel)); tServe(None); tServe(Some(tdel))
-      val vBase = jobsDuring(vServe(None))
-      val vDel = jobsDuring(vServe(Some(vdel)))
-      assert(vDel == vBase,
-        s"IVF tombstone serve construction must fold the del collect: $vDel jobs vs $vBase")
-      val tBase = jobsDuring(tServe(None))
-      val tDel = jobsDuring(tServe(Some(tdel)))
-      assert(tDel == tBase,
-        s"BM25 tombstone serve construction must fold the del collect: $tDel jobs vs $tBase")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // warmup: first-touch file listings submit their own jobs on some
+    // sources — run both shapes once uncounted
+    vServe(None); vServe(Some(vdel)); tServe(None); tServe(Some(tdel))
+    val vBase = jobsDuring(vServe(None))
+    val vDel = jobsDuring(vServe(Some(vdel)))
+    assert(vDel == vBase,
+      s"IVF tombstone serve construction must fold the del collect: $vDel jobs vs $vBase")
+    val tBase = jobsDuring(tServe(None))
+    val tDel = jobsDuring(tServe(Some(tdel)))
+    assert(tDel == tBase,
+      s"BM25 tombstone serve construction must fold the del collect: $tDel jobs vs $tBase")
   }
 
   test("tombstone fold is bounded: a large del tree never fully collects") {

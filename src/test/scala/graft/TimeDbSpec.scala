@@ -48,6 +48,23 @@ class TimeDbSpec extends SparkSpec {
     }
   }
 
+  test("compact() over two due partitions publishes one manifest version") {
+    withDb { db =>
+      for (month <- Seq("03", "04"); h <- 1 to 3)
+        db.write(Seq((1L, ts(s"2024-$month-01T0$h:00:00Z"), h.toDouble))
+          .toDF("series_id", "valid_time", "value"), retention = Some("short"))
+      def rows = db.store.scanValues().drop("valid_month")
+        .orderBy("series_id", "valid_time", "knowledge_time", "change_time").collect().toSeq
+      val pre = rows
+      val before = db.store.versions()
+      assert(db.compact(maxFiles = 2) ==
+        Seq("retention=short/valid_month=202403", "retention=short/valid_month=202404"))
+      assert(db.store.versions() == before :+ (before.last + 1))
+      assert(db.store.currentFiles().length == 2)
+      assert(rows == pre)
+    }
+  }
+
   test("manifest snapshots: concurrent readers never see a partial month; vacuum reclaims") {
     withDb { db =>
       (1 to 6).foreach { i =>
@@ -384,6 +401,28 @@ class TimeDbSpec extends SparkSpec {
     }
   }
 
+  test("skip_unchanged lists no partition directory outside the batch's tiers and months") {
+    CrashFs.register(spark)
+    val db = new TimeDb(spark, CrashFs.uri(
+      java.nio.file.Files.createTempDirectory("timedb_slab").toString))
+    db.create()
+    try {
+      db.write(revision(10), retention = Some("short"))
+      db.write(revision(10), retention = Some("long"))
+      db.write(Seq((1L, ts("2024-01-15T00:00:00Z"), 1.0)).toDF("series_id", "valid_time", "value"),
+        retention = Some("short"))
+      CrashFs.reset()
+      val again = db.write(
+        revision(10).withColumn("value", when(col("valid_time") === vts.head, -1.0).otherwise(col("value"))),
+        retention = Some("short"), skipUnchanged = true)
+      assert(again == WriteResult(1, 5))
+      val partitionDirs = CrashFs.listed.filter(_.contains("/series_values/retention="))
+      assert(partitionDirs.exists(_.endsWith("/series_values/retention=short/valid_month=202403")))
+      assert(partitionDirs.forall(d => d.contains("retention=short") && !d.contains("valid_month=202401")),
+        partitionDirs.toSeq.sorted.mkString("\n"))
+    } finally db.delete()
+  }
+
   test("skip_unchanged above the id threshold: semi-join path, same result, no collect") {
     val base = java.nio.file.Files.createTempDirectory("timedb_semijoin").toString
     // threshold 0 forces every skip-unchanged write through the
@@ -458,21 +497,7 @@ class TimeDbSpec extends SparkSpec {
   }
 
   /** Spark jobs started by `body`, counted between two listener-bus drains. */
-  private def jobsDuring(body: => Unit): Int = {
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
-      counter.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def jobsDuring(body: => Unit): Int = JobLog.during(spark)(body)._2.size
 
   test("write job counts: one pass before the lanes; skip-unchanged within budget") {
     withDb { db =>
