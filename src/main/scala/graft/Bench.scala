@@ -505,8 +505,8 @@ object Bench {
             Left(e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage).take(120))
         }
       }
-      val (first, jobs) = JobLog.during(spark)(once())
-      if (first.isRight) jobCounts(name) = jobs.size
+      val (first, ran) = JobLog.during(spark)(once())
+      if (first.isRight) jobCounts(name) = ran.jobs.size
       val measured: Either[String, Double] = first match {
         case Right(t) if t > rerunFloorSec =>
           val retries = (1 to 4).map(_ => once()).collect { case Right(v) => v }

@@ -187,7 +187,7 @@ object JobBudgetScan {
     val counts = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     names.foreach { n =>
       try {
-        val jobs = JobLog.during(spark)(SparkEntry.queries(n)(spark, dir).count())._2.size
+        val jobs = JobLog.during(spark)(SparkEntry.queries(n)(spark, dir).count())._2.jobs.size
         counts(n) = jobs
         budgets.get(n) match {
           case None =>
@@ -268,11 +268,12 @@ object JobDecomp {
     names.foreach { n =>
       SparkEntry.queries(n)(spark, dir).count() // warm: also runs the builds n reads
       val (wall, jobs) = (1 to rounds).map { _ =>
-        JobLog.during(spark) {
+        val (w, ran) = JobLog.during(spark) {
           val t0 = System.nanoTime()
           SparkEntry.queries(n)(spark, dir).count()
           (System.nanoTime() - t0) / 1e9
         }
+        (w, ran.jobs)
       }.minBy(_._1)
       println(f"\n== $n: min wall $wall%.3f s, ${jobs.size} jobs")
       jobs.foreach { j =>

@@ -6,7 +6,7 @@ import java.time.{Duration, Instant, LocalTime, ZoneOffset}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.BoundedIdSet
+import graft.functions.{BoundedIdSet, Param}
 import graft.operators.{ReadShapes, UnchangedScope, WritePipeline, WriteResult}
 import graft.sources.{MetaSource, Schema, SeriesStore}
 
@@ -23,12 +23,12 @@ final case class ReadFilter(
     endKnown: Option[Timestamp] = None) {
 
   def predicate: Column = {
-    var p = col("series_id").isin(seriesIds: _*)
+    var p = Param.inSet(col("series_id"), seriesIds)
     if (retention.nonEmpty) p = p && col("retention").isin(retention: _*)
-    startValid.foreach(t => p = p && col("valid_time") >= lit(t))
-    endValid.foreach(t => p = p && col("valid_time") < lit(t))
-    startKnown.foreach(t => p = p && col("knowledge_time") >= lit(t))
-    endKnown.foreach(t => p = p && col("knowledge_time") < lit(t))
+    startValid.foreach(t => p = p && col("valid_time") >= Param(t))
+    endValid.foreach(t => p = p && col("valid_time") < Param(t))
+    startKnown.foreach(t => p = p && col("knowledge_time") >= Param(t))
+    endKnown.foreach(t => p = p && col("knowledge_time") < Param(t))
     p
   }
 
@@ -127,12 +127,14 @@ final class TimeDb(val spark: SparkSession, basePath: String,
           // driver values (same assumption as the reference). The scan
           // keeps only the manifest files of the batch's tiers × months
           // (picked on the driver, as a read's are), so no other partition
-          // directory is listed or opened.
+          // directory is listed or opened. The bounds and ids are
+          // [[Param]]s, so the read-back's generated code is the same from
+          // write to write.
           val minVt = bounds("min_vt").asInstanceOf[Timestamp]
           val maxVt = bounds("max_vt").asInstanceOf[Timestamp]
           val vtSlab = store.scanValuesPruned(rets,
             (Some(Schema.monthOf(minVt)), Some(Schema.monthOf(maxVt))))._1.filter(
-            col("valid_time") >= lit(minVt) && col("valid_time") <= lit(maxVt))
+            col("valid_time") >= Param(minVt) && col("valid_time") <= Param(maxVt))
           // Under the knowledge_time scope only stored rows carrying one
           // of the batch's knowledge_times can match a scope key, so the
           // slab is also bounded by the batch's knowledge_time range
@@ -144,12 +146,12 @@ final class TimeDb(val spark: SparkSession, basePath: String,
           val slabBase = unchangedScope match {
             case UnchangedScope.KnowledgeTime =>
               vtSlab.filter(
-                col("knowledge_time") >= lit(bounds("min_kt").asInstanceOf[Timestamp]) &&
-                  col("knowledge_time") <= lit(bounds("max_kt").asInstanceOf[Timestamp]))
+                col("knowledge_time") >= Param(bounds("min_kt")) &&
+                  col("knowledge_time") <= Param(bounds("max_kt")))
             case UnchangedScope.ValidTime => vtSlab
           }
-          // Driver-safety valve: for catalog-sized batches the literal
-          // isin pushes all the way into the parquet scan; but a
+          // Driver-safety valve: for catalog-sized batches the id set
+          // ([[Param.inSet]]) pushes all the way into the parquet scan; but a
           // crawl-scale batch touching tens of millions of series would
           // OOM the driver on the collect, so above `maxInlineSeriesIds`
           // (the observed id set is then null) the read-back restriction
@@ -157,7 +159,8 @@ final class TimeDb(val spark: SparkSession, basePath: String,
           // driver state; the tier × month file prune above still bounds
           // the scanned slab.
           val slab = Option(bounds("series_ids")) match {
-            case Some(sids: scala.collection.Seq[_]) => slabBase.filter(col("series_id").isin(sids.toSeq: _*))
+            case Some(sids: scala.collection.Seq[_]) =>
+              slabBase.filter(Param.inSet(col("series_id"), sids.map(_.asInstanceOf[Long])))
             case _ => slabBase.join(preFilter.select("series_id").distinct(), Seq("series_id"), "left_semi")
           }
           // The kept rows get the same one-pass cache fill as the batch.
@@ -310,17 +313,32 @@ final class TimeDb(val spark: SparkSession, basePath: String,
   /** Runs that touched a series, newest first (timedb/client.py:198-214),
     * runs that share a `first_seen` (one multi-run write) by ascending
     * run_id — the `td_run_series` order. The list is collected anyway, so
-    * it is sorted on the driver: no range sample, no sort shuffle. */
-  def readRunSeries(seriesId: Long): Seq[Long] =
-    store.scanRunSeries()
-      .filter(col("series_id") === seriesId)
-      .select("run_id", "first_seen").collect()
-      .map(r => (r.getLong(0), r.getTimestamp(1)))
-      .sortWith { case ((runA, seenA), (runB, seenB)) =>
-        val c = seenB.compareTo(seenA)
-        if (c != 0) c < 0 else runA < runB
-      }
-      .map(_._1).toSeq
+    * it is sorted on the driver: no range sample, no sort shuffle. See
+    * [[planRunSeries]] for where the collapse runs. */
+  def readRunSeries(seriesId: Long): Seq[Long] = planRunSeries(seriesId)
+
+  /** [[readRunSeries]]. When the current `run_series` files total at most
+    * [[TimeDb.DriverRunSeriesMaxBytes]], they are decoded on the driver
+    * and the series' rows collapsed there ([[SeriesStore.collectRunSeries]]):
+    * no Spark job. A larger table keeps the Spark plan: the collapse's
+    * aggregate over the scan, filtered to the series. Both give the same
+    * runs in the same order; `onDriver` overrides the size gate so tests
+    * can pin both on one store. */
+  private[graft] def planRunSeries(seriesId: Long, onDriver: Option[Boolean] = None): Seq[Long] = {
+    val files = store.runSeriesFiles()
+    val runs =
+      if (onDriver.getOrElse(files.map(_.getLen).sum <= TimeDb.DriverRunSeriesMaxBytes))
+        store.collectRunSeries(files, seriesId)
+      else
+        store.scanRunSeries(files)
+          .filter(Param.inSet(col("series_id"), Seq(seriesId)))
+          .select("run_id", "first_seen").collect()
+          .map(r => (r.getLong(0), r.getTimestamp(1))).toSeq
+    runs.sortWith { case ((runA, seenA), (runB, seenB)) =>
+      val c = seenB.compareTo(seenA)
+      if (c != 0) c < 0 else runA < runB
+    }.map(_._1)
+  }
 
   def expireRetention(asOf: Instant = Instant.now()): Seq[String] =
     store.expireRetention(asOf)
@@ -367,6 +385,17 @@ object TimeDb {
     * batch spread over 2 or 12 months the 24k–48k ties hold. One task
     * wins up to 48k rows and ties at 72k; rounded down to 50k. */
   private val OneTaskWriteMaxRows: Long = 50000L
+
+  /** Largest `run_series` table, in parquet bytes over its current files,
+    * that [[TimeDb.planRunSeries]] decodes on the driver. Measured with 48
+    * one-write files of n series each, `local[4]`, 9 interleaved pairs,
+    * p50 driver vs Spark plan: 0.09 MB 132 vs 268 ms, 0.22 MB 112 vs 237,
+    * 0.78 MB 124 vs 201, 1.9 MB 135 vs 161, 3.4 MB 245 vs 188 (perfbench's
+    * dashboard store, 3 files of 8.9 kB: 25 vs 132 ms). The driver wins
+    * up to 1.9 MB and loses at 3.4 MB; rounded down to 1 MiB. The decode
+    * streams the files and holds only the series' rows, so the bound is
+    * on driver time, not driver memory. */
+  private val DriverRunSeriesMaxBytes: Long = 1L << 20
 
   /** Cache `frame` and fill the cache with ONE shuffle-free action (a
     * `noop`-format write) that also computes the aggregate `metrics`

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Param
+
 /** The four read shapes of the 3D temporal model, plus the relative
   * (per-window as-of) read — re-expressed as declarative DataFrame
   * transforms so Catalyst plans them (hash aggregate / window exchange
@@ -109,16 +111,16 @@ object ReadShapes {
     * `pmod` so windows before the origin land in the right bucket.
     */
   def windowCutoff(validTime: Column, windowSecs: Long, offsetSecs: Long, startWindow: Column): Column = {
-    val winUs = lit(windowSecs * 1000000L)
+    val winUs = Param(windowSecs * 1000000L)
     val vtUs = unix_micros(validTime)
     val origUs = unix_micros(startWindow)
     val delta = vtUs - origUs
     val floored = delta - pmod(delta, winUs) // floor(delta / win) * win, exact for negatives
-    timestamp_micros(origUs + floored + lit(offsetSecs * 1000000L))
+    timestamp_micros(origUs + floored + Param(offsetSecs * 1000000L))
   }
 
   /** Relative read (timedb/read.py:352-396): latest-read restricted to
     * rows issued no later than each valid_time's window cutoff. */
   def relative(values: DataFrame, windowSecs: Long, offsetSecs: Long, startWindow: java.sql.Timestamp): DataFrame =
-    latest(values.filter(kt <= windowCutoff(vt, windowSecs, offsetSecs, lit(startWindow))))
+    latest(values.filter(kt <= windowCutoff(vt, windowSecs, offsetSecs, Param(startWindow))))
 }

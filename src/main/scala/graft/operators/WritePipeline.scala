@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.RunId
+import graft.functions.{Param, RunId}
 import graft.sources.Schema
 
 /** Counts returned by a write (timedb/write.py:161-166). `skipped` is
@@ -102,19 +102,21 @@ object WritePipeline {
 
     // One projection in schema order: a caller-supplied optional column
     // passes through (run_id cast to bigint), a missing one becomes its
-    // per-batch constant. A caller-supplied retention column must not
-    // smuggle nulls past the vocabulary check (collect_set drops nulls) —
-    // a null would land in a __HIVE_DEFAULT_PARTITION__ tier that no read
-    // or TTL ever touches.
+    // per-batch constant. The per-write values (knowledge_time or `now`,
+    // change_time, run_id) are [[Param]]s, so the generated code of this
+    // projection is the same from write to write. A caller-supplied
+    // retention column must not smuggle nulls past the vocabulary check
+    // (collect_set drops nulls) — a null would land in a
+    // __HIVE_DEFAULT_PARTITION__ tier that no read or TTL ever touches.
     def given(c: String, orElse: => Column): Column = if (cols(c)) col(c) else orElse
     val stamped = Map(
       "series_id" -> rejectNull(col("series_id").cast(LongType), "series_id", "bigint"),
       "valid_time" -> rejectNull(col("valid_time"), "valid_time", "timestamp"),
-      "knowledge_time" -> given("knowledge_time", lit(knowledgeTimeKwarg.getOrElse(now))),
-      "change_time" -> given("change_time", lit(now)),
+      "knowledge_time" -> given("knowledge_time", Param(knowledgeTimeKwarg.getOrElse(now))),
+      "change_time" -> given("change_time", Param(now)),
       "value" -> coalesce(col("value").cast(DoubleType), lit(Double.NaN)),
       "valid_time_end" -> given("valid_time_end", lit(Schema.validTimeEndSentinel)),
-      "run_id" -> (if (cols("run_id")) col("run_id").cast(LongType) else lit(runId)),
+      "run_id" -> (if (cols("run_id")) col("run_id").cast(LongType) else Param(runId)),
       "changed_by" -> given("changed_by", lit("")),
       "annotation" -> given("annotation", lit("")),
       "retention" ->
@@ -134,14 +136,12 @@ object WritePipeline {
         s"Valid values: ${Schema.retentionTiers.toSeq.sorted}")
   }
 
-  /** `stamped` with the write's `first_seen` as one more column, for
-    * [[runSeriesOf]]. The writer adds it before it caches the batch, in
-    * the projection that already carries the write's other per-write
-    * literals: stamped after the `distinct` instead, a new timestamp
-    * literal would make the run_series lane compile new code on every
-    * write. */
+  /** `stamped` with the write's `first_seen` as one more column (a
+    * [[Param]], like the stamp's other per-write values), for
+    * [[runSeriesOf]]. The writer adds it before it caches the batch, so
+    * the run_series lane reads it from the cache. */
   def withFirstSeen(stamped: DataFrame, firstSeen: java.sql.Timestamp): DataFrame =
-    stamped.withColumn("first_seen", lit(firstSeen))
+    stamped.withColumn("first_seen", Param(firstSeen))
 
   /** W3 — run_series derivation (timedb/write.py:357): the distinct
     * (series_id, run_id, first_seen) rows of a batch that carries its

@@ -270,17 +270,20 @@ final class ManifestTable(spark: SparkSession, rootPath: String) {
     finally reader.close()
   }
 
-  /** Every row of the small parquet files `statuses` (a store's meta
-    * row), decoded on the driver by Spark's own parquet reader — no Spark
-    * job. */
-  def collectSmall(statuses: Seq[FileStatus], schema: StructType): Seq[Row] = {
+  /** The rows of the small parquet files `statuses` (a store's meta
+    * row, a series' `run_series` rows) that `keep` selects, decoded on the
+    * driver by Spark's own parquet reader — no Spark job. Only kept rows
+    * are converted and held, so the driver holds what `keep` selects, not
+    * the files' rows; the caller bounds the files' size. */
+  def collectSmall(statuses: Seq[FileStatus], schema: StructType,
+      keep: InternalRow => Boolean = _ => true): Seq[Row] = {
     val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
       new StructType(), schema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
       spark.sessionState.newHadoopConf())
     val toRow = CatalystTypeConverters.createToScalaConverter(schema)
     statuses.flatMap { st =>
       read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(st.getPath), 0L, st.getLen))
-        .map(r => toRow(r).asInstanceOf[Row]).toList
+        .filter(keep).map(r => toRow(r).asInstanceOf[Row]).toList
     }
   }
 

@@ -1,6 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import java.sql.Timestamp
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
@@ -19,10 +21,13 @@ import org.apache.spark.sql.types.{StringType, StructType}
   *  - rows sorted within each compacted file by
   *    (series_id, valid_time, knowledge_time, change_time) — the analog of
   *    the MergeTree sort key: Parquet row-group min/max stats on
-  *    series_id/valid_time let the reader skip row groups, and ZSTD +
-  *    dictionary/RLE encodings replace the per-column codecs. An
-  *    appended file is sorted by knowledge_time first, then by that key
-  *    (see [[appendValues]]).
+  *    series_id let the reader skip row groups for a read's pushed
+  *    `series_id IN (…)`, and ZSTD + dictionary/RLE encodings replace
+  *    the per-column codecs. The timestamps are stored as INT96 (Spark's
+  *    default), which Spark never pushes into the parquet reader, so no
+  *    `valid_time` or `knowledge_time` bound skips a row group: those
+  *    bounds filter rows after the scan. An appended file is sorted by
+  *    knowledge_time first, then by that key (see [[appendValues]]).
   *
   * ==Commits==
   *
@@ -359,10 +364,28 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
     * applied at read time (timedb/client.py:207-212,
     * ch_create_tables.sql:58-65): latest first_seen per (series_id,
     * run_id). */
-  def scanRunSeries(): DataFrame =
-    runSeries.scan(runSeries.currentFiles(), Schema.runSeries)
+  def scanRunSeries(): DataFrame = scanRunSeries(runSeriesFiles())
+
+  /** [[scanRunSeries]] over `files`, statuses from [[runSeriesFiles]]. */
+  def scanRunSeries(files: Seq[FileStatus]): DataFrame =
+    runSeries.scanListed(files, Schema.runSeries)
       .groupBy("series_id", "run_id")
       .agg(max("first_seen").as("first_seen"))
+
+  /** The statuses of the current `run_series` files: one listing per
+    * directory, no Spark job. */
+  def runSeriesFiles(): Seq[FileStatus] = runSeries.listed(runSeries.currentFiles())
+
+  /** [[scanRunSeries]]'s rows of one series, `(run_id, first_seen)`,
+    * decoded from `files` on the driver ([[ManifestTable.collectSmall]]:
+    * no Spark job, and only the series' rows are held) and collapsed
+    * there to the latest first_seen per run. The caller bounds the
+    * files' size. */
+  def collectRunSeries(files: Seq[FileStatus], seriesId: Long): Seq[(Long, Timestamp)] =
+    runSeries.collectSmall(files, Schema.runSeries, _.getLong(0) == seriesId)
+      .map(r => (r.getLong(1), r.getTimestamp(2)))
+      .groupMapReduce(_._1)(_._2)((a, b) => if (a.after(b)) a else b)
+      .toSeq
 
   private def dirOf(rel: String): String = rel.substring(0, rel.lastIndexOf('/'))
 

@@ -742,7 +742,7 @@ class PlanSpec extends SparkSpec {
     // construction without one. jobs × scheduler-floor is a floor-zone
     // serve's wall lower bound (tools/job_budget.txt pins the absolute
     // counts; this pins the delta at zero).
-    def jobsDuring(body: => Unit): Int = JobLog.during(spark)(body)._2.size
+    def jobsDuring(body: => Unit): Int = JobLog.during(spark)(body)._2.jobs.size
     // vector side: the appended IVF store + a small tombstone tree
     val dir = java.nio.file.Files.createTempDirectory("fold_del_jobs").toString
     val rnd = new scala.util.Random(31)

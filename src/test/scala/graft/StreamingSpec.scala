@@ -738,7 +738,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("dedupIngest: Spark jobs per micro-batch, per gate variant") {
-    def jobsDuring(body: => Unit): Int = JobLog.during(spark)(body)._2.size
+    def jobsDuring(body: => Unit): Int = JobLog.during(spark)(body)._2.jobs.size
     val jobs = gates.map { gate =>
       implicit val sqlCtx = spark.sqlContext
       val dir = java.nio.file.Files.createTempDirectory("graft_dedup_jobs").toString

@@ -320,7 +320,7 @@ class TimeDbSpec extends SparkSpec {
       assert(db.store.scanRunSeries().inputFiles.length == 40)
       assert(jobsDuring { db.store.scanRunSeries(); () } == 0)
       val jobs = jobsDuring { assert(db.readRunSeries(1L).length == 40) }
-      assert(jobs <= 2, s"readRunSeries ran $jobs jobs")
+      assert(jobs == 0, s"readRunSeries ran $jobs jobs")
       // series_values too: 40 one-file appends, scanned with no job
       val kt = ts("2024-03-01T00:00:00Z")
       (1 to 40).foreach { r =>
@@ -497,7 +497,10 @@ class TimeDbSpec extends SparkSpec {
   }
 
   /** Spark jobs started by `body`, counted between two listener-bus drains. */
-  private def jobsDuring(body: => Unit): Int = JobLog.during(spark)(body)._2.size
+  private def jobsDuring(body: => Unit): Int = JobLog.during(spark)(body)._2.jobs.size
+
+  /** Classes Spark compiled while `body` ran. */
+  private def compilesDuring(body: => Unit): Long = JobLog.during(spark)(body)._2.compiles
 
   test("write job counts: one pass before the lanes; skip-unchanged within budget") {
     withDb { db =>
@@ -646,6 +649,82 @@ class TimeDbSpec extends SparkSpec {
     }
   }
 
+  test("warm reads compile nothing: fresh ids, bounds and day count in every read form, and readRunSeries") {
+    withDb { db =>
+      writeReadPlanStore(db)
+      // fresh filters: one id, five ids (two not stored), other bounds
+      val fresh = Seq(
+        ReadFilter(Seq(2L), startValid = Some(ts("2024-03-31T22:00:00Z")),
+          endValid = Some(ts("2024-04-01T03:00:00Z"))),
+        ReadFilter(Seq(5L, 1L, 3L, 4L, 2L), startValid = Some(ts("2024-03-31T20:00:00Z")),
+          endValid = Some(ts("2024-04-01T02:00:00Z"))))
+      for (((name, _, _, warm), i) <- readForms(db, readPlanFilter).zipWithIndex) {
+        warm().collect()
+        for ((f, j) <- fresh.zipWithIndex) {
+          val call = if (name == "relative")
+            () => db.readRelativeDaily(f, daysAhead = j, timeOfDay = LocalTime.of(13 + j, 0))
+          else readForms(db, f)(i)._4
+          var n = 0
+          val compiles = compilesDuring { n = call().collect().length }
+          assert(n > 0, s"$name returned no rows for $f")
+          assert(compiles == 0, s"$name compiled $compiles classes for $f")
+        }
+      }
+      db.readRunSeries(1L)
+      assert(compilesDuring { assert(db.readRunSeries(2L).nonEmpty) } == 0)
+    }
+  }
+
+  test("a warm plain write of a batch with no literals of its own compiles nothing") {
+    withDb { db =>
+      val dir = java.nio.file.Files.createTempDirectory("timedb_batches").toString
+      try {
+        // batches read from parquet: their plans carry no values, so only
+        // the write's own run_id, knowledge_time, change_time and
+        // first_seen could differ from write to write
+        val batches = (1 to 3).map { k =>
+          val path = s"$dir/b$k"
+          vts.zipWithIndex.map { case (vt, i) => (k.toLong, vt, i * k * 1.5) }
+            .toDF("series_id", "valid_time", "value").write.parquet(path)
+          spark.read.parquet(path)
+        }
+        db.write(batches(0), knowledgeTime = Some(ts("2024-03-01T00:00:00Z")))
+        for ((b, k) <- batches.tail.zipWithIndex) {
+          val compiles = compilesDuring {
+            assert(db.write(b, knowledgeTime = Some(ts(s"2024-03-01T0${k + 1}:00:00Z"))) ==
+              WriteResult(vts.length, 0)); ()
+          }
+          assert(compiles == 0, s"write ${k + 1} compiled $compiles classes")
+        }
+        assert(db.readRunSeries(2L).length == 1 && db.readRunSeries(3L).length == 1)
+      } finally FsUtil.deleteRecursively(new java.io.File(dir))
+    }
+  }
+
+  test("readRunSeries: the driver decode and the Spark plan give the same runs in the same order") {
+    withDb { db =>
+      val Seq(t0, t1, t2, t3) = (0 until 4).map(d => ts(f"2024-03-0${d + 1}T00:00:00Z"))
+      def append(rows: (Long, Long, java.sql.Timestamp)*): Unit =
+        db.store.appendRunSeries(rows.toDF("series_id", "run_id", "first_seen").coalesce(1))
+      append((1L, 5L, t0))
+      // one multi-run write: three runs share one first_seen
+      append((1L, 12L, t1), (1L, 10L, t1), (1L, 11L, t1), (2L, 10L, t1))
+      append((1L, 20L, t2), (2L, 20L, t2))
+      // run 11 of series 1 delivered again, later: its latest first_seen wins
+      append((1L, 11L, t3))
+      val want = Map(1L -> Seq(11L, 20L, 10L, 12L, 5L), 2L -> Seq(20L, 10L), 9L -> Nil)
+      for ((sid, runs) <- want) {
+        val onDriver = db.planRunSeries(sid, onDriver = Some(true))
+        val inSpark = db.planRunSeries(sid, onDriver = Some(false))
+        assert(onDriver == runs, s"series $sid on the driver")
+        assert(inSpark == runs, s"series $sid in Spark")
+        assert(db.readRunSeries(sid) == runs)
+      }
+      assert(jobsDuring { db.planRunSeries(1L, onDriver = Some(true)); () } == 0)
+      assert(jobsDuring { db.planRunSeries(1L, onDriver = Some(false)); () } > 0)
+    }
+  }
+
   test("one-task and distributed read plans: same rows in the same order, every form; only the distributed plan shuffles") {
     withDb { db =>
       writeReadPlanStore(db)
@@ -779,14 +858,14 @@ class TimeDbSpec extends SparkSpec {
       assert(runs.length == 2 && runs.head > runs(1)) // uuid7-style ids are time-ordered
       assert(db.readRunSeries(999L).isEmpty)
       // the runs of one multi-run write share one first_seen: they list
-      // by ascending run_id, the same on every call, in at most two jobs
+      // by ascending run_id, the same on every call, in no Spark job
       Thread.sleep(5)
       val batch = Seq(7L, 3L, 11L, 5L, 9L)
       db.write(batch.zipWithIndex.map { case (r, i) => (1L, vts(i), 1.0 * i, r) }
         .toDF("series_id", "valid_time", "value", "run_id"))
       for (_ <- 1 to 3) assert(db.readRunSeries(1L) == batch.sorted ++ runs)
       val jobs = jobsDuring { db.readRunSeries(1L); () }
-      assert(jobs <= 2, s"readRunSeries ran $jobs jobs")
+      assert(jobs == 0, s"readRunSeries ran $jobs jobs")
     }
   }
 
